@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
-import graft.ops.Relational
+import graft.ops.{Analytics, Artifacts, PipelineOps, Relational, TextOps, VectorOps}
 
 /** Scaling audit for the join-heavy relational core (README "Scaling
   * audit"): replicate the fact tables 1×/2×/4× with DISJOINT key
@@ -573,46 +573,39 @@ object BenchScaling {
       // "store:persist" stays as the sum for r17-comparable totals
       val storeLeg: Seq[(String, Double)] =
         sys.env.get("SPARK_GRAFT_SCALE_STORES").toSeq.flatMap { sb =>
-          def persist(name: String, confKey: String, sub: String)(
-              run: String => Unit): (String, Double) = {
-            val t0 = System.nanoTime()
-            run(s"$sb/f$k/$sub")
-            spark.conf.set(confKey, s"$sb/f$k/$sub")
-            s"store:$name" -> (System.nanoTime() - t0) / 1e9
-          }
-          val per = Seq(
-            persist("labels", "spark.graft.labelsPath", "labels")(
-              graft.ops.PipelineOps.persistLabels(spark, dir, _)),
-            persist("sticky", "spark.graft.stickyPath", "sticky")(
-              graft.ops.PipelineOps.persistStickySplits(spark, dir, _)),
-            persist("route_index", "spark.graft.routeIndexPath", "route_index")(
-              graft.ops.PipelineOps.persistRouteIndex(spark, dir, _)),
-            persist("label_index", "spark.graft.labelIndexPath", "label_index")(
-              graft.ops.PipelineOps.persistLabelIndex(spark, dir, _)),
-            // r19: the remaining stores join the per-factor generation —
-            // the published freeze-price decomposition is COMPLETE (the
-            // r18 verdict's partial-generation gap): tokenizer (word-type
-            // trainer on the history slice), retrieval stats (s20's
-            // frozen per-(query, term) floors), the IVFADC index
-            // (embeddings axis), and the daily sketch warehouse (events
-            // axis)
-            persist("merges", "spark.graft.mergesPath", "merges")(
-              graft.ops.TextOps.persistMerges(spark, dir, _)),
-            persist("s20_stats", "spark.graft.retrievalStatsPath", "s20_stats")(
-              graft.streaming.StreamGate.persistRetrievalStats(spark, dir, _)),
-            persist("sketches", "spark.graft.sketchPath", "sketches")(
-              graft.ops.Analytics.persistSketchDaily(spark, dir, _))) ++
+          import Artifacts.{StoreManifest, Sticky}
+          // (line name = store sub-dir, store, persister), production order
+          val legs: Seq[(String, Artifacts.Store, (SparkSession, String, String) => Unit)] =
+            Seq(("labels", Artifacts.Labels, PipelineOps.persistLabels _),
+              ("sticky", Sticky, PipelineOps.persistStickySplits _),
+              ("route_index", Artifacts.RouteIndex, PipelineOps.persistRouteIndex _),
+              ("label_index", Artifacts.LabelIndex, PipelineOps.persistLabelIndex _),
+              // r19: the remaining stores join the per-factor generation —
+              // the published freeze-price decomposition is COMPLETE (the
+              // r18 verdict's partial-generation gap): tokenizer (word-type
+              // trainer on the history slice), retrieval stats (s20's
+              // frozen per-(query, term) floors), the IVFADC index
+              // (embeddings axis), and the daily sketch warehouse (events
+              // axis)
+              ("merges", Artifacts.Merges, TextOps.persistMerges _),
+              ("s20_stats", Artifacts.RetrievalStats,
+                graft.streaming.StreamGate.persistRetrievalStats _),
+              ("sketches", Artifacts.Sketches, Analytics.persistSketchDaily _)) ++
             // the embeddings replication caps at `dim` distinct circular
             // shifts, so past that factor the IVF store cannot freeze on
             // honestly-replicated vectors — skipped LOUDLY (no-silent-caps)
-            (if (k <= embDim)
-              Seq(persist("ivf_index", "spark.graft.ivfIndexPath", "ivf_index")(
-                graft.ops.VectorOps.persistPqIndex(spark, dir, _)))
+            (if (k <= embDim) Seq(("ivf_index", Artifacts.IvfIndex, VectorOps.persistPqIndex _))
             else {
               System.err.println(s"[scaling] store leg: ivf_index persist skipped at " +
                 s"factor $k (> embedding dim $embDim — circular shifts would repeat)")
               Seq.empty
             })
+          val per = legs.map { case (name, store, persist) =>
+            val t0 = System.nanoTime()
+            persist(spark, dir, s"$sb/f$k/$name")
+            spark.conf.set(store.conf, s"$sb/f$k/$name")
+            s"store:$name" -> (System.nanoTime() - t0) / 1e9
+          }
           // the serving FLIP is the manifest, not eight knobs: the freeze
           // pipeline above ran under explicit paths (production order —
           // each persist consumed the store before it); the serving
@@ -620,24 +613,12 @@ object BenchScaling {
           // governance leg below exercises the manifest resolution path
           // at this factor's scale
           val t0 = System.nanoTime()
-          val thr = graft.ops.Artifacts
-            .readStampFacts(spark, s"$sb/f$k/sticky", "x68_sticky")._2("thr").toLong
-          graft.ops.Artifacts.writeManifest(spark, s"$sb/f$k/manifest", Map(
-            "x24_labels" -> s"$sb/f$k/labels",
-            "x68_sticky" -> s"$sb/f$k/sticky",
-            "s18_index" -> s"$sb/f$k/route_index",
-            "s21_index" -> s"$sb/f$k/label_index",
-            "x62b_merges" -> s"$sb/f$k/merges",
-            "s20_stats" -> s"$sb/f$k/s20_stats",
-            "sketch_daily" -> s"$sb/f$k/sketches") ++
-            (if (k <= embDim) Map("x57_index" -> s"$sb/f$k/ivf_index") else Map.empty),
-            thr)
-          Seq("spark.graft.labelsPath", "spark.graft.stickyPath",
-            "spark.graft.routeIndexPath", "spark.graft.labelIndexPath",
-            "spark.graft.mergesPath", "spark.graft.retrievalStatsPath",
-            "spark.graft.ivfIndexPath", "spark.graft.sketchPath")
-            .foreach(spark.conf.unset)
-          spark.conf.set("spark.graft.storeManifest", s"$sb/f$k/manifest")
+          val thr = Artifacts
+            .readStampFacts(spark, s"$sb/f$k/sticky", Sticky.key)._2(Sticky.prop).toLong
+          Artifacts.writeManifest(spark, s"$sb/f$k/manifest",
+            legs.map { case (name, store, _) => store.key -> s"$sb/f$k/$name" }.toMap, thr)
+          legs.foreach { case (_, store, _) => spark.conf.unset(store.conf) }
+          spark.conf.set(StoreManifest.conf, s"$sb/f$k/manifest")
           val manifestLine = "store:manifest" -> (System.nanoTime() - t0) / 1e9
           // SPARK_GRAFT_SCALE_REFREEZE=1 (requires the store leg): the
           // INCREMENTAL re-freeze price — generation A frozen on the
@@ -660,7 +641,7 @@ object BenchScaling {
               val corpus0 = timed("store:genA_corpus") {
                 val docs = Tables.table(spark, dir, "documents")
                 val mx = docs.agg(max(col("doc_id"))).first().getLong(0)
-                docs.filter(col("doc_id") <= Math.floorDiv(9L * mx, 10L))
+                docs.filter(col("doc_id") <= Tables.historyThr(mx))
                   .write.mode("overwrite").parquet(s"$genA/corpus0/documents.parquet")
               }
               // generation A freezes on the old installment with the
@@ -669,12 +650,12 @@ object BenchScaling {
               // generation's stores) — one line, the price is NOT the
               // claim under test
               val persistsA = timed("store:genA_persists") {
-                spark.conf.unset("spark.graft.storeManifest")
+                spark.conf.unset(StoreManifest.conf)
                 try {
                   graft.ops.PipelineOps.persistStickySplits(spark, s"$genA/corpus0", s"$genA/sticky")
                   graft.ops.PipelineOps.persistRouteIndex(spark, s"$genA/corpus0", s"$genA/route_index")
                   graft.ops.PipelineOps.persistLabelIndex(spark, s"$genA/corpus0", s"$genA/label_index")
-                } finally spark.conf.set("spark.graft.storeManifest", s"$sb/f$k/manifest")
+                } finally spark.conf.set(StoreManifest.conf, s"$sb/f$k/manifest")
               }
               // roll forward to the CURRENT generation: the sticky fold
               // consumes the staged seed (residual over the labels store
@@ -684,7 +665,7 @@ object BenchScaling {
                 graft.ops.PipelineOps.persistStickySplitsIncremental(
                   spark, dir, s"$genA/stickyB", s"$genA/sticky")
               }
-              spark.conf.set("spark.graft.stickyPath", s"$genA/stickyB")
+              spark.conf.set(Sticky.conf, s"$genA/stickyB")
               val routeInc = timed("store:route_index_inc") {
                 graft.ops.PipelineOps.persistRouteIndexIncremental(
                   spark, dir, s"$genA/route_indexB", s"$genA/route_index")
@@ -694,7 +675,7 @@ object BenchScaling {
                   spark, dir, s"$genA/label_indexB", s"$genA/label_index")
               }
               // back to the manifest generation for the serving legs
-              spark.conf.unset("spark.graft.stickyPath")
+              spark.conf.unset(Sticky.conf)
               Seq(corpus0, persistsA, stickyInc, routeInc, labelInc)
             }
           per ++ Seq(manifestLine,
@@ -736,14 +717,11 @@ object BenchScaling {
       }
       if (storeLeg.nonEmpty) {
         // per-store knobs were already dropped at the manifest flip;
-        // unset defensively anyway, plus the manifest itself — a later
-        // factor serving this factor's generation would be the exact
-        // wrong-corpus defect the stamps guard against elsewhere
-        spark.conf.unset("spark.graft.labelsPath")
-        spark.conf.unset("spark.graft.stickyPath")
-        spark.conf.unset("spark.graft.routeIndexPath")
-        spark.conf.unset("spark.graft.labelIndexPath")
-        spark.conf.unset("spark.graft.storeManifest")
+        // unset every store knob defensively anyway, the manifest
+        // included — a later factor serving this factor's generation
+        // would be the exact wrong-corpus defect the stamps guard
+        // against elsewhere
+        Artifacts.stores.foreach(s => spark.conf.unset(s.conf))
       }
       val withStores = storeLeg ++ times
       val qs = withStores.map { case (n, s) => s""""$n":${f"$s%.3f"}""" }.mkString("{", ",", "}")

@@ -116,6 +116,20 @@ object Tables {
     call_function("div", adjusted, b).cast(LongType)
   }
 
+  /** The shared 9/10 freeze rule: documents with `doc_id` at or below
+    * floor(9·max/10) are the frozen HISTORY slice, the rest arrivals —
+    * the one boundary every history/arrival split, freeze persist and
+    * store audit uses (the stores' `History` axis). Never memoized: each
+    * caller keeps its own 1-row job. */
+  def historyThr(maxId: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    fdiv(lit(9L) * maxId, lit(10L))
+
+  def historyThr(maxId: Long): Long = Math.floorDiv(9L * maxId, 10L)
+
+  /** [[historyThr]] of `docs`' doc ids, collected (one 1-row job). */
+  def historyThr(docs: DataFrame): Long =
+    docs.agg(historyThr(max(col("doc_id")))).collect()(0).getLong(0)
+
   /** SQL-side twin of [[fdiv]] for oracle queries. */
   def fdivSql(a: String, b: String): String =
     s"CAST((($a) - (((($a) % ($b)) + ($b)) % ($b))) // ($b) AS BIGINT)"

@@ -716,7 +716,7 @@ object Analytics {
       .agg(max(date_format(to_date(col("ts")), "yyyyMMdd").cast("long")))
       .collect()(0).getLong(0) // 1 row — the log head, stamped for x74
     Artifacts.writeStamped(spark, sketchDailyUnstaged(spark, dir), path,
-      "sketch_daily", Map("max_day" -> mxDay.toString))
+      Artifacts.Sketches.key, Map(Artifacts.Sketches.prop -> mxDay.toString))
   }
 
   /** q30: weekly cohort retention — the event-log staple: users

@@ -150,7 +150,7 @@ object Audit {
     * "rows" are its configured training rounds
     * ([[TextOps.bpeRounds]] — row-count freshness is meaningless for a
     * fixed-k table; the boundary is its signal). The two band indexes
-    * ([[Artifacts.versions]] s18_index/s21_index) audit BOUNDARY-ONLY:
+    * and the manifest audit BOUNDARY-ONLY:
     * their row counts are lattice-shaped (capped (band, h) bucket
     * counts — recomputing one means re-running the corpus banding the
     * audit exists to avoid), so like the merges table the freeze
@@ -161,24 +161,23 @@ object Audit {
     * reads stamps + corpus stats, exactly what a governance review can
     * afford to run per ingest.
     *
-    * The audit matrix is REGISTRY-DRIVEN: one row per
-    * [[Artifacts.versions]] key, each with its spec below — a store
-    * registered without an audit spec fails the whole audit loudly
-    * (a new store cannot ship unaudited). Staleness MAGNITUDE rides two
+    * The audit matrix iterates the store registry
+    * ([[Artifacts.stores]]): one row per store, its current boundary
+    * taken from the store's axis and its expected rows from the store's
+    * [[Artifacts.Rows]] rule — both required fields, so a store cannot
+    * be registered unaudited. Staleness MAGNITUDE rides two
     * derived columns: `arrivals_past_freeze` (current − frozen
     * boundary — how far the corpus grew past the freeze) and
     * `row_drift` (expected − stamped rows — how many rows a fresh
     * persist would add), so a verdict quantifies re-persist urgency
     * instead of a bare 0/1. */
-  private[graft] final case class StoreAudit(
-      boundaryKey: String, currentBoundary: Long,
-      expectedRows: Option[Long], stampedRowsProp: Option[String])
-
   def x74ArtifactFreshness(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    import Artifacts.Rows
     val d = documents(spark, dir).select(col("doc_id"), col("text"))
     val head = d.agg(max(col("doc_id")).as("mx"), count(lit(1)).as("n")).collect()(0)
     val (mx, nDocs) = (head.getLong(0), head.getLong(1))
-    val thr = Math.floorDiv(9L * mx, 10L) // the shared 9/10 freeze rule
+    val thr = historyThr(mx)
     val nHist = d.filter(col("doc_id") <= thr).count()
     // s20's index is one row per distinct (q_id, term) of the history
     // eval docs (every such term has df ≥ 1 — drawn from history text);
@@ -195,55 +194,34 @@ object Audit {
       max(date_format(to_date(col("ts")), "yyyyMMdd").cast("long")).as("mxd"),
       countDistinct(to_date(col("ts"))).as("nd")).collect()(0)
     val (mxDay, nDays) = (ev.getLong(0), ev.getLong(1))
-    x74RowsFor(spark, Map(
-      "sketch_daily" -> StoreAudit("max_day", mxDay, Some(nDays), None),
-      "s20_stats" -> StoreAudit("thr", thr, Some(nQt), None),
-      "x24_labels" -> StoreAudit("max_id", mx, Some(nDocs), None),
-      "x57_index" -> StoreAudit("max_id", mxV, Some(VectorOps.pqM.toLong * nEmb), None),
-      "x62b_merges" -> StoreAudit("thr", thr, Some(TextOps.bpeRounds.toLong), Some("rounds")),
-      "x68_sticky" -> StoreAudit("thr", thr, Some(nHist), None),
-      "s18_index" -> StoreAudit("thr", thr, None, None),
-      "s21_index" -> StoreAudit("thr", thr, None, None),
-      // the store-set manifest: generation boundary only (its rows are
-      // however many stores the deployment chose to ship)
-      "store_manifest" -> StoreAudit("thr", thr, None, None)))
-  }
-
-  /** x74's row builder over an explicit spec registry — split out so a
-    * negative test can drive it with a registry that misses (or
-    * invents) an artifact and assert the loud failure. The registry
-    * must cover [[Artifacts.versions]] exactly: a new stamped store
-    * ships with its audit row or x74 refuses to run at all. */
-  private[graft] def x74RowsFor(spark: SparkSession,
-      specs: Map[String, StoreAudit]): DataFrame = {
-    import spark.implicits._
-    require(specs.keySet == Artifacts.versions.keySet,
-      s"x74 audit specs drifted from the artifact registry — " +
-        s"unaudited stores: ${(Artifacts.versions.keySet -- specs.keySet).toSeq.sorted}; " +
-        s"specs without a registered store: ${(specs.keySet -- Artifacts.versions.keySet).toSeq.sorted}")
-    specs.toSeq.map { case (artifact, sa) =>
-      Artifacts.configuredPath(spark, artifact) match {
+    val heads = Heads(mx, mxV, mxDay)
+    def expectedRows(r: Rows): Option[Long] = r match {
+      case Rows.BoundaryOnly => None
+      case Rows.Docs         => Some(nDocs)
+      case Rows.HistoryDocs  => Some(nHist)
+      case Rows.QueryTerms   => Some(nQt)
+      case Rows.VectorCodes  => Some(VectorOps.pqM.toLong * nEmb)
+      case Rows.EventDays    => Some(nDays)
+      case Rows.Rounds       => Some(TextOps.bpeRounds.toLong)
+    }
+    Artifacts.stores.map { s =>
+      val current = heads.at(s.axis)
+      Artifacts.configuredPath(spark, s.key) match {
         case Some(p) =>
-          val (nRows, props) = Artifacts.readStampFacts(spark, p, artifact)
-          require(props.contains(sa.boundaryKey),
-            s"x74: $artifact stamp at $p lacks the '${sa.boundaryKey}' freeze prop — " +
-              "re-persist with the current producer")
-          val frozen = props(sa.boundaryKey).toLong
-          val stamped = sa.stampedRowsProp.map { rp =>
-            require(props.contains(rp),
-              s"x74: $artifact stamp at $p lacks the '$rp' freeze prop")
-            props(rp).toLong
-          }.getOrElse(nRows)
-          // boundary-only artifacts (expectedRows = None): expected
-          // mirrors stamped, so row_drift is 0 by construction and the
-          // boundary carries the verdict
-          val expected = sa.expectedRows.getOrElse(stamped)
-          (artifact, frozen, sa.currentBoundary, sa.currentBoundary - frozen,
-            stamped, expected, expected - stamped,
-            if (frozen == sa.currentBoundary && stamped == expected) 1L else 0L)
+          val (nRows, props) = Artifacts.readStampFacts(spark, p, s.key)
+          val frozen = Artifacts.stampedLong(s, p, props, s.prop)
+          val stamped =
+            if (s.rows == Rows.Rounds) Artifacts.stampedLong(s, p, props, Rows.Rounds.prop)
+            else nRows
+          // boundary-only artifacts: expected mirrors stamped, so
+          // row_drift is 0 by construction and the boundary carries the
+          // verdict
+          val expected = expectedRows(s.rows).getOrElse(stamped)
+          (s.key, frozen, current, current - frozen, stamped, expected, expected - stamped,
+            if (frozen == current && stamped == expected) 1L else 0L)
         case None =>
-          val e = sa.expectedRows.getOrElse(0L)
-          (artifact, sa.currentBoundary, sa.currentBoundary, 0L, e, e, 0L, 1L)
+          val e = expectedRows(s.rows).getOrElse(0L)
+          (s.key, current, current, 0L, e, e, 0L, 1L)
       }
     }
       .toDF("artifact", "frozen_boundary", "current_boundary",
@@ -252,11 +230,23 @@ object Audit {
       .orderBy("artifact")
   }
 
+  /** The corpus heads a store's boundary axis is measured against:
+    * documents, embeddings and events, with the history slice derived
+    * from the documents head by the shared 9/10 rule. */
+  private final case class Heads(mx: Long, mxV: Long, mxDay: Long) {
+    def at(axis: Artifacts.Axis): Long = axis match {
+      case Artifacts.History        => historyThr(mx)
+      case Artifacts.DocHead        => mx
+      case Artifacts.EmbeddingsHead => mxV
+      case Artifacts.EventsHead     => mxDay
+    }
+  }
+
   /** x77: cross-store COHERENCE audit — the constraint family x74
     * cannot see: x74 audits each store against the CORPUS (is this
     * store stale?); x77 audits the stores against EACH OTHER (are they
-    * the same freeze generation?). Seven artifacts now serve one
-    * lattice, and the defects that slip past per-store freshness are
+    * the same freeze generation?). Eight stores and the manifest serve
+    * one lattice, and the defects that slip past per-store freshness are
     * exactly cross-store: a route index banded over a DIFFERENT sticky
     * generation serves splits the sticky table never assigned; a
     * tokenizer or retrieval index frozen at another boundary monitors a
@@ -265,118 +255,51 @@ object Audit {
     * cross-store constraint with both boundary values and a 0/1 pass —
     * the page a deployment reads BEFORE flipping a session to a store
     * set. Unconfigured artifacts audit at their would-be in-session
-    * boundaries (thr / max_id — every constraint then passes by the
+    * boundaries (their axis heads — every constraint then passes by the
     * shared 9/10 rule, which is what the oracle checks; mixed
     * generations are exercised by the negative test).
     *
+    * The rows come from the store registry: every store declares its
+    * [[Artifacts.Coherence]] role — a [[Artifacts.Check]] against a
+    * typed right side (another store or an axis head), or
+    * [[Artifacts.Anchor]], the deliberate, reviewable choice that this
+    * store IS the generation others compare against. The role is a
+    * required field, so a new store cannot ship outside the coherence
+    * matrix unnoticed.
+    *
     * Cost shape: stamps only ([[Artifacts.readStampFacts]] per
-    * configured store — a meta collect each) plus ONE 1-row max over
-    * the doc-id projection; no store data is read, no derivation runs.
+    * configured store — a meta collect each) plus three 1-row maxes
+    * over the corpus axes; no store data is read, no derivation runs.
     * At 100 TB this is free, which is the point: coherence must be
     * checkable on every session flip, not once per audit cycle. */
-  /** x77's per-artifact coherence decision — registry-driven like x74
-    * (`x77RowsFor` pins its spec keys to [[Artifacts.versions]]): every
-    * stamped store ships with EITHER a named cross-store constraint or
-    * an explicit [[X77Anchor]] declaration (the deliberate, reviewable
-    * choice that this artifact IS the generation anchor others compare
-    * against) — a store #N+1 can no longer ship outside the coherence
-    * matrix unnoticed, which is exactly how `x57_index` stayed
-    * row-less through r18. */
-  private[graft] sealed trait X77Spec
-  private[graft] case object X77Anchor extends X77Spec
-  private[graft] final case class X77Check(checkName: String,
-      rightKey: String, op: (Long, Long) => Boolean) extends X77Spec
-
   def x77StoreCoherence(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val mx = documents(spark, dir).agg(max(col("doc_id")))
       .collect()(0).getLong(0) // 1 row — the corpus head
-    val thr = Math.floorDiv(9L * mx, 10L)
     val mxV = table(spark, dir, "embeddings").agg(max(col("vec_id")))
       .collect()(0).getLong(0) // 1 row — the vector-lattice head
     val mxDay = events(spark, dir)
       .agg(max(date_format(to_date(col("ts")), "yyyyMMdd").cast("long")))
       .collect()(0).getLong(0) // 1 row — the events-axis head
-    x77RowsFor(spark,
-      specs = Map(
-        // the generation anchor: every doc-lattice row compares to it
-        "x68_sticky" -> X77Anchor,
-        // the router's index must be banded over the EXACT sticky
-        // generation it serves (persistRouteIndex's production order)
-        "s18_index" -> X77Check("route_index_matches_sticky", "x68_sticky", _ == _),
-        // the label index's seed slice must be covered by the label
-        // store x75 maintains from
-        "s21_index" -> X77Check("label_index_inside_labels", "x24_labels", _ <= _),
-        // drift monitor + retrieval screen must freeze WITH the splits —
-        // a different generation monitors a corpus the splits never saw
-        "x62b_merges" -> X77Check("merges_match_sticky", "x68_sticky", _ == _),
-        "s20_stats" -> X77Check("retrieval_stats_match_sticky", "x68_sticky", _ == _),
-        // the full labeling must cover the frozen history slice (sticky
-        // seeding and x63's inheritance both join through it)
-        "x24_labels" -> X77Check("labels_cover_history", "x68_sticky", _ >= _),
-        // the vector lattice's one store lives on a DIFFERENT corpus
-        // axis (embeddings, not documents) — its generation check is
-        // against that axis's head, stamped vs current
-        "x57_index" -> X77Check("ivf_index_matches_embeddings", "embeddings_head", _ == _),
-        // the sketch warehouse lives on the EVENTS axis — generation
-        // check against that axis's head (the x57 posture)
-        "sketch_daily" -> X77Check("sketches_match_events", "events_head", _ == _),
-        // the manifest names ONE generation — its stamped boundary must
-        // be the sticky generation it points the session at
-        "store_manifest" -> X77Check("manifest_matches_sticky", "x68_sticky", _ == _)),
-      bounds = Map(
-        "x68_sticky" -> (("thr", thr)),
-        "s18_index" -> (("thr", thr)),
-        "s21_index" -> (("thr", thr)),
-        "x62b_merges" -> (("thr", thr)),
-        "s20_stats" -> (("thr", thr)),
-        "x24_labels" -> (("max_id", mx)),
-        "x57_index" -> (("max_id", mxV)),
-        "sketch_daily" -> (("max_day", mxDay)),
-        "store_manifest" -> (("thr", thr))),
-      pseudo = Map("embeddings_head" -> mxV, "events_head" -> mxDay))
-  }
-
-  /** x77's row builder over explicit registries — split out (the
-    * x74RowsFor idiom) so a negative test can drive it with a spec map
-    * that misses or invents an artifact and assert the loud refusal.
-    * `specs` decides each artifact's constraint (or anchor role);
-    * `bounds` maps every artifact to its (freeze prop, would-be
-    * in-session value); `pseudo` carries non-artifact right sides
-    * (corpus heads on other axes). Both artifact-keyed maps must cover
-    * [[Artifacts.versions]] exactly. */
-  private[graft] def x77RowsFor(spark: SparkSession,
-      specs: Map[String, X77Spec],
-      bounds: Map[String, (String, Long)],
-      pseudo: Map[String, Long]): DataFrame = {
-    import spark.implicits._
-    def pinned(name: String, keys: scala.collection.Set[String]): Unit =
-      require(keys == Artifacts.versions.keySet,
-        s"x77 $name drifted from the artifact registry — " +
-          s"undecided stores: ${(Artifacts.versions.keySet -- keys).toSeq.sorted}; " +
-          s"entries without a registered store: ${(keys -- Artifacts.versions.keySet).toSeq.sorted}")
-    pinned("coherence specs", specs.keySet)
-    pinned("boundary specs", bounds.keySet)
-    // one boundary resolution per artifact (the anchor is the right side
+    val heads = Heads(mx, mxV, mxDay)
+    // one boundary resolution per store (the anchor is the right side
     // of several rows — never re-read its stamp per row)
-    val boundary: Map[String, Long] = bounds.map { case (artifact, (key, wouldBe)) =>
-      artifact -> (Artifacts.configuredPath(spark, artifact) match {
-        case Some(p) =>
-          val (_, props) = Artifacts.readStampFacts(spark, p, artifact)
-          require(props.contains(key),
-            s"x77: $artifact stamp at $p lacks the '$key' freeze prop — " +
-              "re-persist with the current producer")
-          props(key).toLong
-        case None => wouldBe
-      })
-    }
-    specs.toSeq.collect { case (artifact, X77Check(name, rightKey, op)) =>
-      val rb = pseudo.getOrElse(rightKey, {
-        require(boundary.contains(rightKey),
-          s"x77: check '$name' references unknown right side '$rightKey'")
-        boundary(rightKey)
-      })
-      val lb = boundary(artifact)
-      (name, artifact, rightKey, lb, rb, if (op(lb, rb)) 1L else 0L)
+    val boundary: Map[String, Long] = Artifacts.stores.map { s =>
+      s.key -> Artifacts.configuredPath(spark, s.key).fold(heads.at(s.axis)) { p =>
+        Artifacts.stampedLong(s, p, Artifacts.readStampFacts(spark, p, s.key)._2, s.prop)
+      }
+    }.toMap
+    Artifacts.stores.flatMap { s =>
+      s.coherence match {
+        case Artifacts.Check(name, right, op) =>
+          val rb = right match {
+            case r: Artifacts.Store => boundary(r.key)
+            case a: Artifacts.Axis  => heads.at(a)
+          }
+          val lb = boundary(s.key)
+          Some((name, s.key, right.name, lb, rb, if (op(lb, rb)) 1L else 0L))
+        case Artifacts.Anchor => None
+      }
     }
       .toDF("check_name", "left_artifact", "right_artifact",
         "left_boundary", "right_boundary", "pass")

@@ -529,20 +529,12 @@ object PipelineOps {
   def x75IncLabels(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir).select(col("doc_id"))
     val pairs = Stages.x13Pairs(spark, dir).select(col("d1"), col("d2"))
-    val (thr, seed) = Artifacts.configuredPath(spark, "x24_labels") match {
-      case Some(p) =>
-        // ONE validation pass serves both the frame and the freeze
-        // boundary — readStampedFacts memoizes the triple, so the
-        // max_id prop costs no second meta read or count() job
-        val (stored, _, props) = Stages.readStampedFacts(spark, p, "x24_labels")
-        require(props.contains("max_id"),
-          s"x75: labels store at $p lacks the 'max_id' freeze prop — " +
-            "re-persist with the current producer")
-        (props("max_id").toLong, stored.select(col("doc_id"), col("cluster_id")))
-      case None =>
-        val t = d.agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-          .collect()(0).getLong(0) // 1 row — the installment boundary
-        (t, Stages.x75Seed(spark, dir))
+    val (thr, seed) = Stages.generation(spark, Artifacts.Labels) match {
+      // ONE memoized validation pass serves both the frame and the
+      // stamped boundary — no second meta read or count() job
+      case Some((stored, maxId)) => (maxId, stored.select(col("doc_id"), col("cluster_id")))
+      // 1 row — the installment boundary
+      case None => (Tables.historyThr(d), Stages.x75Seed(spark, dir))
     }
     incLabelsOn(seed, d, pairs.filter(col("d1") > thr || col("d2") > thr))
   }
@@ -1080,7 +1072,7 @@ object PipelineOps {
     * doc) — consumers go through [[Stages.x36Hits]]. */
   private[graft] def x36HitsUnsorted(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir).select(col("doc_id"), toks(col("text")).as("w"))
-    val thr = d.agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)).as("thr"))
+    val thr = d.agg(Tables.historyThr(max(col("doc_id"))).as("thr"))
     // the batch split runs BEFORE the gram transform, so each branch
     // hashes only its own share of the corpus (index 0.9×, batch 0.1×),
     // not the full corpus twice
@@ -1351,7 +1343,7 @@ object PipelineOps {
     * ingests. */
   def x41DatasetDiff(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)).as("thr"))
+    val thr = d.agg(Tables.historyThr(max(col("doc_id"))).as("thr"))
     val a = d.crossJoin(broadcast(thr)).filter(col("doc_id") <= col("thr"))
       .select(col("doc_id"), md5(col("text")).as("ha"))
     val b = d.filter(col("doc_id") % 19 =!= 0)
@@ -1648,11 +1640,10 @@ object PipelineOps {
     * throws on any mismatch — a wrong-table, stale-version, or torn
     * store fails at the read, never as silent split migration. */
   def persistStickySplits(spark: SparkSession, dir: String, path: String): Unit = {
-    val thr = documents(spark, dir)
-      .agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0) // 1 row — the frozen boundary, stamped as provenance
+    // 1 row — the frozen boundary, stamped as provenance
+    val thr = Tables.historyThr(documents(spark, dir))
     Artifacts.writeStamped(spark, stickySplitsUnstaged(spark, dir), path,
-      "x68_sticky", Map("thr" -> thr.toString))
+      Artifacts.Sticky.key, Map(Artifacts.Sticky.prop -> thr.toString))
   }
 
   /** Persist x24's cluster labels — the THIRD stored-governance artifact
@@ -1676,7 +1667,7 @@ object PipelineOps {
       connectedComponents(
         documents(spark, dir).select(col("doc_id")),
         Stages.x13Pairs(spark, dir).select(col("d1"), col("d2"))),
-      path, "x24_labels", Map("max_id" -> maxId.toString))
+      path, Artifacts.Labels.key, Map(Artifacts.Labels.prop -> maxId.toString))
   }
 
   /** Persist the s18 router's frozen band index — the SIXTH stored-
@@ -1702,7 +1693,7 @@ object PipelineOps {
     // unconfigured it equals the corpus 9/10 boundary as before
     val thr = stickyGeneration(spark, dir)._2
     Artifacts.writeStamped(spark, routeIndexUnstaged(spark, dir), path,
-      "s18_index", Map("thr" -> thr.toString))
+      Artifacts.RouteIndex.key, Map(Artifacts.RouteIndex.prop -> thr.toString))
   }
 
   /** Persist the s21 label router's frozen band index — the SEVENTH
@@ -1716,11 +1707,10 @@ object PipelineOps {
     * [[Stages.s21Index]] serves it to the s21 gate and its batch twin —
     * stamped, loud on missing/wrong/stale. */
   def persistLabelIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    val thr = documents(spark, dir)
-      .agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0) // 1 row — the frozen boundary, stamped for x74's audit
+    // 1 row — the frozen boundary, stamped for x74's audit
+    val thr = Tables.historyThr(documents(spark, dir))
     Artifacts.writeStamped(spark, labelIndexUnstaged(spark, dir), path,
-      "s21_index", Map("thr" -> thr.toString))
+      Artifacts.LabelIndex.key, Map(Artifacts.LabelIndex.prop -> thr.toString))
   }
 
   // ---- incremental re-freeze: the stored-governance maintenance path ----
@@ -1816,21 +1806,15 @@ object PipelineOps {
     require(Artifacts.normPath(spark, path) != Artifacts.normPath(spark, fromPath),
       s"sticky refreeze: refusing in-place overwrite of $fromPath — " +
         "write the new generation to a fresh path (generational store layout)")
-    val (oldSticky, _, props) = Stages.readStampedFacts(spark, fromPath, "x68_sticky")
-    require(props.contains("thr"),
-      s"sticky store at $fromPath lacks the 'thr' freeze prop — re-persist")
-    val thrOld = props("thr").toLong
-    val thrNew = documents(spark, dir)
-      .agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val (oldSticky, thrOld) = Stages.generationAt(spark, fromPath, Artifacts.Sticky)
+    val thrNew = Tables.historyThr(documents(spark, dir))
     require(thrNew >= thrOld,
       s"sticky refreeze: current boundary $thrNew is behind the stored generation $thrOld — " +
         "wrong corpus or wrong store")
     Artifacts.writeStamped(spark,
       splitStableOn(oldSticky, Stages.x75Seed(spark, dir))
         .select(col("doc_id"), col("split").as("split_old")),
-      path, "x68_sticky",
-      Map("thr" -> thrNew.toString, "merged_from_thr" -> thrOld.toString))
+      path, Artifacts.Sticky.key, refreezeProps(Artifacts.Sticky, thrNew, thrOld))
   }
 
   /** Incremental route-index re-freeze: band ONLY the docs that arrived
@@ -1849,10 +1833,7 @@ object PipelineOps {
     require(Artifacts.normPath(spark, path) != Artifacts.normPath(spark, fromPath),
       s"route-index refreeze: refusing in-place overwrite of $fromPath — " +
         "write the new generation to a fresh path")
-    val (oldIdx, _, props) = Stages.readStampedFacts(spark, fromPath, "s18_index")
-    require(props.contains("thr"),
-      s"route index at $fromPath lacks the 'thr' freeze prop — re-persist")
-    val thrOld = props("thr").toLong
+    val (oldIdx, thrOld) = Stages.generationAt(spark, fromPath, Artifacts.RouteIndex)
     val (sticky, thrNew) = stickyGeneration(spark, dir)
     require(thrNew >= thrOld,
       s"route-index refreeze: sticky generation $thrNew is behind the stored index $thrOld — " +
@@ -1863,8 +1844,7 @@ object PipelineOps {
       mergeRouteIndex(oldIdx, deltaBands,
         sticky.filter(col("doc_id") > thrOld)
           .select(col("doc_id"), col("split_old").as("split"))),
-      path, "s18_index",
-      Map("thr" -> thrNew.toString, "merged_from_thr" -> thrOld.toString))
+      path, Artifacts.RouteIndex.key, refreezeProps(Artifacts.RouteIndex, thrNew, thrOld))
   }
 
   /** Incremental label-index re-freeze ([[persistRouteIndexIncremental]]'s
@@ -1880,13 +1860,8 @@ object PipelineOps {
     require(Artifacts.normPath(spark, path) != Artifacts.normPath(spark, fromPath),
       s"label-index refreeze: refusing in-place overwrite of $fromPath — " +
         "write the new generation to a fresh path")
-    val (oldIdx, _, props) = Stages.readStampedFacts(spark, fromPath, "s21_index")
-    require(props.contains("thr"),
-      s"label index at $fromPath lacks the 'thr' freeze prop — re-persist")
-    val thrOld = props("thr").toLong
-    val thrNew = documents(spark, dir)
-      .agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val (oldIdx, thrOld) = Stages.generationAt(spark, fromPath, Artifacts.LabelIndex)
+    val thrNew = Tables.historyThr(documents(spark, dir))
     require(thrNew >= thrOld,
       s"label-index refreeze: current boundary $thrNew is behind the stored index $thrOld — " +
         "wrong corpus or wrong store")
@@ -1903,9 +1878,15 @@ object PipelineOps {
     Artifacts.writeStamped(spark,
       mergeLabelIndex(oldIdx, deltaBands,
         seedNew.filter(col("doc_id") > thrOld), renameTo),
-      path, "s21_index",
-      Map("thr" -> thrNew.toString, "merged_from_thr" -> thrOld.toString))
+      path, Artifacts.LabelIndex.key, refreezeProps(Artifacts.LabelIndex, thrNew, thrOld))
   }
+
+  /** A re-frozen generation's stamp props: the new boundary under the
+    * store's freeze prop, and the generation it merged from as lineage
+    * for audits (`merged_from_<prop>`). */
+  private def refreezeProps(store: Artifacts.Store, thrNew: Long,
+      thrOld: Long): Map[String, String] =
+    Map(store.prop -> thrNew.toString, s"merged_from_${store.prop}" -> thrOld.toString)
 
   /** One side of x78's comparison: (band, h) plus the STORED payload
     * struct (df + bits/labs) and the SERVED payload struct (null past
@@ -1968,8 +1949,7 @@ object PipelineOps {
     * (lattice, not corpus) full-outer joins on (band, h). */
   def x78IndexRefreeze(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir).select(col("doc_id"), col("text"))
-    val thrOld = d.agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0) // 1 row — generation k's boundary
+    val thrOld = Tables.historyThr(d) // 1 row — generation k's boundary
     // r19 opt (guide §2.4/§3.3): the proof's shared inputs each fed TWO+
     // consumers as independent subtrees — the corpus banding appeared
     // FOUR times in the one plan (full rebuild ×2, delta ×2; Spark
@@ -1994,10 +1974,10 @@ object PipelineOps {
     val incLabel = mergeLabelIndex(Stages.s21IndexFull(spark, dir), deltaBands,
       seedNew.filter(col("doc_id") > thrOld),
       seedNew.select(col("doc_id").as("lab"), col("cluster_id").as("new_lab")))
-    refreezeRows("s18_index",
+    refreezeRows(Artifacts.RouteIndex.key,
       refreezeJoined(routeIndexOn(allBands, stickyNew), incRoute, "bits",
         col("bits").as("v")))
-      .unionByName(refreezeRows("s21_index",
+      .unionByName(refreezeRows(Artifacts.LabelIndex.key,
         refreezeJoined(labelIndexOn(allBands, seedNew), incLabel, "labs",
           array_min(col("labs")).as("v"))))
       .orderBy("index_name", "form")
@@ -2375,17 +2355,9 @@ object PipelineOps {
     * x74's boundary-only audit); unconfigured, the in-session stage at
     * the corpus 9/10 boundary. */
   private[graft] def stickyGeneration(spark: SparkSession, dir: String): (DataFrame, Long) =
-    Artifacts.configuredPath(spark, "x68_sticky") match {
-      case Some(p) =>
-        val (stored, _, props) = Stages.readStampedFacts(spark, p, "x68_sticky")
-        require(props.contains("thr"),
-          s"sticky store at $p lacks the 'thr' freeze prop — re-persist with the current producer")
-        (stored, props("thr").toLong)
-      case None =>
-        val thr = documents(spark, dir)
-          .agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-          .collect()(0).getLong(0) // 1 row — the installment boundary
-        (Stages.x68Sticky(spark, dir), thr)
+    Stages.generation(spark, Artifacts.Sticky).getOrElse {
+      val thr = Tables.historyThr(documents(spark, dir)) // 1 row — the installment boundary
+      (Stages.x68Sticky(spark, dir), thr)
     }
 
   /** The router's FROZEN index, stored form (band, h, df, bits):
@@ -2414,8 +2386,7 @@ object PipelineOps {
     * served min-label projection through [[Stages.s21Index]]. */
   private[graft] def labelIndexUnstaged(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir).select(col("doc_id"))
-    val thr = d.agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val thr = Tables.historyThr(d)
     labelIndexOn(Stages.x13BandsAll(spark, dir).filter(col("doc_id") <= thr),
       Stages.x75Seed(spark, dir))
   }
@@ -2427,8 +2398,7 @@ object PipelineOps {
     * gate's stateless per-row execution equal to this. */
   private[graft] def labelRouteDecisions(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val thr = Tables.historyThr(d)
     val hit = Stages.x13BandsAll(spark, dir).filter(col("doc_id") > thr)
       .join(Stages.s21Index(spark, dir), Seq("band", "h"))
       .groupBy(col("doc_id")).agg(min(col("lab")).as("lab"))
@@ -2456,8 +2426,7 @@ object PipelineOps {
     * this; x69 audits it against x68's closure. */
   private[graft] def routeDecisions(spark: SparkSession, dir: String): DataFrame = {
     val d = documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val thr = Tables.historyThr(d)
     val arrBits = Stages.x13BandsAll(spark, dir).filter(col("doc_id") > thr)
       .join(Stages.s18Index(spark, dir), Seq("band", "h"))
       .groupBy(col("doc_id")).agg(bit_or(col("bits")).as("bits"))
@@ -2582,9 +2551,7 @@ object PipelineOps {
     * then ONE tiny groupBy over ≤2 origin cells — map-side combinable,
     * output bounded by construction. */
   def x76LabelAgreement(spark: SparkSession, dir: String): DataFrame = {
-    val thr = documents(spark, dir)
-      .agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val thr = Tables.historyThr(documents(spark, dir))
     val batch = Stages.x75Labels(spark, dir)
       .filter(col("doc_id") > thr)
       .select(col("doc_id"), col("cluster_id").as("batch_label"))

@@ -46,11 +46,12 @@ object Stages {
   // part of the key so toggling spark.graft.stageDir mid-session builds
   // the new mode's stage instead of silently serving the old mode's
   private type Key = (SparkSession, String, String, Option[String])
-  private val cache = TrieMap.empty[Key, DataFrame]
-  private val centCache = TrieMap.empty[(SparkSession, String, Int), Seq[(Long, Seq[Long])]]
-  // small driver-held binary artifacts (serialized blooms): bounded by
-  // construction, no executor blocks to release — bare map hygiene only
-  private val blobCache = TrieMap.empty[(SparkSession, String, String), Array[Byte]]
+  // each entry carries the store keys its build consulted (see [[stage]])
+  private val cache = TrieMap.empty[Key, (DataFrame, Set[String])]
+  // small driver-held artifacts (centroids, codebooks, serialized blooms):
+  // bounded by construction, no executor blocks to release — bare map
+  // hygiene only (see [[held]])
+  private val heldCache = TrieMap.empty[(SparkSession, String, String), Any]
 
   // validated stamped-store reads, memoized per (session, path, artifact):
   // Artifacts.readStamped runs the meta collect plus a full count()
@@ -73,13 +74,21 @@ object Stages {
       artifact: String): DataFrame =
     readStampedEntry(spark, path, artifact)._1
 
-  /** The memoized validated frame PLUS the stamp's row count and freeze
-    * props — for consumers that need both (x75's store-seeded
-    * maintenance reads the frame and the `max_id` boundary); one
-    * validation pass serves every ask. */
-  private[graft] def readStampedFacts(spark: SparkSession, path: String,
-      artifact: String): (DataFrame, Long, Map[String, String]) =
-    readStampedEntry(spark, path, artifact)
+  /** The stamped store at `path`: its memoized validated frame and its
+    * stamped freeze boundary (the descriptor's axis prop, loud when
+    * missing) — one validation pass serves both. */
+  private[graft] def generationAt(spark: SparkSession, path: String,
+      store: Artifacts.Store): (DataFrame, Long) = {
+    val (df, _, props) = readStampedEntry(spark, path, store.key)
+    (df, Artifacts.stampedLong(store, path, props, store.prop))
+  }
+
+  /** [[generationAt]] of the CONFIGURED store, None when unconfigured —
+    * the frame + boundary pair x75's maintenance and the route index's
+    * sticky generation read. */
+  private[graft] def generation(spark: SparkSession,
+      store: Artifacts.Store): Option[(DataFrame, Long)] =
+    Artifacts.configuredPath(spark, store.key).map(generationAt(spark, _, store))
 
   private def readStampedEntry(spark: SparkSession, path: String,
       artifact: String): (DataFrame, Long, Map[String, String]) = {
@@ -105,48 +114,47 @@ object Stages {
   private[graft] def invalidateStamped(norm: String): Unit =
     stampedCache.keys.filter(_._2 == norm).foreach(stampedCache.remove)
 
-  /** Stage entries whose BUILD reads a stamped store (directly or
-    * transitively through another stage), keyed by the artifact whose
-    * overwrite makes them stale. The r19 shared-stage optimization
-    * opened a staleness hole the stampedCache eviction alone does not
-    * cover (r20, ADVICE fix): after an in-session re-persist of e.g. the
-    * labels store, `Stages.x75Labels` kept serving the frame derived
-    * from the PRE-persist generation. Stages that never read a store
-    * (the in-session x24_labels fixpoint, s17's store-blind trainer, the
-    * banding/pair stages) cannot go stale and are deliberately absent. */
-  private val storeDerivedStages: Map[String, Seq[String]] = {
-    // readers of the labels store (x24_labels), directly or via x75Seed:
-    // x75_seed (seeds from Stages.x24Labels), x75_labels (reads the
-    // store's max_id + frame), x68_sticky (projection of x75_seed),
-    // x68_assign (splitStableOn over x68Sticky + x24Labels), s18_index
-    // (bands the sticky generation), s21_index (bands over x75_seed)
-    val labelReaders = Seq("x75_seed", "x75_labels", "x68_sticky",
-      "x68_assign", "s18_index", "s21_index")
-    Map(
-      "x24_labels" -> labelReaders,
-      "x68_sticky" -> Seq("x68_assign", "s18_index"),
-      // a manifest overwrite can repoint EVERY store knob at once
-      "store_manifest" -> labelReaders)
+  // the store-key sets of the stage builds running on this thread,
+  // innermost first (builds nest: a stage's build asks for other stages)
+  private val building =
+    ThreadLocal.withInitial(() => List.empty[scala.collection.mutable.Set[String]])
+
+  /** Record a store consultation against the innermost stage build on
+    * this thread (a no-op outside builds). [[Artifacts.configuredPath]]
+    * calls it on EVERY resolution, successful or not: a stage built
+    * while its store was unconfigured is as stale after a persist as one
+    * built from the previous generation. [[stage]] passes an inner
+    * stage's set up to the enclosing build, on a build and on a cache
+    * hit alike, so a stage's set covers its whole derivation. */
+  private[graft] def consulted(artifact: String): Unit =
+    building.get.headOption.foreach(_ += artifact)
+
+  /** Drop every stage entry whose build consulted `artifact` — called by
+    * [[Artifacts.writeStamped]] after the overwrite, alongside
+    * [[invalidateStamped]]. Complete by construction: the dependency
+    * sets are recorded, never hand-kept, so a new stage that reads a
+    * store is evicted without being listed anywhere. Conservative across
+    * sessions and sfDirs: eviction is cheap (consumers rebuild on next
+    * ask and then resolve the CURRENT store generation), staleness is a
+    * correctness defect. The checkpoint blocks are NOT force-released
+    * here: frames constructed BEFORE the persist legitimately keep
+    * serving their construction-time generation (the StoreLifecycleSpec
+    * running-stream contract) and still reference the blocks — dropping
+    * our handle makes them ContextCleaner-reclaimable once those frames
+    * go. */
+  private[graft] def invalidateStoreDerived(artifact: String): Unit = synchronized {
+    dependents(artifact).foreach { k =>
+      cache.remove(k)
+      pinnedRdds.remove(k)
+    }
   }
 
-  /** Drop every stage entry derived from stores of `artifact` — called
-    * by [[Artifacts.writeStamped]] after the overwrite, alongside
-    * [[invalidateStamped]]. Conservative across sessions and sfDirs:
-    * eviction is cheap (consumers rebuild on next ask and then resolve
-    * the CURRENT store generation), staleness is a correctness defect.
-    * The checkpoint blocks are NOT force-released here: frames
-    * constructed BEFORE the persist legitimately keep serving their
-    * construction-time generation (the StoreLifecycleSpec running-stream
-    * contract) and still reference the blocks — dropping our handle
-    * makes them ContextCleaner-reclaimable once those frames go. */
-  private[graft] def invalidateStoreDerived(artifact: String): Unit = synchronized {
-    val names = storeDerivedStages.getOrElse(artifact, Seq.empty).toSet
-    if (names.nonEmpty)
-      (cache.keySet ++ pinnedRdds.keySet).filter(k => names(k._3)).foreach { k =>
-        cache.remove(k)
-        pinnedRdds.remove(k)
-      }
-  }
+  private def dependents(artifact: String): Iterable[Key] =
+    cache.collect { case (k, (_, deps)) if deps(artifact) => k }
+
+  /** The names of the cached stages whose build consulted `artifact`. */
+  private[graft] def dependentStages(artifact: String): Set[String] =
+    dependents(artifact).map(_._3).toSet
 
   /** The RDD handles whose blocks a localCheckpoint-mode stage pins.
     * `Dataset.unpersist` only uncaches CacheManager entries — it does NOT
@@ -179,8 +187,7 @@ object Stages {
     val owned = (cache.keySet ++ pinnedRdds.keySet).filter(_._1.sparkContext eq sc)
     if (sc.isStopped) owned.foreach { k => cache.remove(k); pinnedRdds.remove(k) }
     else owned.foreach(release)
-    centCache.keys.filter(_._1.sparkContext eq sc).foreach(centCache.remove)
-    blobCache.keys.filter(_._1.sparkContext eq sc).foreach(blobCache.remove)
+    heldCache.keys.filter(_._1.sparkContext eq sc).foreach(heldCache.remove)
     stampedCache.keys.filter(_._1.sparkContext eq sc).foreach(stampedCache.remove)
     runIds.keys.filter(_.sparkContext eq sc).foreach(dropRunScratch)
     // x15's PNG scratch is driver-local disk — delete even after the
@@ -193,7 +200,7 @@ object Stages {
   }
 
   private[graft] def cachedEntryCount: Int =
-    cache.size + centCache.size + blobCache.size + stampedCache.size
+    cache.size + heldCache.size + stampedCache.size
 
   /** Explicit per-session release, for long-lived JVMs cycling many
     * sessions over ONE live context (a notebook server): Spark has no
@@ -206,8 +213,7 @@ object Stages {
     * (see [[pinnedRdds]]) — call only when this session is done. */
   def evictSession(spark: SparkSession): Unit = synchronized {
     cache.keys.filter(_._1 eq spark).foreach(release)
-    centCache.keys.filter(_._1 eq spark).foreach(centCache.remove)
-    blobCache.keys.filter(_._1 eq spark).foreach(blobCache.remove)
+    heldCache.keys.filter(_._1 eq spark).foreach(heldCache.remove)
     stampedCache.keys.filter(_._1 eq spark).foreach(stampedCache.remove)
     // parquet mode: this session's run_<id> scratch subdir is dead with
     // its entries
@@ -257,8 +263,7 @@ object Stages {
   private def purgeStopped(): Unit = {
     cache.keys.filter(_._1.sparkContext.isStopped).foreach(cache.remove)
     pinnedRdds.keys.filter(_._1.sparkContext.isStopped).foreach(pinnedRdds.remove)
-    centCache.keys.filter(_._1.sparkContext.isStopped).foreach(centCache.remove)
-    blobCache.keys.filter(_._1.sparkContext.isStopped).foreach(blobCache.remove)
+    heldCache.keys.filter(_._1.sparkContext.isStopped).foreach(heldCache.remove)
     stampedCache.keys.filter(_._1.sparkContext.isStopped).foreach(stampedCache.remove)
     runIds.keys.filter(_.sparkContext.isStopped).foreach(dropRunScratch)
     hooked.keys.filter(_.isStopped).foreach(hooked.remove)
@@ -297,14 +302,16 @@ object Stages {
     * for localCheckpoint (orphaned blocks), but in parquet mode the two
     * losers would WRITE the same path concurrently. One monitor across
     * all stages is fine: builds are rare and heavy, lookups after the
-    * first never reach it (fast-path get). */
+    * first never reach it (fast-path get). Each entry keeps the store
+    * keys its build consulted ([[consulted]]), and every return — built
+    * or cached — passes them to the enclosing build, if any. */
   private def stage(spark: SparkSession, dir: String, name: String)
       (build: => DataFrame): DataFrame = {
     val key = (spark, dir, name, stageRoot(spark))
-    cache.get(key).getOrElse(synchronized {
+    val (df, deps) = cache.getOrElse(key, synchronized {
       purgeStopped()
       hookEviction(spark)
-      cache.getOrElseUpdate(key, key._4 match {
+      cache.getOrElseUpdate(key, recording(key._4 match {
         case Some(root) =>
           // one subdir per (sfDir, stage): the sanitized path plus its
           // hash keeps parallel scale factors from colliding under one
@@ -324,9 +331,42 @@ object Stages {
             case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
           })
           cp
-      })
+      }))
     })
+    deps.foreach(consulted)
+    df
   }
+
+  /** Run a stage build with a fresh consultation frame on this thread's
+    * stack; returns the built frame with the store keys it consulted. */
+  private def recording(build: => DataFrame): (DataFrame, Set[String]) = {
+    val deps = scala.collection.mutable.Set.empty[String]
+    building.set(deps :: building.get)
+    try (build, deps.toSet)
+    finally building.set(building.get.tail)
+  }
+
+  /** A driver-held artifact built once per (session, sfDir, name), under
+    * [[stage]]'s discipline: fast-path get, build under the one monitor —
+    * a lock-free getOrElseUpdate could run the build's jobs twice AND
+    * slip an entry past evictSession's synchronized key snapshot. */
+  private def held[T](spark: SparkSession, dir: String, name: String)(build: => T): T =
+    heldCache.getOrElse((spark, dir, name), synchronized {
+      purgeStopped()
+      hookEviction(spark)
+      heldCache.getOrElseUpdate((spark, dir, name), build)
+    }).asInstanceOf[T]
+
+  /** A stamped store's frame: the CONFIGURED store, validated and
+    * memoized ([[readStamped]] — loud on missing/wrong/stale, never a
+    * silent re-derive), else the in-session `build`, staged under the
+    * store's key so it runs once per session. */
+  private def served(spark: SparkSession, dir: String, store: Artifacts.Store)
+      (build: => DataFrame): DataFrame =
+    Artifacts.configuredPath(spark, store.key) match {
+      case Some(p) => readStamped(spark, p, store.key)
+      case None    => stage(spark, dir, store.key)(build)
+    }
 
   /** x2's exact 3-gram-Jaccard near-dup pairs (d1, d2, inter, n1, n2,
     * jac_s4), unsorted. */
@@ -356,13 +396,6 @@ object Stages {
   def x13Pairs(spark: SparkSession, dir: String): DataFrame =
     stage(spark, dir, "x13_pairs")(TextOps.x13Pairs(spark, dir))
 
-  /** The PERSISTED label-table location, if configured (the
-    * [[stickyPath]] convention: runtime conf `spark.graft.labelsPath`
-    * first, empty value forces re-derivation, `SPARK_GRAFT_LABELS_PATH`
-    * env var as the deployment default). */
-  private def labelsPath(spark: SparkSession): Option[String] =
-    Artifacts.configuredPath(spark, "x24_labels")
-
   /** x24's connected-component labels (doc_id, cluster_id) over the x13
     * candidate graph. Two sources, in priority order: (1) the PERSISTED
     * table ([[PipelineOps.persistLabels]] + `spark.graft.labelsPath`) —
@@ -375,14 +408,10 @@ object Stages {
     * that runs x13 + x24 + x33 + x35 executes the
     * shingle→minhash→band lineage exactly once. */
   def x24Labels(spark: SparkSession, dir: String): DataFrame =
-    labelsPath(spark) match {
-      case Some(p) => readStamped(spark, p, "x24_labels")
-      case None =>
-        stage(spark, dir, "x24_labels")(
-          PipelineOps.connectedComponents(
-            graft.model.Tables.documents(spark, dir).select(col("doc_id")),
-            x13Pairs(spark, dir).select(col("d1"), col("d2"))))
-    }
+    served(spark, dir, Artifacts.Labels)(
+      PipelineOps.connectedComponents(
+        graft.model.Tables.documents(spark, dir).select(col("doc_id")),
+        x13Pairs(spark, dir).select(col("d1"), col("d2"))))
 
   /** x75's in-session seed: the HISTORY labeling (doc_id ≤ the 9/10
     * boundary, components over history-internal pairs) — the
@@ -399,12 +428,8 @@ object Stages {
     * and its audit twins run the residual once per session. */
   def x75Seed(spark: SparkSession, dir: String): DataFrame =
     stage(spark, dir, "x75_seed") {
-      val d = graft.model.Tables.documents(spark, dir).select(col("doc_id"))
-      val thr = d.agg(graft.model.Tables.fdiv(
-          org.apache.spark.sql.functions.lit(9L) *
-            org.apache.spark.sql.functions.max(col("doc_id")),
-          org.apache.spark.sql.functions.lit(10L)))
-        .collect()(0).getLong(0) // 1 row — the installment boundary
+      val thr = graft.model.Tables.historyThr( // 1 row — the installment boundary
+        graft.model.Tables.documents(spark, dir).select(col("doc_id")))
       PipelineOps.histLabelsOn(
         x13Pairs(spark, dir).select(col("d1"), col("d2")),
         x24Labels(spark, dir), thr)
@@ -462,25 +487,7 @@ object Stages {
     * is stamp-validated and loud on missing/wrong/stale; (2) the
     * in-session stage. */
   def s17Merges(spark: SparkSession, dir: String): DataFrame =
-    mergesPath(spark) match {
-      case Some(p) => readStamped(spark, p, "x62b_merges")
-      case None =>
-        stage(spark, dir, "s17_merges")(TextOps.frozenWordTypeMerges(spark, dir)._2)
-    }
-
-  /** The PERSISTED tokenizer location, if configured (the [[stickyPath]]
-    * convention: runtime conf `spark.graft.mergesPath` first, empty value
-    * forces re-derivation, `SPARK_GRAFT_MERGES_PATH` env var as the
-    * deployment default). */
-  private def mergesPath(spark: SparkSession): Option[String] =
-    Artifacts.configuredPath(spark, "x62b_merges")
-
-  /** The PERSISTED sticky-table location, if configured: runtime conf
-    * `spark.graft.stickyPath` first (testable per session; an empty value
-    * forces re-derivation — the stageDir convention), env var
-    * `SPARK_GRAFT_STICKY_PATH` as the deployment default. */
-  private def stickyPath(spark: SparkSession): Option[String] =
-    Artifacts.configuredPath(spark, "x68_sticky")
+    served(spark, dir, Artifacts.Merges)(TextOps.frozenWordTypeMerges(spark, dir)._2)
 
   /** x68's sticky split table (doc_id, split_old — one row per HISTORY
     * doc). Two sources, in priority order: (1) the PERSISTED table
@@ -498,18 +505,7 @@ object Stages {
     * session. Read by x68's batch assignment and the s18 routing gate's
     * frozen index. */
   def x68Sticky(spark: SparkSession, dir: String): DataFrame =
-    stickyPath(spark) match {
-      case Some(p) => readStamped(spark, p, "x68_sticky")
-      case None =>
-        stage(spark, dir, "x68_sticky")(PipelineOps.stickySplitsUnstaged(spark, dir))
-    }
-
-  /** The PERSISTED route-index location, if configured (the
-    * [[stickyPath]] convention: runtime conf `spark.graft.routeIndexPath`
-    * first, empty value forces re-derivation, `SPARK_GRAFT_ROUTE_INDEX_PATH`
-    * env var as the deployment default). */
-  private def routeIndexPath(spark: SparkSession): Option[String] =
-    Artifacts.configuredPath(spark, "s18_index")
+    served(spark, dir, Artifacts.Sticky)(PipelineOps.stickySplitsUnstaged(spark, dir))
 
   /** The s18 router's frozen index in its STORED form (band, h, df,
     * bits — over- and under-cap buckets, tombstoned payloads past the
@@ -524,11 +520,7 @@ object Stages {
     * 0.97 s); stamp-validated, loud on missing/wrong/stale; (2) the
     * in-session stage, so the banding runs once per session. */
   def s18IndexFull(spark: SparkSession, dir: String): DataFrame =
-    routeIndexPath(spark) match {
-      case Some(p) => readStamped(spark, p, "s18_index")
-      case None =>
-        stage(spark, dir, "s18_index")(PipelineOps.routeIndexUnstaged(spark, dir))
-    }
+    served(spark, dir, Artifacts.RouteIndex)(PipelineOps.routeIndexUnstaged(spark, dir))
 
   /** The SERVED route index (band, h, bits — under-cap buckets only),
     * read by the s18 gate's stream-static joins and x69's agreement
@@ -536,11 +528,6 @@ object Stages {
     * the over-cap occupancies the incremental merge needs. */
   def s18Index(spark: SparkSession, dir: String): DataFrame =
     PipelineOps.serveRouteIndex(s18IndexFull(spark, dir))
-
-  /** The PERSISTED label-index location, if configured (the
-    * [[stickyPath]] convention). */
-  private def labelIndexPath(spark: SparkSession): Option[String] =
-    Artifacts.configuredPath(spark, "s21_index")
 
   /** The s21 label router's frozen index in its STORED form (band, h,
     * df, labs — distinct member-label sets, tombstoned past the cap):
@@ -550,11 +537,7 @@ object Stages {
     * stamp-validated, loud on missing/wrong/stale; (2) the in-session
     * stage, so the banding + seed fixpoint run once per session. */
   def s21IndexFull(spark: SparkSession, dir: String): DataFrame =
-    labelIndexPath(spark) match {
-      case Some(p) => readStamped(spark, p, "s21_index")
-      case None =>
-        stage(spark, dir, "s21_index")(PipelineOps.labelIndexUnstaged(spark, dir))
-    }
+    served(spark, dir, Artifacts.LabelIndex)(PipelineOps.labelIndexUnstaged(spark, dir))
 
   /** The SERVED label index (band, h, lab = min member label), read by
     * the s21 gate's stream-static joins and its batch twin (the
@@ -571,11 +554,7 @@ object Stages {
     * loud on missing/wrong/stale; (2) the in-session build, staged so
     * q28 and q29 aggregate the log once per session. */
   def sketchDaily(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.configuredPath(spark, "sketch_daily") match {
-      case Some(p) => readStamped(spark, p, "sketch_daily")
-      case None =>
-        stage(spark, dir, "sketch_daily")(Analytics.sketchDailyUnstaged(spark, dir))
-    }
+    served(spark, dir, Artifacts.Sketches)(Analytics.sketchDailyUnstaged(spark, dir))
 
   /** x36's incremental-batch hit counts (doc_id, n_keys, n_hit) against
     * the 90%-corpus shingle index — read by x36's novelty verdict and by
@@ -609,18 +588,8 @@ object Stages {
     * (session, sfDir) so the registered q26 query, its audit twin runs,
     * and any other caller plant the SAME literal from ONE dim stats
     * pass — the amortized form the q24 stats stage established. */
-  def q26Bloom(spark: SparkSession, dir: String): Array[Byte] = {
-    val key = (spark, dir, "q26_bloom")
-    // same discipline as [[stage]]: fast-path get, build under the one
-    // monitor — a lock-free getOrElseUpdate could run the dim jobs twice
-    // AND slip an entry past evictSession's synchronized key snapshot
-    blobCache.get(key).getOrElse(synchronized {
-      purgeStopped()
-      hookEviction(spark)
-      blobCache.getOrElseUpdate(key,
-        Relational.q26BloomBytes(Relational.q26Dim(spark, dir)))
-    })
-  }
+  def q26Bloom(spark: SparkSession, dir: String): Array[Byte] =
+    held(spark, dir, "q26_bloom")(Relational.q26BloomBytes(Relational.q26Dim(spark, dir)))
 
   /** x49's ranked gram index (doc_id, h0, df, rnk, n): per-doc distinct
     * 64-bit 3-gram keys with global document frequency, rarest-first
@@ -648,22 +617,14 @@ object Stages {
     * cluster key. */
   def x16Centroids(spark: SparkSession, dir: String,
       k: Int = VectorOps.x16K): Seq[(Long, Seq[Long])] =
-    centCache.getOrElseUpdate((spark, dir, k), VectorOps.kmeansCentroids(spark, dir, k))
-
-  private val pqCache = TrieMap.empty[(SparkSession, String), Seq[(Long, Long, Seq[Long])]]
+    held(spark, dir, s"x16_centroids_$k")(VectorOps.kmeansCentroids(spark, dir, k))
 
   /** The trained PQ codebooks (m, cid, cu) — driver-held M·k·sub longs
     * (512 here), the same bounded-collect shape as [[x16Centroids]].
     * Trained once per (session, sfDir); consumed by x56's encoder, x57's
     * ADC search, and x58's recall QA. */
   def pqBooks(spark: SparkSession, dir: String): Seq[(Long, Long, Seq[Long])] =
-    pqCache.getOrElseUpdate((spark, dir), VectorOps.pqTrainBooks(spark, dir))
-
-  /** The PERSISTED IVFADC-index location, if configured (the
-    * [[stickyPath]] convention: runtime conf first, empty value forces
-    * re-derivation, env var as the deployment default). */
-  private def ivfIndexPath(spark: SparkSession): Option[String] =
-    Artifacts.configuredPath(spark, "x57_index")
+    held(spark, dir, "pq_books")(VectorOps.pqTrainBooks(spark, dir))
 
   /** The materialized IVFADC index (vec_id, m, cid, list_id): coarse
     * inverted-file assignment + PQ codes, M rows × three longs per
@@ -677,10 +638,7 @@ object Stages {
     * recall QA, and the s16 gate; sized ∝ corpus rows (3 longs × M per
     * vector), far smaller than any gram stage. */
   def x57Index(spark: SparkSession, dir: String): DataFrame =
-    ivfIndexPath(spark) match {
-      case Some(p) => readStamped(spark, p, "x57_index")
-      case None    => stage(spark, dir, "x57_index")(VectorOps.buildPqIndex(spark, dir))
-    }
+    served(spark, dir, Artifacts.IvfIndex)(VectorOps.buildPqIndex(spark, dir))
 
   /** The per-user daily-cents series (user_id, sv) — |users| rows ×
     * #days longs, bounded. Read by the series trio x59/x60/x61, each of
@@ -699,9 +657,7 @@ object Stages {
     // (purgeStopped removes cache rows for stopped contexts first)
     (cache.keySet ++ pinnedRdds.keySet).foreach(release)
     cache.clear()
-    centCache.clear()
-    pqCache.clear()
-    blobCache.clear()
+    heldCache.clear()
     stampedCache.clear()
     // the manifest (artifact → path) maps are read memos the same way —
     // the global reset must cover them or a per-factor scaling run

@@ -970,8 +970,7 @@ object TextOps {
   private[graft] def frozenWordTypeMerges(spark: SparkSession, dir: String,
       rounds: Int = bpeRounds): (Long, DataFrame) = {
     val d = documents(spark, dir)
-    val thr = d.agg(fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0) // 1 row — the split point
+    val thr = Tables.historyThr(d) // 1 row — the split point
     (thr, x62bBpeWordTrainOn(spark, d.filter(col("doc_id") <= thr), rounds))
   }
 
@@ -994,8 +993,9 @@ object TextOps {
     * fresh stamp). */
   def persistMerges(spark: SparkSession, dir: String, path: String): Unit = {
     val (thr, merges) = frozenWordTypeMerges(spark, dir)
-    Artifacts.writeStamped(spark, merges, path, "x62b_merges",
-      Map("thr" -> thr.toString, "rounds" -> "6"))
+    Artifacts.writeStamped(spark, merges, path, Artifacts.Merges.key,
+      Map(Artifacts.Merges.prop -> thr.toString,
+        Artifacts.Rows.Rounds.prop -> bpeRounds.toString))
   }
 
   /** Char-level-within-words document rendering for WORD-TYPE merge

@@ -782,8 +782,8 @@ object VectorOps {
   def persistPqIndex(spark: SparkSession, dir: String, path: String): Unit = {
     val maxId = scaledEmb(spark, dir).agg(max(col("vec_id")))
       .collect()(0).getLong(0) // 1 row — the freeze boundary, stamped for x74's audit
-    Artifacts.writeStamped(spark, buildPqIndex(spark, dir), path, "x57_index",
-      Map("max_id" -> maxId.toString))
+    Artifacts.writeStamped(spark, buildPqIndex(spark, dir), path, Artifacts.IvfIndex.key,
+      Map(Artifacts.IvfIndex.prop -> maxId.toString))
   }
 
   /** x57: IVF-PQ ADC search (Jégou et al. TPAMI'11 §IV, "IVFADC") — the

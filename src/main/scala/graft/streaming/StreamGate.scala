@@ -329,7 +329,7 @@ object StreamGate {
     * max(1, n_keys/20) (20× slack over the configured fpp=1e-3). */
   def s8NoveltyStream(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(Tables.fdiv(lit(9L) * max(col("doc_id")), lit(10L))).collect()(0).getLong(0)
+    val thr = Tables.historyThr(d)
     val indexDocs = d.filter(col("doc_id") <= thr)
     // arrivals come off the shared docs feed, filtered post-read: the
     // probe is stateless, so the arrivals landing in the feed's tail
@@ -382,8 +382,7 @@ object StreamGate {
     * exact parity, no bound flags needed. */
   def s17BpeDriftStream(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(Tables.fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val thr = Tables.historyThr(d)
     val merges = graft.ops.Stages.s17Merges(spark, dir)
       .orderBy("round").collect() // k rows — the frozen tokenizer
       .map(r => (r.getString(1), r.getString(2)))
@@ -441,8 +440,7 @@ object StreamGate {
     * exact parity, no bound flags. */
   def s18SplitRouteStream(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(Tables.fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val thr = Tables.historyThr(d)
     // frozen index: ≤ 4 rows per history doc before the hot-bucket cap,
     // one row per surviving (band, h) after the OR — bounded, STAGED
     // (materialized once per session, shared with x69's audit) so the
@@ -501,8 +499,7 @@ object StreamGate {
     * parity, no bound flags. */
   def s21LabelRouteStream(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(Tables.fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val thr = Tables.historyThr(d)
     val idx = graft.ops.Stages.s21Index(spark, dir)
     val feed = sharedDocsFeed(spark, dir)
     val arr = feedStream(spark, feed, docsFeedDf(spark, dir).schema)
@@ -583,12 +580,6 @@ object StreamGate {
       .orderBy("doc_id")
   }
 
-  /** The PERSISTED retrieval-stats location, if configured (the
-    * stickyPath convention: runtime conf first, empty value forces
-    * re-derivation, env var as the deployment default). */
-  private def retrievalStatsPath(spark: SparkSession): Option[String] =
-    graft.ops.Artifacts.configuredPath(spark, "s20_stats")
-
   /** s20's frozen retrieval index, derived from the history slice: one
     * row per (q_id, term) with the term's history df and the history
     * corpus stats (n docs, t tokens) denormalized onto every row —
@@ -597,8 +588,7 @@ object StreamGate {
   private[streaming] def deriveRetrievalStats(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(Tables.fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
+    val thr = Tables.historyThr(d)
     val hist = d.filter(col("doc_id") <= thr)
       .select(col("doc_id"), split(col("text"), " ").as("w"))
     val st = hist.agg(count(lit(1)).as("n"),
@@ -626,11 +616,10 @@ object StreamGate {
     * session — loud on missing/wrong/stale, never a silent re-derive
     * against a drifted history slice. */
   def persistRetrievalStats(spark: SparkSession, dir: String, path: String): Unit = {
-    val thr = Tables.documents(spark, dir)
-      .agg(Tables.fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0) // 1 row — the freeze boundary, stamped for x74's audit
+    val thr = Tables.historyThr(Tables.documents(spark, dir)) // 1 row — stamped for x74's audit
+    val store = graft.ops.Artifacts.RetrievalStats
     graft.ops.Artifacts.writeStamped(spark, deriveRetrievalStats(spark, dir),
-      path, "s20_stats", Map("thr" -> thr.toString))
+      path, store.key, Map(store.prop -> thr.toString))
   }
 
   /** s20 gate: continuous RETRIEVAL screen — x71's BM25 scoring as a
@@ -663,10 +652,10 @@ object StreamGate {
   def s20RetrievalStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = d.agg(Tables.fdiv(lit(9L) * max(col("doc_id")), lit(10L)))
-      .collect()(0).getLong(0)
-    val statDf = retrievalStatsPath(spark) match {
-      case Some(p) => graft.ops.Stages.readStamped(spark, p, "s20_stats")
+    val thr = Tables.historyThr(d)
+    val stats = graft.ops.Artifacts.RetrievalStats.key
+    val statDf = graft.ops.Artifacts.configuredPath(spark, stats) match {
+      case Some(p) => graft.ops.Stages.readStamped(spark, p, stats)
       case None    => deriveRetrievalStats(spark, dir)
     }
     // bound the collect BEFORE it happens: limit(1001) caps what can ever

@@ -105,30 +105,6 @@ class AuditSpec extends SparkTestBase {
       "the route index freezes at the sticky boundary")
   }
 
-  test("x74: an audit-spec registry that misses a stamped store fails loudly") {
-    // the registry-completeness contract: a new Artifacts.versions entry
-    // without its x74 spec must refuse to audit at all, never emit a
-    // matrix silently missing the new store's row
-    val d = graft.model.Tables.documents(spark, sf0001)
-    val mx = d.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    val full = Audit.x74ArtifactFreshness(spark, sf0001) // builds a valid spec set
-    assert(full.count() == Artifacts.versions.size.toLong)
-    val partial = Map("x68_sticky" ->
-      Audit.StoreAudit("thr", Math.floorDiv(9L * mx, 10L), None, None))
-    val e = intercept[IllegalArgumentException] {
-      Audit.x74RowsFor(spark, partial).collect()
-    }
-    assert(e.getMessage.contains("unaudited stores"), e.getMessage)
-    // ...and a spec for an artifact that is NOT a registered store is
-    // equally loud (a typo'd key would otherwise audit nothing)
-    val e2 = intercept[IllegalArgumentException] {
-      Audit.x74RowsFor(spark, partial + ("not_a_store" ->
-        Audit.StoreAudit("thr", 1L, None, None))).collect()
-    }
-    assert(e2.getMessage.contains("specs without a registered store") ||
-      e2.getMessage.contains("unaudited stores"), e2.getMessage)
-  }
-
   test("x74: a fresh configured store audits fresh; a stale one is flagged with its frozen boundary") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_x74_").toString
     // fresh store: persist on THIS corpus, configure, audit agrees
@@ -187,34 +163,6 @@ class AuditSpec extends SparkTestBase {
     assert(m("ivf_index_matches_embeddings")._1 == m("ivf_index_matches_embeddings")._2 &&
       m("ivf_index_matches_embeddings")._1 > 0L,
       s"x57_index must appear in the coherence matrix: ${rows.mkString(", ")}")
-  }
-
-  test("x77: a coherence-spec registry that misses or invents a store fails loudly") {
-    // the x74 registry pin applied to x77 (r18 verdict gap #2): a store
-    // registered in Artifacts.versions without a coherence DECISION
-    // (check row or explicit anchor role) refuses the whole audit
-    val partialSpecs = Map[String, Audit.X77Spec]("x68_sticky" -> Audit.X77Anchor)
-    val partialBounds = Map("x68_sticky" -> (("thr", 1L)))
-    val e = intercept[IllegalArgumentException] {
-      Audit.x77RowsFor(spark, partialSpecs, partialBounds, Map.empty).collect()
-    }
-    assert(e.getMessage.contains("undecided stores"), e.getMessage)
-    val fullSpecs = Artifacts.versions.keySet.map(a =>
-      a -> (Audit.X77Anchor: Audit.X77Spec)).toMap
-    val fullBounds = Artifacts.versions.keySet.map(a => a -> (("thr", 1L))).toMap
-    val e2 = intercept[IllegalArgumentException] {
-      Audit.x77RowsFor(spark,
-        fullSpecs + ("not_a_store" -> Audit.X77Anchor), fullBounds, Map.empty).collect()
-    }
-    assert(e2.getMessage.contains("entries without a registered store"), e2.getMessage)
-    // a check referencing an unresolvable right side is equally loud
-    val e3 = intercept[IllegalArgumentException] {
-      Audit.x77RowsFor(spark,
-        fullSpecs + ("x68_sticky" ->
-          Audit.X77Check("bogus_check", "no_such_axis", _ == _)),
-        fullBounds, Map.empty).collect()
-    }
-    assert(e3.getMessage.contains("unknown right side"), e3.getMessage)
   }
 
   test("x77: stores from different installments flip the named constraint") {

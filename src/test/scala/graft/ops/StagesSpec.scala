@@ -270,10 +270,23 @@ class StagesSpec extends SparkTestBase {
     Stages.clear()
     Stages.x9Scores(spark, sf0001)
     Stages.x16Centroids(spark, sf0001)
+    val books = Stages.pqBooks(spark, sf0001)
+    assert(Stages.pqBooks(spark, sf0001) eq books, "the codebooks train once per session")
     assert(Stages.cachedEntryCount >= 2)
     Stages.evict(spark.sparkContext)
     assert(Stages.cachedEntryCount == 0,
       "application-end eviction must drop the context's stage entries")
+    // the driver-held PQ codebooks go with the context too: the next ask
+    // retrains instead of serving a departed application's books
+    val retrained = Stages.pqBooks(spark, sf0001)
+    val retrainedAfterEvict = !(retrained eq books)
+    assert(retrainedAfterEvict, "evict(sc) must drop the context's PQ codebooks")
+    // ...and with a departing session
+    Stages.evictSession(spark)
+    assert(Stages.cachedEntryCount == 0,
+      "evictSession must drop the session's driver-held entries")
+    val retrainedAfterSession = !(Stages.pqBooks(spark, sf0001) eq retrained)
+    assert(retrainedAfterSession, "evictSession must drop the session's PQ codebooks")
     // the cache must rebuild cleanly after eviction
     assert(Stages.x9Scores(spark, sf0001).count() > 0)
     Stages.clear()

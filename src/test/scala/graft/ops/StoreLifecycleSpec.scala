@@ -215,4 +215,66 @@ class StoreLifecycleSpec extends SparkTestBase {
         s"Stages.x75Labels still serves the pre-persist generation ($after non-singleton rows)")
     } finally serving.conf.unset("spark.graft.labelsPath")
   }
+
+  test("re-persisting each store rebuilds exactly the stages whose build consulted it") {
+    // stage eviction is DERIVED: every store consultation during a stage
+    // build is recorded against that stage, so no hand-kept map can miss
+    // a new store reader. Every stage is built in-session with nothing
+    // configured (consultation, not a successful read, is what counts),
+    // then each of the nine artifacts is re-persisted in turn.
+    Stages.clear()
+    val tmp = Files.createTempDirectory("graft_derived_evict_").toString
+    val stages: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "x13_bands" -> (() => Stages.x13BandsAll(spark, sf0001)),
+      "x13_pairs" -> (() => Stages.x13Pairs(spark, sf0001)),
+      "x9_scores" -> (() => Stages.x9Scores(spark, sf0001)),
+      "x24_labels" -> (() => Stages.x24Labels(spark, sf0001)),
+      "x75_seed" -> (() => Stages.x75Seed(spark, sf0001)),
+      "x75_labels" -> (() => Stages.x75Labels(spark, sf0001)),
+      "x68_sticky" -> (() => Stages.x68Sticky(spark, sf0001)),
+      "x68_assign" -> (() => Stages.x68Assign(spark, sf0001)),
+      "s18_index" -> (() => Stages.s18IndexFull(spark, sf0001)),
+      "s21_index" -> (() => Stages.s21IndexFull(spark, sf0001)),
+      "x62b_merges" -> (() => Stages.s17Merges(spark, sf0001)),
+      "sketch_daily" -> (() => Stages.sketchDaily(spark, sf0001)),
+      "x57_index" -> (() => Stages.x57Index(spark, sf0001)))
+    val persists: Seq[(String, String => Unit)] = Seq(
+      "x24_labels" -> (PipelineOps.persistLabels(spark, sf0001, _)),
+      "x68_sticky" -> (PipelineOps.persistStickySplits(spark, sf0001, _)),
+      "s18_index" -> (PipelineOps.persistRouteIndex(spark, sf0001, _)),
+      "s21_index" -> (PipelineOps.persistLabelIndex(spark, sf0001, _)),
+      "x62b_merges" -> (TextOps.persistMerges(spark, sf0001, _)),
+      "s20_stats" -> (graft.streaming.StreamGate.persistRetrievalStats(spark, sf0001, _)),
+      "sketch_daily" -> (Analytics.persistSketchDaily(spark, sf0001, _)),
+      "x57_index" -> (VectorOps.persistPqIndex(spark, sf0001, _)),
+      "store_manifest" -> (p => Artifacts.writeManifest(spark, p,
+        Map("x68_sticky" -> s"$tmp/x68_sticky"), 1L)))
+    assert(persists.map(_._1).toSet == Artifacts.versions.keySet)
+    try {
+      stages.foreach(_._2())
+      // the derived sets cover every entry of the retired hand-kept map
+      val labelReaders = Set("x75_seed", "x75_labels", "x68_sticky",
+        "x68_assign", "s18_index", "s21_index")
+      assert(labelReaders.subsetOf(Stages.dependentStages("x24_labels")),
+        Stages.dependentStages("x24_labels"))
+      assert(labelReaders.subsetOf(Stages.dependentStages("store_manifest")),
+        Stages.dependentStages("store_manifest"))
+      assert(Set("x68_assign", "s18_index").subsetOf(Stages.dependentStages("x68_sticky")),
+        Stages.dependentStages("x68_sticky"))
+      // stages that read no store are nobody's dependents
+      assert(!Artifacts.versions.keySet.exists(a =>
+        Stages.dependentStages(a)("x13_pairs") || Stages.dependentStages(a)("x9_scores")))
+      persists.foreach { case (artifact, persist) =>
+        val before = stages.map { case (n, get) => n -> get() }.toMap
+        val consulted = Stages.dependentStages(artifact)
+        persist(s"$tmp/$artifact")
+        stages.foreach { case (n, get) =>
+          if (consulted(n))
+            assert(get() ne before(n), s"$n consulted $artifact but survived its re-persist")
+          else
+            assert(get() eq before(n), s"$n never consulted $artifact but was evicted")
+        }
+      }
+    } finally Stages.clear()
+  }
 }

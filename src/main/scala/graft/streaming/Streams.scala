@@ -40,6 +40,22 @@ case class EntityState(entityId: Long, payload: String, lastId: Long, deleted: B
   * transient target failure (caller retries). */
 trait WalSink extends Serializable {
   def syncEntity(r: WalRecord): Boolean
+
+  /** Apply one micro-batch partition, sorted by `(entityId, id)`
+    * ([[Streams.foreachBatchSync]]'s contract), and return how many of its
+    * records were already applied — exactly the count of `false` results
+    * the records would get from `syncEntity` one at a time, in order
+    * (duplicate ids and replays that straddle the stored watermark
+    * included), so the `wal_num_ignored_already_done` meter does not
+    * depend on how a sink applies the set. The default is that loop; a
+    * sink overrides it to apply the partition set-at-a-time
+    * ([[JdbcWalSink]]). Throws IOException on transient target failure;
+    * the caller retries the whole batch. */
+  def syncAll(rows: Iterator[WalRecord]): Long = {
+    var ignored = 0L
+    rows.foreach(r => if (!syncEntity(r)) ignored += 1)
+    ignored
+  }
 }
 
 /** Per-type physical-target resolution — the sink-side twin of the
@@ -54,12 +70,24 @@ trait WalSink extends Serializable {
   * semantics of its own. */
 final class MultiplexWalSink(sinks: Map[String, WalSink]) extends WalSink {
   require(sinks.nonEmpty, "at least one entityType -> sink binding required")
-  override def syncEntity(r: WalRecord): Boolean =
+
+  private def sinkFor(r: WalRecord): WalSink =
     sinks.getOrElse(r.entityType,
       throw new IllegalArgumentException(
         s"no sink registered for entityType '${r.entityType}' (id=${r.id}); " +
           s"registered: ${sinks.keys.toSeq.sorted.mkString(", ")}"))
-      .syncEntity(r)
+
+  override def syncEntity(r: WalRecord): Boolean = sinkFor(r).syncEntity(r)
+
+  /** Splits the partition by `entityType` and hands each slice, still in
+    * `(entityId, id)` order, to its delegate's `syncAll`. The partition is
+    * buffered first so a record of an unregistered type fails before any
+    * delegate applies anything. */
+  override def syncAll(rows: Iterator[WalRecord]): Long = {
+    val slices = rows.toVector.groupBy(_.entityType).toSeq
+      .map { case (_, slice) => sinkFor(slice.head) -> slice }
+    slices.map { case (sink, slice) => sink.syncAll(slice.iterator) }.sum
+  }
 }
 
 /** The keyed state machine of the snapshot view as a Spark 4
@@ -368,6 +396,12 @@ object Streams {
     * sleepMillisOnIoFailure). Returns the writer to attach:
     * `ds.writeStream.foreachBatch(foreachBatchSync(sink, retrySleepMs))`.
     *
+    * Each partition is co-located by `entityId`, sorted by
+    * `(entityId, id)`, and handed to the sink in ONE `WalSink.syncAll`
+    * call — the sink sees whole per-key runs and may apply them
+    * set-at-a-time ([[JdbcWalSink]] collapses each run to its last op);
+    * a sink without an override gets the per-record `syncEntity` loop.
+    *
     * The retry loop runs DRIVER-side around the whole batch, not inside
     * the executor closure: a task stuck in an in-closure retry loop is
     * invisible to the driver (no metrics, no accumulator flush, no
@@ -378,8 +412,9 @@ object Streams {
     * reference state semantics, `WalConsumer.java:137-142, 354-359`).
     *
     * `onIgnored` receives, per successfully-applied batch, the number of
-    * records the sink reported as already applied (`syncEntity == false`)
-    * — the reference's `wal_num_ignored_already_done` meter
+    * records the sink reported as already applied (the sum of the
+    * partitions' `syncAll` counts, per record as `syncEntity == false`
+    * would count them) — the reference's `wal_num_ignored_already_done` meter
     * (`WalConsumer.java:271-278`), its replay-observability signal.
     * Counted with a per-attempt LongAccumulator so a batch that fails
     * mid-apply and is retried reports only the successful attempt's
@@ -403,9 +438,7 @@ object Streams {
           .repartition(col("entityId")) // co-locate each key; parallel across keys
           .sortWithinPartitions(col("entityId"), col("id")) // ordered apply per key
           .foreachPartition { (rows: Iterator[WalRecord]) =>
-            rows.foreach { r =>
-              if (!sink.syncEntity(r)) ignored.add(1L) // false = already done
-            }
+            ignored.add(sink.syncAll(rows))
           }
         done = true
         onIgnored(ignored.value)

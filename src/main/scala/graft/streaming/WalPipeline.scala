@@ -20,7 +20,8 @@ final class WalMetrics extends StreamingQueryListener with Serializable {
   val numSynchronized = new AtomicLong(0)
   val numIoFailures = new AtomicLong(0)
   val lastBatchRows = new AtomicLong(0)
-  /** Records the sink reported as already applied (`syncEntity == false`)
+  /** Records the sink reported as already applied (the `WalSink.syncAll`
+    * counts, per record as `syncEntity == false` would count them)
     * — the reference's `wal_num_ignored_already_done` meter
     * (`WalConsumer.java:271-278`). */
   val numIgnoredAlreadyDone = new AtomicLong(0)

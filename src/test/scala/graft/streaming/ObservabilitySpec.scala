@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.execution.QueryExecution
 import graft.SparkTestBase
+import graft.sources.Sources
 
 /** The `observe()` metrics path (SURVEY.md §3 E3): per-action metric rows
   * without a second pass over the data — the batch analog of the
@@ -83,5 +84,53 @@ class ObservabilitySpec extends SparkTestBase {
       assert(emitted.peek().keySet == g.keySet,
         s"reporter gauge keys drifted: ${emitted.peek().keySet}")
     } finally p.close()
+  }
+
+  test("jdbc replay over a fresh checkpoint: the already-done meter counts exactly the replayed records") {
+    // A second consumer with a FRESH checkpoint re-reads the whole WAL
+    // into a target the first consumer already drained: every old record
+    // is a replay (its key's watermark is at or past it), every new one
+    // is applied — including new records of keys the replay straddles.
+    val s = spark
+    import s.implicits._
+    val (tmp, url) = JdbcTestKit.freshDerby("graft-jdbc-replay")
+    val walDir = s"$tmp/wal"
+    JdbcWalSink.ensureTable(url, "replay_target")
+    val rnd = new scala.util.Random(11)
+    def recs(ids: Range, keys: Range): Seq[WalRecord] = ids.map { i =>
+      WalRecord(i, keys(rnd.nextInt(keys.size)),
+        if (rnd.nextInt(5) == 0) "DELETE" else "UPDATE", s"v$i") }
+    val old = recs(0 until 400, 1 to 40)
+    val fresh = recs(400 until 600, 31 to 60) // keys 31..40 straddle, 41..60 are new
+
+    def drain(ckpt: String, n: Long): WalPipeline = {
+      val p = new WalPipeline(Sources.walFileStream(s, walDir),
+        new JdbcWalSink(url, "replay_target"), ckpt, pollMillis = 10L, retrySleepMs = 1L)
+      p.start()
+      try {
+        p.processAllAvailable()
+        val deadline = System.currentTimeMillis() + 10000
+        while (p.metrics.numSynchronized.get() < n && System.currentTimeMillis() < deadline)
+          Thread.sleep(20)
+      } finally p.close()
+      p
+    }
+
+    old.toDF().write.mode("append").parquet(walDir)
+    val p1 = drain(s"$tmp/ckpt1", old.size)
+    assert(p1.metrics.numIgnoredAlreadyDone.get() == 0L)
+    val before = JdbcTestKit.rows(url, "replay_target")
+    assert(before == JdbcTestKit.fold(old))
+
+    fresh.toDF().write.mode("append").parquet(walDir)
+    val p2 = drain(s"$tmp/ckpt2", old.size + fresh.size)
+    assert(p2.metrics.numSynchronized.get() == old.size + fresh.size)
+    assert(p2.metrics.numIgnoredAlreadyDone.get() == old.size.toLong,
+      s"every replayed record and nothing else: ${p2.metrics.gauges}")
+    val after = JdbcTestKit.rows(url, "replay_target")
+    assert(after == JdbcTestKit.fold(old ++ fresh))
+    val touched = fresh.map(_.entityId).toSet
+    assert(after.filter(kv => !touched(kv._1)) == before.filter(kv => !touched(kv._1)),
+      "replayed keys' rows are unchanged")
   }
 }

@@ -318,6 +318,84 @@ class RecoverySpec extends SparkTestBase {
     } finally p.close()
   }
 
+  test("mid-batch target fault: the failed chunk rolls back whole; the drain lands c1_snapshot exactly once") {
+    // A target that rejects one write partway through a batch: a CHECK
+    // constraint refuses the payload 'poison', carried by the batch's
+    // LAST key, so the chunk's earlier writes have already executed when
+    // it fails. The whole chunk must roll back (no row of it visible
+    // while the consumer is parked), and once the target accepts the
+    // write the drain must land exactly the last-op state. One shuffle
+    // partition and a batch under one chunk make the failed attempt a
+    // single transaction, so the successful retry finds nothing of it
+    // applied and the already-done meter stays 0.
+    val s = spark
+    import s.implicits._
+    val (tmp, url) = JdbcTestKit.freshDerby("graft-jdbc-fault")
+    val walDir = s"$tmp/wal"
+    JdbcWalSink.ensureTable(url, "fault_target")
+    JdbcTestKit.exec(url,
+      "ALTER TABLE fault_target ADD CONSTRAINT no_poison CHECK (payload <> 'poison')")
+
+    // the sf0.001 events log as a WAL: user_id keys (hot: ~67 ops each),
+    // event_id order, the `error` type as DELETE (c1's DELETE analog)
+    val events = graft.model.Tables.events(s, sf0001)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+      .as[(Long, Long, String, Double)].collect().sortBy(_._1)
+    val log = events.toSeq.map { case (id, user, tpe, v) =>
+      WalRecord(id, user, if (tpe == "error") "DELETE" else "UPDATE", v.toString) }
+    val boundary = log(log.size / 2).id
+    val (head, rest) = log.partition(_.id < boundary)
+    // two new keys past every user: a clean insert, then the poison
+    val (topId, topKey) = (log.map(_.id).max, log.map(_.entityId).max)
+    val tail = rest ++ Seq(WalRecord(topId + 1, topKey + 1, "ADD", "fresh"),
+      WalRecord(topId + 2, topKey + 2, "ADD", "poison"))
+    assert(tail.size < JdbcWalSink.ChunkRecords, "the faulted batch must be one chunk")
+
+    def liveRows: Map[Long, (Long, String)] =
+      JdbcTestKit.rows(url, "fault_target").collect {
+        case (k, (id, 0, p)) if k <= topKey => k -> ((id, p)) }
+    def c1At(bound: Long): Map[Long, (Long, String)] =
+      graft.ops.Changelog.snapshotOf(graft.model.Tables.events(s, sf0001)
+          .filter(col("event_id") < bound))
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(3).toString))).toMap
+
+    head.toDF().coalesce(1).write.mode("append").parquet(walDir)
+    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", "1")
+    val p = new WalPipeline(Sources.walFileStream(s, walDir),
+      new JdbcWalSink(url, "fault_target"), s"$tmp/ckpt",
+      pollMillis = 10L, retrySleepMs = 25L)
+    try {
+      p.start()
+      p.processAllAvailable()
+      val afterHead = JdbcTestKit.rows(url, "fault_target")
+      assert(afterHead == JdbcTestKit.fold(head))
+      assert(liveRows == c1At(boundary), "first batch == c1_snapshot at its boundary")
+
+      tail.toDF().coalesce(1).write.mode("append").parquet(walDir)
+      val deadline = System.currentTimeMillis() + 60000
+      while (p.metrics.numIoFailures.get() == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(p.metrics.numIoFailures.get() > 0, "the poisoned write must fail the batch")
+      assert(p.metrics.state.get() == WalState.INACCESSIBLE_IO_FAILURE)
+      assert(JdbcTestKit.rows(url, "fault_target") == afterHead,
+        "no row of the failed chunk may be visible while the consumer is parked")
+
+      // the target accepts the write again; the parked batch drains
+      JdbcTestKit.exec(url, "ALTER TABLE fault_target DROP CONSTRAINT no_poison")
+      p.processAllAvailable()
+      assert(JdbcTestKit.rows(url, "fault_target") == JdbcTestKit.fold(head ++ tail))
+      assert(liveRows == c1At(topId + 1), "final target == c1_snapshot at the last event")
+      val g = p.metrics.gauges
+      assert(g("wal_num_io_failures") >= 1L, g)
+      assert(g("wal_num_ignored_already_done") == 0L, g)
+      assert(p.metrics.state.get() != WalState.INACCESSIBLE_IO_FAILURE)
+    } finally {
+      p.close()
+      s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
+  }
+
   test("abnormal query termination surfaces as INACCESSIBLE_IO_FAILURE") {
     val s = spark
     import s.implicits._

@@ -173,15 +173,11 @@ object KllSketchAgg {
     KllLongsSketch.heapify(Memory.wrap(bytes))
       .getRank(v, QuantileSearchCriteria.INCLUSIVE)
 
-  /** The sketch's own single-quantile normalized rank error ε at 99%
-    * confidence (pmf=false form). Gates widen this ×2 so ~27 pinned
-    * flags survive any driver data regeneration (sub-gaussian tail:
-    * 2ε ≈ 5σ, per-pin failure ~1e-7). */
-  def normalizedRankError(bytes: Array[Byte]): Double =
-    KllLongsSketch.heapify(Memory.wrap(bytes)).getNormalizedRankError(false)
-
-  /** ε for a given k without a sketch in hand (the static form lives on
-    * the Java base class, unreachable through the subclass from Scala). */
+  /** The single-quantile normalized rank error ε at 99% confidence
+    * (pmf=false form) for a given k (the static form lives on the Java
+    * base class, unreachable through the subclass from Scala). Gates
+    * widen this ×2 so ~27 pinned flags survive any driver data
+    * regeneration (sub-gaussian tail: 2ε ≈ 5σ, per-pin failure ~1e-7). */
   def epsilon(k: Int = defaultK): Double =
     org.apache.datasketches.kll.KllSketch.getNormalizedRankError(k, false)
 

@@ -4,12 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
 
-/** Batch analogues of the S1–S5 streaming operators (SURVEY.md §2.3) so
-  * the time-window / late-data / dedup semantics join the DuckDB oracle
-  * gate. The true streaming forms (watermarks, incremental state,
-  * micro-batch replay) live in graft.streaming.Streams and are covered by
-  * StreamsSpec with MemoryStream golden tests — watermark behavior itself
-  * is not batch-expressible (SURVEY.md §5).
+/** The S1–S7 streaming keys over the static events table (SURVEY.md
+  * §2.3), so the time-window / late-data / dedup semantics join the
+  * DuckDB oracle gate. A streaming query run over a static frame is the
+  * same query (a batch plan drops the watermark), so s2, s3, s3b and s7
+  * call the graft.streaming.Streams operators directly; StreamsSpec
+  * covers their micro-batch behavior with MemoryStream golden tests.
+  * s5 and s6 keep batch definitions of their own (each says why), and
+  * watermark behavior itself is not batch-expressible (SURVEY.md §5).
   *
   * s1's batch analogue is c1_snapshot (same semantics, same oracle).
   *
@@ -19,6 +21,7 @@ import graft.model.Tables
   */
 object StreamingBatch {
   import Tables._
+  import graft.streaming.Streams
 
   /** s1: the streaming stateful snapshot's batch equivalent — same
     * last-op-wins semantics as c1 (the stream/batch parity property in
@@ -31,46 +34,33 @@ object StreamingBatch {
   /** s2: tumbling 1-hour windows (Spark `window()` aligns to the epoch,
     * which for whole hours equals date_trunc). */
   def s2Tumbling(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_c"))
-      .select(unix_millis(col("window.start")).as("start_ms"), col("event_type"),
-        col("n"), col("value_c"))
-      .orderBy("start_ms", "event_type")
+    Streams.tumblingCounts(events(spark, dir)).orderBy("start_ms", "event_type")
 
   /** s3: sliding 2h/1h windows — each event lands in 2 windows. */
   def s3Sliding(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir)
-      .groupBy(window(col("ts"), "2 hours", "1 hour"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_millis(col("window.start")).as("start_ms"), col("n"))
-      .orderBy("start_ms")
+    Streams.slidingCounts(events(spark, dir)).orderBy("start_ms")
 
-  /** s3b: 30-minute-gap session windows per user (batch `session_window`;
-    * oracle = gaps-and-islands). New session iff ts ≥ prev + gap (Spark
-    * merges only strictly-overlapping [ts, ts+gap) intervals). */
+  /** s3b: 30-minute-gap session windows per user (oracle =
+    * gaps-and-islands). */
   def s3bSession(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir)
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), unix_millis(col("session_window.start")).as("session_start_ms"),
-        col("n_events"))
-      .orderBy("user_id", "session_start_ms")
+    Streams.sessionCounts(events(spark, dir)).orderBy("user_id", "session_start_ms")
 
-  /** s4: late-data accounting — events older than (global max ts − 10 min),
-    * i.e. what a 10-minute watermark would drop if they arrived last. */
+  /** s4: late-data accounting — events older than (global max ts −
+    * [[Streams.Watermark]]), i.e. what the streaming operators' watermark
+    * would drop if they arrived last. */
   def s4LateEvents(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
     val mx = ev.agg(max(col("ts")).as("mx"))
     ev.crossJoin(broadcast(mx))
-      .filter(col("ts") < col("mx") - expr("INTERVAL 10 MINUTES"))
+      .filter(col("ts") < col("mx") - expr(s"INTERVAL ${Streams.Watermark}"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_late"))
       .orderBy("event_type")
   }
 
-  /** s5: replay dedup — the WAL replayed twice collapses to one copy by id
-    * (streaming form: dropDuplicatesWithinWatermark). */
+  /** s5: replay dedup — the WAL replayed twice collapses to one copy by id.
+    * The streaming form (graft.streaming.Streams.dedupStream) cannot run
+    * here: `dropDuplicatesWithinWatermark` is rejected on a batch frame. */
   def s5DedupReplay(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir).select(col("event_id"), col("user_id"))
     ev.union(ev)
@@ -81,8 +71,10 @@ object StreamingBatch {
   }
 
   /** s6: batch analogue of the stream-stream interval join — per purchase,
-    * the number of same-user views in the preceding hour (streaming form:
-    * graft.streaming.Streams.intervalJoin, watermark-bounded state). */
+    * the number of same-user views in the preceding hour. A left join plus
+    * a count, so it is not the streaming form
+    * (graft.streaming.Streams.intervalJoin, an inner stream-stream join
+    * with watermark-bounded state). */
   def s6IntervalJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir)
     val p = ev.filter(col("event_type") === "purchase")
@@ -98,15 +90,12 @@ object StreamingBatch {
       .orderBy("p_id")
   }
 
-  /** s7: batch analogue of the stream-static enrichment join — every
-    * event looked up against the `nation` dimension (user_id mod 25 as
-    * the foreign key), aggregated per dimension attribute. The streaming
-    * form (graft.streaming.Streams.enrichStream) broadcasts the dim and
-    * re-plans it each micro-batch; state-free, unlike stream-stream
-    * joins. */
+  /** s7: the stream-static enrichment join
+    * (graft.streaming.Streams.enrichStream) over the static events table —
+    * every event looked up against the `nation` dimension (user_id mod 25
+    * as the foreign key), aggregated per dimension attribute. */
   def s7StreamEnrich(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir)
-      .join(broadcast(nation(spark, dir)),
+    Streams.enrichStream(events(spark, dir), nation(spark, dir),
         // C-style % on BOTH sides (Spark Remainder ≡ DuckDB %) — pmod
         // would silently diverge from the oracle on a negative key
         (col("user_id") % lit(25L)) === col("n_nationkey"))

@@ -481,8 +481,6 @@ object VectorOps {
   private val x14Bands = 4
   private val x14Bits = 5
 
-  private def bandBucket(v: Column, b: Int): Column = bandBucketN(v, b, x14Bits)
-
   private def bandBucketN(v: Column, b: Int, bits: Int): Column =
     (0 until bits).map { j =>
       when(element_at(v, bits * b + j + 1) >= 0, lit(1L << j)).otherwise(0L)

@@ -13,12 +13,17 @@ import org.apache.spark.sql.functions._
   * snapshot, updated by a foreachBatch MERGE (the R4+R5+R7 dataflow as
   * one operator).
   *
-  * Each micro-batch writes a complete new version directory
-  * `v=<n>` and readers always resolve the highest committed version — a
-  * poor-man's snapshot-isolated table (the pattern Delta/Iceberg formalize
-  * with a log; with only vanilla parquet available, version directories
-  * give the same atomic-swap property because a version becomes visible
-  * only when its _SUCCESS marker lands).
+  * Layout: `base/p=<pmod(entityId, nParts)>/v=<n>/` plus a MANIFEST
+  * file that is the transaction log — it names the committed version of
+  * every partition (and nParts). A micro-batch writes new version dirs
+  * for only the partitions its keys hash into, then swaps the manifest
+  * in last; readers resolve partitions through the manifest, so a crash
+  * between partition writes leaves the previous manifest (and a
+  * consistent cross-key view) intact. A version dir only becomes visible
+  * once the manifest names it — a poor-man's snapshot-isolated table,
+  * the miniature of the Delta/Iceberg commit protocol (their log adds
+  * history and concurrent-writer CAS). `nParts = 1` is a single
+  * partition rewritten whole every batch.
   *
   * MERGE semantics per batch (mirrors Streams.snapshotStream):
   * take the batch's last op per key (max id), outer-merge with the
@@ -26,11 +31,10 @@ import org.apache.spark.sql.functions._
   * Replays (batch id ≤ stored id) lose the merge — idempotent, so
   * at-least-once delivery still yields exactly-once table state.
   *
-  * Scale notes: the merge is one shuffle of (previous ∪ batch-partials)
-  * on the key; the batch side is first collapsed per key map-side. At
-  * 100 TB you'd partition the snapshot by key-hash range so each batch
-  * rewrites only touched partitions (Delta-style); the merge plan is
-  * unchanged.
+  * Scale notes: each touched partition's merge is one shuffle of
+  * (previous ∪ batch-partials) on the key; the batch side is first
+  * collapsed per key map-side. Size nParts so a batch touches few
+  * partitions; the merge plan does not change with it.
   */
 object SnapshotTable {
 
@@ -46,16 +50,6 @@ object SnapshotTable {
       .filter(v => fs.exists(new Path(versionDir(p, v), "_SUCCESS")))
       .sorted
   }
-
-  /** Latest committed snapshot (empty if none). Columns:
-    * entityId, payload, lastId. */
-  def read(spark: SparkSession, base: String): DataFrame =
-    committedVersions(spark, base).lastOption match {
-      case Some(v) => spark.read.parquet(versionDir(new Path(base), v).toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, String, Long)].toDF("entityId", "payload", "lastId")
-    }
 
   /** One merge step: previous snapshot ⊎ batch → next snapshot. Exposed
     * for tests; foreachBatch wiring below. */
@@ -84,21 +78,19 @@ object SnapshotTable {
       .drop("operation")
   }
 
-  /** Write `next` as the successor version of `base` and prune old
-    * versions. The single commit protocol shared by the flat and
-    * partitioned sinks.
+  /** Write `next` as the successor version of partition dir `base` and
+    * prune old versions.
     *
-    * `protect` is the version CURRENT READERS RESOLVE — for the flat
-    * sink the highest committed version, for the partitioned sink the
-    * version the MANIFEST names (which can be OLDER than the highest
-    * committed dir: a crash between a partition commit and the manifest
-    * swap leaves an orphaned committed-but-unreferenced version). The
-    * protected version is never deleted here — pruning it would break
-    * in-flight readers and, if this batch crashes before its own swap,
-    * leave the manifest permanently pointing at a deleted directory.
-    * Everything else (older versions AND orphans, which nothing
-    * references) is pruned; the now-superseded `protect` is reclaimed by
-    * the NEXT commit, preserving the retain-latest-two property. */
+    * `protect` is the version CURRENT READERS RESOLVE — the one the
+    * MANIFEST names (which can be OLDER than the highest committed dir: a
+    * crash between a partition commit and the manifest swap leaves an
+    * orphaned committed-but-unreferenced version). The protected
+    * version is never deleted here — pruning it would break in-flight
+    * readers and, if this batch crashes before its own swap, leave the
+    * manifest permanently pointing at a deleted directory. Everything
+    * else (older versions AND orphans, which nothing references) is
+    * pruned; the now-superseded `protect` is reclaimed by the NEXT
+    * commit, preserving the retain-latest-two property. */
   private def commitVersion(next: DataFrame, base: String,
       prevVersions: Seq[Long], protect: Option[Long]): Long = {
     val spark = next.sparkSession
@@ -110,41 +102,6 @@ object SnapshotTable {
       fs.delete(versionDir(new Path(base), old), true))
     v
   }
-
-  /** foreachBatch function maintaining the table at `base`. */
-  def sink(base: String): (Dataset[WalRecord], Long) => Unit = { (batch, _) =>
-    val spark = batch.sparkSession
-    val prevVersions = committedVersions(spark, base)
-    val prev = prevVersions.lastOption match {
-      case Some(v) => spark.read.parquet(versionDir(new Path(base), v).toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, String, Long)].toDF("entityId", "payload", "lastId")
-    }
-    commitVersion(merge(prev, batch), base, prevVersions,
-      protect = prevVersions.lastOption)
-  }
-
-  /** Attach to a WAL stream: records → materialized snapshot table. */
-  def materialize(records: Dataset[WalRecord], base: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    records.writeStream
-      .foreachBatch(sink(base))
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  // ---- hash-partitioned variant: rewrite only touched partitions ----
-  //
-  // The flat sink above rewrites the whole snapshot every batch — fine for
-  // tests, wrong at 100 TB. Here the table is laid out as
-  // base/p=<hash(entityId) % nParts>/v=<n>/ and a MANIFEST file is the
-  // transaction log: it names the committed version of every partition
-  // (plus nParts). A micro-batch writes new version dirs for only the
-  // partitions its keys hash into, then swaps the manifest in last —
-  // readers resolve partitions through the manifest, so a crash between
-  // partition writes leaves the previous manifest (and a consistent
-  // cross-key view) intact. This is a miniature of the Delta/Iceberg
-  // commit protocol; their log adds history and concurrent-writer CAS.
 
   private def partOf(nParts: Int) = pmod(col("entityId"), lit(nParts.toLong))
 
@@ -183,18 +140,22 @@ object SnapshotTable {
       throw new java.io.IOException(s"manifest swap failed for $base") // if BOTH ops die
   }
 
-  /** Full snapshot view across partitions, resolved via the manifest
-    * (empty before the first commit). */
-  def readPartitioned(spark: SparkSession, base: String): DataFrame =
+  /** Latest committed snapshot across partitions, resolved via the
+    * manifest (empty before the first commit). Columns: entityId,
+    * payload, lastId. */
+  def read(spark: SparkSession, base: String): DataFrame =
     readManifest(spark, base) match {
       case Some((_, versions)) if versions.nonEmpty =>
         versions.toSeq.sorted
           .map { case (p, v) => spark.read.parquet(s"$base/p=$p/v=$v") }
           .reduce(_ unionByName _)
-      case _ =>
-        import spark.implicits._
-        Seq.empty[(Long, String, Long)].toDF("entityId", "payload", "lastId")
+      case _ => emptySnapshot(spark)
     }
+
+  private def emptySnapshot(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, String, Long)].toDF("entityId", "payload", "lastId")
+  }
 
   /** foreachBatch function: merge into touched partitions only; the
     * manifest swap at the end is the cross-partition commit point.
@@ -232,7 +193,7 @@ object SnapshotTable {
                 val protect = versions.get(p) // the manifest-referenced version
                 val prev = protect match {
                   case Some(v) => spark.read.parquet(s"$base/p=$p/v=$v")
-                  case None => Seq.empty[(Long, String, Long)].toDF("entityId", "payload", "lastId")
+                  case None => emptySnapshot(spark)
                 }
                 val prevVs = committedVersions(spark, s"$base/p=$p")
                 p -> commitVersion(merge(prev, slice), s"$base/p=$p", prevVs, protect)
@@ -245,4 +206,13 @@ object SnapshotTable {
         writeManifest(spark, base, nParts, versions ++ newVersions)
       } finally cached.unpersist()
   }
+
+  /** Attach to a WAL stream: records → materialized snapshot table at
+    * `base`, hash-partitioned into `nParts` (see [[partitionedSink]]). */
+  def materialize(records: Dataset[WalRecord], base: String,
+      checkpointDir: String, nParts: Int): org.apache.spark.sql.streaming.StreamingQuery =
+    records.writeStream
+      .foreachBatch(partitionedSink(base, nParts))
+      .option("checkpointLocation", checkpointDir)
+      .start()
 }

@@ -90,25 +90,6 @@ final class MultiplexWalSink(sinks: Map[String, WalSink]) extends WalSink {
   }
 }
 
-/** The keyed state machine of the snapshot view as a Spark 4
-  * StatefulProcessor (used by Streams.snapshotStreamTWS): same
-  * [[Streams.applyRecords]] semantics, state in a typed ValueState. */
-class SnapshotProcessor extends StatefulProcessor[Long, WalRecord, EntityState] {
-  @transient private var state: ValueState[EntityState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[EntityState](
-      "entity", Encoders.product[EntityState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[WalRecord],
-      timers: TimerValues): Iterator[EntityState] = {
-    val cur = Streams.applyRecords(key,
-      if (state.exists()) Some(state.get()) else None, rows)
-    state.update(cur)
-    Iterator.single(cur)
-  }
-}
-
 /** One probe/changelog event for the temporal as-of stream (S9): the
   * events-table row shape (`event_id` is the log sequence number). */
 case class ProbeEvent(eventId: Long, userId: Long, eventType: String)
@@ -310,16 +291,22 @@ class Scd2Processor extends StatefulProcessor[Long, Scd2Record, Scd2Version] {
   * idempotent sink = exactly-once effect. The global serialization itself is
   * deliberately relaxed (it is the reference's scalability ceiling, one
   * record per two RDBMS transactions; `WalConsumer.java:185-193`).
+  *
+  * One definition per streaming concept: the S2, S3, S3b and S7
+  * operators below are also the registered batch keys
+  * ([[graft.ops.StreamingBatch]]) — the same query run over the static
+  * events table. S5 and S6 keep a separate batch definition (each says
+  * why).
   */
 object Streams {
 
-  /** The WAL-apply state machine, shared by every stateful form: the
-    * record with the highest id in the batch wins (every applied op
-    * overwrites the whole state, so the ordered fold reduces to max-id —
-    * one O(n) pass, no per-key sort or buffer); replays (id ≤ lastId)
-    * are ignored — the reference's "already done" detection
-    * (`WalConsumer.java:271-278`). Unknown operation strings fail
-    * loudly: the reference's `Operation` enum made garbage
+  /** The WAL-apply state machine of [[snapshotStream]] (and the test
+    * oracles' per-key fold): the record with the highest id in the batch
+    * wins (every applied op overwrites the whole state, so the ordered
+    * fold reduces to max-id — one O(n) pass, no per-key sort or buffer);
+    * replays (id ≤ lastId) are ignored — the reference's "already done"
+    * detection (`WalConsumer.java:271-278`). Unknown operation strings
+    * fail loudly: the reference's `Operation` enum made garbage
     * unrepresentable, so silently upserting a malformed record would be
     * a semantic hole, not leniency. */
   def applyRecords(key: Long, prev: Option[EntityState],
@@ -355,7 +342,8 @@ object Streams {
 
   /** S1: stateful changelog → current-state view via
     * flatMapGroupsWithState. Emits the post-batch state of each touched
-    * key (Update mode).
+    * key (Update mode). Runs on either state-store provider (HDFS-backed
+    * default or RocksDB).
     *
     * State-growth note: deleted keys keep a tombstone (lastId marker) so
     * late replays stay detectable, and that state grows with every key
@@ -376,18 +364,6 @@ object Streams {
           state.update(cur)
           Iterator.single(cur)
       }
-  }
-
-  /** S1 on the transformWithState API (Spark 4's successor to
-    * flatMapGroupsWithState): same semantics as [[snapshotStream]], state
-    * in a typed ValueState with the new operator's state-store layout —
-    * the recommended API for new stateful pipelines (per-state-variable
-    * schemas, TTL support, future state-schema evolution). */
-  def snapshotStreamTWS(records: Dataset[WalRecord]): Dataset[EntityState] = {
-    import records.sparkSession.implicits._
-    records
-      .groupByKey(_.entityId)
-      .transformWithState(new SnapshotProcessor, TimeMode.None(), OutputMode.Update())
   }
 
   /** The consume loop body as a foreachBatch function: per-entity, in id
@@ -452,26 +428,39 @@ object Streams {
     }
   }
 
-  /** S2: tumbling 1-hour event-time window counts with a watermark. */
-  def tumblingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_millis(col("window.start")).as("start_ms"), col("event_type"), col("n"))
+  /** The event-time watermark delay of every windowed, dedup and join
+    * operator below, and the late-data horizon of the batch s4 key
+    * ([[graft.ops.StreamingBatch.s4LateEvents]]). */
+  val Watermark = "10 minutes"
 
-  /** S3: sliding 2-hour/1-hour windows. */
-  def slidingCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  /** S2: tumbling 1-hour event-time window counts and scaled value sums
+    * under the watermark. Also the registered `s2_tumbling` key over the
+    * static events table: a batch plan drops the watermark
+    * (`EliminateEventTimeWatermark`), so the two are one query. */
+  def tumblingCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(graft.model.Tables.cents(col("value"))).as("value_c"))
+      .select(unix_millis(col("window.start")).as("start_ms"), col("event_type"),
+        col("n"), col("value_c"))
+
+  /** S3: sliding 2-hour/1-hour windows — each event lands in 2 windows.
+    * Also the registered `s3_sliding` key (see [[tumblingCounts]]). */
+  def slidingCounts(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", Watermark)
       .groupBy(window(col("ts"), "2 hours", "1 hour"))
       .agg(count(lit(1)).as("n"))
       .select(unix_millis(col("window.start")).as("start_ms"), col("n"))
 
-  /** S3b: session windows (30-minute gap) per user. */
-  def sessionCounts(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  /** S3b: 30-minute-gap session windows per user. A new session starts
+    * iff ts ≥ prev + gap (Spark merges only strictly-overlapping
+    * [ts, ts+gap) intervals). Also the registered `s3b_session` key (see
+    * [[tumblingCounts]]). */
+  def sessionCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("user_id"),
@@ -480,26 +469,26 @@ object Streams {
   /** S6: stream-stream interval join — purchases matched to the same
     * user's views within the preceding hour. Both sides carry watermarks
     * so the join state is bounded: a buffered view can be evicted once
-    * the purchase-side watermark passes view.ts + 1h. */
-  def intervalJoin(purchases: org.apache.spark.sql.DataFrame,
-      views: org.apache.spark.sql.DataFrame,
-      watermark: String = "10 minutes"): org.apache.spark.sql.DataFrame = {
-    val p = purchases.withWatermark("p_ts", watermark)
-    val v = views.withWatermark("v_ts", watermark)
+    * the purchase-side watermark passes view.ts + 1h. An inner join; the
+    * registered `s6_interval_join` key is its own batch definition, a
+    * left join plus a per-purchase view count. */
+  def intervalJoin(purchases: DataFrame, views: DataFrame): DataFrame = {
+    val p = purchases.withWatermark("p_ts", Watermark)
+    val v = views.withWatermark("v_ts", Watermark)
     p.join(v,
       expr("""p_user = v_user AND
               v_ts >= p_ts - INTERVAL 1 HOUR AND v_ts <= p_ts"""))
   }
 
-  /** S7: stream-static enrichment — dimension lookup on the live WAL
-    * stream. The static side is re-resolved and broadcast on EVERY
-    * micro-batch (so a dim refresh between batches is picked up), and the
-    * join is state-free — unlike stream-stream joins there is no
-    * watermark bookkeeping. The batch analogue with the DuckDB oracle is
-    * ops.StreamingBatch.s7StreamEnrich. */
-  def enrichStream(records: Dataset[WalRecord], dim: DataFrame,
+  /** S7: stream-static enrichment — dimension lookup on a live stream.
+    * The static side is re-resolved and broadcast on EVERY micro-batch
+    * (so a dim refresh between batches is picked up), and the join is
+    * state-free — unlike stream-stream joins there is no watermark
+    * bookkeeping. The registered `s7_stream_enrich` key runs it over the
+    * static events table and aggregates per dimension attribute. */
+  def enrichStream(records: DataFrame, dim: DataFrame,
       on: org.apache.spark.sql.Column): DataFrame =
-    records.toDF().join(broadcast(dim), on)
+    records.join(broadcast(dim), on)
 
   /** S9: temporal as-of join — the streaming twin of the batch q16/q16b
     * (and of Flink's temporal table join): the `view` sub-stream is a
@@ -551,10 +540,12 @@ object Streams {
   }
 
   /** S5: replay suppression by id within the watermark — the streaming
-    * form of the reference's "already done" dedup. */
-  def dedupStream(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
+    * form of the reference's "already done" dedup. Streaming only:
+    * `dropDuplicatesWithinWatermark` is rejected on a batch frame, so
+    * the registered `s5_dedup_replay` key is its own batch definition. */
+  def dedupStream(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", Watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
   /** S8: continuous-ingest novelty screening — the streaming twin of the

@@ -15,8 +15,18 @@ object WalState extends Enumeration {
   * (`WalConsumer.java:49-54, 78-98`): `wal_state`, `wal_num_records` (per
   * batch, replacing the 60 s cached COUNT gauge), `wal_not_empty_seconds`
   * (lag-age proxy), `wal_num_synchronized` meter. Fed by a
-  * StreamingQueryListener instead of per-record RDBMS queries. */
-final class WalMetrics extends StreamingQueryListener with Serializable {
+  * StreamingQueryListener instead of per-record RDBMS queries.
+  *
+  * Also the reporter — the reference's JmxReporter analog
+  * (`WalConsumer.java:106-114`, which registers every gauge/meter with a
+  * JMX reporter at consumer construction): after each newly absorbed
+  * batch updates the gauges, [[gauges]] is handed to `emit` — a log line
+  * by default ([[WalMetrics.logEmit]]); a Prometheus/StatsD/JMX push in
+  * production (the key set is stable, asserted by ObservabilitySpec).
+  * One listener updates and emits, so the emitted snapshots are exactly
+  * the per-batch series. */
+final class WalMetrics(emit: Map[String, Long] => Unit)
+  extends StreamingQueryListener with Serializable {
   val numSynchronized = new AtomicLong(0)
   val numIoFailures = new AtomicLong(0)
   val lastBatchRows = new AtomicLong(0)
@@ -79,8 +89,11 @@ final class WalMetrics extends StreamingQueryListener with Serializable {
     * listener-visible form of the gauges; ObservabilitySpec asserts it). */
   val lastObserved = new AtomicReference[Map[String, Long]](Map.empty)
 
-  /** Absorb one progress report exactly once (by batchId). */
-  private[streaming] def absorb(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Unit = {
+  /** Absorb one progress report exactly once (by batchId), then emit the
+    * updated gauges. Synchronized: the pipeline's replay after start and
+    * the listener bus may absorb concurrently, and each emission must see
+    * only its own batch's update. */
+  private[streaming] def absorb(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Unit = synchronized {
     val prev = lastBatchId.getAndUpdate(b => math.max(b, p.batchId))
     if (p.batchId > prev && state.get() != WalState.INACCESSIBLE_IO_FAILURE) {
       val obs = p.observedMetrics
@@ -108,6 +121,7 @@ final class WalMetrics extends StreamingQueryListener with Serializable {
         notEmptySinceMs = -1L
         state.set(WalState.EMPTY)
       }
+      emit(gauges)
     }
   }
 
@@ -132,31 +146,10 @@ final class WalMetrics extends StreamingQueryListener with Serializable {
     }
 }
 
-/** Per-progress gauge reporter — the reference's JmxReporter analog
-  * (`WalConsumer.java:106-114`, which registers every gauge/meter with a
-  * JMX reporter at consumer construction): on each progress event of the
-  * owning query, snapshots [[WalMetrics.gauges]] and hands the map to
-  * `emit` — a log line by default; a Prometheus/StatsD/JMX push in
-  * production (the key set is stable, asserted by ObservabilitySpec).
-  * Registered and removed by [[WalPipeline]] alongside the metrics
-  * listener. The listener bus is async and delivery order between the
-  * two listeners is unspecified, so a snapshot may trail the event that
-  * triggered it by one batch — gauges are level-valued, so every
-  * scrape-style consumer tolerates that by construction. */
-final class WalMetricsReporter(
-    metrics: WalMetrics,
-    emit: Map[String, Long] => Unit) extends StreamingQueryListener {
-  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-    if (metrics.queryId != null && metrics.queryId == e.progress.id)
-      emit(metrics.gauges)
-  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-}
-
-object WalMetricsReporter {
-  /** Default emit target: one log line per progress event. */
+object WalMetrics {
+  /** Default emit target: one log line per absorbed batch. */
   val logEmit: Map[String, Long] => Unit = { g =>
-    org.slf4j.LoggerFactory.getLogger(classOf[WalMetricsReporter])
+    org.slf4j.LoggerFactory.getLogger(classOf[WalMetrics])
       .info(g.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("wal gauges: ", " ", ""))
   }
 }
@@ -186,11 +179,10 @@ final class WalPipeline(
     checkpointDir: String,
     pollMillis: Long = 1000L,
     retrySleepMs: Long = 1000L,
-    reporterEmit: Map[String, Long] => Unit = WalMetricsReporter.logEmit,
+    reporterEmit: Map[String, Long] => Unit = WalMetrics.logEmit,
     entityType: Option[String] = None) {
 
-  val metrics = new WalMetrics
-  private val reporter = new WalMetricsReporter(metrics, reporterEmit)
+  val metrics = new WalMetrics(reporterEmit)
   private var query: StreamingQuery = _
 
   /** Start draining the WAL into the sink (at-least-once + idempotent
@@ -198,7 +190,6 @@ final class WalPipeline(
   def start(): StreamingQuery = synchronized {
     require(query == null, "already started")
     records.sparkSession.streams.addListener(metrics)
-    records.sparkSession.streams.addListener(reporter)
     // observe() rides the batch plan (no second pass): the record count
     // lands in every StreamingQueryProgress.observedMetrics, the
     // listener-visible/exportable twin of the WalMetrics gauges.
@@ -224,7 +215,6 @@ final class WalPipeline(
     } catch {
       case t: Throwable =>
         records.sparkSession.streams.removeListener(metrics)
-        records.sparkSession.streams.removeListener(reporter)
         throw t
     }
     metrics.queryId = query.id
@@ -248,7 +238,6 @@ final class WalPipeline(
     if (query != null) {
       query.stop()
       records.sparkSession.streams.removeListener(metrics)
-      records.sparkSession.streams.removeListener(reporter)
       metrics.closed()
       query = null
     }

@@ -46,7 +46,7 @@ class ObservabilitySpec extends SparkTestBase {
     val ms = MemoryStream[WalRecord]
     val tmp = java.nio.file.Files.createTempDirectory("graft-meter").toString
     // reporter emissions (the JmxReporter-analog path) captured per
-    // progress event
+    // absorbed batch
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Long]]()
     val p = new WalPipeline(ms.toDS(), new TestSink, s"$tmp/ckpt",
       pollMillis = 10L, retrySleepMs = 1L,
@@ -75,14 +75,24 @@ class ObservabilitySpec extends SparkTestBase {
       assert(g("wal_num_ignored_already_done") == 2L)
       assert(g.keySet == Set("wal_state", "wal_num_records", "wal_num_synchronized",
         "wal_num_ignored_already_done", "wal_num_io_failures", "wal_not_empty_seconds"))
-      // the reporter (JmxReporter analog) pushed the same gauge set per
-      // progress event — async bus, so wait like the observe() path does
+      // the reporter (JmxReporter analog) pushed the same gauge set once
+      // per absorbed batch, after that batch's update: the snapshots are
+      // the exact per-batch series — each one's synchronized meter is the
+      // running sum of the per-batch record counts, and the last one
+      // carries the replay count (async bus: wait for the second batch)
+      import scala.jdk.CollectionConverters._
       val repDeadline = System.currentTimeMillis() + 10000
-      while (emitted.isEmpty && System.currentTimeMillis() < repDeadline)
-        Thread.sleep(50)
-      assert(!emitted.isEmpty, "reporter emitted nothing")
-      assert(emitted.peek().keySet == g.keySet,
-        s"reporter gauge keys drifted: ${emitted.peek().keySet}")
+      while (!emitted.asScala.exists(_("wal_num_synchronized") == 5L) &&
+        System.currentTimeMillis() < repDeadline) Thread.sleep(50)
+      val series = emitted.asScala.toSeq
+      assert(series.nonEmpty, "reporter emitted nothing")
+      assert(series.forall(_.keySet == g.keySet),
+        s"reporter gauge keys drifted: ${series.map(_.keySet)}")
+      val running = series.scanLeft(0L)(_ + _("wal_num_records")).tail
+      assert(series.map(_("wal_num_synchronized")) == running,
+        s"not a per-batch series: $series")
+      assert(series.last("wal_num_synchronized") == 5L, series)
+      assert(series.last("wal_num_ignored_already_done") == 2L, series)
     } finally p.close()
   }
 

@@ -13,6 +13,24 @@ import graft.sources.Sources
   * duplicate effects. */
 class RecoverySpec extends SparkTestBase {
 
+  /** The sf0.001 events log as a WAL: user_id keys (hot: ~67 ops each),
+    * event_id order, the `error` type as DELETE (c1's DELETE analog). */
+  private def eventsLog: Seq[WalRecord] = {
+    val s = spark
+    import s.implicits._
+    graft.model.Tables.events(s, sf0001)
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+      .as[(Long, Long, String, Double)].collect().sortBy(_._1).toSeq
+      .map { case (id, user, tpe, v) =>
+        WalRecord(id, user, if (tpe == "error") "DELETE" else "UPDATE", v.toString) }
+  }
+
+  /** c1_snapshot of the events log before `bound`: key → (last id, payload). */
+  private def c1At(bound: Long): Map[Long, (Long, String)] =
+    graft.ops.Changelog.snapshotOf(graft.model.Tables.events(spark, sf0001)
+        .filter(col("event_id") < bound))
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(3).toString))).toMap
+
   test("pipeline restart from checkpoint: no duplicate effects, no lost records") {
     val s = spark
     import s.implicits._
@@ -154,7 +172,7 @@ class RecoverySpec extends SparkTestBase {
 
     // consumer A → parquet snapshot table; consumer B → JDBC table
     val qa = SnapshotTable.materialize(
-      Sources.walFileStream(s, walDir), s"$tmp/snapA", s"$tmp/ckptA")
+      Sources.walFileStream(s, walDir), s"$tmp/snapA", s"$tmp/ckptA", nParts = 1)
     val pb = new WalPipeline(Sources.walFileStream(s, walDir),
       new JdbcWalSink(url, "wal_target"), s"$tmp/ckptB",
       pollMillis = 10L, retrySleepMs = 1L)
@@ -336,13 +354,7 @@ class RecoverySpec extends SparkTestBase {
     JdbcTestKit.exec(url,
       "ALTER TABLE fault_target ADD CONSTRAINT no_poison CHECK (payload <> 'poison')")
 
-    // the sf0.001 events log as a WAL: user_id keys (hot: ~67 ops each),
-    // event_id order, the `error` type as DELETE (c1's DELETE analog)
-    val events = graft.model.Tables.events(s, sf0001)
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      .as[(Long, Long, String, Double)].collect().sortBy(_._1)
-    val log = events.toSeq.map { case (id, user, tpe, v) =>
-      WalRecord(id, user, if (tpe == "error") "DELETE" else "UPDATE", v.toString) }
+    val log = eventsLog
     val boundary = log(log.size / 2).id
     val (head, rest) = log.partition(_.id < boundary)
     // two new keys past every user: a clean insert, then the poison
@@ -354,10 +366,6 @@ class RecoverySpec extends SparkTestBase {
     def liveRows: Map[Long, (Long, String)] =
       JdbcTestKit.rows(url, "fault_target").collect {
         case (k, (id, 0, p)) if k <= topKey => k -> ((id, p)) }
-    def c1At(bound: Long): Map[Long, (Long, String)] =
-      graft.ops.Changelog.snapshotOf(graft.model.Tables.events(s, sf0001)
-          .filter(col("event_id") < bound))
-        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(3).toString))).toMap
 
     head.toDF().coalesce(1).write.mode("append").parquet(walDir)
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
@@ -396,13 +404,90 @@ class RecoverySpec extends SparkTestBase {
     }
   }
 
+  test("retried multi-partition batch: the already-done meter counts exactly what the failed attempts committed") {
+    // A batch spread over four shuffle partitions, one of which carries a
+    // 'poison' payload the target's CHECK constraint refuses. Partitions
+    // commit independently, so each failed attempt commits every clean
+    // partition's chunk and rolls back only the poisoned one. When the
+    // target accepts the write, the successful attempt must count as
+    // already applied exactly the records those commits (and the head
+    // batch) cover: per key, the batch records at or below the stored
+    // last_id.
+    val s = spark
+    import s.implicits._
+    val (tmp, url) = JdbcTestKit.freshDerby("graft-jdbc-multipart")
+    val walDir = s"$tmp/wal"
+    JdbcWalSink.ensureTable(url, "multipart_target")
+    JdbcTestKit.exec(url,
+      "ALTER TABLE multipart_target ADD CONSTRAINT no_poison CHECK (payload <> 'poison')")
+
+    val log = eventsLog
+    val boundary = log(log.size / 2).id
+    val (head, rest) = log.partition(_.id < boundary)
+    // the batch: the rest of the log, the head's last 20 records replayed,
+    // and the poison on a new key past every user
+    val (topId, topKey) = (log.map(_.id).max, log.map(_.entityId).max)
+    val poison = WalRecord(topId + 1, topKey + 1, "ADD", "poison")
+    val batch = rest ++ head.takeRight(20) :+ poison
+
+    val nParts = 4
+    // the batch's hash partitioning: pmod(murmur3(entityId), nParts)
+    val partOf = batch.map(_.entityId).distinct.toDF("k")
+      .select(col("k"), pmod(hash(col("k")), lit(nParts)))
+      .as[(Long, Int)].collect().toMap
+    val poisoned = batch.filter(r => partOf(r.entityId) == partOf(poison.entityId))
+    assert(batch.map(r => partOf(r.entityId)).distinct.size >= 2,
+      "the batch must span several partitions")
+    // parked: every clean partition committed, the poisoned one not at all
+    val parked = JdbcTestKit.fold(head ++ batch.diff(poisoned))
+
+    head.toDF().coalesce(1).write.mode("append").parquet(walDir)
+    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+    val prevCoalesce = s.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    s.conf.set("spark.sql.shuffle.partitions", nParts.toString)
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    val p = new WalPipeline(Sources.walFileStream(s, walDir),
+      new JdbcWalSink(url, "multipart_target"), s"$tmp/ckpt",
+      pollMillis = 10L, retrySleepMs = 100L)
+    try {
+      p.start()
+      p.processAllAvailable()
+      assert(JdbcTestKit.rows(url, "multipart_target") == JdbcTestKit.fold(head))
+
+      batch.toDF().coalesce(1).write.mode("append").parquet(walDir)
+      val deadline = System.currentTimeMillis() + 60000
+      while ((p.metrics.gauges("wal_num_io_failures") < 2L ||
+          JdbcTestKit.rows(url, "multipart_target") != parked) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(p.metrics.gauges("wal_num_io_failures") >= 2L, p.metrics.gauges)
+      assert(p.metrics.state.get() == WalState.INACCESSIBLE_IO_FAILURE)
+      val stored = JdbcTestKit.rows(url, "multipart_target")
+      assert(stored == parked, "each clean partition commits; the poisoned one rolls back")
+      val applied = batch.count(r => stored.get(r.entityId).exists(_._1 >= r.id)).toLong
+      assert(applied > 20L, s"the failed attempts must have committed some partition: $applied")
+
+      JdbcTestKit.exec(url, "ALTER TABLE multipart_target DROP CONSTRAINT no_poison")
+      p.processAllAvailable()
+      val g = p.metrics.gauges
+      assert(g("wal_num_ignored_already_done") == applied, g)
+      assert(JdbcTestKit.rows(url, "multipart_target") == JdbcTestKit.fold(head ++ batch))
+      val live = JdbcTestKit.rows(url, "multipart_target").collect {
+        case (k, (id, 0, pl)) if k <= topKey => k -> ((id, pl)) }
+      assert(live == c1At(topId + 1), "final target == c1_snapshot at the last event")
+    } finally {
+      p.close()
+      s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
+    }
+  }
+
   test("abnormal query termination surfaces as INACCESSIBLE_IO_FAILURE") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val ms = MemoryStream[WalRecord]
-    val metrics = new WalMetrics
+    val metrics = new WalMetrics(_ => ())
     s.streams.addListener(metrics)
     val q = ms.toDS().writeStream
       .foreachBatch { (_: org.apache.spark.sql.Dataset[WalRecord], _: Long) =>

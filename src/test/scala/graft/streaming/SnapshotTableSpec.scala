@@ -13,7 +13,7 @@ class SnapshotTableSpec extends SparkTestBase {
     implicit val ctx = s.sqlContext
     val tmp = Files.createTempDirectory("graft-snap").toString
     val ms = MemoryStream[WalRecord]
-    val q = SnapshotTable.materialize(ms.toDS(), s"$tmp/table", s"$tmp/ckpt")
+    val q = SnapshotTable.materialize(ms.toDS(), s"$tmp/table", s"$tmp/ckpt", nParts = 1)
     def state(): Map[Long, String] =
       SnapshotTable.read(s, s"$tmp/table").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -64,7 +64,7 @@ class SnapshotTableSpec extends SparkTestBase {
       Seq(0L, 2L, 3L).foreach(p =>
         assert(versionsOf(p) == v0(p.toInt), s"untouched partition $p must not be rewritten"))
 
-      val state = SnapshotTable.readPartitioned(s, base)
+      val state = SnapshotTable.read(s, base)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
       val expected = (0L to 7L).map(k => k -> s"v$k").toMap + (1L -> "v1b") - 5L
       assert(state == expected)
@@ -102,7 +102,7 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(dirs.contains("v=0"), s"manifest-referenced v=0 must survive the commit: $dirs")
     assert(!dirs.contains("v=1"), s"unreferenced orphan must be reclaimed: $dirs")
     assert(SnapshotTable.readManifest(s, base).get._2(1L) == 2L)
-    val state = SnapshotTable.readPartitioned(s, base)
+    val state = SnapshotTable.read(s, base)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(state == Map(1L -> "a2", 2L -> "b"),
       "orphan payload must not leak into the committed view")

@@ -41,16 +41,17 @@ class StreamsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("s1-tws: transformWithState snapshot matches the golden scenario") {
+  test("s1 on RocksDB: snapshotStream matches the golden scenario under the RocksDB state store") {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    // transformWithState needs the RocksDB state store (multi-column-family)
+    // the same operator on the other state-store provider: the golden
+    // scenario must not depend on where the per-key state lives
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[WalRecord]
-    val q = Streams.snapshotStreamTWS(ms.toDS())
-      .writeStream.format("memory").queryName("snaptws").outputMode("update").start()
+    val q = Streams.snapshotStream(ms.toDS())
+      .writeStream.format("memory").queryName("snaprocks").outputMode("update").start()
     try {
       ms.addData(WalRecord(0, 1, "ADD", "name1"), WalRecord(1, 2, "ADD", "name2"))
       q.processAllAvailable()
@@ -59,10 +60,11 @@ class StreamsSpec extends SparkTestBase {
       q.processAllAvailable()
       ms.addData(WalRecord(4, 3, "DELETE", null))
       q.processAllAvailable()
-      val finalState = s.table("snaptws").as[EntityState].collect()
+      val finalState = s.table("snaprocks").as[EntityState].collect()
         .groupBy(_.entityId).map { case (k, vs) => k -> vs.maxBy(_.lastId) }
-      assert(finalState(1L).payload == "updated-name")
-      assert(finalState(2L).payload == "name2", "replay must not overwrite")
+      assert(finalState(1L).payload == "updated-name" && !finalState(1L).deleted)
+      assert(finalState(2L).payload == "name2" && !finalState(2L).deleted,
+        "replay must not overwrite")
       assert(finalState(3L).deleted)
     } finally {
       q.stop()
@@ -104,7 +106,7 @@ class StreamsSpec extends SparkTestBase {
     implicit val ctx = s.sqlContext
     val dim = Seq((1L, "alpha"), (2L, "beta")).toDF("dim_key", "dim_name")
     val ms = MemoryStream[WalRecord]
-    val q = Streams.enrichStream(ms.toDS(), dim, col("entityId") === col("dim_key"))
+    val q = Streams.enrichStream(ms.toDS().toDF(), dim, col("entityId") === col("dim_key"))
       .select(col("id"), col("entityId"), col("dim_name"))
       .writeStream.format("memory").queryName("enrich").outputMode("append").start()
     try {
@@ -122,20 +124,25 @@ class StreamsSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val ms = MemoryStream[(Timestamp, String)]
-    val ev = ms.toDS().toDF("ts", "event_type")
-    val q = Streams.tumblingCounts(ev, "10 minutes")
+    val ms = MemoryStream[(Timestamp, String, Double)]
+    val ev = ms.toDS().toDF("ts", "event_type", "value")
+    val q = Streams.tumblingCounts(ev)
       .writeStream.format("memory").queryName("tumble").outputMode("update").start()
     def t(h: Int, m: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
     try {
-      ms.addData((t(1, 0), "view"), (t(2, 30), "view"))
+      ms.addData((t(1, 0), "view", 1.25), (t(2, 30), "view", 2.5))
       q.processAllAvailable() // watermark advances to 02:20
-      ms.addData((t(0, 5), "view"), (t(2, 40), "click")) // 00:05 is beyond-late
+      ms.addData((t(0, 5), "view", 4.0), (t(2, 40), "click", 0.75)) // 00:05 is beyond-late
       q.processAllAvailable()
       val starts = s.table("tumble").select("start_ms").as[Long].collect().toSet
       val hour0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
       assert(!starts.contains(hour0), "event older than watermark must be dropped")
-      assert(starts.contains(Timestamp.valueOf("2024-01-01 02:00:00").getTime))
+      val hour2 = Timestamp.valueOf("2024-01-01 02:00:00").getTime
+      assert(starts.contains(hour2))
+      // s2's scaled value sum rides the same operator
+      val valueC = s.table("tumble").filter(col("start_ms") === hour2)
+        .select("event_type", "value_c").as[(String, Long)].collect().toMap
+      assert(valueC == Map("view" -> 250L, "click" -> 75L), s"value_c: $valueC")
     } finally q.stop()
   }
 
@@ -243,7 +250,7 @@ class StreamsSpec extends SparkTestBase {
     implicit val ctx = s.sqlContext
     val ms = MemoryStream[(Long, Timestamp)]
     val ev = ms.toDS().toDF("event_id", "ts")
-    val q = Streams.dedupStream(ev, "10 minutes")
+    val q = Streams.dedupStream(ev)
       .writeStream.format("memory").queryName("dedup").outputMode("append").start()
     try {
       ms.addData((1L, Timestamp.valueOf("2024-01-01 01:00:00")))
@@ -262,7 +269,7 @@ class StreamsSpec extends SparkTestBase {
     implicit val ctx = s.sqlContext
     val ms = MemoryStream[(Long, Timestamp)]
     val ev = ms.toDS().toDF("user_id", "ts")
-    val q = Streams.sessionCounts(ev, "10 minutes")
+    val q = Streams.sessionCounts(ev)
       .writeStream.format("memory").queryName("sess").outputMode("complete").start()
     try {
       // user 1: two events 10 min apart (one session), then a 40-min gap (new session)
@@ -308,7 +315,7 @@ class StreamsSpec extends SparkTestBase {
     implicit val ctx = s.sqlContext
     val ms = MemoryStream[(Timestamp, String)]
     val ev = ms.toDS().toDF("ts", "event_type")
-    val q = Streams.slidingCounts(ev, "10 minutes")
+    val q = Streams.slidingCounts(ev)
       .writeStream.format("memory").queryName("slide").outputMode("update").start()
     try {
       ms.addData((Timestamp.valueOf("2024-01-01 05:30:00"), "view"))

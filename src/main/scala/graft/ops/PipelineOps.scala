@@ -2404,10 +2404,15 @@ object PipelineOps {
       .groupBy(col("doc_id")).agg(min(col("lab")).as("lab"))
     d.filter(col("doc_id") > thr).select(col("doc_id"))
       .join(hit, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("lab"), col("doc_id")).as("cluster_id"),
-        when(col("lab").isNull, "fresh").otherwise("matched").as("origin"))
+      .select(col("doc_id") +: labelVerdictCols(col("lab"), col("doc_id")): _*)
   }
+
+  /** The label assignment's verdict columns from the min matched label
+    * (shared by the s21 gate and [[labelRouteDecisions]]): the label, or
+    * the arrival's own id when no held neighbor matched. */
+  private[graft] def labelVerdictCols(lab: Column, docId: Column): Seq[Column] = Seq(
+    coalesce(lab, docId).as("cluster_id"),
+    when(lab.isNull, "fresh").otherwise("matched").as("origin"))
 
   /** The router's verdict columns from OR'd bits (shared by the s18
     * gate's post-sink mapping and [[routeDecisions]]): one bit →

@@ -87,15 +87,16 @@ object Skew {
     * replication — the blind form's whole price — pays only for the hot
     * slice. Exact for inner equi-joins by the same meet-exactly-once
     * argument: equal keys are either both hot (pair meets once, under
-    * l's salt) or both cold (once, at salt 0); the predicates must be
-    * functions of the join key so hot-ness agrees across the sides. */
-  def saltedEquiJoinHot(left: DataFrame, leftKey: Column, leftHot: Column,
-      right: DataFrame, rightKey: Column, rightHot: Column,
+    * l's salt) or both cold (once, at salt 0). `hot` is ONE predicate
+    * over the join key, applied to both keys, so hot-ness agrees across
+    * the sides by construction. */
+  def saltedEquiJoinHot(left: DataFrame, leftKey: Column,
+      right: DataFrame, rightKey: Column, hot: Column => Column,
       saltFrom: Column, buckets: Int = 16): DataFrame = {
     val l = left.withColumn("__salt",
-      when(leftHot, pmod(xxhash64(saltFrom), lit(buckets.toLong))).otherwise(lit(0L)))
+      when(hot(leftKey), pmod(xxhash64(saltFrom), lit(buckets.toLong))).otherwise(lit(0L)))
     val r = right.withColumn("__salt",
-      explode(when(rightHot, sequence(lit(0L), lit(buckets.toLong - 1)))
+      explode(when(hot(rightKey), sequence(lit(0L), lit(buckets.toLong - 1)))
         .otherwise(array(lit(0L)))))
     l.join(r, leftKey === rightKey && l("__salt") === r("__salt"))
       .drop("__salt")
@@ -323,8 +324,7 @@ object Skew {
     // Result identical (meet-exactly-once per the saltedEquiJoinHot doc);
     // the blind form stays for the audit legs, where hot keys are the
     // unknown under study.
-    q25Agg(saltedEquiJoinHot(l, col("jk"), col("jk") === 1L,
-      r, col("rk"), col("rk") === 1L,
+    q25Agg(saltedEquiJoinHot(l, col("jk"), r, col("rk"), _ === 1L,
       saltFrom = xxhash64(col("l_orderkey"), col("l_linenumber"))))
   }
 

@@ -9,13 +9,15 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
 
-/** Driver-gate harnesses for the two stream-only operators (SURVEY.md
-  * §2.3 s8/s9): each runs the REAL streaming pipeline — file-arrival
-  * source (the production ingress shape), the production transform from
-  * [[Streams]], memory sink — one multi-batch pass over the sf tables,
-  * then returns the sink as a batch DataFrame so the driver's DuckDB
-  * hash gate finally sees both rows. The transform under test is
-  * byte-identical to the one StreamsSpec's golden scenarios cover.
+/** The 14 stream gates (SURVEY.md §2.3 s8–s21): each runs the REAL
+  * streaming pipeline — file-arrival source (the production ingress
+  * shape), the production transform, memory sink — one multi-batch pass
+  * over the sf tables, then returns the sink as a batch DataFrame so the
+  * driver's DuckDB hash gate sees the streamed rows. Every gate states
+  * only its plan, output mode and verdict: the replay stream comes from
+  * ONE accessor ([[replay]]; the document gates' history/arrival split
+  * from [[arrivals]]) and the query lifecycle — name, memory sink, run
+  * to the end of the feed, stop, detach — from ONE runner ([[run]]).
   *
   * The feed is staged by ONE `repartitionByRange` executor write as
   * contiguous key-range files of ~[[targetRowsPerFile]] rows each,
@@ -85,32 +87,34 @@ object StreamGate {
     })
   }
 
-  /** The staged events superset: every column an event-log gate reads,
-    * in log (event_id) order. */
-  private def eventsFeedDf(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir).select(col("event_id"), col("ts"),
-      col("user_id"), col("event_type"), col("value"))
+  /** A replayed table: its staged column superset (every column a gate
+    * over it reads), replayed in `order` (its log order). */
+  private final case class Replayed(table: String, order: String,
+      superset: (SparkSession, String) => DataFrame)
 
-  /** The staged documents superset, in doc_id order. */
-  private def docsFeedDf(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir).select(col("doc_id"), col("lang"), col("text"))
+  private val Events = Replayed("events", "event_id", (s, d) =>
+    Tables.events(s, d).select(col("event_id"), col("ts"),
+      col("user_id"), col("event_type"), col("value")))
+  private val Documents = Replayed("documents", "doc_id", (s, d) =>
+    Tables.documents(s, d).select(col("doc_id"), col("lang"), col("text")))
+  private val Embeddings = Replayed("embeddings", "vec_id", (s, d) =>
+    Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
+
+  private def sharedFeed(spark: SparkSession, dir: String, t: Replayed): Feed =
+    cachedFeed(spark, dir, t.table)(stageFeed(t.superset(spark, dir), t.order))
 
   /** The shared events feed (staged once per session × sfDir). Public to
     * graft so Bench can pre-materialize it as its own timed line. */
   private[graft] def sharedEventsFeed(spark: SparkSession, dir: String): Feed =
-    cachedFeed(spark, dir, "events")(stageFeed(eventsFeedDf(spark, dir), "event_id"))
+    sharedFeed(spark, dir, Events)
 
   /** The shared documents feed (staged once per session × sfDir). */
   private[graft] def sharedDocsFeed(spark: SparkSession, dir: String): Feed =
-    cachedFeed(spark, dir, "documents")(stageFeed(docsFeedDf(spark, dir), "doc_id"))
-
-  /** The staged embeddings superset, in vec_id order (s16). */
-  private def embFeedDf(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
+    sharedFeed(spark, dir, Documents)
 
   /** The shared embeddings feed (staged once per session × sfDir). */
   private[graft] def sharedEmbFeed(spark: SparkSession, dir: String): Feed =
-    cachedFeed(spark, dir, "embeddings")(stageFeed(embFeedDf(spark, dir), "vec_id"))
+    sharedFeed(spark, dir, Embeddings)
 
   /** Drop and delete every shared feed (tests; application end). */
   private[graft] def clearFeeds(): Unit = synchronized {
@@ -213,33 +217,64 @@ object StreamGate {
     rm(dir.toFile)
   }
 
-  /** Chunk-per-trigger parquet stream over a staged feed: one micro-batch
-    * consumes the next `filesPerTrigger` oldest files = one contiguous
-    * key-range chunk. */
-  private def feedStream(spark: SparkSession, feed: Feed,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+  /** The shared staged replay stream of `t`, with its superset schema:
+    * one micro-batch consumes the next `filesPerTrigger` oldest files =
+    * one contiguous key-range chunk. */
+  private def replay(spark: SparkSession, dir: String, t: Replayed): DataFrame = {
+    val feed = sharedFeed(spark, dir, t)
     spark.readStream
-      .schema(schema)
+      .schema(t.superset(spark, dir).schema)
       .option("maxFilesPerTrigger", feed.filesPerTrigger)
       .parquet(feed.dir.toString)
+  }
+
+  /** The document gates' split (s8/s17/s18/s20/s21): the history
+    * boundary `thr` ([[Tables.historyThr]], the 9/10 freeze rule) and the
+    * arrival stream — the documents replay past it. */
+  private def arrivals(spark: SparkSession, dir: String): (Long, DataFrame) = {
+    val thr = Tables.historyThr(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+    (thr, replay(spark, dir, Documents).filter(col("doc_id") > thr))
+  }
+
+  /** The one gate lifecycle: start `frame` into a memory sink named
+    * `<key>_gate_<n>`, run the whole feed, stop the query, and return
+    * the sink materialized (`localCheckpoint`) with its temp view
+    * dropped — repeated gate runs in one session (determinism sweeps,
+    * bench + verify) must not accumulate driver-held sink tables, and a
+    * failed run surfaces its own exception and leaks neither its query
+    * nor its view. The checkpointed blocks are reclaimed by the
+    * ContextCleaner once the returned frame is dropped. */
+  private[streaming] def run(spark: SparkSession, key: String, frame: Dataset[_],
+      outputMode: String = "append"): DataFrame = {
+    val name = s"${key}_gate_${runId.incrementAndGet()}"
+    val q = frame.writeStream.format("memory").queryName(name).outputMode(outputMode).start()
+    try {
+      try q.processAllAvailable() finally q.stop()
+      spark.table(name).localCheckpoint(true)
+    } finally spark.catalog.dropTempView(name)
+  }
 
   /** Shuffle-partition cap for the gate's streaming run. Stateful
     * operators open one state store per shuffle partition per
     * micro-batch, so a 32-partition bench session pays 32 RocksDB
     * instances × batch for a verify-scale feed — harness overhead, not
     * operator cost. A CAP, not a pin: a session already below it keeps
-    * its own setting. Note the cap DOES narrow DeterminismSpec's 1/3/17
-    * sweep to an effective 1/3/4 — the 17-partition leg runs capped;
-    * the 1- and 3-partition legs still vary the stateful fold's
-    * partitioning. Back at 4 (r20, VERDICT item 3): the r19 2-cap was a
-    * timed-region harness tune, not engine speed — it halved the store
+    * its own setting. DeterminismSpec's 1/3/17 sweep lifts it through
+    * [[uncapped]], so its 17-partition leg really runs 17 wide. Back at
+    * 4 (r20, VERDICT item 3): the r19 2-cap was a timed-region harness
+    * tune, not engine speed — it halved the store
     * count only at benchmark scale (at 100 TB you want MORE state
     * partitions, not 2) and polluted the gate A/B numbers. The real r19
     * gate win (RocksDB changelog checkpointing + numKeys tracking off,
     * [[withRocksDB]]) is kept. Production streams size their own
     * shuffle partitions; this cap only bounds the verify/bench
     * harness. */
-  private val gatePartitionCap = 4
+  private val gatePartitionCap = new scala.util.DynamicVariable[Int](4)
+
+  /** Test seam: run `body` (on this thread) with [[gatePartitionCap]]
+    * lifted, so a gate runs at the session's own shuffle width. */
+  private[graft] def uncapped[T](body: => T): T =
+    gatePartitionCap.withValue(Int.MaxValue)(body)
 
   private def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
     val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -266,7 +301,7 @@ object StreamGate {
       // numKeys bookkeeping scans on every put/delete are metrics-only —
       // state-size audits read the store contents, not this gauge
       "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false",
-      "spark.sql.shuffle.partitions" -> math.min(current, gatePartitionCap).toString)(body)
+      "spark.sql.shuffle.partitions" -> math.min(current, gatePartitionCap.value).toString)(body)
   }
 
   /** s9 gate: the temporal as-of stream ([[Streams.temporalAsofStream]],
@@ -276,45 +311,14 @@ object StreamGate {
     * verbatim — purchases matched to the latest prior same-user view. */
   def s9TemporalAsof(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
     import spark.implicits._
-    val feed = sharedEventsFeed(spark, dir)
-    val name = s"s9_gate_${runId.incrementAndGet()}"
-    val q = Streams.temporalAsofStream(
-        feedStream(spark, feed, eventsFeedDf(spark, dir).schema)
+    run(spark, "s9", Streams.temporalAsofStream(
+        replay(spark, dir, Events)
           .select(col("event_id").as("eventId"), col("user_id").as("userId"),
             col("event_type").as("eventType"))
-          .as[ProbeEvent])
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    feedThenStop(spark, name, q) { q.processAllAvailable() }
-    detachSink(spark, name)
+          .as[ProbeEvent]))
       .select(col("eventId").as("event_id"), col("userId").as("user_id"),
         col("priorViewId").as("prior_view_id"))
       .orderBy("event_id")
-  }
-
-  /** Run the feed, then stop the query; if the feed FAILS, also drop the
-    * sink temp view before rethrowing — a failed gate run must not leak
-    * its driver-held sink table any more than a successful one. */
-  private def feedThenStop(spark: SparkSession, name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery)(feed: => Unit): Unit = {
-    var ok = false
-    try { feed; ok = true }
-    finally {
-      try q.stop()
-      finally if (!ok) {
-        try spark.catalog.dropTempView(name) catch { case _: Throwable => () }
-      }
-    }
-  }
-
-  /** Materialize a memory-sink table and drop its temp view: repeated
-    * gate runs in one session (determinism sweeps, bench + verify) must
-    * not accumulate driver-held sink tables for the session lifetime.
-    * The checkpointed blocks are reclaimed by the ContextCleaner once
-    * the returned frame is dropped. */
-  private def detachSink(spark: SparkSession, name: String): DataFrame = {
-    val out = spark.table(name).localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
   }
 
   /** s8 gate: the continuous-ingest novelty screen
@@ -328,24 +332,15 @@ object StreamGate {
     * hit (one-sided error), and its false-positive surplus stayed within
     * max(1, n_keys/20) (20× slack over the configured fpp=1e-3). */
   def s8NoveltyStream(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = Tables.historyThr(d)
-    val indexDocs = d.filter(col("doc_id") <= thr)
     // arrivals come off the shared docs feed, filtered post-read: the
     // probe is stateless, so the arrivals landing in the feed's tail
     // chunks (they are the top 10% of the doc_id range) changes nothing
-    val feed = sharedDocsFeed(spark, dir)
-    val streamed = {
-      val name = s"s8_gate_${runId.incrementAndGet()}"
-      val q = Streams.noveltyStream(
-          spark, feedStream(spark, feed, docsFeedDf(spark, dir).schema)
-            .filter(col("doc_id") > thr).select(col("doc_id"), col("text")),
-          indexDocs)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-        .select(col("doc_id"), col("n_keys").as("n_keys_s"), col("n_maybe_hit"))
-    }
+    val (thr, arr) = arrivals(spark, dir)
+    val indexDocs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      .filter(col("doc_id") <= thr)
+    val streamed = run(spark, "s8",
+        Streams.noveltyStream(spark, arr.select(col("doc_id"), col("text")), indexDocs))
+      .select(col("doc_id"), col("n_keys").as("n_keys_s"), col("n_maybe_hit"))
     // exact twin of the probe: x36's hit counts, read from the shared
     // stage (identical 90/10 split and gram keys — the lineage runs once
     // per session across x36 and this gate)
@@ -381,14 +376,10 @@ object StreamGate {
     * ≤thr, char-level replay on >thr) as unrolled materialized CTEs —
     * exact parity, no bound flags needed. */
   def s17BpeDriftStream(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = Tables.historyThr(d)
     val merges = graft.ops.Stages.s17Merges(spark, dir)
       .orderBy("round").collect() // k rows — the frozen tokenizer
       .map(r => (r.getString(1), r.getString(2)))
-    val feed = sharedDocsFeed(spark, dir)
-    val base = feedStream(spark, feed, docsFeedDf(spark, dir).schema)
-      .filter(col("doc_id") > thr)
+    val base = arrivals(spark, dir)._2
       // n_tok from the same trimmed rendering n_bpe uses (x67's rule):
       // raw-array size would over-count boundary-space documents.
       .select(col("doc_id"), graft.ops.TextOps.charSeqCol(col("text")).as("s"))
@@ -398,14 +389,7 @@ object StreamGate {
       df.withColumn("s", replace(col("s"), lit(s" $l  $r "), lit(s" ${l}_$r ")))
     }.select(col("doc_id"), col("n_tok"),
       size(split(trim(col("s")), "  ")).cast("long").as("n_bpe"))
-    val streamed = {
-      val name = s"s17_gate_${runId.incrementAndGet()}"
-      val q = encoded.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    streamed
+    run(spark, "s17", encoded)
       .select(col("doc_id"), col("n_tok"), col("n_bpe"),
         Tables.fdiv(lit(1000L) * col("n_bpe"), col("n_tok")).as("bpe_per_1000"))
       .orderBy("doc_id")
@@ -439,37 +423,17 @@ object StreamGate {
     * → sticky, bands → capped index, arrival bands → OR — independently;
     * exact parity, no bound flags. */
   def s18SplitRouteStream(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = Tables.historyThr(d)
     // frozen index: ≤ 4 rows per history doc before the hot-bucket cap,
     // one row per surviving (band, h) after the OR — bounded, STAGED
     // (materialized once per session, shared with x69's audit) so the
     // feed's micro-batches re-read blocks instead of re-running the
     // banding + fixpoint per batch per join
-    val idx = graft.ops.Stages.s18Index(spark, dir)
-    val feed = sharedDocsFeed(spark, dir)
-    val arr = feedStream(spark, feed, docsFeedDf(spark, dir).schema)
-      .filter(col("doc_id") > thr)
-      .select(col("doc_id") +: graft.ops.TextOps.rowBandCols(
-        graft.ops.TextOps.shinglesOf(split(col("text"), " "))): _*)
-    // four stream-static left joins (stateless); a shingle-less arrival
-    // has null band keys, matches nothing, and routes 'fresh'
-    val joined = (0 until 4).foldLeft(arr) { (cur, b) =>
-      cur.join(idx.filter(col("band") === b)
-          .select(col("h").as(s"b$b"), col("bits").as(s"bits$b")),
-        Seq(s"b$b"), "left")
-    }
+    val joined = bandProbe(spark, dir, graft.ops.Stages.s18Index(spark, dir), "bits")
+    // a shingle-less arrival matches nothing and routes 'fresh'
     val routed = joined.select(col("doc_id"),
       (0 until 4).map(b => coalesce(col(s"bits$b"), lit(0L)))
         .reduce(_ bitwiseOR _).as("bits"))
-    val streamed = {
-      val name = s"s18_gate_${runId.incrementAndGet()}"
-      val q = routed.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    streamed
+    run(spark, "s18", routed)
       .select(Seq(col("doc_id"), col("bits")) ++
         graft.ops.PipelineOps.routeVerdictCols(col("bits"), col("doc_id")): _*)
       .orderBy("doc_id")
@@ -498,34 +462,31 @@ object StreamGate {
     * bands → capped min-label index, arrival bands → min) — exact
     * parity, no bound flags. */
   def s21LabelRouteStream(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = Tables.historyThr(d)
-    val idx = graft.ops.Stages.s21Index(spark, dir)
-    val feed = sharedDocsFeed(spark, dir)
-    val arr = feedStream(spark, feed, docsFeedDf(spark, dir).schema)
-      .filter(col("doc_id") > thr)
+    val joined = bandProbe(spark, dir, graft.ops.Stages.s21Index(spark, dir), "lab")
+    // least() skips nulls: the min over however many bands matched (a
+    // shingle-less arrival matches nothing and assigns 'fresh')
+    val minLab = least((0 until 4).map(b => col(s"lab$b")): _*)
+    val routed = joined.select(col("doc_id") +:
+      graft.ops.PipelineOps.labelVerdictCols(minLab, col("doc_id")): _*)
+    run(spark, "s21", routed).orderBy("doc_id")
+  }
+
+  /** The s18/s21 arrival probe: each arriving document banded with the
+    * exact x13 signature pipeline (per-row, [[graft.ops.TextOps.rowBandCols]])
+    * and probed by four stream-static left joins (stateless) against a
+    * frozen (band, h) index, band `b`'s `payload` landing in
+    * `<payload><b>`. A shingle-less arrival has null band keys and
+    * matches nothing. */
+  private def bandProbe(spark: SparkSession, dir: String, idx: DataFrame,
+      payload: String): DataFrame = {
+    val arr = arrivals(spark, dir)._2
       .select(col("doc_id") +: graft.ops.TextOps.rowBandCols(
         graft.ops.TextOps.shinglesOf(split(col("text"), " "))): _*)
-    // four stream-static left joins (stateless); a shingle-less arrival
-    // has null band keys, matches nothing, and assigns 'fresh'
-    val joined = (0 until 4).foldLeft(arr) { (cur, b) =>
+    (0 until 4).foldLeft(arr) { (cur, b) =>
       cur.join(idx.filter(col("band") === b)
-          .select(col("h").as(s"b$b"), col("lab").as(s"lab$b")),
+          .select(col("h").as(s"b$b"), col(payload).as(s"$payload$b")),
         Seq(s"b$b"), "left")
     }
-    // least() skips nulls: the min over however many bands matched
-    val minLab = least((0 until 4).map(b => col(s"lab$b")): _*)
-    val routed = joined.select(col("doc_id"),
-      coalesce(minLab, col("doc_id")).as("cluster_id"),
-      when(minLab.isNull, "fresh").otherwise("matched").as("origin"))
-    val streamed = {
-      val name = s"s21_gate_${runId.incrementAndGet()}"
-      val q = routed.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    streamed.orderBy("doc_id")
   }
 
   /** S19 budget shard count — the admission parallelism knob: the
@@ -558,23 +519,15 @@ object StreamGate {
       .agg(Tables.fdiv(sum(size(split(col("text"), " ")).cast("long")), lit(2L)).as("b"))
       .collect()(0).getLong(0) // 1 row — the x65 budget rule
     val shardBudget = Math.floorDiv(budget, s19Shards)
-    val feed = sharedDocsFeed(spark, dir)
-    val src = feedStream(spark, feed, docsFeedDf(spark, dir).schema)
+    val src = replay(spark, dir, Documents)
       .select(col("doc_id").as("docId"),
         (graft.ops.PipelineOps.h16(col("doc_id")) % s19Shards).as("shard"),
         size(split(col("text"), " ")).cast("long").as("nTok"))
       .as[BudgetDoc]
-    val streamed = {
-      val name = s"s19_gate_${runId.incrementAndGet()}"
-      val q = src.groupByKey(_.shard)
+    run(spark, "s19", src.groupByKey(_.shard)
         .transformWithState(new BudgetAdmitProcessor(shardBudget),
           org.apache.spark.sql.streaming.TimeMode.None(),
-          org.apache.spark.sql.streaming.OutputMode.Append())
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    streamed
+          org.apache.spark.sql.streaming.OutputMode.Append()))
       .select(col("docId").as("doc_id"), col("shard"), col("nTok").as("n_tok"),
         col("cumTok").as("cum_tok"), col("admitted"))
       .orderBy("doc_id")
@@ -651,8 +604,6 @@ object StreamGate {
     * from whatever the history slice looks like that day. */
   def s20RetrievalStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val thr = Tables.historyThr(d)
     val stats = graft.ops.Artifacts.RetrievalStats.key
     val statDf = graft.ops.Artifacts.configuredPath(spark, stats) match {
       case Some(p) => graft.ops.Stages.readStamped(spark, p, stats)
@@ -680,23 +631,14 @@ object StreamGate {
       struct(lit(q).as("q_id"),
         rows.map { case (_, tm, df) => termScore(tm, df) }.reduce(_ + _).as("score1e4"))
     }
-    val feed = sharedDocsFeed(spark, dir)
-    val scored = feedStream(spark, feed, docsFeedDf(spark, dir).schema)
-      .filter(col("doc_id") > thr)
+    val scored = arrivals(spark, dir)._2
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("dnorm1e4", lit(2500L) +
         call_function("div", lit(7500L) * lit(n) * size(col("w")).cast(LongType), lit(t)))
       .select(col("doc_id"), explode(array(perQuery: _*)).as("qs"))
       .select(col("doc_id"), col("qs.q_id").as("q_id"), col("qs.score1e4").as("score1e4"))
       .filter(col("score1e4") > 0L) // ≥1 matching term — the screen's emission rule
-    val streamed = {
-      val name = s"s20_gate_${runId.incrementAndGet()}"
-      val q = scored.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    streamed.orderBy("doc_id", "q_id")
+    run(spark, "s20", scored).orderBy("doc_id", "q_id")
   }
 
   /** S10 MG capacity and slot count. k matches the batch q27c (so the
@@ -716,16 +658,8 @@ object StreamGate {
     * 0.05% group share, plus the flag that the streamed summary held it
     * (guaranteed: per-slot bound N_slot/(k+1) ≤ 0.02% of the group). */
   def s10FreqStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    val feed = sharedDocsFeed(spark, dir)
-    val latest = {
-      val name = s"s10_gate_${runId.incrementAndGet()}"
-      val q = Streams.freqStream(
-          s10Tokens(feedStream(spark, feed, docsFeedDf(spark, dir).schema)), s10K)
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    s10Verdict(spark, dir, latest)
+    s10Verdict(spark, dir,
+      run(spark, "s10", Streams.freqStream(s10Tokens(replay(spark, dir, Documents)), s10K)))
   }
 
   /** The s10 stream transform: document rows → slotted bigram tokens
@@ -761,20 +695,6 @@ object StreamGate {
       .orderBy("lang", "bg")
   }
 
-  /** s11 gate: continuous distinct-user counting — the streaming twin of
-    * the batch HLL rollup (q28), and deliberately the most Spark-native
-    * stateful shape in the repo: a plain streaming aggregation
-    * `groupBy(week).agg(approx_count_distinct(user))`, where the state
-    * store row IS the mergeable HLL++ buffer (fixed-size per group, no
-    * user set ever materialized — the property that makes continuous
-    * distinct viable at 100 TB of arrivals). No custom state logic: the
-    * partial-aggregate machinery that merges sketch buffers through a
-    * batch shuffle is exactly what merges them across micro-batches.
-    * The gate runs complete mode into the memory sink (final table =
-    * final counts); the production path is update mode + an event-time
-    * watermark so closed weeks' state evicts. Verdict row = q9b idiom:
-    * exact weekly distincts (batch twin) + a 3·rsd bound flag the
-    * oracle pins to 1; the raw estimate is never emitted. */
   /** The s11 stream shape, shared by the gate and the restart e2e: rsd,
     * the week projection, and the streaming HLL aggregation whose state
     * row IS the sketch buffer. */
@@ -800,17 +720,23 @@ object StreamGate {
       .orderBy("wk")
   }
 
+  /** s11 gate: continuous distinct-user counting — the streaming twin of
+    * the batch HLL rollup (q28), and deliberately the most Spark-native
+    * stateful shape in the repo: a plain streaming aggregation
+    * `groupBy(week).agg(approx_count_distinct(user))`, where the state
+    * store row IS the mergeable HLL++ buffer (fixed-size per group, no
+    * user set ever materialized — the property that makes continuous
+    * distinct viable at 100 TB of arrivals). No custom state logic: the
+    * partial-aggregate machinery that merges sketch buffers through a
+    * batch shuffle is exactly what merges them across micro-batches.
+    * The gate runs complete mode into the memory sink (final table =
+    * final counts); the production path is update mode + an event-time
+    * watermark so closed weeks' state evicts. Verdict row = q9b idiom:
+    * exact weekly distincts (batch twin) + a 3·rsd bound flag the
+    * oracle pins to 1; the raw estimate is never emitted. */
   def s11DistinctStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    val feed = sharedEventsFeed(spark, dir)
-    val streamed = {
-      val name = s"s11_gate_${runId.incrementAndGet()}"
-      val q = s11Aggregate(feedStream(spark, feed, eventsFeedDf(spark, dir).schema)
-          .select(col("event_id"), col("ts"), col("user_id")))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    s11Verdict(spark, dir, streamed)
+    s11Verdict(spark, dir, run(spark, "s11", s11Aggregate(replay(spark, dir, Events)
+      .select(col("event_id"), col("ts"), col("user_id"))), "complete"))
   }
 
   /** s13 shared shape: weekly `percentile_approx` over the cents-scaled
@@ -869,16 +795,8 @@ object StreamGate {
     * (complete-mode gate; update mode + event-time watermark evicting
     * closed weeks is the production form, like s11). */
   def s13QuantileStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    val feed = sharedEventsFeed(spark, dir)
-    val streamed = {
-      val name = s"s13_gate_${runId.incrementAndGet()}"
-      val q = s13Aggregate(feedStream(spark, feed, eventsFeedDf(spark, dir).schema)
-          .select(col("event_id"), col("ts"), col("value")))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    s13Verdict(spark, dir, streamed)
+    s13Verdict(spark, dir, run(spark, "s13", s13Aggregate(replay(spark, dir, Events)
+      .select(col("event_id"), col("ts"), col("value"))), "complete"))
   }
 
   /** s12 gate: continuous SCD2 maintenance ([[Streams.scd2Stream]],
@@ -892,19 +810,10 @@ object StreamGate {
     * predecessor but emit no visible version, same as c7. */
   def s12Scd2Stream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
     import spark.implicits._
-    val feed = sharedEventsFeed(spark, dir)
-    val emissions = {
-      val name = s"s12_gate_${runId.incrementAndGet()}"
-      val q = Streams.scd2Stream(
-          feedStream(spark, feed, eventsFeedDf(spark, dir).schema)
-            .select(col("event_id").as("eventId"), unix_millis(col("ts")).as("tsMs"),
-              col("user_id").as("userId"), col("event_type").as("op"), col("value"))
-            .as[Scd2Record])
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    emissions
+    run(spark, "s12", Streams.scd2Stream(replay(spark, dir, Events)
+        .select(col("event_id").as("eventId"), unix_millis(col("ts")).as("tsMs"),
+          col("user_id").as("userId"), col("event_type").as("op"), col("value"))
+        .as[Scd2Record]))
       .groupBy(col("userId").as("user_id"), col("validFromId").as("valid_from_id"))
       .agg(max(col("validToId")).as("valid_to_id"),
         max(col("validFromMs")).as("valid_from_ms"),
@@ -944,16 +853,8 @@ object StreamGate {
     * memory sink like s11/s13; update mode + an event-time watermark
     * evicting closed weeks is the production form. */
   def s14TopkStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    val feed = sharedEventsFeed(spark, dir)
-    val streamed = {
-      val name = s"s14_gate_${runId.incrementAndGet()}"
-      val q = s14Aggregate(feedStream(spark, feed, eventsFeedDf(spark, dir).schema)
-          .select(col("event_id"), col("ts"), col("value")))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    streamed
+    run(spark, "s14", s14Aggregate(replay(spark, dir, Events)
+        .select(col("event_id"), col("ts"), col("value"))), "complete")
       .select(col("wk"), posexplode(col("tk")))
       .select(col("wk"), (col("pos") + 1).cast("long").as("rnk"),
         col("col.tag").as("event_id"), col("col.ord").as("v"))
@@ -982,16 +883,8 @@ object StreamGate {
     * event-time watermark closing days (each day's verdict firing once
     * its baseline week is sealed) is the production form. */
   def s15AnomalyStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    val feed = sharedEventsFeed(spark, dir)
-    val streamed = {
-      val name = s"s15_gate_${runId.incrementAndGet()}"
-      val q = s15Aggregate(feedStream(spark, feed, eventsFeedDf(spark, dir).schema)
-          .select(col("event_type"), col("ts")))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
-    graft.ops.Windows.q32AnomalyOn(streamed)
+    graft.ops.Windows.q32AnomalyOn(run(spark, "s15", s15Aggregate(replay(spark, dir, Events)
+      .select(col("event_type"), col("ts"))), "complete"))
   }
 
   /** s16's per-row IVFADC routing + encoding against the FROZEN
@@ -1058,17 +951,9 @@ object StreamGate {
     * row per inverted list — k rows total, the minimal-state s11
     * footing; at 100 TB of arrivals the state is still k rows. */
   def s16PqStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    val feed = sharedEmbFeed(spark, dir)
-    val streamed = {
-      val name = s"s16_gate_${runId.incrementAndGet()}"
-      val q = s16Encode(spark, dir,
-          feedStream(spark, feed, embFeedDf(spark, dir).schema))
-        .groupBy(col("list_id"))
-        .agg(count(lit(1)).as("n_vecs_s"), sum(col("cw")).as("cw_sum_s"))
-        .writeStream.format("memory").queryName(name).outputMode("complete").start()
-      feedThenStop(spark, name, q) { q.processAllAvailable() }
-      detachSink(spark, name)
-    }
+    val streamed = run(spark, "s16", s16Encode(spark, dir, replay(spark, dir, Embeddings))
+      .groupBy(col("list_id"))
+      .agg(count(lit(1)).as("n_vecs_s"), sum(col("cw")).as("cw_sum_s")), "complete")
     s16BatchLists(spark, dir).join(streamed, Seq("list_id"), "left")
       .select(col("list_id"), col("n_vecs"), col("cw_sum"),
         (coalesce(col("n_vecs_s"), lit(-1L)) === col("n_vecs"))

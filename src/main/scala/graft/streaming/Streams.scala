@@ -387,18 +387,21 @@ object Streams {
     * (WalPipeline wires them to the INACCESSIBLE_IO_FAILURE gauge —
     * reference state semantics, `WalConsumer.java:137-142, 354-359`).
     *
-    * `onIgnored` receives, per successfully-applied batch, the number of
-    * records the sink reported as already applied (the sum of the
-    * partitions' `syncAll` counts, per record as `syncEntity == false`
-    * would count them) — the reference's `wal_num_ignored_already_done` meter
-    * (`WalConsumer.java:271-278`), its replay-observability signal.
-    * Counted with a per-attempt LongAccumulator so a batch that fails
-    * mid-apply and is retried reports only the successful attempt's
-    * count. */
+    * `onApplied(batchId, records, ignored)` runs once per
+    * successfully-applied batch, before the batch commits: `records` is
+    * the number of records the batch handed the sink (the
+    * `wal_num_synchronized` meter), `ignored` the number the sink
+    * reported as already applied (the sum of the partitions' `syncAll`
+    * counts, per record as `syncEntity == false` would count them) — the
+    * reference's `wal_num_ignored_already_done` meter
+    * (`WalConsumer.java:271-278`), its replay-observability signal. Both
+    * are counted in the same partition pass with per-attempt
+    * LongAccumulators, so a batch that fails mid-apply and is retried
+    * reports only the successful attempt's counts. */
   def foreachBatchSync(sink: WalSink, retrySleepMs: Long = 1000L,
       onIoFailure: () => Unit = () => (), onRecovered: () => Unit = () => (),
-      onIgnored: Long => Unit = _ => ())
-      : (Dataset[WalRecord], Long) => Unit = { (batch, _) =>
+      onApplied: (Long, Long, Long) => Unit = (_, _, _) => ())
+      : (Dataset[WalRecord], Long) => Unit = { (batch, batchId) =>
     // depth-bounded cause walk: a cyclic cause chain (initCause loops are
     // constructible) must classify as non-IO, not blow the stack inside
     // the catch guard
@@ -408,16 +411,19 @@ object Streams {
     var done = false
     var failedBefore = false
     while (!done) {
+      val records = batch.sparkSession.sparkContext.longAccumulator
       val ignored = batch.sparkSession.sparkContext.longAccumulator
       try {
         batch
           .repartition(col("entityId")) // co-locate each key; parallel across keys
           .sortWithinPartitions(col("entityId"), col("id")) // ordered apply per key
           .foreachPartition { (rows: Iterator[WalRecord]) =>
-            ignored.add(sink.syncAll(rows))
+            var n = 0L
+            ignored.add(sink.syncAll(rows.map { r => n += 1; r }))
+            records.add(n)
           }
         done = true
-        onIgnored(ignored.value)
+        onApplied(batchId, records.value, ignored.value)
         if (failedBefore) onRecovered()
       } catch {
         case e: Throwable if isIo(e) => // transient target outage: retry forever

@@ -14,8 +14,11 @@ object WalState extends Enumeration {
 /** Observability — mirror of the reference's metric set
   * (`WalConsumer.java:49-54, 78-98`): `wal_state`, `wal_num_records` (per
   * batch, replacing the 60 s cached COUNT gauge), `wal_not_empty_seconds`
-  * (lag-age proxy), `wal_num_synchronized` meter. Fed by a
-  * StreamingQueryListener instead of per-record RDBMS queries.
+  * (lag-age proxy), `wal_num_synchronized` meter. The record counts come
+  * from the apply loop ([[Streams.foreachBatchSync]]'s `onApplied`:
+  * the records of the batch's successful attempt, so a retried batch
+  * counts once); a StreamingQueryListener turns them into the per-batch
+  * gauges instead of per-record RDBMS queries.
   *
   * Also the reporter — the reference's JmxReporter analog
   * (`WalConsumer.java:106-114`, which registers every gauge/meter with a
@@ -84,10 +87,23 @@ final class WalMetrics(emit: Map[String, Long] => Unit)
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
     if (mine(e.id)) state.set(WalState.NONE)
 
-  /** Last `observe("wal", …)` metric row seen in a progress event —
-    * proves the observed-metrics path end-to-end (the exportable,
-    * listener-visible form of the gauges; ObservabilitySpec asserts it). */
-  val lastObserved = new AtomicReference[Map[String, Long]](Map.empty)
+  /** Records of each applied batch, by batchId, until its progress is
+    * absorbed. */
+  private val appliedRecords = new java.util.concurrent.ConcurrentSkipListMap[Long, Long]()
+
+  /** The apply loop's per-batch counts ([[Streams.foreachBatchSync]]'s
+    * `onApplied`), from the batch's successful attempt. `records` counts
+    * the batch the consumer applies — after the entity-type filter, so a
+    * per-type consumer over a multiplexed WAL counts only its own slice,
+    * the reference's per-consumer wal_num_synchronized
+    * (`WalConsumer.java:49-54`: metrics are per consumer instance, and
+    * each instance reads only its class's records). The batch's progress
+    * event, which is posted after this call, folds `records` into the
+    * gauges ([[absorb]]). */
+  private[streaming] def applied(batchId: Long, records: Long, ignored: Long): Unit = {
+    numIgnoredAlreadyDone.addAndGet(ignored)
+    appliedRecords.put(batchId, records)
+  }
 
   /** Absorb one progress report exactly once (by batchId), then emit the
     * updated gauges. Synchronized: the pipeline's replay after start and
@@ -96,22 +112,12 @@ final class WalMetrics(emit: Map[String, Long] => Unit)
   private[streaming] def absorb(p: org.apache.spark.sql.streaming.StreamingQueryProgress): Unit = synchronized {
     val prev = lastBatchId.getAndUpdate(b => math.max(b, p.batchId))
     if (p.batchId > prev && state.get() != WalState.INACCESSIBLE_IO_FAILURE) {
-      val obs = p.observedMetrics
-      var observedRows = -1L
-      if (obs != null && obs.containsKey("wal")) {
-        val row = obs.get("wal")
-        lastObserved.set(row.schema.fieldNames.map(f =>
-          f -> row.getAs[Long](f)).toMap)
-        observedRows = row.getAs[Long]("wal_num_records")
-      }
-      // the observed count rides the CONSUMER'S plan (post entity-type
-      // filter), so a per-type consumer over a multiplexed WAL counts only
-      // its own slice — the reference's per-consumer wal_num_synchronized
-      // (`WalConsumer.java:49-54`: metrics are per consumer instance, and
-      // each instance reads only its class's records). numInputRows is the
-      // SOURCE-level count (pre-filter) and is only the fallback for
-      // queries without the observe node.
-      val rows = if (observedRows >= 0) observedRows else p.numInputRows
+      // every batch up to this one whose progress was not absorbed is
+      // folded in here, so no applied record goes uncounted
+      val upTo = appliedRecords.headMap(p.batchId, true)
+      var rows = 0L
+      upTo.values.forEach(n => rows += n)
+      upTo.clear()
       lastBatchRows.set(rows)
       if (rows > 0) {
         numSynchronized.addAndGet(rows)
@@ -166,6 +172,10 @@ object WalMetrics {
   *   close(): stop flag+interrupt   | query.stop()
   *   metric unregister on close     | listener removed on close()
   *
+  * [[metrics]] counts each batch's records in the apply loop
+  * (`foreachBatchSync`'s `onApplied`, the successful attempt only), so a
+  * batch retried through a target outage is counted once.
+  *
   * `entityType`: registration-model selector — the reference constructs
   * each consumer FOR one entity class and it reads only that class's
   * records (`WalConsumer.java:339-352`); pass `Some(type)` to drain only
@@ -190,9 +200,6 @@ final class WalPipeline(
   def start(): StreamingQuery = synchronized {
     require(query == null, "already started")
     records.sparkSession.streams.addListener(metrics)
-    // observe() rides the batch plan (no second pass): the record count
-    // lands in every StreamingQueryProgress.observedMetrics, the
-    // listener-visible/exportable twin of the WalMetrics gauges.
     // A start() that fails must not leak its listeners: the reference's
     // HA story is N competing consumers where the losers fail the lock
     // race gracefully (`WalConsumer.java:185-193,219-228`); here the
@@ -201,14 +208,11 @@ final class WalPipeline(
     // as it found it (RecoverySpec's two-instance scenario).
     val selected = entityType.fold(records)(t => Streams.forEntityType(records, t))
     try {
-      query = selected
-        .observe("wal", org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("wal_num_records"))
-        .writeStream
+      query = selected.writeStream
         .foreachBatch(Streams.foreachBatchSync(sink, retrySleepMs,
           onIoFailure = () => metrics.ioFailure(),
           onRecovered = () => metrics.recovered(),
-          onIgnored = n => metrics.numIgnoredAlreadyDone.addAndGet(n)))
+          onApplied = metrics.applied))
         .option("checkpointLocation", checkpointDir)
         .trigger(Trigger.ProcessingTime(pollMillis))
         .start()

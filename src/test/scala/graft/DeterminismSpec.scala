@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.SparkTestBase
 
 /** The repo's core scale-correctness claim, asserted directly: query
@@ -306,9 +309,42 @@ class DeterminismSpec extends SparkTestBase {
     }
   }
 
+  /** Per stream-gate query: the shuffle widths its state operators
+    * reported. The listener bus is async, so [[settled]] first waits for
+    * every started gate query's terminated event (it follows the
+    * query's last progress). */
+  private final class GateWidths extends StreamingQueryListener {
+    private val running = TrieMap.empty[java.util.UUID, String]
+    private val widths = TrieMap.empty[String, Set[Long]]
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      if (e.name != null && e.name.contains("_gate_")) running.put(e.id, e.name)
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      e.progress.stateOperators.foreach { op =>
+        if (running.contains(e.progress.id))
+          widths.updateWith(e.progress.name)(w => Some(w.getOrElse(Set.empty) + op.numShufflePartitions))
+      }
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      running.remove(e.id)
+    /** The state widths of the gate queries run since the last call. */
+    def settled(): Map[String, Set[Long]] = {
+      val deadline = System.currentTimeMillis() + 30000
+      while (running.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(running.isEmpty, s"gate queries not terminated: ${running.values}")
+      val out = widths.toMap
+      widths.clear()
+      out
+    }
+  }
+
   test("results are invariant to spark.sql.shuffle.partitions (1, 3, 17)") {
     val s = spark
     val original = s.conf.get("spark.sql.shuffle.partitions")
+    // the stream gates cap their shuffle width; the sweep lifts the cap so
+    // every leg runs at the width it sets, and each stateful gate's state
+    // operators must report exactly that width
+    val gates = new GateWidths
+    s.streams.addListener(gates)
+    val statefulAt17 = scala.collection.mutable.Set.empty[String]
     try {
       sample.foreach { name =>
         val fn = SparkEntry.queries(name)
@@ -318,7 +354,12 @@ class DeterminismSpec extends SparkTestBase {
           // 2 and 3 and trivially mask the property under test — each
           // run must rebuild its stages under its own partitioning
           graft.ops.Stages.clear()
-          p -> fn(s, sf0001).collect().map(_.toString).toSeq
+          val rows = graft.streaming.StreamGate.uncapped(fn(s, sf0001).collect().map(_.toString).toSeq)
+          gates.settled().foreach { case (q, w) =>
+            assert(w == Set(p.toLong), s"$name: gate query $q ran its state at widths $w, not $p")
+            if (p == "17") statefulAt17 += name
+          }
+          p -> rows
         }
         val (refP, ref) = runs.head
         runs.tail.foreach { case (p, got) =>
@@ -331,6 +372,10 @@ class DeterminismSpec extends SparkTestBase {
               s"(rows ${ref.size} vs ${got.size}; first diff: $firstDiff)")
         }
       }
-    } finally s.conf.set("spark.sql.shuffle.partitions", original)
+      assert(statefulAt17.nonEmpty, "no stateful stream gate ran in the 17-wide leg")
+    } finally {
+      s.streams.removeListener(gates)
+      s.conf.set("spark.sql.shuffle.partitions", original)
+    }
   }
 }

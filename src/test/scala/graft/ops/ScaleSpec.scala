@@ -209,9 +209,7 @@ class ScaleSpec extends SparkTestBase {
         case 1 => k === -1L      // never hot
         case _ => k.isNotNull    // everything non-null hot
       }
-      assert(norm(Skew.saltedEquiJoinHot(
-        left, col("jk"), hotOf(col("jk")),
-        right, col("rk"), hotOf(col("rk")),
+      assert(norm(Skew.saltedEquiJoinHot(left, col("jk"), right, col("rk"), hotOf,
         saltFrom = col("id"), buckets = buckets)) == plain,
         s"hot-scoped salted != plain at seed $seed buckets $buckets")
     }

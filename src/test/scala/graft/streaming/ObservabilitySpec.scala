@@ -9,9 +9,9 @@ import org.apache.spark.sql.execution.QueryExecution
 import graft.SparkTestBase
 import graft.sources.Sources
 
-/** The `observe()` metrics path (SURVEY.md §3 E3): per-action metric rows
-  * without a second pass over the data — the batch analog of the
-  * reference's gauges (`WalConsumer.java:78-98`). */
+/** The WAL meters (SURVEY.md §3 E3) — the reference's gauges
+  * (`WalConsumer.java:78-98`) — and Spark's `observe()` per-action metric
+  * rows, which count without a second pass over the data. */
 class ObservabilitySpec extends SparkTestBase {
   test("observe() surfaces wal_num_records and value sum in one pass") {
     val s = spark
@@ -64,12 +64,6 @@ class ObservabilitySpec extends SparkTestBase {
       assert(p.metrics.numIgnoredAlreadyDone.get() == 2L,
         s"expected 2 ignored replays, got ${p.metrics.numIgnoredAlreadyDone.get()}")
       assert(p.metrics.numSynchronized.get() > 0L)
-      // observe() metrics must land in StreamingQueryProgress (async bus)
-      val deadline = System.currentTimeMillis() + 10000
-      while (p.metrics.lastObserved.get().isEmpty &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
-      assert(p.metrics.lastObserved.get().get("wal_num_records").exists(_ > 0L),
-        s"observed metrics missing: ${p.metrics.lastObserved.get()}")
       // the scrape point exposes the full reference gauge set
       val g = p.metrics.gauges
       assert(g("wal_num_ignored_already_done") == 2L)
@@ -93,6 +87,10 @@ class ObservabilitySpec extends SparkTestBase {
         s"not a per-batch series: $series")
       assert(series.last("wal_num_synchronized") == 5L, series)
       assert(series.last("wal_num_ignored_already_done") == 2L, series)
+      // the observed record meters count each of the five delivered records
+      // exactly once (counted in the apply pass, not by a re-run plan node)
+      assert(series.map(_("wal_num_records")).sum == 5L, series)
+      assert(p.metrics.gauges("wal_num_synchronized") == 5L, p.metrics.gauges)
     } finally p.close()
   }
 

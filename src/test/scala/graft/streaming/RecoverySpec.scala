@@ -412,7 +412,8 @@ class RecoverySpec extends SparkTestBase {
     // target accepts the write, the successful attempt must count as
     // already applied exactly the records those commits (and the head
     // batch) cover: per key, the batch records at or below the stored
-    // last_id.
+    // last_id. The record meters count the batch once, not once per
+    // attempt.
     val s = spark
     import s.implicits._
     val (tmp, url) = JdbcTestKit.freshDerby("graft-jdbc-multipart")
@@ -453,6 +454,11 @@ class RecoverySpec extends SparkTestBase {
       p.start()
       p.processAllAvailable()
       assert(JdbcTestKit.rows(url, "multipart_target") == JdbcTestKit.fold(head))
+      // the listener bus is async: wait for the head batch's progress
+      val headDeadline = System.currentTimeMillis() + 10000
+      while (p.metrics.numSynchronized.get() < head.size &&
+        System.currentTimeMillis() < headDeadline) Thread.sleep(20)
+      assert(p.metrics.numSynchronized.get() == head.size.toLong, p.metrics.gauges)
 
       batch.toDF().coalesce(1).write.mode("append").parquet(walDir)
       val deadline = System.currentTimeMillis() + 60000
@@ -468,8 +474,14 @@ class RecoverySpec extends SparkTestBase {
 
       JdbcTestKit.exec(url, "ALTER TABLE multipart_target DROP CONSTRAINT no_poison")
       p.processAllAvailable()
+      val syncDeadline = System.currentTimeMillis() + 10000
+      while (p.metrics.numSynchronized.get() < head.size + batch.size &&
+        System.currentTimeMillis() < syncDeadline) Thread.sleep(20)
       val g = p.metrics.gauges
       assert(g("wal_num_ignored_already_done") == applied, g)
+      assert(g("wal_num_synchronized") - head.size == batch.size.toLong,
+        s"the retried batch must count its ${batch.size} records once: $g")
+      assert(g("wal_num_records") == batch.size.toLong, g)
       assert(JdbcTestKit.rows(url, "multipart_target") == JdbcTestKit.fold(head ++ batch))
       val live = JdbcTestKit.rows(url, "multipart_target").collect {
         case (k, (id, 0, pl)) if k <= topKey => k -> ((id, pl)) }

@@ -797,4 +797,30 @@ class StreamGateSpec extends SparkTestBase {
       assert(r.getLong(5) == 1L, s"bloom false-positive surplus out of bound: $r")
     }
   }
+
+  test("the gate runner stops its query and drops its sink view, on success and on failure") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    def active() = s.streams.active.map(_.id).toSet
+    def gateViews() = s.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.contains("_gate_")).map(_.name).toSeq
+    val before = active()
+    assert(StreamGate.s15AnomalyStream(s, sf0001).collect().nonEmpty)
+    // a stream whose every row fails, through the same runner
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    ms.addData(1L, 2L, 3L)
+    val failing = ms.toDS().map { x =>
+      if (x > 0L) throw new IllegalStateException("deliberate gate failure")
+      x
+    }
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamGate.run(s, "failing", failing)
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).take(16).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == "deliberate gate failure"), s"original failure lost: $e")
+    assert((active() -- before).isEmpty, s"the runner left queries active: ${s.streams.active.toSeq}")
+    assert(gateViews().isEmpty, s"the runner left sink views: ${gateViews()}")
+  }
 }

@@ -491,10 +491,10 @@ object Analytics {
     * estimate is exact and trivially in bound; at 100 TB the same plan
     * answers from fixed-size sketches with the published theta error. */
   /** The theta warehouse build shared by the exact gate and the
-    * estimation-mode consumer: one sketch per week of distinct user
+    * estimation-mode test oracle (`Oracles.q28cOverlapBounds`): one sketch per week of distinct user
     * hashes, merged through the shuffle, collected driver-side (bounded
     * by construction: #weeks × ≤ 2^lgK hashes). */
-  private def q28cWeeklySketches(spark: SparkSession, dir: String,
+  private[graft] def q28cWeeklySketches(spark: SparkSession, dir: String,
       lgK: Int): Map[java.time.LocalDate, Array[Byte]] = {
     import graft.functions.ThetaSketchAgg
     events(spark, dir).select(
@@ -542,52 +542,6 @@ object Analytics {
         coalesce(col("n_both"), lit(0L)).as("n_both"),
         (abs(col("approx").cast("double") - coalesce(col("n_both"), lit(0L)).cast("double"))
           <= greatest(lit(3 * 0.0163) * coalesce(col("n_both"), lit(0L)).cast("double"), lit(1.0)))
-          .cast("long").as("in_bound"))
-      .orderBy("wk")
-  }
-
-  /** q28c's ESTIMATION-MODE consumer — the form that stays usable past
-    * 2^lgK distinct users/week, where the registered gate deliberately
-    * fails loudly: per-week sketches at the given lgK, adjacent weeks
-    * intersected driver-side through the library's own interval
-    * ([[graft.functions.ThetaSketchAgg.intersectBounds]]), whose bounds
-    * derive from the intersection result's effective theta and retained
-    * count — i.e. they carry the union-size-dependent error the theta
-    * intersection analysis prescribes, which a flat rse-of-overlap
-    * heuristic gets wrong. Emitted rows: (wk, wk_next, n_both exact,
-    * est_mode flag, in_bound flag = exact overlap inside
-    * [lower, upper] at `numStdDev`). NOT registered: a probabilistic
-    * interval can't be pinned to 1 by a deterministic oracle across
-    * corpus regenerations — OpsSpec drives it at small lgK against the
-    * exact twin with a union-bound miss allowance instead. At 100 TB
-    * this is the shape that answers overlap queries from the fixed-size
-    * sketch warehouse. */
-  def q28cOverlapBounds(spark: SparkSession, dir: String,
-      lgK: Int, numStdDev: Int = 3): DataFrame = {
-    import graft.functions.ThetaSketchAgg
-    val u = events(spark, dir).select(
-      date_trunc("week", col("ts")).cast("date").as("wkd"), col("user_id"))
-    val sketches = q28cWeeklySketches(spark, dir, lgK)
-    val estRows = sketches.toSeq.flatMap { case (w, sk) =>
-      sketches.get(w.plusDays(7)).map { nxt =>
-        val (lo, est, hi) = ThetaSketchAgg.intersectBounds(sk, nxt, numStdDev, lgK)
-        val estMode = if (!ThetaSketchAgg.isExact(sk) || !ThetaSketchAgg.isExact(nxt)) 1L else 0L
-        (w.toString, w.plusDays(7).toString, lo, est, hi, estMode)
-      }
-    }
-    val est = spark.createDataFrame(estRows)
-      .toDF("wk", "wk_next", "lo", "approx", "hi", "est_mode")
-    val d = u.distinct()
-    val exact = d.as("ea").join(d.as("eb"),
-        col("eb.user_id") === col("ea.user_id") &&
-          col("eb.wkd") === date_add(col("ea.wkd"), 7))
-      .groupBy(col("ea.wkd").cast("string").as("wk"))
-      .agg(count(lit(1)).as("n_both"))
-    est.join(exact, Seq("wk"), "left")
-      .select(col("wk"), col("wk_next"),
-        coalesce(col("n_both"), lit(0L)).as("n_both"), col("est_mode"),
-        (col("lo") <= coalesce(col("n_both"), lit(0L)).cast("double") &&
-          coalesce(col("n_both"), lit(0L)).cast("double") <= col("hi"))
           .cast("long").as("in_bound"))
       .orderBy("wk")
   }

@@ -423,15 +423,6 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** The pre-r13 stub pipeline (byte statistics over the synthetic media
-    * table) — kept as the codec-free decode-batch exemplar the scaladoc
-    * points multimodal stubs at; the registered x15 key now runs the
-    * real-decode path above. */
-  def x15ByteStats(spark: SparkSession, dir: String): DataFrame =
-    decodeFeatures(mediaTable(spark, dir))
-      .select(col("doc_id"), col("n_bytes"), col("first_byte"), col("byte_sum"), col("width"))
-      .orderBy("doc_id")
-
   /** x15b transform geometry: the fixed target raster every image
     * resizes to, and the top-left crop bound. */
   private val rsW = 4

@@ -612,35 +612,10 @@ object PipelineOps {
     * engines pick the FIRST position of the minimum), fingerprints hot
     * beyond df 50 dropped before pairing, pairs reported at ≥ 3 shared
     * fingerprints. */
-  private val winShingle = 3
-  private val winWindow = 4
+  private[graft] val winShingle = 3
+  private[graft] val winWindow = 4
   private val winDfCap = 50L
   private val winMinShared = 3L
-
-  private val emptyStrArr = array().cast("array<string>")
-
-  /** Rolling `winShingle`-token md5 shingles of column `w` (NOT distinct —
-    * winnowing selects by position). Lambda reference formulation — the
-    * registered x26 runs the native `WinnowFingerprints` expression;
-    * GraftExtensionsSpec pins the two equal on random token streams and
-    * the real corpus. */
-  private[graft] def winnowShingles: Column =
-    when(size(col("w")) >= winShingle, transform(
-        sequence(lit(1), size(col("w")) - (winShingle - 1)),
-        i => md5(array_join(slice(col("w"), i, lit(winShingle)), " "))))
-      .otherwise(emptyStrArr)
-
-  /** Winnowing selection over column `sh`: the leftmost minimum of every
-    * `winWindow`-wide window, distinct — split out so the coverage
-    * guarantee is property-testable on arbitrary token streams. */
-  private[graft] def winnowSelection: Column = {
-    val win = (i: Column) => slice(col("sh"), i, lit(winWindow))
-    when(size(col("sh")) >= winWindow, array_distinct(transform(
-        sequence(lit(1), size(col("sh")) - (winWindow - 1)),
-        i => element_at(col("sh"),
-          (i - 1 + array_position(win(i), array_min(win(i)))).cast("int")))))
-      .otherwise(emptyStrArr)
-  }
 
   /** x26: winnowing document fingerprints (MOSS-style) + overlap pair
     * mining. Each document keeps only the per-window minimum shingle
@@ -743,14 +718,6 @@ object PipelineOps {
     * an empty set. */
   private[graft] def gramHashes(n: Int): Column =
     graft.functions.GramFunctions.gramMd5Hexes(col("w"), n)
-
-  /** HOF reference formulation of [[gramHashes]] — pinned equal to the
-    * native expression in GraftExtensionsSpec. */
-  private[graft] def gramHashesLambda(n: Int): Column =
-    when(size(col("w")) >= n, array_distinct(transform(
-        sequence(lit(1), size(col("w")) - (n - 1)),
-        i => md5(array_join(slice(col("w"), i, lit(n)), " ")))))
-      .otherwise(array().cast("array<string>"))
 
   def x29Decontam(spark: SparkSession, dir: String): DataFrame = {
     val g = documents(spark, dir)

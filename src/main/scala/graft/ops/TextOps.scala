@@ -66,7 +66,7 @@ object TextOps {
     * derivation; the gate proves equality); hash collisions (≈9% chance
     * of one colliding gram pair at 27k distinct shingles) affect Spark
     * and the oracle identically. */
-  private def shingleHash64Rows(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def shingleHash64Rows(spark: SparkSession, dir: String): DataFrame =
     shingleRows(spark, dir).select(col("doc_id"),
       md5Long(col("gram"), 0).as("h0"), md5Long(col("gram"), 1).as("h1"))
 
@@ -196,8 +196,8 @@ object TextOps {
     * 8·inter ≥ 3·(n1+n2), is shared verbatim with the oracle — the
     * rounded `scaled4 ≥ 6000` form x2 uses would admit jaccard ≥ 0.59995,
     * which the prefix-filter lemma does not cover. */
-  private val x49TauNum = 3L
-  private val x49TauDen = 5L
+  private[graft] val x49TauNum = 3L
+  private[graft] val x49TauDen = 5L
 
   /** x49: EXACT set-similarity self-join (word-3-gram Jaccard ≥ 0.6) via
     * AllPairs/PPJoin prefix filtering — the uncapped companion to
@@ -236,28 +236,6 @@ object TextOps {
     * array intersection, measured 5× slower here. */
   def x49SetsimJoin(spark: SparkSession, dir: String): DataFrame =
     x49FromRanked(Stages.x49Grams(spark, dir))
-
-  /** Brute-force twin of [[x49SetsimJoin]] (tests only, never
-    * registered): the all-shared-gram join with no prefix filter — the
-    * internal losslessness pin (SetsimSpec asserts byte equality on the
-    * driver corpus and on randomized synthetic corpora). */
-  private[graft] def x49Brute(spark: SparkSession, dir: String): DataFrame =
-    x49BruteOn(shingleHash64Rows(spark, dir))
-
-  private[graft] def x49BruteOn(g0: DataFrame): DataFrame = {
-    val g = g0.select(col("doc_id"), col("h0")).distinct().localCheckpoint(true)
-    val sizes = g.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    g.select(col("doc_id").as("d1"), col("h0"))
-      .join(g.select(col("doc_id").as("d2"), col("h0")), Seq("h0"))
-      .filter(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), Seq("d1"))
-      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), Seq("d2"))
-      .filter(col("inter") * (x49TauNum + x49TauDen) >= (col("n1") + col("n2")) * x49TauNum)
-      .select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2"),
-        scaled4(col("inter") / (col("n1") + col("n2") - col("inter"))).as("jac_s4"))
-      .orderBy("d1", "d2")
-  }
 
   /** The ranked gram index build — the stage body behind
     * [[Stages.x49Grams]]: (doc_id, h0, df, rnk, n) with global df (one
@@ -605,9 +583,9 @@ object TextOps {
     * modulus 1e15 — chosen so acc·131 + v stays far below 2^63, because
     * DuckDB ERRORS on BIGINT overflow while Spark (non-ANSI) wraps; the
     * mod after every step keeps both engines on the same exact values. */
-  private val rollBase = 131L
-  private val rollMod = 1000000000000000L
-  private val rollWindow = 8
+  private[graft] val rollBase = 131L
+  private[graft] val rollMod = 1000000000000000L
+  private[graft] val rollWindow = 8
 
   /** x11b: rolling-hash fingerprinting — the Karp-Rabin/winnowing
     * primitive. Token values are the first 8 md5 hex chars (the shared
@@ -622,7 +600,7 @@ object TextOps {
     // the fold and the per-window hashes run native
     // (graft.functions.RollingHash — the lambda aggregate/slice chain was
     // CodegenFallback and O(n·window) interpreted dispatches per doc;
-    // lambda twins stay below for the equivalence pin)
+    // its lambda twin is a test oracle, for the equivalence pin)
     documents(spark, dir)
       .select(col("doc_id"), toks(col("text")).as("w"))
       .select(col("doc_id"), vals.as("vals"))
@@ -635,19 +613,6 @@ object TextOps {
         size(col("wh")).cast(LongType).as("n_windows"),
         size(array_distinct(col("wh"))).cast(LongType).as("n_distinct_windows"))
       .orderBy("doc_id")
-  }
-
-  /** Lambda reference formulation of x11b's rolling hashes (fp_roll, wh)
-    * over a `vals` column — kept for GraftExtensionsSpec's native/lambda
-    * equivalence pin. */
-  private[graft] def rollingLambda: (Column, Column) = {
-    val step = (acc: Column, v: Column) => (acc * rollBase + v) % rollMod
-    val winHashes = transform(
-      sequence(lit(1), size(col("vals")) - (rollWindow - 1)),
-      i => aggregate(slice(col("vals"), i, lit(rollWindow)), lit(0L), step))
-    (aggregate(col("vals"), lit(0L), step),
-      when(size(col("vals")) >= rollWindow, winHashes)
-        .otherwise(array().cast("array<bigint>")))
   }
 
   /** x4: per-document text stats. */

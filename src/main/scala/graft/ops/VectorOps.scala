@@ -34,7 +34,7 @@ object VectorOps {
 
   /** embeddings with the L2 norm precomputed once per row — norms must
     * never be recomputed per candidate pair. */
-  private def withNorm(df: DataFrame): DataFrame =
+  private[graft] def withNorm(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding").as("v"),
       sqrt(normSqArr(col("embedding"))).as("nrm"))
 
@@ -540,17 +540,6 @@ object VectorOps {
       .join(e.select(col("vec_id").as("v2"), col("v").as("vb"), col("nrm").as("nb")), "v2")
       .select(col("v1"), col("v2"),
         scaled4(dotArr(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos_s4"))
-      .filter(col("cos_s4") >= 5000)
-      .orderBy("v1", "v2")
-  }
-
-  /** All-pairs exact form of x14 — the recall/ground-truth oracle for
-    * tests at small N. Never registered as a query (O(n²) pairs). */
-  private[graft] def x14AllPairs(spark: SparkSession, dir: String): DataFrame = {
-    val e = withNorm(embeddings(spark, dir))
-    e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("v1"), col("b.vec_id").as("v2"),
-        scaled4(dotArr(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("cos_s4"))
       .filter(col("cos_s4") >= 5000)
       .orderBy("v1", "v2")
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
 /** Consumer states — mirror of the reference's WalState enum
@@ -134,6 +134,22 @@ final class WalMetrics(emit: Map[String, Long] => Unit)
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
     if (mine(e.progress.id)) absorb(e.progress)
 
+  /** An empty poll — the reference sets EMPTY on every one
+    * (`WalConsumer.java:150-154`). Spark reports an idle trigger only
+    * here, never as a progress event, and at most once per
+    * `spark.sql.streaming.noDataProgressEventInterval` (10 s by default),
+    * so without this a drained WAL would read NOT_EMPTY and age forever.
+    * A target outage keeps its state. */
+  override def onQueryIdle(e: StreamingQueryListener.QueryIdleEvent): Unit =
+    if (mine(e.id)) synchronized {
+      if (state.get() != WalState.INACCESSIBLE_IO_FAILURE) {
+        lastBatchRows.set(0)
+        notEmptySinceMs = -1L
+        state.set(WalState.EMPTY)
+        emit(gauges)
+      }
+    }
+
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
     if (mine(e.id)) {
       // IO-caused death → the reference's INACCESSIBLE_IO_FAILURE
@@ -166,7 +182,7 @@ object WalMetrics {
   *   reference                      | here
   *   -------------------------------|----------------------------------
   *   dedicated consumer thread      | StreamingQuery micro-batch loop
-  *   poll sleep 1000 ms when empty  | Trigger.ProcessingTime(pollMillis)
+  *   poll sleep 1000 ms when empty  | pollingDelay = pollMillis, trigger 0
   *   row-lock serialization         | checkpointed offsets, single writer
   *   delete head + commit           | checkpoint commit after foreachBatch
   *   close(): stop flag+interrupt   | query.stop()
@@ -175,6 +191,22 @@ object WalMetrics {
   * [[metrics]] counts each batch's records in the apply loop
   * (`foreachBatchSync`'s `onApplied`, the successful attempt only), so a
   * batch retried through a target outage is counted once.
+  *
+  * `pollMillis` is the reference's `sleepMillisWhenWalIsEmpty`
+  * (`WalConsumer.java:44`): the sleep after an empty poll only. A batch
+  * that found data is followed at once by the next poll
+  * (`Trigger.ProcessingTime(0)`); Spark's micro-batch loop sleeps its
+  * `spark.sql.streaming.pollingDelay` after a trigger that found none,
+  * after waking `processAllAvailable`'s waiters (so a drain returns right
+  * after its empty poll), and `query.stop()` interrupts that sleep. Spark
+  * reads the delay once, from the starting session's conf, when the
+  * query is constructed, and offers no per-query option; so [[start]]
+  * sets it to `pollMillis` around `writeStream…start()` only, under one
+  * lock shared by every pipeline, and restores the prior value (or unsets
+  * it) in `finally`, also when `start()` throws. The remaining window:
+  * another thread that starts a streaming query on the same session,
+  * not through a WalPipeline, while a pipeline is starting gets
+  * `pollMillis` as its delay.
   *
   * `entityType`: registration-model selector — the reference constructs
   * each consumer FOR one entity class and it reads only that class's
@@ -208,14 +240,14 @@ final class WalPipeline(
     // as it found it (RecoverySpec's two-instance scenario).
     val selected = entityType.fold(records)(t => Streams.forEntityType(records, t))
     try {
-      query = selected.writeStream
+      val writer = selected.writeStream
         .foreachBatch(Streams.foreachBatchSync(sink, retrySleepMs,
           onIoFailure = () => metrics.ioFailure(),
           onRecovered = () => metrics.recovered(),
           onApplied = metrics.applied))
         .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.ProcessingTime(pollMillis))
-        .start()
+        .trigger(Trigger.ProcessingTime(0L))
+      query = WalPipeline.withPollingDelay(records.sparkSession, pollMillis)(writer.start())
     } catch {
       case t: Throwable =>
         records.sparkSession.streams.removeListener(metrics)
@@ -246,4 +278,19 @@ final class WalPipeline(
       query = null
     }
   }
+}
+
+object WalPipeline {
+  private val PollingDelay = "spark.sql.streaming.pollingDelay"
+
+  /** Runs `start` with the session's no-data sleep set to `pollMillis`,
+    * then restores the session conf as it was (see [[WalPipeline]]). */
+  private def withPollingDelay[A](spark: SparkSession, pollMillis: Long)(start: => A): A =
+    synchronized {
+      val conf = spark.conf
+      val prior = conf.getAll.get(PollingDelay)
+      conf.set(PollingDelay, s"${pollMillis}ms")
+      try start
+      finally prior.fold(conf.unset(PollingDelay))(conf.set(PollingDelay, _))
+    }
 }

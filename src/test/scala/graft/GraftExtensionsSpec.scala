@@ -183,7 +183,7 @@ class GraftExtensionsSpec extends SparkTestBase {
 
   test("rolling_hash fold/windows match the lambda formulation on the real corpus") {
     import org.apache.spark.sql.functions._
-    val (lambdaFold, lambdaWh) = graft.ops.TextOps.rollingLambda
+    val (lambdaFold, lambdaWh) = graft.ops.Oracles.rollingLambda
     val docs = graft.model.Tables.documents(spark, sf0001)
       .select(split(col("text"), " ").as("w"))
       .select(transform(col("w"),
@@ -229,13 +229,13 @@ class GraftExtensionsSpec extends SparkTestBase {
         graft.functions.GramFunctions.distinctGrams(col("w"), 3).as("ng"),
         graft.ops.TextOps.shinglesLambda(col("w")).as("lg"),
         graft.functions.GramFunctions.gramMd5Hexes(col("w"), 3).as("nh"),
-        graft.ops.PipelineOps.gramHashesLambda(3).as("lh"),
+        graft.ops.Oracles.gramHashesLambda(3).as("lh"),
         graft.functions.WinnowFunctions.winnowFingerprints(col("w"), 3, 4).as("nw"))
       .select(col("ng"), col("lg"), col("nh"), col("lh"), col("nw"),
-        graft.ops.PipelineOps.winnowShingles.as("sh"))
+        graft.ops.Oracles.winnowShingles.as("sh"))
       .withColumn("w", lit(null)) // winnowSelection reads col("sh") only
       .select(col("ng"), col("lg"), col("nh"), col("lh"), col("nw"),
-        graft.ops.PipelineOps.winnowSelection.as("lw"))
+        graft.ops.Oracles.winnowSelection.as("lw"))
       .collect()(0)
     assert(df.getSeq[String](0) == df.getSeq[String](1), "distinct_grams null-skip")
     assert(df.getSeq[String](2) == df.getSeq[String](3), "gram_md5_hexes null-skip")
@@ -285,7 +285,7 @@ class GraftExtensionsSpec extends SparkTestBase {
         graft.functions.GramFunctions.distinctGrams(col("w"), 3).as("ng"),
         graft.ops.TextOps.shinglesLambda(col("w")).as("lg"),
         graft.functions.GramFunctions.gramMd5Hexes(col("w"), 3).as("nh"),
-        graft.ops.PipelineOps.gramHashesLambda(3).as("lh"))
+        graft.ops.Oracles.gramHashesLambda(3).as("lh"))
       .filter(not(col("ng") <=> col("lg")) || not(col("nh") <=> col("lh"))).count()
     assert(bad == 0L, s"$bad documents diverge from the lambda gram formulations")
     val badShort = toksOf.filter(size(col("w")) < 3)
@@ -323,8 +323,8 @@ class GraftExtensionsSpec extends SparkTestBase {
       .select(split(col("text"), " ").as("w"))
       .select(col("w"),
         graft.functions.WinnowFunctions.winnowFingerprints(col("w"), 3, 4).as("native"))
-      .select(col("native"), graft.ops.PipelineOps.winnowShingles.as("sh"))
-      .select(col("native"), graft.ops.PipelineOps.winnowSelection.as("lambda"))
+      .select(col("native"), graft.ops.Oracles.winnowShingles.as("sh"))
+      .select(col("native"), graft.ops.Oracles.winnowSelection.as("lambda"))
     val bad = docs.filter(not(col("native") <=> col("lambda"))).count()
     assert(bad == 0L, s"$bad documents diverge from the lambda winnowing")
     // random token streams incl. repeats and short arrays (edge geometry)
@@ -335,8 +335,8 @@ class GraftExtensionsSpec extends SparkTestBase {
     }.toDF("w")
       .select(col("w"),
         graft.functions.WinnowFunctions.winnowFingerprints(col("w"), 3, 4).as("native"))
-      .select(col("native"), graft.ops.PipelineOps.winnowShingles.as("sh"))
-      .select(col("native"), graft.ops.PipelineOps.winnowSelection.as("lambda"))
+      .select(col("native"), graft.ops.Oracles.winnowShingles.as("sh"))
+      .select(col("native"), graft.ops.Oracles.winnowSelection.as("lambda"))
     assert(rand.filter(not(col("native") <=> col("lambda"))).count() == 0L)
     // interpreted path parity + SQL registration
     spark.conf.set("spark.sql.codegen.wholeStage", "false")

@@ -712,7 +712,7 @@ class OpsSpec extends SparkTestBase {
       assert(r.getLong(4) == 1L, s"doc $d failed to decode")
     }
     // byte-stats stub exemplar still holds its invariants
-    val stub = Multimodal.x15ByteStats(spark, sf0001).limit(50).collect()
+    val stub = Oracles.x15ByteStats(spark, sf0001).limit(50).collect()
     stub.foreach { r =>
       assert(r.getLong(1) > 0) // n_bytes
       assert(r.getLong(2) >= 0 && r.getLong(2) < 256) // first_byte
@@ -795,7 +795,7 @@ class OpsSpec extends SparkTestBase {
     // has none, so the blocked result there is correctly empty).
     val blocked = VectorOps.x14CosineNeardup(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val all = VectorOps.x14AllPairs(spark, sf001).collect()
+    val all = Oracles.x14AllPairs(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(blocked.nonEmpty, "banding should surface at least one near-dup pair")
     blocked.foreach { case (pair, cos) =>
@@ -806,7 +806,7 @@ class OpsSpec extends SparkTestBase {
   test("vector scale knobs: non-default k/bits stay sound") {
     // x14 with more bits: still a subset of all-pairs with identical scores
     // (more bits only SHRINKS candidate buckets, never corrupts a verify)
-    val all = VectorOps.x14AllPairs(spark, sf001).collect()
+    val all = Oracles.x14AllPairs(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     VectorOps.x14CosineNeardupB(spark, sf001, bits = 7).collect().foreach { r =>
       val pair = (r.getLong(0), r.getLong(1))
@@ -1661,7 +1661,7 @@ class OpsSpec extends SparkTestBase {
     // rounds, so the leg allows at most ONE miss across the adjacent
     // weeks (P[>=2 misses] ~ (0.003·n)²/2 — negligible) instead of
     // pinning every flag.
-    val rows = graft.ops.Analytics.q28cOverlapBounds(spark, sf001, lgK = 4).collect()
+    val rows = graft.ops.Oracles.q28cOverlapBounds(spark, sf001, lgK = 4).collect()
     assert(rows.nonEmpty, "no adjacent-week pairs")
     assert(rows.forall(_.getLong(3) == 1L),
       "every weekly sketch must actually be in estimation mode at lgK=4 — " +

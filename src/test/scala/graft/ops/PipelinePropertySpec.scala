@@ -162,8 +162,8 @@ class PipelinePropertySpec extends SparkTestBase {
     for (seed <- 1L to 8L) {
       val docs = sample(docGen, seed).zipWithIndex.map { case (w, i) => (i.toLong, w) }
       val got = docs.toDF("doc_id", "w")
-        .select(col("doc_id"), PipelineOps.winnowShingles.as("sh"))
-        .select(col("doc_id"), PipelineOps.winnowSelection.as("fps"))
+        .select(col("doc_id"), Oracles.winnowShingles.as("sh"))
+        .select(col("doc_id"), Oracles.winnowSelection.as("fps"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toVector).toMap
       docs.foreach { case (id, w) =>
         val sh = if (w.size >= 3) w.sliding(3).map(g => md5hex(g.mkString(" "))).toVector

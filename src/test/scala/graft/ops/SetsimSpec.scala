@@ -21,7 +21,7 @@ class SetsimSpec extends SparkTestBase {
 
   test("x49: prefix-filtered equals brute force on the driver corpus") {
     val filtered = TextOps.x49SetsimJoin(spark, sf001).collect()
-    val brute = TextOps.x49Brute(spark, sf001).collect()
+    val brute = Oracles.x49Brute(spark, sf001).collect()
     assert(filtered.nonEmpty, "driver corpus has near-dup structure; empty means broken")
     assert(filtered.toSeq == brute.toSeq)
   }
@@ -36,7 +36,7 @@ class SetsimSpec extends SparkTestBase {
     val got = pairs(TextOps.x49On(g))
     assert(got.keySet == Set((1L, 2L)), s"got $got")
     assert(got((1L, 2L)) == ((3L, 3L, 5L, 6000L)))
-    assert(pairs(TextOps.x49BruteOn(g)) == got)
+    assert(pairs(Oracles.x49BruteOn(g)) == got)
   }
 
   test("x49: length filter alone never excludes a qualifying pair") {
@@ -47,7 +47,7 @@ class SetsimSpec extends SparkTestBase {
       1L -> Seq(10L, 11L, 12L),
       2L -> Seq(10L, 11L, 12L, 13L, 14L, 15L)))
     assert(TextOps.x49On(g).collect().isEmpty)
-    assert(TextOps.x49BruteOn(g).collect().isEmpty)
+    assert(Oracles.x49BruteOn(g).collect().isEmpty)
   }
 
   test("x49: identical and contained sets") {
@@ -59,7 +59,7 @@ class SetsimSpec extends SparkTestBase {
     assert(got.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L)), s"got $got")
     assert(got((1L, 2L)) == ((4L, 4L, 4L, 10000L)))
     assert(got((1L, 3L)) == ((3L, 4L, 3L, 7500L)))
-    assert(pairs(TextOps.x49BruteOn(g)) == got)
+    assert(pairs(Oracles.x49BruteOn(g)) == got)
   }
 
   test("x49: lossless on randomized synthetic corpora") {
@@ -82,7 +82,7 @@ class SetsimSpec extends SparkTestBase {
       }
       val g = gramFrame(mutated)
       val got = pairs(TextOps.x49On(g))
-      val want = pairs(TextOps.x49BruteOn(g))
+      val want = pairs(Oracles.x49BruteOn(g))
       assert(got == want, s"seed $seed: filtered ${got.keySet} vs brute ${want.keySet}")
       assert(want.nonEmpty, s"seed $seed: corpus must actually contain qualifying pairs")
     }

@@ -94,6 +94,57 @@ class ObservabilitySpec extends SparkTestBase {
     } finally p.close()
   }
 
+  test("an idle WAL reads EMPTY with no lag age, and NOT_EMPTY again after new data") {
+    // The reference sets EMPTY on every empty poll (`WalConsumer.java:150-154`);
+    // Spark reports idle triggers only as QueryIdleEvents, at most once per
+    // noDataProgressEventInterval. The query reads that interval when it
+    // is constructed, so it is lowered around this pipeline's start only.
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import scala.jdk.CollectionConverters._
+    TestSink.reset()
+    val ms = MemoryStream[WalRecord]
+    val tmp = java.nio.file.Files.createTempDirectory("graft-idle-state").toString
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Long]]()
+    val p = new WalPipeline(ms.toDS(), new TestSink, s"$tmp/ckpt",
+      pollMillis = 50L, retrySleepMs = 1L, reporterEmit = g => emitted.add(g))
+    val interval = "spark.sql.streaming.noDataProgressEventInterval"
+    val prior = s.conf.getAll.get(interval)
+    s.conf.set(interval, "200ms")
+    try p.start() finally prior.fold(s.conf.unset(interval))(s.conf.set(interval, _))
+    // index of the first emission after `from` that satisfies `pred`
+    def awaitEmission(from: Int)(pred: Map[String, Long] => Boolean): Int = {
+      val deadline = System.currentTimeMillis() + 10000
+      var at = -1
+      while (at < 0 && System.currentTimeMillis() < deadline) {
+        at = emitted.asScala.toSeq.indexWhere(pred, from + 1)
+        if (at < 0) Thread.sleep(20)
+      }
+      assert(at >= 0, s"no such emission after #$from: ${emitted.asScala.toSeq}")
+      at
+    }
+    def state(g: Map[String, Long]) = WalState(g("wal_state").toInt)
+    try {
+      ms.addData(WalRecord(0, 1, "ADD", "a"), WalRecord(1, 2, "ADD", "b"))
+      p.processAllAvailable()
+      val drained = awaitEmission(-1)(_("wal_num_synchronized") == 2L)
+      assert(state(emitted.asScala.toSeq(drained)) == WalState.NOT_EMPTY)
+      val idle = awaitEmission(drained)(g => state(g) == WalState.EMPTY)
+      val g = emitted.asScala.toSeq(idle)
+      assert(g("wal_num_records") == 0L && g("wal_not_empty_seconds") == 0L, g)
+      // idle past a whole second: the lag age must not grow on an empty WAL
+      Thread.sleep(1200)
+      assert(p.metrics.state.get() == WalState.EMPTY, p.metrics.gauges)
+      assert(p.metrics.notEmptySeconds == 0L, p.metrics.gauges)
+      ms.addData(WalRecord(2, 1, "UPDATE", "c"))
+      p.processAllAvailable()
+      val again = awaitEmission(idle)(_("wal_num_synchronized") == 3L)
+      assert(state(emitted.asScala.toSeq(again)) == WalState.NOT_EMPTY)
+    } finally p.close()
+  }
+
   test("jdbc replay over a fresh checkpoint: the already-done meter counts exactly the replayed records") {
     // A second consumer with a FRESH checkpoint re-reads the whole WAL
     // into a target the first consumer already drained: every old record

@@ -98,11 +98,14 @@ class RecoverySpec extends SparkTestBase {
       val loser = new WalPipeline(Sources.walFileStream(s, walDir), new TestSink,
         s"$tmp/ckpt", pollMillis = 10L, retrySleepMs = 1L)
       val nBefore = s.streams.listListeners().length
+      val delayBefore = s.conf.getAll.get("spark.sql.streaming.pollingDelay")
       intercept[IllegalStateException] { loser.start() }
-      // clean loss: no listener leak, the winner's query is untouched
-      // and keeps consuming
+      // clean loss: no listener leak, no session conf change, the
+      // winner's query is untouched and keeps consuming
       assert(s.streams.listListeners().length == nBefore,
         "refused start must unregister its listeners")
+      assert(s.conf.getAll.get("spark.sql.streaming.pollingDelay") == delayBefore,
+        "refused start must restore the session's polling delay")
       Seq(WalRecord(2, 1, "UPDATE", "a2"))
         .toDF().write.mode("append").parquet(walDir)
       p1.processAllAvailable()

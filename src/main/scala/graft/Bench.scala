@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import graft.util.Json
 
@@ -15,13 +17,17 @@ import graft.util.Json
   *
   * A short warmup job runs first (untimed) so JVM/classloader/codegen
   * startup cost doesn't land on whichever query runs first; then every
-  * shared [[graft.ops.Stages]] build is pre-materialized as its own
-  * timed "stage:<name>" line (so no consumer line silently absorbs a
-  * shared build — the r10 x27 4.3× mystery); queries then execute in
-  * sorted-key order for run-to-run comparability. A failed query is
-  * reported with the sentinel time -1.0 (never silently folded into the
-  * total). The full JSON line is also written to `bench_results.json`
-  * in the CWD, immune to the driver's bounded stdout tail capture. */
+  * artifact of the [[graft.ops.Stages.registry]] is pre-materialized as
+  * its own timed `stage:<name>` line, in declaration order (so no
+  * consumer line silently absorbs a shared build — the r10 x27 4.3×
+  * mystery — and no stage line absorbs another's: the registry declares
+  * each artifact after those its build reads); queries then execute in
+  * sorted-key order for run-to-run comparability. Every timed line is
+  * one [[graft.util.BenchDiag.attempt]]: a NonFatal failure is reported
+  * with the sentinel time -1.0 (never silently folded into the total), a
+  * fatal one ends the run. The full JSON line is also written to
+  * `bench_results.json` in the CWD, immune to the driver's bounded
+  * stdout tail capture. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -46,69 +52,8 @@ object Bench {
       () => graft.ops.Relational.q3JoinBcast(spark, sfDir)
     ).foreach { mk =>
       try mk().write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     }
-    // Shared Stages builds are pre-materialized BEFORE the per-query
-    // loop, each as its own TIMED line ("stage:<name>", folded into the
-    // total — they are real work). Without this, whichever consumer ran
-    // first paid the whole shared build on its own line: the r10 driver
-    // bench showed x27_semantic_dedup at 4.30× its r9 time with zero
-    // code change because the x16/x27-shared k-means stage landed there
-    // — plausible, but unattributable from the artifact. Named stage
-    // lines make that cost visible and keep every consumer line a
-    // consumer-only number. Build failure → sentinel -1.0, and the
-    // consumers then rebuild lazily as before (their lines absorb it —
-    // still attributed, via the -1.0 marker).
-    val stageBuilds: Seq[(String, () => Unit)] = Seq(
-      "stage:x16_centroids" -> (() => { graft.ops.Stages.x16Centroids(spark, sfDir); () }),
-      "stage:pq_books" -> (() => { graft.ops.Stages.pqBooks(spark, sfDir); () }),
-      "stage:x57_index" -> (() => { graft.ops.Stages.x57Index(spark, sfDir); () }),
-      "stage:series_daily" -> (() => { graft.ops.Stages.seriesDaily(spark, sfDir); () }),
-      "stage:x49_grams" -> (() => { graft.ops.Stages.x49Grams(spark, sfDir); () }),
-      "stage:grams5" -> (() => { graft.ops.Stages.grams5(spark, sfDir); () }),
-      "stage:x2_pairs" -> (() => { graft.ops.Stages.x2Pairs(spark, sfDir); () }),
-      // the corpus banding every x13-lineage consumer slices (r20: one
-      // shingle→minhash→band pass per session) — BEFORE x13_pairs, its
-      // first consumer, so each line carries only its own build
-      "stage:x13_bands" -> (() => { graft.ops.Stages.x13BandsAll(spark, sfDir); () }),
-      "stage:x13_pairs" -> (() => { graft.ops.Stages.x13Pairs(spark, sfDir); () }),
-      "stage:x24_labels" -> (() => { graft.ops.Stages.x24Labels(spark, sfDir); () }),
-      "stage:x75_seed" -> (() => { graft.ops.Stages.x75Seed(spark, sfDir); () }),
-      // x75's maintenance labels (r19: shared by x75 + x76 — each
-      // consumer used to re-run the arrival contraction on its own line)
-      "stage:x75_labels" -> (() => { graft.ops.Stages.x75Labels(spark, sfDir); () }),
-      "stage:x68_sticky" -> (() => { graft.ops.Stages.x68Sticky(spark, sfDir); () }),
-      // x68's split assignment (r19: shared by x68 + x69 + x78) — AFTER
-      // its sticky input's line, so each line carries only its own build
-      "stage:x68_assign" -> (() => { graft.ops.Stages.x68Assign(spark, sfDir); () }),
-      "stage:s18_index" -> (() => { graft.ops.Stages.s18Index(spark, sfDir); () }),
-      "stage:s21_index" -> (() => { graft.ops.Stages.s21Index(spark, sfDir); () }),
-      "stage:x9_scores" -> (() => { graft.ops.Stages.x9Scores(spark, sfDir); () }),
-      "stage:x62_merges" -> (() => { graft.ops.Stages.x62Merges(spark, sfDir); () }),
-      "stage:s17_merges" -> (() => { graft.ops.Stages.s17Merges(spark, sfDir); () }),
-      "stage:x36_hits" -> (() => { graft.ops.Stages.x36Hits(spark, sfDir); () }),
-      "stage:q27c_hitters" -> (() => { graft.ops.Stages.q27cHitters(spark, sfDir); () }),
-      // the daily sketch warehouse q28/q29 roll up from (r19 store #9)
-      "stage:sketch_daily" -> (() => { graft.ops.Stages.sketchDaily(spark, sfDir); () }),
-      "stage:q24_keystats" -> (() => { graft.ops.Stages.q24KeyStats(spark, sfDir); () }),
-      "stage:q26_bloom" -> (() => { graft.ops.Stages.q26Bloom(spark, sfDir); () }),
-      // the generated-PNG corpus both media lines ingest (x15 decode,
-      // x15b transform) — one corpus write per session; without this
-      // whichever media line runs first absorbs ~5 s of PNG writes
-      "stage:png_corpus" -> (() => { graft.ops.Multimodal.pngCorpus(spark, sfDir); () }),
-      // the generated-WAV corpus x15c ingests — same one-write-per-session
-      // rationale as the PNG corpus above
-      "stage:wav_corpus" -> (() => { graft.ops.Multimodal.wavCorpus(spark, sfDir); () }),
-      "stage:gif_corpus" -> (() => { graft.ops.Multimodal.gifCorpus(spark, sfDir); () }),
-      // the streaming gates' shared replay feeds (events: s9/s11-s14;
-      // documents: s8/s10) — one staging build per table per session
-      "stage:gate_events_feed" ->
-        (() => { graft.streaming.StreamGate.sharedEventsFeed(spark, sfDir); () }),
-      "stage:gate_docs_feed" ->
-        (() => { graft.streaming.StreamGate.sharedDocsFeed(spark, sfDir); () }),
-      // s16's embeddings replay feed
-      "stage:gate_emb_feed" ->
-        (() => { graft.streaming.StreamGate.sharedEmbFeed(spark, sfDir); () }))
     // Per-query stall evidence, ALWAYS captured (r20, VERDICT item 1):
     // the r19 driver bench had three contiguous wall-clock windows where
     // unchanged code inflated 4–18× (host stalls — the same keys read
@@ -134,28 +79,48 @@ object Bench {
     // reads well above 1, a stalled one collapses toward 0
     val diagAcc = scala.collection.mutable.LinkedHashMap
       .empty[String, (Double, Double, Long)] // wall s, cpu s, gc ms
-    def timedWithDiag(name: String)(body: => Unit): Double = {
-      val (gc0, cpu0, t0) = (totalGcMs(), procCpuNs(), System.nanoTime())
-      val ok = try { body; true } catch { case _: Throwable => false }
-      val sec = (System.nanoTime() - t0) / 1e9
+    // SPARK_GRAFT_BENCH_DIAG=<path.jsonl>: opt-in per-attempt diagnostics
+    // — cumulative JVM GC ms, used heap, and the spark/RocksDB/feed
+    // scratch footprint under java.io.tmpdir — appended after every timed
+    // attempt, stage lines included (a regressed stage build, the r16
+    // x68_sticky/x16_centroids watch, needs the same context). Purpose:
+    // pin the random-order RocksDB-gate inflation (r14: s12 4.5→25.1 s
+    // when late in a shuffled order) to session aging (GC/heap climb) vs
+    // state-store accumulation (scratch climb). Best-effort and opt-in:
+    // the walk costs real time on big scratch trees, so it must never run
+    // on a driver bench.
+    val diagPath = sys.env.get("SPARK_GRAFT_BENCH_DIAG")
+    // one timed attempt (graft.util.BenchDiag.attempt: -1.0 on a NonFatal
+    // failure, diag row appended) plus this run's CPU/GC accounting
+    def attempt(name: String)(body: => Unit): Double = {
+      val (gc0, cpu0) = (totalGcMs(), procCpuNs())
+      val sec = graft.util.BenchDiag.attempt(diagPath, name)(body)
       val (wallP, cpuP, gcP) = diagAcc.getOrElse(name, (0.0, 0.0, 0L))
-      diagAcc(name) = (wallP + sec,
+      diagAcc(name) = (wallP + math.max(sec, 0.0),
         cpuP + math.max(procCpuNs() - cpu0, 0L) / 1e9,
         gcP + math.max(totalGcMs() - gc0, 0L))
-      if (ok) sec else -1.0
+      sec
     }
-    // skipped under BENCH_ONLY: an isolated line should carry everything
-    // it triggers (including a shared build) — that's the point of
-    // isolating it. partial_total already marks the regime.
+    // Every staged artifact of graft.ops.Stages (frames, driver-held
+    // values, media corpora, gate replay feeds) is pre-materialized
+    // BEFORE the per-query loop, each as its own TIMED line
+    // (`stage:<name>`, folded into the total — they are real work), in
+    // registry order. Without this, whichever consumer ran first paid the
+    // whole shared build on its own line: the r10 driver bench showed
+    // x27_semantic_dedup at 4.30× its r9 time with zero code change
+    // because the x16/x27-shared k-means stage landed there — plausible,
+    // but unattributable from the artifact. Named stage lines make that
+    // cost visible and keep every consumer line a consumer-only number.
+    // Build failure → sentinel -1.0, and the consumers then rebuild
+    // lazily (their lines absorb it — still attributed, via the -1.0
+    // marker). Skipped under BENCH_ONLY: an isolated line should carry
+    // everything it triggers (including a shared build) — that's the
+    // point of isolating it. partial_total already marks the regime.
     val stageResults =
       if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) Seq.empty[(String, Double)]
-      else stageBuilds.map { case (name, build) =>
-        val sec = timedWithDiag(name)(build())
-        // stage lines get the same per-attempt diag rows as queries —
-        // a regressed stage build (the r16 x68_sticky/x16_centroids
-        // watch) needs GC/heap/scratch context to adjudicate band vs code
-        graft.util.BenchDiag.log(sys.env.get("SPARK_GRAFT_BENCH_DIAG"), name, sec)
-        name -> sec
+      else graft.ops.Stages.registry.map { st =>
+        val name = "stage:" + st.name
+        name -> attempt(name)(st(spark, sfDir))
       }
     // default order is sorted keys (run-to-run comparability); set
     // SPARK_GRAFT_BENCH_ORDER=random (+ optional SPARK_GRAFT_BENCH_SEED)
@@ -184,17 +149,6 @@ object Bench {
     // so REPEAT>=2 medians are a WARM regime — compare them only to
     // other REPEAT runs, never to single-run totals
     val repeat = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "1").toInt, 1)
-    // SPARK_GRAFT_BENCH_DIAG=<path.jsonl>: opt-in per-attempt diagnostics
-    // — cumulative JVM GC ms, used heap, and the spark/RocksDB/feed
-    // scratch footprint under java.io.tmpdir — appended after every timed
-    // attempt. Purpose: pin the random-order RocksDB-gate inflation
-    // (r14: s12 4.5→25.1 s when late in a shuffled order) to session
-    // aging (GC/heap climb) vs state-store accumulation (scratch climb).
-    // Best-effort and opt-in: the walk costs real time on big scratch
-    // trees, so it must never run on a driver bench.
-    val diagPath = sys.env.get("SPARK_GRAFT_BENCH_DIAG")
-    def diag(name: String, sec: Double): Unit =
-      graft.util.BenchDiag.log(diagPath, name, sec)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -206,13 +160,12 @@ object Bench {
         // slow failure repeated N times buys no information
         val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
         var failed = false
-        var attempt = 0
-        while (attempt < repeat && !failed) {
-          val sec = timedWithDiag(name)(
+        var n = 0
+        while (n < repeat && !failed) {
+          val sec = attempt(name)(
             fn(spark, sfDir).write.format("noop").mode("overwrite").save())
           if (sec >= 0) runs += sec else failed = true
-          diag(name, sec)
-          attempt += 1
+          n += 1
         }
         if (failed) (name, -1.0, -1.0)
         else (name, median(runs.toSeq), runs.min)
@@ -298,7 +251,7 @@ object Bench {
     // the bench.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_results.json"), line + "\n")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] bench_results.json write failed (non-fatal): ${e.getMessage}")
     }
     // Per-table corpus fingerprint next to every bench reading (file, not
@@ -307,7 +260,7 @@ object Bench {
     // attributable when the driver regenerates the test data — the r9
     // 3–5× events/documents outliers were undiagnosable without this.
     try CorpusStats.write(spark, sfDir, "CORPUS_STATS_BENCH.json")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] corpus stats failed (non-fatal): ${e.getMessage}")
     }
     spark.stop()

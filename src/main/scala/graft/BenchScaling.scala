@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
 import graft.ops.{Analytics, Artifacts, PipelineOps, Relational, TextOps, VectorOps}
+import graft.util.BenchDiag
 
 /** Scaling audit for the join-heavy relational core (README "Scaling
   * audit"): replicate the fact tables 1×/2×/4× with DISJOINT key
@@ -271,7 +272,7 @@ object BenchScaling {
     // mod), docs grow ×f, so BOTH legs must track |docs| linearly and the
     // decode leg must stay ~3 sampled frames per clip regardless of f
     "stage:gif_corpus" -> ((s: SparkSession, d: String, _: Int) => {
-      graft.ops.Multimodal.gifCorpus(s, d); s.range(1).toDF("ok")
+      graft.ops.Stages.gifCorpus(s, d); s.range(1).toDF("ok")
     }),
     "x15d_video" -> fx(graft.ops.Multimodal.x15dVideoPipeline _),
     // PassJoin: disjoint token namespaces keep segments replica-local, so
@@ -601,10 +602,10 @@ object BenchScaling {
               Seq.empty
             })
           val per = legs.map { case (name, store, persist) =>
-            val t0 = System.nanoTime()
-            persist(spark, dir, s"$sb/f$k/$name")
-            spark.conf.set(store.conf, s"$sb/f$k/$name")
-            s"store:$name" -> (System.nanoTime() - t0) / 1e9
+            s"store:$name" -> BenchDiag.wall {
+              persist(spark, dir, s"$sb/f$k/$name")
+              spark.conf.set(store.conf, s"$sb/f$k/$name")
+            }
           }
           // the serving FLIP is the manifest, not eight knobs: the freeze
           // pipeline above ran under explicit paths (production order —
@@ -612,14 +613,14 @@ object BenchScaling {
           // session gets ONE conf naming the whole generation, so every
           // governance leg below exercises the manifest resolution path
           // at this factor's scale
-          val t0 = System.nanoTime()
-          val thr = Artifacts
-            .readStampFacts(spark, s"$sb/f$k/sticky", Sticky.key)._2(Sticky.prop).toLong
-          Artifacts.writeManifest(spark, s"$sb/f$k/manifest",
-            legs.map { case (name, store, _) => store.key -> s"$sb/f$k/$name" }.toMap, thr)
-          legs.foreach { case (_, store, _) => spark.conf.unset(store.conf) }
-          spark.conf.set(StoreManifest.conf, s"$sb/f$k/manifest")
-          val manifestLine = "store:manifest" -> (System.nanoTime() - t0) / 1e9
+          val manifestLine = "store:manifest" -> BenchDiag.wall {
+            val thr = Artifacts
+              .readStampFacts(spark, s"$sb/f$k/sticky", Sticky.key)._2(Sticky.prop).toLong
+            Artifacts.writeManifest(spark, s"$sb/f$k/manifest",
+              legs.map { case (name, store, _) => store.key -> s"$sb/f$k/$name" }.toMap, thr)
+            legs.foreach { case (_, store, _) => spark.conf.unset(store.conf) }
+            spark.conf.set(StoreManifest.conf, s"$sb/f$k/manifest")
+          }
           // SPARK_GRAFT_SCALE_REFREEZE=1 (requires the store leg): the
           // INCREMENTAL re-freeze price — generation A frozen on the
           // factor corpus's own earlier installment (docs ≤ the 9/10
@@ -632,13 +633,8 @@ object BenchScaling {
           val refreeze: Seq[(String, Double)] =
             if (!sys.env.get("SPARK_GRAFT_SCALE_REFREEZE").exists(_.nonEmpty)) Seq.empty
             else {
-              def timed(name: String)(run: => Unit): (String, Double) = {
-                val t = System.nanoTime()
-                run
-                name -> (System.nanoTime() - t) / 1e9
-              }
               val genA = s"$sb/f$k/genA"
-              val corpus0 = timed("store:genA_corpus") {
+              val corpus0 = "store:genA_corpus" -> BenchDiag.wall {
                 val docs = Tables.table(spark, dir, "documents")
                 val mx = docs.agg(max(col("doc_id"))).first().getLong(0)
                 docs.filter(col("doc_id") <= Tables.historyThr(mx))
@@ -649,7 +645,7 @@ object BenchScaling {
               // lattice, not band the old installment over the CURRENT
               // generation's stores) — one line, the price is NOT the
               // claim under test
-              val persistsA = timed("store:genA_persists") {
+              val persistsA = "store:genA_persists" -> BenchDiag.wall {
                 spark.conf.unset(StoreManifest.conf)
                 try {
                   graft.ops.PipelineOps.persistStickySplits(spark, s"$genA/corpus0", s"$genA/sticky")
@@ -661,16 +657,16 @@ object BenchScaling {
               // consumes the staged seed (residual over the labels store
               // already configured via the manifest), then each index
               // merge bands only the (thrA, thr] arrivals
-              val stickyInc = timed("store:sticky_inc") {
+              val stickyInc = "store:sticky_inc" -> BenchDiag.wall {
                 graft.ops.PipelineOps.persistStickySplitsIncremental(
                   spark, dir, s"$genA/stickyB", s"$genA/sticky")
               }
               spark.conf.set(Sticky.conf, s"$genA/stickyB")
-              val routeInc = timed("store:route_index_inc") {
+              val routeInc = "store:route_index_inc" -> BenchDiag.wall {
                 graft.ops.PipelineOps.persistRouteIndexIncremental(
                   spark, dir, s"$genA/route_indexB", s"$genA/route_index")
               }
-              val labelInc = timed("store:label_index_inc") {
+              val labelInc = "store:label_index_inc" -> BenchDiag.wall {
                 graft.ops.PipelineOps.persistLabelIndexIncremental(
                   spark, dir, s"$genA/label_indexB", s"$genA/label_index")
               }
@@ -687,33 +683,22 @@ object BenchScaling {
       // tagged with the factor so one multi-factor session attributes an
       // inflated leg to session aging vs scratch growth vs host band
       val diagPath = sys.env.get("SPARK_GRAFT_BENCH_DIAG")
+      // a failed leg reports the Bench -1.0 sentinel instead of killing
+      // the whole multi-factor session: some legs fail BY DESIGN at high
+      // factors (q28c's theta exact-mode guard throws once weekly
+      // cardinality crosses 2^12; q27's scaled-support variant refuses
+      // supports below the builtin floor) — the loud guard is the point,
+      // and the audit records it as a marked line. Those throws are all
+      // requires / IllegalArgumentExceptions; a fatal error still ends
+      // the session (BenchDiag.attempt catches NonFatal only)
       val times = selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // a failed leg reports the Bench -1.0 sentinel instead of killing
-        // the whole multi-factor session: some legs fail BY DESIGN at
-        // high factors (q28c's theta exact-mode guard throws once weekly
-        // cardinality crosses 2^12; q27's scaled-support variant refuses
-        // supports below the builtin floor) — the loud guard is the
-        // point, and the audit records it as a marked line
-        // NonFatal only: the by-design guard throws are all requires /
-        // IllegalArgumentExceptions. A fatal error (OOM, stack overflow)
-        // kills the session — timing later legs in a JVM that just blew
-        // its heap would report numbers nothing should trust
-        val sec =
-          try {
-            val df = fn(spark, dir, k)
-            // "count:" legs are one-row diagnostics (bounded collect by
-            // construction): the value itself is the artifact
-            if (name.startsWith("count:")) counts(name) = df.collect()(0).getLong(0)
-            else df.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[scaling] $name failed at factor $k " +
-              s"(reported -1.0): ${e.getMessage}")
-            -1.0
-          }
-        graft.util.BenchDiag.log(diagPath, name, sec, Map("factor" -> k.toString))
-        name -> sec
+        name -> BenchDiag.attempt(diagPath, name, Map("factor" -> k.toString)) {
+          val df = fn(spark, dir, k)
+          // "count:" legs are one-row diagnostics (bounded collect by
+          // construction): the value itself is the artifact
+          if (name.startsWith("count:")) counts(name) = df.collect()(0).getLong(0)
+          else df.write.format("noop").mode("overwrite").save()
+        }
       }
       if (storeLeg.nonEmpty) {
         // per-store knobs were already dropped at the manifest flip;

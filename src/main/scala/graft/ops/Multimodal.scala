@@ -10,11 +10,6 @@ import graft.model.Tables
 case class MediaRow(doc_id: Long, payload: Array[Byte], format: String,
     width: Int, height: Int)
 
-/** Extracted per-media features (decode output); metadata (width) is
-  * carried through the decode batch rather than re-joined afterwards. */
-case class MediaFeatures(doc_id: Long, n_bytes: Long, first_byte: Long,
-    byte_sum: Long, format: String, width: Long)
-
 /** REAL image-decode output: actual pixel dimensions and a deterministic
   * pixel checksum from the decoded raster, plus a decode verdict (a
   * payload that is not a decodable image yields decoded = false, never a
@@ -40,10 +35,9 @@ case class VideoFeatures(doc_id: Long, format: String, n_frames: Long,
   * pipeline needs: a `binary` payload column with typed metadata, a typed
   * `Dataset[MediaRow]`, and per-partition batch "decode"/feature-extract.
   *
-  * Two decode paths share the mapPartitions batch shape: a DETERMINISTIC
-  * STUB over the synthetic media table (payload bytes are the UTF-8 text
-  * of the document, "features" are byte statistics — oracle-checkable),
-  * REAL image decode ([[Multimodal.decodeImages]]) via the JDK's
+  * The decode paths share the mapPartitions batch shape (a byte-stats
+  * stub over a synthetic media table lives with the test oracles): REAL
+  * image decode ([[Multimodal.decodeImages]]) via the JDK's
   * `javax.imageio` (PNG/GIF/BMP/JPEG readers ship with the JVM — no
   * external codec needed) yielding actual pixel dimensions and a raster
   * checksum, and a REAL audio decode ([[Multimodal.decodeAudio]]) via
@@ -66,19 +60,6 @@ case class VideoFeatures(doc_id: Long, format: String, n_frames: Long,
 object Multimodal {
   import Tables._
 
-  /** Build the media table: documents' text bytes as the opaque payload,
-    * deterministic fake metadata. */
-  def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    documents(spark, dir)
-      .select(col("doc_id"),
-        col("text").cast("binary").as("payload"),
-        lit("fake/raw").as("format"),
-        (col("n_chars") % 640).cast("int").as("width"),
-        (col("n_chars") % 480).cast("int").as("height"))
-      .as[MediaRow]
-  }
-
   /** Media table from a REAL file directory — the production ingest
     * ([[graft.sources.Sources.binaryFiles]]): doc_id is a stable hash of
     * the file path, format the lowercased extension, dims derived
@@ -98,25 +79,6 @@ object Multimodal {
         (col("length") % 480).cast("int").as("height"))
       .as[MediaRow]
   }
-
-  /** The decode entry for ANY media table (synthetic or file-ingested):
-    * per-partition batch, codec init amortized per task. */
-  def decodeFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions(decodeBatch)
-  }
-
-  /** STUB decode: in production this is the codec call; here it computes
-    * deterministic byte statistics so the pipeline is oracle-checkable. */
-  private def decodeBatch(rows: Iterator[MediaRow]): Iterator[MediaFeatures] =
-    rows.map { r =>
-      var sum = 0L
-      var i = 0
-      while (i < r.payload.length) { sum += (r.payload(i) & 0xff); i += 1 }
-      MediaFeatures(r.doc_id, r.payload.length.toLong,
-        if (r.payload.nonEmpty) (r.payload(0) & 0xff).toLong else 0L, // ascii('') = 0
-        sum, r.format, r.width.toLong)
-    }
 
   /** REAL image decode over any media table: `javax.imageio` readers on
     * the payload bytes, per-partition batches. Returns actual pixel
@@ -223,64 +185,9 @@ object Multimodal {
     }
   }
 
-  // generated-media scratch dirs, keyed (session, sfDir, kind) — kind is
-  // "png" (x15/x15b), "wav" (x15c), or "gif" (x15d)
-  private val mediaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-
-  /** Drop and delete one session's generated media corpora (PNG + WAV) —
-    * wired into [[graft.ops.Stages.evictSession]] (the StreamGate
-    * feed-eviction pattern), so the documented "one call frees everything
-    * this session pinned" contract covers the x15 media scratch dirs too.
-    * Before this, the TrieMap entry was never evicted: a long-lived JVM
-    * cycling sessions leaked one directory per (session, sfDir) until
-    * process exit. Local-FS scratch by construction
-    * (createTempDirectory), so a plain recursive delete suffices;
-    * best-effort — a leaked dir is disk, not correctness. */
-  private[graft] def evictSessionMedia(spark: SparkSession): Unit = synchronized {
-    mediaCache.keys.filter(_._1 eq spark).toSeq.foreach { k =>
-      mediaCache.remove(k).foreach(deleteMediaDir)
-    }
-  }
-
-  /** Context-scoped variant for [[graft.ops.Stages.evict]]'s
-    * application-end listener and the stopped-context purge backstop:
-    * the scratch dirs are driver-local disk, so they outlive the
-    * executors and still need deleting after the context dies. */
-  private[graft] def evictMediaByContext(sc: org.apache.spark.SparkContext): Unit =
-    synchronized {
-      mediaCache.keys.filter(_._1.sparkContext eq sc).toSeq.foreach { k =>
-        mediaCache.remove(k).foreach(deleteMediaDir)
-      }
-    }
-
-  /** Stopped-context backstop, called from
-    * [[graft.ops.Stages.purgeStopped]]'s slow path: entries whose
-    * context died without an onApplicationEnd event would otherwise pin
-    * their scratch dirs until process exit. */
-  private[graft] def purgeStoppedMedia(): Unit = synchronized {
-    mediaCache.keys.filter(_._1.sparkContext.isStopped).toSeq.foreach { k =>
-      mediaCache.remove(k).foreach(deleteMediaDir)
-    }
-  }
-
-  /** Test hook: how many generated media corpora a session still owns. */
-  private[graft] def cachedMediaCount(spark: SparkSession): Int =
-    mediaCache.keys.count(_._1 eq spark)
-
-  private def deleteMediaDir(dir: String): Unit =
-    try {
-      import java.nio.file.{Files => JFiles, Paths}
-      val root = Paths.get(dir)
-      if (JFiles.exists(root)) {
-        val it = JFiles.walk(root).sorted(java.util.Comparator.reverseOrder())
-        try it.forEach(p => JFiles.deleteIfExists(p)) finally it.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   /** Deterministic generated-PNG corpus for the registered x15 — one REAL
-    * PNG file per document, built once per (session, sfDir) by executor
-    * tasks (driver holds only the directory name, never the ids): doc d
+    * PNG file per document, written into `out` by executor tasks (the
+    * driver holds only the directory name, never the ids): doc d
     * gets a (1 + d%8) × (1 + d%6) image whose pixel (x, y) is
     * (7d + 3x + 11y) mod 2^24 — closed-form, so the DuckDB oracle can
     * recompute dims and raster checksum arithmetically while the engine
@@ -288,35 +195,31 @@ object Multimodal {
     * keyed by doc_id (idempotent overwrite — a retried task rewrites the
     * same bytes, no commit protocol needed). Local-FS scratch here; at
     * 100 TB the same foreachPartition writes through the Hadoop FS API to
-    * shared storage and the ingest below reads the same path. A racing
-    * duplicate build lands in its own temp dir and is dropped with the
-    * losing cache entry — never a torn corpus. */
-  def pngCorpus(spark: SparkSession, dir: String): String =
-    mediaCache.getOrElseUpdate((spark, dir, "png"), {
-      val out = java.nio.file.Files.createTempDirectory("graft_png_corpus_").toString
-      import spark.implicits._
-      documents(spark, dir).select(col("doc_id")).as[Long]
-        .foreachPartition { (ids: Iterator[Long]) =>
-          javax.imageio.ImageIO.setUseCache(false) // once per task
-          ids.foreach { d =>
-            val w = (1 + d % 8).toInt
-            val h = (1 + d % 6).toInt
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                img.setRGB(x, y, ((7 * d + 3 * x + 11 * y) % 16777216).toInt)
-                x += 1
-              }
-              y += 1
+    * shared storage and the ingest below reads the same path.
+    * [[Stages.pngCorpus]] builds it once per (session, sfDir). */
+  private[graft] def writePngCorpus(spark: SparkSession, dir: String, out: String): Unit = {
+    import spark.implicits._
+    documents(spark, dir).select(col("doc_id")).as[Long]
+      .foreachPartition { (ids: Iterator[Long]) =>
+        javax.imageio.ImageIO.setUseCache(false) // once per task
+        ids.foreach { d =>
+          val w = (1 + d % 8).toInt
+          val h = (1 + d % 6).toInt
+          val img = new java.awt.image.BufferedImage(
+            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+          var y = 0
+          while (y < h) {
+            var x = 0
+            while (x < w) {
+              img.setRGB(x, y, ((7 * d + 3 * x + 11 * y) % 16777216).toInt)
+              x += 1
             }
-            javax.imageio.ImageIO.write(img, "png", new java.io.File(out, s"img_$d.png"))
+            y += 1
           }
+          javax.imageio.ImageIO.write(img, "png", new java.io.File(out, s"img_$d.png"))
         }
-      out
-    })
+      }
+  }
 
   /** x15c's generation parameters — closed-form in doc_id so the DuckDB
     * oracle recomputes every field arithmetically: sample rate
@@ -327,15 +230,6 @@ object Multimodal {
   private def wavChannels(d: Long): Int = (1 + d % 2).toInt
   private def wavFrames(d: Long): Int = (1 + d % 16).toInt
 
-  /** Deterministic generated-WAV corpus for the registered x15c — one
-    * REAL RIFF/WAVE file per document, built once per (session, sfDir)
-    * by executor tasks (the [[pngCorpus]] idiom: driver holds only the
-    * directory name; file names keyed by doc_id, idempotent overwrite;
-    * local-FS scratch here, the same foreachPartition writes through the
-    * Hadoop FS API to shared storage at 100 TB). PCM is uncompressed, so
-    * the oracle can recompute the decoded byte stream arithmetically
-    * while the engine side round-trips genuine `javax.sound.sampled`
-    * WAVE bytes. */
   /** The WAVE-capable SPI writer, resolved without AudioSystem's
     * globally synchronized lookup (the [[audioReaders]] rationale on
     * the write side — AudioSystem.write takes the same class lock per
@@ -350,29 +244,34 @@ object Multimodal {
     throw new IllegalStateException("no WAVE AudioFileWriter on this JDK")
   }
 
-  def wavCorpus(spark: SparkSession, dir: String): String =
-    mediaCache.getOrElseUpdate((spark, dir, "wav"), {
-      val out = java.nio.file.Files.createTempDirectory("graft_wav_corpus_").toString
-      import spark.implicits._
-      documents(spark, dir).select(col("doc_id")).as[Long]
-        .foreachPartition { (ids: Iterator[Long]) =>
-          val writer = wavWriter() // once per task, not per row
-          ids.foreach { d =>
-            val fmt = new javax.sound.sampled.AudioFormat(
-              wavRate(d), 16, wavChannels(d), true, false) // 16-bit signed LE PCM
-            val pcm = new Array[Byte](wavFrames(d) * fmt.getFrameSize)
-            var j = 0
-            while (j < pcm.length) { pcm(j) = ((5 * d + 13 * j) % 256).toByte; j += 1 }
-            val ais = new javax.sound.sampled.AudioInputStream(
-              new java.io.ByteArrayInputStream(pcm), fmt, wavFrames(d).toLong)
-            try writer.write(ais,
-              javax.sound.sampled.AudioFileFormat.Type.WAVE,
-              new java.io.File(out, s"snd_$d.wav"))
-            finally ais.close()
-          }
+  /** Deterministic generated-WAV corpus for the registered x15c — one
+    * REAL RIFF/WAVE file per document, written by executor tasks (the
+    * [[writePngCorpus]] idiom: driver holds only the directory name; file
+    * names keyed by doc_id, idempotent overwrite; local-FS scratch here,
+    * the same foreachPartition writes through the Hadoop FS API to shared
+    * storage at 100 TB). PCM is uncompressed, so the oracle can recompute
+    * the decoded byte stream arithmetically while the engine side
+    * round-trips genuine `javax.sound.sampled` WAVE bytes. */
+  private[graft] def writeWavCorpus(spark: SparkSession, dir: String, out: String): Unit = {
+    import spark.implicits._
+    documents(spark, dir).select(col("doc_id")).as[Long]
+      .foreachPartition { (ids: Iterator[Long]) =>
+        val writer = wavWriter() // once per task, not per row
+        ids.foreach { d =>
+          val fmt = new javax.sound.sampled.AudioFormat(
+            wavRate(d), 16, wavChannels(d), true, false) // 16-bit signed LE PCM
+          val pcm = new Array[Byte](wavFrames(d) * fmt.getFrameSize)
+          var j = 0
+          while (j < pcm.length) { pcm(j) = ((5 * d + 13 * j) % 256).toByte; j += 1 }
+          val ais = new javax.sound.sampled.AudioInputStream(
+            new java.io.ByteArrayInputStream(pcm), fmt, wavFrames(d).toLong)
+          try writer.write(ais,
+            javax.sound.sampled.AudioFileFormat.Type.WAVE,
+            new java.io.File(out, s"snd_$d.wav"))
+          finally ais.close()
         }
-      out
-    })
+      }
+  }
 
   /** x15c: the audio modality END TO END on the REAL decode path —
     * generated-WAV corpus → [[graft.sources.Sources.binaryFiles]] ingest
@@ -386,7 +285,7 @@ object Multimodal {
     * SourcesSpec degradation leg). */
   def x15cAudioPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = graft.sources.Sources.binaryFiles(spark, wavCorpus(spark, dir), "*.wav")
+    val media = graft.sources.Sources.binaryFiles(spark, Stages.wavCorpus(spark, dir), "*.wav")
       .select(
         regexp_extract(col("path"), "snd_(\\d+)\\.wav$", 1).cast(LongType).as("doc_id"),
         col("content").as("payload"),
@@ -410,7 +309,7 @@ object Multimodal {
     * the checksum equality. */
   def x15MediaPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = graft.sources.Sources.binaryFiles(spark, pngCorpus(spark, dir), "*.png")
+    val media = graft.sources.Sources.binaryFiles(spark, Stages.pngCorpus(spark, dir), "*.png")
       .select(
         regexp_extract(col("path"), "img_(\\d+)\\.png$", 1).cast(LongType).as("doc_id"),
         col("content").as("payload"),
@@ -447,7 +346,7 @@ object Multimodal {
     * call would plug into the same per-partition batch. */
   def x15bMediaTransform(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = graft.sources.Sources.binaryFiles(spark, pngCorpus(spark, dir), "*.png")
+    val media = graft.sources.Sources.binaryFiles(spark, Stages.pngCorpus(spark, dir), "*.png")
       .select(
         regexp_extract(col("path"), "img_(\\d+)\\.png$", 1).cast(LongType).as("doc_id"),
         col("content").as("payload"),
@@ -507,7 +406,7 @@ object Multimodal {
   private def gifH(d: Long): Int = (16 + d % 4).toInt
 
   /** Deterministic generated multi-frame-GIF corpus for the registered
-    * x15d — one REAL animated GIF per document (the [[pngCorpus]] idiom:
+    * x15d — one REAL animated GIF per document (the [[writePngCorpus]] idiom:
     * executor-task writes, doc_id-keyed idempotent file names, local-FS
     * scratch standing in for shared storage). Frames are TYPE_BYTE_INDEXED
     * over an explicit 256-gray palette (r=g=b=index): GIF's indexed
@@ -516,48 +415,45 @@ object Multimodal {
     * even if a writer permutes palette indices, because the checksum
     * reads colors, not indices. (TYPE_BYTE_GRAY would NOT round-trip:
     * its linear-gray color space gamma-converts under getRGB.) */
-  def gifCorpus(spark: SparkSession, dir: String): String =
-    mediaCache.getOrElseUpdate((spark, dir, "gif"), {
-      val out = java.nio.file.Files.createTempDirectory("graft_gif_corpus_").toString
-      import spark.implicits._
-      documents(spark, dir).select(col("doc_id")).as[Long]
-        .foreachPartition { (ids: Iterator[Long]) =>
-          javax.imageio.ImageIO.setUseCache(false) // once per task
-          val gray = Array.tabulate[Byte](256)(i => i.toByte)
-          val icm = new java.awt.image.IndexColorModel(8, 256, gray, gray, gray)
-          ids.foreach { d =>
-            val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-            val ios = javax.imageio.ImageIO.createImageOutputStream(
-              new java.io.File(out, s"vid_$d.gif"))
-            try {
-              writer.setOutput(ios)
-              writer.prepareWriteSequence(null)
-              var k = 0
-              while (k < gifFrames(d)) {
-                val img = new java.awt.image.BufferedImage(
-                  gifW(d), gifH(d), java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
-                val raster = img.getRaster
-                var y = 0
-                while (y < gifH(d)) {
-                  var x = 0
-                  while (x < gifW(d)) {
-                    raster.setSample(x, y, 0, ((3 * d + 5 * k + 7 * x + 11 * y) % 256).toInt)
-                    x += 1
-                  }
-                  y += 1
+  private[graft] def writeGifCorpus(spark: SparkSession, dir: String, out: String): Unit = {
+    import spark.implicits._
+    documents(spark, dir).select(col("doc_id")).as[Long]
+      .foreachPartition { (ids: Iterator[Long]) =>
+        javax.imageio.ImageIO.setUseCache(false) // once per task
+        val gray = Array.tabulate[Byte](256)(i => i.toByte)
+        val icm = new java.awt.image.IndexColorModel(8, 256, gray, gray, gray)
+        ids.foreach { d =>
+          val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+          val ios = javax.imageio.ImageIO.createImageOutputStream(
+            new java.io.File(out, s"vid_$d.gif"))
+          try {
+            writer.setOutput(ios)
+            writer.prepareWriteSequence(null)
+            var k = 0
+            while (k < gifFrames(d)) {
+              val img = new java.awt.image.BufferedImage(
+                gifW(d), gifH(d), java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, icm)
+              val raster = img.getRaster
+              var y = 0
+              while (y < gifH(d)) {
+                var x = 0
+                while (x < gifW(d)) {
+                  raster.setSample(x, y, 0, ((3 * d + 5 * k + 7 * x + 11 * y) % 256).toInt)
+                  x += 1
                 }
-                writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-                k += 1
+                y += 1
               }
-              writer.endWriteSequence()
-            } finally {
-              writer.dispose()
-              ios.close()
+              writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
+              k += 1
             }
+            writer.endWriteSequence()
+          } finally {
+            writer.dispose()
+            ios.close()
           }
         }
-      out
-    })
+      }
+  }
 
   /** The x15d frame-sampling rule: first, middle, last — distinct, so a
     * 1-frame clip samples once and a 2-frame clip twice. Shared with the
@@ -612,7 +508,7 @@ object Multimodal {
     * multimodal verb x15/x15b/x15c don't cover (decode, transform, and
     * audio are theirs; a video pipeline's first op is "sample k frames
     * per clip, never decode them all"). Generated multi-frame GIF corpus
-    * ([[gifCorpus]]) → `binaryFile` ingest → per-partition
+    * ([[writeGifCorpus]]) → `binaryFile` ingest → per-partition
     * `javax.imageio` GIF sequence reader: count the clip's frames
     * (`getNumImages`), decode ONLY the sampled first/middle/last frames,
     * and checksum their pixels — the decode cost is |sampled|, not
@@ -624,7 +520,7 @@ object Multimodal {
     * Corrupt payloads degrade to decoded = 0 (the x15 rule). */
   def x15dVideoPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val media = graft.sources.Sources.binaryFiles(spark, gifCorpus(spark, dir), "*.gif")
+    val media = graft.sources.Sources.binaryFiles(spark, Stages.gifCorpus(spark, dir), "*.gif")
       .select(
         regexp_extract(col("path"), "vid_(\\d+)\\.gif$", 1).cast(LongType).as("doc_id"),
         col("content").as("payload"),
@@ -644,11 +540,11 @@ object Multimodal {
     "x15d_video" -> x15dVideoPipeline)
 
   /** Oracles: all three recompute the generated corpora's closed-form
-    * content functions — the PNG pair from ([[pngCorpus]]) dims-from-
+    * content functions — the PNG pair from ([[writePngCorpus]]) dims-from-
     * doc_id + checksums as double sums over (7d + 3x + 11y) mod 2^24
     * (x15b maps output coords through the nearest-neighbor rule
     * ⌊X·w/Wt⌋ first, and crops with LEAST), the audio row from
-    * ([[wavCorpus]]) rate/channels/frames arithmetic + the PCM byte sum
+    * ([[writeWavCorpus]]) rate/channels/frames arithmetic + the PCM byte sum
     * over (5d + 13j) mod 256 — so DuckDB checks the real
     * write→ingest→decode(→transform) round trips without ever decoding
     * an image or a waveform itself. */

@@ -16,9 +16,8 @@ import graft.streaming.WalRecord
   *  - streaming sources: file-arrival streams over the same formats with
   *    a fixed schema (required by Structured Streaming), plus rate for
   *    testing;
-  *  - sinks: partitioned/bucketed parquet writers (bucketing pre-shuffles
-  *    by join key so downstream joins on that key skip their exchange),
-  *    and the streaming foreachBatch sink in graft.streaming.Streams.
+  *  - sinks: partitioned parquet writers, and the streaming foreachBatch
+  *    sink in graft.streaming.Streams.
   *
   * Scale notes: every reader exposes options for partition sizing
   * (`maxFilesPerTrigger` on streams); writers default to partitioning by a
@@ -55,9 +54,6 @@ object Sources {
     * `walFileStream(format = "orc")` for the streaming ingress. */
   def orc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
 
   def csv(spark: SparkSession, path: String, schema: StructType = null,
       header: Boolean = true): DataFrame = {
@@ -153,22 +149,6 @@ object Sources {
       .as[WalRecord]
   }
 
-  /** File-arrival document stream (JSONL by default): new corpus files
-    * dropped into `path` flow through the pipeline's stateless screens —
-    * the production feed for the S8 novelty stream
-    * (graft.streaming.Streams.noveltyStream) whose driver gate uses a
-    * MemoryStream stand-in. Schema enforced for the same reasons as
-    * [[jsonlDocuments]]; corrupt lines arrive null-columned here
-    * (streaming sources cannot carry the quarantine column — route
-    * suspect rows by `isnull(text)` in the first select). */
-  def documentsFileStream(spark: SparkSession, path: String,
-      format: String = "json", maxFilesPerTrigger: Int = 16): DataFrame =
-    spark.readStream
-      .schema(documentsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .format(format)
-      .load(path)
-
   // ---- sinks ----
 
   /** Partitioned parquet sink. `partitionBy` should be low-cardinality
@@ -221,26 +201,4 @@ object Sources {
     fs.delete(old, true)
     nFiles
   }
-
-  /** Packed-shard sink, aligned with the x31 packing / x37 manifest
-    * layout: one directory per writer (low cardinality — the parallelism
-    * knob), rows sorted by (shard_id, doc_id) within each writer's files
-    * so the manifest's `first_doc_id` seek key doubles as the parquet
-    * min/max prune key. One shuffle (co-locate each writer), then a
-    * partition-local sort — no global ordering, which a 1000-writer
-    * layout neither needs nor could afford. */
-  def writePackedShards(packed: DataFrame, path: String): Unit =
-    writePartitioned(packed.repartition(col("writer")), path,
-      Seq("writer"), Seq("shard_id", "doc_id"))
-
-  /** Bucketed table sink: pre-shuffles on the bucket key once at write
-    * time, so every later equi-join/agg on that key runs shuffle-free.
-    * Requires saveAsTable (bucketing lives in the catalog). */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      nBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(nBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
 }

@@ -3,11 +3,10 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
+import graft.ops.Stages
 
 /** The 14 stream gates (SURVEY.md §2.3 s8–s21): each runs the REAL
   * streaming pipeline — file-arrival source (the production ingress
@@ -47,95 +46,9 @@ object StreamGate {
     * (the round-8 ceiling) — a 16× feed just stages 16× the files. */
   private[streaming] val targetRowsPerFile = 25000L
 
-  /** A staged feed: the dir plus how many files form one micro-batch. */
-  private[streaming] final case class Feed(dir: Path, filesPerTrigger: Int)
-
-  /** Shared staged feeds, one per (session, sfDir, table): the five
-    * event-log gates (s9/s11/s12/s13/s14) replay the same events table
-    * and the two document gates (s8/s10) the same documents table, but
-    * each used to stage its OWN near-identical key-range copy — six
-    * staging builds of two tables per session, ~16 s of the r10 bench.
-    * The staged frame is the column SUPERSET in the table's log order,
-    * so the row set and replay chunking are identical for every
-    * consumer; each gate projects/renames its columns AFTER the stream
-    * read (parquet column pruning means it pays only for the columns it
-    * touches). s8 filters its arrival slice post-read — its probe is
-    * stateless, so which chunk the arrivals land in cannot change its
-    * output. Feeds die with the application (listener) or via
-    * [[clearFeeds]]; the per-gate try/finally deletion only applies to
-    * unshared feeds (the restart e2e harnesses stage their own). */
-  private val feedCache = TrieMap.empty[(SparkSession, String, String), Feed]
-  private val feedHooked = TrieMap.empty[org.apache.spark.SparkContext, Unit]
-
-  private def cachedFeed(spark: SparkSession, dir: String, table: String)
-      (build: => Feed): Feed = {
-    val key = (spark, dir, table)
-    feedCache.get(key).getOrElse(synchronized {
-      // entries of stopped contexts are unreachable garbage; their dirs
-      // still exist on local disk — deleteFeed's local-rm path clears
-      // them even though the Hadoop FS handle is gone
-      feedCache.keys.filter(_._1.sparkContext.isStopped).toSeq.foreach { k =>
-        feedCache.remove(k).foreach(f => deleteFeed(k._1, f.dir))
-      }
-      feedHooked.getOrElseUpdate(spark.sparkContext, {
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = clearFeeds()
-        })
-      })
-      feedCache.getOrElseUpdate(key, build)
-    })
-  }
-
-  /** A replayed table: its staged column superset (every column a gate
-    * over it reads), replayed in `order` (its log order). */
-  private final case class Replayed(table: String, order: String,
-      superset: (SparkSession, String) => DataFrame)
-
-  private val Events = Replayed("events", "event_id", (s, d) =>
-    Tables.events(s, d).select(col("event_id"), col("ts"),
-      col("user_id"), col("event_type"), col("value")))
-  private val Documents = Replayed("documents", "doc_id", (s, d) =>
-    Tables.documents(s, d).select(col("doc_id"), col("lang"), col("text")))
-  private val Embeddings = Replayed("embeddings", "vec_id", (s, d) =>
-    Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
-
-  private def sharedFeed(spark: SparkSession, dir: String, t: Replayed): Feed =
-    cachedFeed(spark, dir, t.table)(stageFeed(t.superset(spark, dir), t.order))
-
-  /** The shared events feed (staged once per session × sfDir). Public to
-    * graft so Bench can pre-materialize it as its own timed line. */
-  private[graft] def sharedEventsFeed(spark: SparkSession, dir: String): Feed =
-    sharedFeed(spark, dir, Events)
-
-  /** The shared documents feed (staged once per session × sfDir). */
-  private[graft] def sharedDocsFeed(spark: SparkSession, dir: String): Feed =
-    sharedFeed(spark, dir, Documents)
-
-  /** The shared embeddings feed (staged once per session × sfDir). */
-  private[graft] def sharedEmbFeed(spark: SparkSession, dir: String): Feed =
-    sharedFeed(spark, dir, Embeddings)
-
-  /** Drop and delete every shared feed (tests; application end). */
-  private[graft] def clearFeeds(): Unit = synchronized {
-    feedCache.keys.toSeq.foreach { k =>
-      feedCache.remove(k).foreach(f => deleteFeed(k._1, f.dir))
-    }
-  }
-
-  /** Drop and delete one session's shared feeds — wired into
-    * [[graft.ops.Stages.evictSession]], so the documented "one call
-    * frees everything this session pinned" contract covers the staged
-    * feed dirs too (a long-lived JVM cycling sessions over one context
-    * would otherwise keep each dead session's feeds on disk until
-    * application end). A failed staging build never reaches the cache
-    * (getOrElseUpdate inserts only on success), so the next caller
-    * simply rebuilds. */
-  private[graft] def evictSessionFeeds(spark: SparkSession): Unit = synchronized {
-    feedCache.keys.filter(_._1 eq spark).toSeq.foreach { k =>
-      feedCache.remove(k).foreach(f => deleteFeed(k._1, f.dir))
-    }
-  }
+  /** A staged feed: the dir plus how many files form one micro-batch.
+    * The shared ones are [[Stages.ReplayFeed]] entries. */
+  private[graft] final case class Feed(dir: Path, filesPerTrigger: Int)
 
   private def hadoopFs(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
     org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
@@ -154,7 +67,7 @@ object StreamGate {
     * staging dir may live on a cluster FS — the driver renames and
     * stamps times, it never reads the data. Caller must delete the dir
     * via [[deleteFeed]]. */
-  private[streaming] def stageFeed(df: DataFrame, orderCol: String): Feed = {
+  private[graft] def stageFeed(df: DataFrame, orderCol: String): Feed = {
     val dir = Files.createTempDirectory("graft_gate_feed_")
     // staging failure (rename IOException, the setTimes require below)
     // must not orphan the corpus-sized copy already written — the
@@ -207,21 +120,17 @@ object StreamGate {
     * fs.defaultFS on a cluster) and the driver-local temp dir created by
     * Files.createTempDirectory. On a local-FS session both are the same
     * path; delete() tolerates the second call finding nothing. */
-  private[streaming] def deleteFeed(spark: SparkSession, dir: Path): Unit = {
+  private[graft] def deleteFeed(spark: SparkSession, dir: Path): Unit = {
     try hadoopFs(spark).delete(new org.apache.hadoop.fs.Path(dir.toString), true)
     catch { case scala.util.control.NonFatal(_) => () }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
-    rm(dir.toFile)
+    Stages.deleteTree(dir.toFile)
   }
 
   /** The shared staged replay stream of `t`, with its superset schema:
     * one micro-batch consumes the next `filesPerTrigger` oldest files =
     * one contiguous key-range chunk. */
-  private def replay(spark: SparkSession, dir: String, t: Replayed): DataFrame = {
-    val feed = sharedFeed(spark, dir, t)
+  private def replay(spark: SparkSession, dir: String, t: Stages.ReplayFeed): DataFrame = {
+    val feed = t(spark, dir)
     spark.readStream
       .schema(t.superset(spark, dir).schema)
       .option("maxFilesPerTrigger", feed.filesPerTrigger)
@@ -233,7 +142,7 @@ object StreamGate {
     * arrival stream — the documents replay past it. */
   private def arrivals(spark: SparkSession, dir: String): (Long, DataFrame) = {
     val thr = Tables.historyThr(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
-    (thr, replay(spark, dir, Documents).filter(col("doc_id") > thr))
+    (thr, replay(spark, dir, Stages.gateDocsFeed).filter(col("doc_id") > thr))
   }
 
   /** The one gate lifecycle: start `frame` into a memory sink named
@@ -312,7 +221,7 @@ object StreamGate {
   def s9TemporalAsof(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
     import spark.implicits._
     run(spark, "s9", Streams.temporalAsofStream(
-        replay(spark, dir, Events)
+        replay(spark, dir, Stages.gateEventsFeed)
           .select(col("event_id").as("eventId"), col("user_id").as("userId"),
             col("event_type").as("eventType"))
           .as[ProbeEvent]))
@@ -344,7 +253,7 @@ object StreamGate {
     // exact twin of the probe: x36's hit counts, read from the shared
     // stage (identical 90/10 split and gram keys — the lineage runs once
     // per session across x36 and this gate)
-    val exact = graft.ops.Stages.x36Hits(spark, dir)
+    val exact = Stages.x36Hits(spark, dir)
       .select(col("doc_id"), col("n_keys"), col("n_hit"))
     streamed.join(exact, Seq("doc_id"))
       .select(col("doc_id"), col("n_keys"), col("n_hit"),
@@ -360,7 +269,7 @@ object StreamGate {
     * x67's batch encode, in the s16 frozen-model posture: the WORD-TYPE
     * BPE merge table (x62b's trainer — the production subword path) is
     * trained ONCE on the oldest-90% history slice (the s8/x36 split, via
-    * [[graft.ops.Stages.s17Merges]]), frozen into the streaming plan as
+    * [[Stages.s17Merges]]), frozen into the streaming plan as
     * k literal `replace` passes, and applied to every arriving document
     * rendered char-level-within-words ([[graft.ops.TextOps.charSeqCol]]
     * — the 3-space word boundary keeps intra-word merges exact on whole
@@ -376,7 +285,7 @@ object StreamGate {
     * ≤thr, char-level replay on >thr) as unrolled materialized CTEs —
     * exact parity, no bound flags needed. */
   def s17BpeDriftStream(spark: SparkSession, dir: String): DataFrame = {
-    val merges = graft.ops.Stages.s17Merges(spark, dir)
+    val merges = Stages.s17Merges(spark, dir)
       .orderBy("round").collect() // k rows — the frozen tokenizer
       .map(r => (r.getString(1), r.getString(2)))
     val base = arrivals(spark, dir)._2
@@ -401,7 +310,7 @@ object StreamGate {
     * (per-row array-min twin, pinned equal in this spec) and probed
     * against a FROZEN index of the history slice's bands, each band
     * carrying the OR of its held members' sticky splits
-    * ([[graft.ops.Stages.x68Sticky]] — the same phase-1 table x68
+    * ([[Stages.x68Sticky]] — the same phase-1 table x68
     * reads). One split bit → route there ('inherited'); conflicting
     * bits → 'quarantine' (the arrival bridges clusters with different
     * held splits — x68's rule, decided from direct band neighbors);
@@ -428,7 +337,7 @@ object StreamGate {
     // (materialized once per session, shared with x69's audit) so the
     // feed's micro-batches re-read blocks instead of re-running the
     // banding + fixpoint per batch per join
-    val joined = bandProbe(spark, dir, graft.ops.Stages.s18Index(spark, dir), "bits")
+    val joined = bandProbe(spark, dir, Stages.s18Index(spark, dir), "bits")
     // a shingle-less arrival matches nothing and routes 'fresh'
     val routed = joined.select(col("doc_id"),
       (0 until 4).map(b => coalesce(col(s"bits$b"), lit(0L)))
@@ -444,7 +353,7 @@ object StreamGate {
     * 14th gate, and the s18 posture applied to LABELS): each arriving
     * document is banded with the exact x13 signature pipeline and
     * probed against a FROZEN (band, h) → min-history-label index
-    * ([[graft.ops.Stages.s21Index]] — history bands at the shared df
+    * ([[Stages.s21Index]] — history bands at the shared df
     * cap joined to the frozen history labeling, x75's seed). The
     * arrival is assigned the MINIMUM matched neighbor label
     * ('matched' — "this incoming doc belongs to that stored dedup
@@ -462,7 +371,7 @@ object StreamGate {
     * bands → capped min-label index, arrival bands → min) — exact
     * parity, no bound flags. */
   def s21LabelRouteStream(spark: SparkSession, dir: String): DataFrame = {
-    val joined = bandProbe(spark, dir, graft.ops.Stages.s21Index(spark, dir), "lab")
+    val joined = bandProbe(spark, dir, Stages.s21Index(spark, dir), "lab")
     // least() skips nulls: the min over however many bands matched (a
     // shingle-less arrival matches nothing and assigns 'fresh')
     val minLab = least((0 until 4).map(b => col(s"lab$b")): _*)
@@ -519,7 +428,7 @@ object StreamGate {
       .agg(Tables.fdiv(sum(size(split(col("text"), " ")).cast("long")), lit(2L)).as("b"))
       .collect()(0).getLong(0) // 1 row — the x65 budget rule
     val shardBudget = Math.floorDiv(budget, s19Shards)
-    val src = replay(spark, dir, Documents)
+    val src = replay(spark, dir, Stages.gateDocsFeed)
       .select(col("doc_id").as("docId"),
         (graft.ops.PipelineOps.h16(col("doc_id")) % s19Shards).as("shard"),
         size(split(col("text"), " ")).cast("long").as("nTok"))
@@ -606,7 +515,7 @@ object StreamGate {
     import org.apache.spark.sql.types.LongType
     val stats = graft.ops.Artifacts.RetrievalStats.key
     val statDf = graft.ops.Artifacts.configuredPath(spark, stats) match {
-      case Some(p) => graft.ops.Stages.readStamped(spark, p, stats)
+      case Some(p) => Stages.readStamped(spark, p, stats)
       case None    => deriveRetrievalStats(spark, dir)
     }
     // bound the collect BEFORE it happens: limit(1001) caps what can ever
@@ -659,7 +568,8 @@ object StreamGate {
     * (guaranteed: per-slot bound N_slot/(k+1) ≤ 0.02% of the group). */
   def s10FreqStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
     s10Verdict(spark, dir,
-      run(spark, "s10", Streams.freqStream(s10Tokens(replay(spark, dir, Documents)), s10K)))
+      run(spark, "s10",
+        Streams.freqStream(s10Tokens(replay(spark, dir, Stages.gateDocsFeed)), s10K)))
   }
 
   /** The s10 stream transform: document rows → slotted bigram tokens
@@ -688,7 +598,7 @@ object StreamGate {
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .select(col("lang"), explode(col("cand")).as("bg"))
     // exact twin from the shared stage (same lineage as q27c's verdict)
-    graft.ops.Stages.q27cHitters(spark, dir)
+    Stages.q27cHitters(spark, dir)
       .join(cand.withColumn("in_sketch", lit(1L)), Seq("lang", "bg"), "left")
       .select(col("lang"), col("bg"), col("cnt"),
         coalesce(col("in_sketch"), lit(0L)).as("in_sketch"))
@@ -735,7 +645,7 @@ object StreamGate {
     * exact weekly distincts (batch twin) + a 3·rsd bound flag the
     * oracle pins to 1; the raw estimate is never emitted. */
   def s11DistinctStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    s11Verdict(spark, dir, run(spark, "s11", s11Aggregate(replay(spark, dir, Events)
+    s11Verdict(spark, dir, run(spark, "s11", s11Aggregate(replay(spark, dir, Stages.gateEventsFeed)
       .select(col("event_id"), col("ts"), col("user_id"))), "complete"))
   }
 
@@ -795,7 +705,7 @@ object StreamGate {
     * (complete-mode gate; update mode + event-time watermark evicting
     * closed weeks is the production form, like s11). */
   def s13QuantileStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    s13Verdict(spark, dir, run(spark, "s13", s13Aggregate(replay(spark, dir, Events)
+    s13Verdict(spark, dir, run(spark, "s13", s13Aggregate(replay(spark, dir, Stages.gateEventsFeed)
       .select(col("event_id"), col("ts"), col("value"))), "complete"))
   }
 
@@ -810,7 +720,7 @@ object StreamGate {
     * predecessor but emit no visible version, same as c7. */
   def s12Scd2Stream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
     import spark.implicits._
-    run(spark, "s12", Streams.scd2Stream(replay(spark, dir, Events)
+    run(spark, "s12", Streams.scd2Stream(replay(spark, dir, Stages.gateEventsFeed)
         .select(col("event_id").as("eventId"), unix_millis(col("ts")).as("tsMs"),
           col("user_id").as("userId"), col("event_type").as("op"), col("value"))
         .as[Scd2Record]))
@@ -853,7 +763,7 @@ object StreamGate {
     * memory sink like s11/s13; update mode + an event-time watermark
     * evicting closed weeks is the production form. */
   def s14TopkStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    run(spark, "s14", s14Aggregate(replay(spark, dir, Events)
+    run(spark, "s14", s14Aggregate(replay(spark, dir, Stages.gateEventsFeed)
         .select(col("event_id"), col("ts"), col("value"))), "complete")
       .select(col("wk"), posexplode(col("tk")))
       .select(col("wk"), (col("pos") + 1).cast("long").as("rnk"),
@@ -883,8 +793,9 @@ object StreamGate {
     * event-time watermark closing days (each day's verdict firing once
     * its baseline week is sealed) is the production form. */
   def s15AnomalyStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    graft.ops.Windows.q32AnomalyOn(run(spark, "s15", s15Aggregate(replay(spark, dir, Events)
-      .select(col("event_type"), col("ts"))), "complete"))
+    graft.ops.Windows.q32AnomalyOn(run(spark, "s15",
+      s15Aggregate(replay(spark, dir, Stages.gateEventsFeed)
+        .select(col("event_type"), col("ts"))), "complete"))
   }
 
   /** s16's per-row IVFADC routing + encoding against the FROZEN
@@ -901,8 +812,8 @@ object StreamGate {
       df: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.{dotArr, normSqArr}
     import graft.ops.VectorOps.{pqK, pqM, pqSub, x16Scale}
-    val cents = graft.ops.Stages.x16Centroids(spark, dir)
-    val books = graft.ops.Stages.pqBooks(spark, dir)
+    val cents = Stages.x16Centroids(spark, dir)
+    val books = Stages.pqBooks(spark, dir)
     val v = col("embedding")
     val nrm = sqrt(normSqArr(v))
     // route: max scaled-cosine, lowest-cid ties — the ONE shared
@@ -925,11 +836,11 @@ object StreamGate {
   }
 
   /** The s16 batch twin: per-list occupancy and summed code words from
-    * the STORED [[graft.ops.Stages.x57Index]] — the same materialized
+    * the STORED [[Stages.x57Index]] — the same materialized
     * index x57 serves. */
   private[streaming] def s16BatchLists(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.VectorOps.pqM
-    graft.ops.Stages.x57Index(spark, dir)
+    Stages.x57Index(spark, dir)
       .groupBy(col("list_id"))
       .agg(Tables.fdiv(count(lit(1)), lit(pqM.toLong)).as("n_vecs"),
         sum(col("cid") *
@@ -951,7 +862,7 @@ object StreamGate {
     * row per inverted list — k rows total, the minimal-state s11
     * footing; at 100 TB of arrivals the state is still k rows. */
   def s16PqStream(spark: SparkSession, dir: String): DataFrame = withRocksDB(spark) {
-    val streamed = run(spark, "s16", s16Encode(spark, dir, replay(spark, dir, Embeddings))
+    val streamed = run(spark, "s16", s16Encode(spark, dir, replay(spark, dir, Stages.gateEmbFeed))
       .groupBy(col("list_id"))
       .agg(count(lit(1)).as("n_vecs_s"), sum(col("cw")).as("cw_sum_s")), "complete")
     s16BatchLists(spark, dir).join(streamed, Seq("list_id"), "left")

@@ -1,9 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables._
 import graft.functions.VectorFunctions.dotArr
+
+/** Byte-stats features of the stub media decode ([[Oracles.decodeFeatures]]);
+  * metadata (width) is carried through the decode batch rather than
+  * re-joined afterwards. */
+case class MediaFeatures(doc_id: Long, n_bytes: Long, first_byte: Long,
+    byte_sum: Long, format: String, width: Long)
 
 /** Reference formulations that exist only as test oracles: brute-force
   * and all-pairs twins of the registered joins, lambda twins of the
@@ -140,11 +146,43 @@ object Oracles {
       .orderBy("wk")
   }
 
+  /** Build the media table: documents' text bytes as the opaque payload,
+    * deterministic fake metadata. */
+  def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
+    import spark.implicits._
+    documents(spark, dir)
+      .select(col("doc_id"),
+        col("text").cast("binary").as("payload"),
+        lit("fake/raw").as("format"),
+        (col("n_chars") % 640).cast("int").as("width"),
+        (col("n_chars") % 480).cast("int").as("height"))
+      .as[MediaRow]
+  }
+
+  /** The decode entry for ANY media table (synthetic or file-ingested):
+    * per-partition batch, codec init amortized per task. */
+  def decodeFeatures(media: Dataset[MediaRow]): Dataset[MediaFeatures] = {
+    import media.sparkSession.implicits._
+    media.mapPartitions(decodeBatch)
+  }
+
+  /** STUB decode: in production this is the codec call; here it computes
+    * deterministic byte statistics so the pipeline is oracle-checkable. */
+  private def decodeBatch(rows: Iterator[MediaRow]): Iterator[MediaFeatures] =
+    rows.map { r =>
+      var sum = 0L
+      var i = 0
+      while (i < r.payload.length) { sum += (r.payload(i) & 0xff); i += 1 }
+      MediaFeatures(r.doc_id, r.payload.length.toLong,
+        if (r.payload.nonEmpty) (r.payload(0) & 0xff).toLong else 0L, // ascii('') = 0
+        sum, r.format, r.width.toLong)
+    }
+
   /** The pre-r13 stub pipeline: byte statistics over the synthetic media
     * table — the codec-free decode-batch exemplar; the registered x15
     * key runs the real-decode path. */
   def x15ByteStats(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.decodeFeatures(Multimodal.mediaTable(spark, dir))
+    decodeFeatures(mediaTable(spark, dir))
       .select(col("doc_id"), col("n_bytes"), col("first_byte"), col("byte_sum"), col("width"))
       .orderBy("doc_id")
 }

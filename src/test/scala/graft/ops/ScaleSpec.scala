@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.sources.Sources
+import graft.sources.TestSinks
 import graft.streaming.{WalRecord, Streams, TestSink}
 
 /** Scale-technique evidence: salting, bucketed shuffle-free joins, and
@@ -391,9 +391,9 @@ class ScaleSpec extends SparkTestBase {
       val loc = new java.io.File(s"spark-warehouse/$t")
       if (loc.exists()) graft.SparkTestBase.deleteRecursively(loc)
     }
-    Sources.writeBucketed(
+    TestSinks.writeBucketed(
       graft.model.Tables.orders(s, sf0001), "orders_b", "o_orderkey", 8)
-    Sources.writeBucketed(
+    TestSinks.writeBucketed(
       graft.model.Tables.lineitem(s, sf0001)
         .withColumnRenamed("l_orderkey", "o_orderkey"), "lineitem_b", "o_orderkey", 8)
     val joined = s.table("orders_b").join(s.table("lineitem_b"), "o_orderkey")

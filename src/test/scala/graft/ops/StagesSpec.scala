@@ -246,23 +246,27 @@ class StagesSpec extends SparkTestBase {
     import java.nio.file.Paths
     val other = spark.newSession()
     try {
-      val mine = Multimodal.pngCorpus(spark, sf0001)
-      val theirs = Multimodal.pngCorpus(other, sf0001)
+      val mine = Stages.pngCorpus(spark, sf0001)
+      val theirs = Stages.pngCorpus(other, sf0001)
       assert(mine != theirs, "each session must own its own PNG scratch dir")
       assert(Files.exists(Paths.get(mine)) && Files.exists(Paths.get(theirs)))
-      assert(Multimodal.cachedMediaCount(other) == 1)
+      assert(Stages.sessionEntryCount(other) == 1)
       Stages.evictSession(other)
       assert(!Files.exists(Paths.get(theirs)),
         "evicted session's PNG scratch dir must be deleted from disk")
-      assert(Multimodal.cachedMediaCount(other) == 0)
+      assert(Stages.sessionEntryCount(other) == 0)
       assert(Files.exists(Paths.get(mine)),
         "evicting one session must not delete another session's PNG scratch")
       // a rebuilt corpus after eviction lands in a FRESH dir (no stale path)
-      val rebuilt = Multimodal.pngCorpus(other, sf0001)
+      val rebuilt = Stages.pngCorpus(other, sf0001)
       assert(rebuilt != theirs && Files.exists(Paths.get(rebuilt)))
+      // the global reset deletes every session's corpus dir
+      Stages.clear()
+      assert(!Files.exists(Paths.get(mine)) && !Files.exists(Paths.get(rebuilt)),
+        "Stages.clear() must delete the corpus dirs it drops")
     } finally {
       Stages.evictSession(other)
-      graft.ops.Multimodal.evictSessionMedia(spark)
+      Stages.evictSession(spark)
     }
   }
 
@@ -290,5 +294,29 @@ class StagesSpec extends SparkTestBase {
     // the cache must rebuild cleanly after eviction
     assert(Stages.x9Scores(spark, sf0001).count() > 0)
     Stages.clear()
+  }
+
+  test("the stage registry: 30 bench lines in order, each building exactly its own entry") {
+    // the bench's stage:* lines ARE the registry, in declaration order —
+    // pinned here so a reorder or a new artifact is a visible change
+    val names = Seq("x16_centroids", "pq_books", "x57_index", "series_daily",
+      "x49_grams", "grams5", "x2_pairs", "x13_bands", "x13_pairs", "x24_labels",
+      "x75_seed", "x75_labels", "x68_sticky", "x68_assign", "s18_index", "s21_index",
+      "x9_scores", "x62_merges", "s17_merges", "x36_hits", "q27c_hitters",
+      "sketch_daily", "q24_keystats", "q26_bloom", "png_corpus", "wav_corpus",
+      "gif_corpus", "gate_events_feed", "gate_docs_feed", "gate_emb_feed")
+    assert(Stages.registry.map(_.name) == names)
+    // built in that order from a clear cache, every line adds exactly one
+    // entry: no line builds an artifact declared after it (its line would
+    // then absorb that build) and none reads a stamped store
+    Stages.clear()
+    try {
+      Stages.registry.foreach { st =>
+        val n0 = Stages.cachedEntryCount
+        st(spark, sf0001)
+        assert(Stages.cachedEntryCount == n0 + 1,
+          s"stage:${st.name} added ${Stages.cachedEntryCount - n0} entries, not 1")
+      }
+    } finally Stages.clear()
   }
 }

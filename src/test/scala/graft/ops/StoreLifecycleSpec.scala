@@ -235,7 +235,7 @@ class StoreLifecycleSpec extends SparkTestBase {
       "x68_assign" -> (() => Stages.x68Assign(spark, sf0001)),
       "s18_index" -> (() => Stages.s18IndexFull(spark, sf0001)),
       "s21_index" -> (() => Stages.s21IndexFull(spark, sf0001)),
-      "x62b_merges" -> (() => Stages.s17Merges(spark, sf0001)),
+      "s17_merges" -> (() => Stages.s17Merges(spark, sf0001)),
       "sketch_daily" -> (() => Stages.sketchDaily(spark, sf0001)),
       "x57_index" -> (() => Stages.x57Index(spark, sf0001)))
     val persists: Seq[(String, String => Unit)] = Seq(

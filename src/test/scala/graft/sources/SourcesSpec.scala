@@ -53,7 +53,7 @@ class SourcesSpec extends SparkTestBase {
     val packed = graft.ops.PipelineOps.x31Packing(spark, sf0001)
       .orderBy(col("doc_id").desc).repartition(5)
     val out = Files.createTempDirectory("graft-shards").toString
-    Sources.writePackedShards(packed, out)
+    TestSinks.writePackedShards(packed, out)
     val writerDirs = new java.io.File(out).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("writer=")).map(_.getName).sorted
     assert(writerDirs.nonEmpty, s"no writer partition dirs under $out")
@@ -80,7 +80,7 @@ class SourcesSpec extends SparkTestBase {
          |{"doc_id": 900002, "text": "wholly novel tokens zq1 zq2 zq3 zq4 zq5 zq6"}
          |""".stripMargin)
     val stream = graft.streaming.Streams.noveltyStream(
-      spark, Sources.documentsFileStream(spark, dir.toString), index)
+      spark, TestSinks.documentsFileStream(spark, dir.toString), index)
     val q = stream.writeStream.format("memory").queryName("docstream_gate")
       .outputMode("append").start()
     try {
@@ -114,7 +114,7 @@ class SourcesSpec extends SparkTestBase {
     assert(!metaPlan.contains("content"),
       s"metadata query must prune the payload column:\n$metaPlan")
     // ingest → typed media rows → the same decode batch x15 uses
-    val feats = graft.ops.Multimodal.decodeFeatures(
+    val feats = graft.ops.Oracles.decodeFeatures(
         graft.ops.Multimodal.mediaFromFiles(s, dir.toString, "*.png"))
       .collect().sortBy(_.n_bytes)
     assert(feats.length == 2)
@@ -242,7 +242,7 @@ class SourcesSpec extends SparkTestBase {
     import s.implicits._
     val tmp = Files.createTempDirectory("graft-orc")
     val ev = graft.model.Tables.events(s, sf0001)
-    Sources.writeOrc(ev, s"$tmp/events_orc")
+    TestSinks.writeOrc(ev, s"$tmp/events_orc")
     val back = Sources.orc(s, s"$tmp/events_orc")
     assert(back.count() == ev.count())
     assert(back.schema == ev.schema)

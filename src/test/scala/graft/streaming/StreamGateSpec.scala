@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import graft.ops.Stages
 
 /** A local FS whose setTimes does not stick (every call pins the same
   * constant) — the degraded-store shape StreamGate's staging guard exists
@@ -760,29 +761,35 @@ class StreamGateSpec extends SparkTestBase {
   test("shared feeds: cached per session, failed builds not cached, evictSession frees the dirs") {
     // a fresh session isolates the cache keys from the suite's other runs
     val s2 = spark.newSession()
-    val f1 = StreamGate.sharedDocsFeed(s2, sf0001)
+    val f1 = Stages.gateDocsFeed(s2, sf0001)
     assert(java.nio.file.Files.exists(f1.dir), "staged feed dir must exist")
     // cached: same Feed instance (same dir), no second staging build
-    assert(StreamGate.sharedDocsFeed(s2, sf0001).dir == f1.dir)
+    assert(Stages.gateDocsFeed(s2, sf0001).dir == f1.dir)
     // the documented session-end hook frees the feed dirs too
-    graft.ops.Stages.evictSession(s2)
+    Stages.evictSession(s2)
     assert(!java.nio.file.Files.exists(f1.dir), "evictSession must delete the feed dir")
     // next ask rebuilds into a fresh dir (no poisoned entry)
-    val f2 = StreamGate.sharedDocsFeed(s2, sf0001)
+    val f2 = Stages.gateDocsFeed(s2, sf0001)
+    assert(f2.dir != f1.dir && java.nio.file.Files.exists(f2.dir))
+    // the global reset frees the feed dirs the same way, and the next ask
+    // restages into a new dir
+    Stages.clear()
+    assert(!java.nio.file.Files.exists(f2.dir), "Stages.clear() must delete the feed dir")
+    val f2b = Stages.gateDocsFeed(s2, sf0001)
     try {
-      assert(f2.dir != f1.dir && java.nio.file.Files.exists(f2.dir))
-    } finally graft.ops.Stages.evictSession(s2)
+      assert(f2b.dir != f2.dir && java.nio.file.Files.exists(f2b.dir))
+    } finally Stages.evictSession(s2)
     // a FAILED staging build must not be cached: break setTimes, watch
     // the build throw, fix it, and the same key must rebuild cleanly
     val s3 = spark.newSession()
     s3.conf.set("fs.file.impl", classOf[FrozenTimesFileSystem].getName)
     s3.conf.set("fs.file.impl.disable.cache", "true")
-    intercept[IllegalArgumentException] { StreamGate.sharedEventsFeed(s3, sf0001) }
+    intercept[IllegalArgumentException] { Stages.gateEventsFeed(s3, sf0001) }
     s3.conf.set("fs.file.impl", classOf[org.apache.hadoop.fs.LocalFileSystem].getName)
-    val f3 = StreamGate.sharedEventsFeed(s3, sf0001)
+    val f3 = Stages.gateEventsFeed(s3, sf0001)
     try assert(java.nio.file.Files.exists(f3.dir),
       "after the store recovers the same key must stage successfully")
-    finally graft.ops.Stages.evictSession(s3)
+    finally Stages.evictSession(s3)
   }
 
   test("s8 gate: exact counts cover every arrival and all verdict flags hold") {

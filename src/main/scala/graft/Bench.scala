@@ -2,8 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-import graft.util.Json
+import graft.util.{BenchDiag, Json}
 
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -23,24 +22,20 @@ import graft.util.Json
   * mystery — and no stage line absorbs another's: the registry declares
   * each artifact after those its build reads); queries then execute in
   * sorted-key order for run-to-run comparability. Every timed line is
-  * one [[graft.util.BenchDiag.attempt]]: a NonFatal failure is reported
+  * one [[graft.util.BenchDiag.Runner.attempt]]: a NonFatal failure is reported
   * with the sentinel time -1.0 (never silently folded into the total), a
   * fatal one ends the run. The full JSON line is also written to
   * `bench_results.json` in the CWD, immune to the driver's bounded
   * stdout tail capture. */
 object Bench {
+  /** The compact line's size bound: headroom inside a ~2000-char stdout
+    * tail capture for sbt's "[info] " prefix and trailing
+    * "[success] Total time" line. */
+  val tailBudget = 1600
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session(Driver.cpus(4))
     // warmup: scan+agg, window, and broadcast-join plans through the SAME
     // noop-write path the timed queries use, untimed — count() alone left
     // DSv2 noop-sink resolution + write-path codegen to land on the first
@@ -58,49 +53,22 @@ object Bench {
     // the r19 driver bench had three contiguous wall-clock windows where
     // unchanged code inflated 4–18× (host stalls — the same keys read
     // normal isolated minutes later), and the single-run artifact carried
-    // nothing to adjudicate it. Process-CPU-vs-wall and the GC delta are
-    // a few MXBean reads per attempt (no tmpdir walk — that stays behind
-    // SPARK_GRAFT_BENCH_DIAG): a query whose attempt burned ~0 process
-    // CPU across a multi-second wall is a host stall, not a plan change.
-    // Reported per query in bench_results.json ("queries_diag") and as a
-    // bounded "stall_suspect" list on the driver-parsed compact line.
-    def procCpuNs(): Long =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-        case _ => -1L
-      }
-    def totalGcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ > 0).sum
-    }
-    // per query: summed wall/CPU/GC over attempts — cpu is "cores busy"
-    // (CPU sec per wall sec); a healthy multi-second query at local[N]
-    // reads well above 1, a stalled one collapses toward 0
-    val diagAcc = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Double, Double, Long)] // wall s, cpu s, gc ms
+    // nothing to adjudicate it. The runner sums process CPU, wall and GC
+    // per line (a few MXBean reads per attempt): a query whose attempts
+    // burned ~0 process CPU across a multi-second wall is a host stall,
+    // not a plan change. Reported per query in bench_results.json
+    // ("queries_diag") and as a bounded "stall_suspect" list on the
+    // compact line.
     // SPARK_GRAFT_BENCH_DIAG=<path.jsonl>: opt-in per-attempt diagnostics
-    // — cumulative JVM GC ms, used heap, and the spark/RocksDB/feed
-    // scratch footprint under java.io.tmpdir — appended after every timed
-    // attempt, stage lines included (a regressed stage build, the r16
-    // x68_sticky/x16_centroids watch, needs the same context). Purpose:
+    // (see BenchDiag), stage lines included (a regressed stage build, the
+    // r16 x68_sticky/x16_centroids watch, needs the same context). Purpose:
     // pin the random-order RocksDB-gate inflation (r14: s12 4.5→25.1 s
     // when late in a shuffled order) to session aging (GC/heap climb) vs
-    // state-store accumulation (scratch climb). Best-effort and opt-in:
-    // the walk costs real time on big scratch trees, so it must never run
-    // on a driver bench.
-    val diagPath = sys.env.get("SPARK_GRAFT_BENCH_DIAG")
-    // one timed attempt (graft.util.BenchDiag.attempt: -1.0 on a NonFatal
-    // failure, diag row appended) plus this run's CPU/GC accounting
-    def attempt(name: String)(body: => Unit): Double = {
-      val (gc0, cpu0) = (totalGcMs(), procCpuNs())
-      val sec = graft.util.BenchDiag.attempt(diagPath, name)(body)
-      val (wallP, cpuP, gcP) = diagAcc.getOrElse(name, (0.0, 0.0, 0L))
-      diagAcc(name) = (wallP + math.max(sec, 0.0),
-        cpuP + math.max(procCpuNs() - cpu0, 0L) / 1e9,
-        gcP + math.max(totalGcMs() - gc0, 0L))
-      sec
-    }
+    // state-store accumulation (scratch climb).
+    val runner = new BenchDiag.Runner(sys.env.get("SPARK_GRAFT_BENCH_DIAG"))
+    // SPARK_GRAFT_BENCH_ONLY=q1,s8,... isolates queries (the honest way
+    // to time one line, per the README position-noise note)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
     // Every staged artifact of graft.ops.Stages (frames, driver-held
     // values, media corpora, gate replay feeds) is pre-materialized
     // BEFORE the per-query loop, each as its own TIMED line
@@ -117,27 +85,18 @@ object Bench {
     // everything it triggers (including a shared build) — that's the
     // point of isolating it. partial_total already marks the regime.
     val stageResults =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) Seq.empty[(String, Double)]
+      if (only.isDefined) Seq.empty[(String, Double)]
       else graft.ops.Stages.registry.map { st =>
         val name = "stage:" + st.name
-        name -> attempt(name)(st(spark, sfDir))
+        name -> runner.attempt(name)(st(spark, sfDir))
       }
     // default order is sorted keys (run-to-run comparability); set
     // SPARK_GRAFT_BENCH_ORDER=random (+ optional SPARK_GRAFT_BENCH_SEED)
     // to shuffle it — separates real per-query cost from position
     // effects (session aging, host contention) in A/B readings
-    // SPARK_GRAFT_BENCH_ONLY=q1,s8,... isolates queries (the honest way
-    // to time one line, per the README position-noise note)
     val ordered = {
-      val all = SparkEntry.queries.toSeq.sortBy(_._1)
-      val sorted = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-        case Some(csv) =>
-          val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-          val unknown = want -- all.map(_._1).toSet
-          require(unknown.isEmpty, s"unknown SPARK_GRAFT_BENCH_ONLY keys: $unknown")
-          all.filter { case (n, _) => want(n) }
-        case None => all
-      }
+      val sorted = Driver.select(SparkEntry.queries.toSeq.sortBy(_._1), only,
+        "SPARK_GRAFT_BENCH_ONLY")
       if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("random")) {
         val seed = sys.env.getOrElse("SPARK_GRAFT_BENCH_SEED", "42").toLong
         new scala.util.Random(seed).shuffle(sorted)
@@ -162,7 +121,7 @@ object Bench {
         var failed = false
         var n = 0
         while (n < repeat && !failed) {
-          val sec = attempt(name)(
+          val sec = runner.attempt(name)(
             fn(spark, sfDir).write.format("noop").mode("overwrite").save())
           if (sec >= 0) runs += sec else failed = true
           n += 1
@@ -171,18 +130,12 @@ object Bench {
         else (name, median(runs.toSeq), runs.min)
       }
     val results = timed.map { case (n, med, _) => (n, med) }
-    // 3-decimal formatting keeps the whole line compact enough for the
-    // driver's bounded tail capture even as the query surface grows —
-    // round 2's full-precision line overflowed it and lost the total.
-    def fmt(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v) => Json.quote(k) + ":" + fmt(v) }
-      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // a filtered run must not masquerade as a full-surface total, and a
     // warm-median run (REPEAT>=2, see caveat above) must not masquerade
     // as a cold single-run total
     val metric =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) "partial_total"
+      if (only.isDefined) "partial_total"
       else if (repeat > 1) "warm_total"
       else "total"
     // repeat mode also reports each query's MIN attempt ("queries_min"):
@@ -190,58 +143,22 @@ object Bench {
     // gap is the noise band a reader would otherwise have to guess at
     val repeatField =
       if (repeat > 1) {
-        val mins = timed.map { case (k, _, mn) => Json.quote(k) + ":" + fmt(mn) }
-          .mkString("{", ",", "}")
+        val mins = Json.seconds(timed.map { case (k, _, mn) => (k, mn) })
         s""","repeat":$repeat,"queries_min":$mins"""
       } else ""
     // stall evidence (r20): per-query CPU-cores-busy + GC delta on the
     // full line; keys whose summed attempts burned <1 CPU-core across a
     // ≥2 s wall are named on the compact line (bounded list) so the
     // driver's single-run artifact self-labels host-stall contamination
-    val diagField = {
-      val d = results.flatMap { case (k, _) => diagAcc.get(k).map { case (w, c, g) =>
-        Json.quote(k) + s""":{"cpu":${f"${if (w > 0) c / w else -1.0}%.2f"},"gc_ms":$g}"""
-      } }.mkString("{", ",", "}")
-      s""","queries_diag":$d"""
-    }
+    val diagField = results.flatMap { case (k, _) => runner.totals(k).map { a =>
+      Json.quote(k) + s""":{"cpu":${f"${a.coresBusy}%.2f"},"gc_ms":${a.gcMs}}"""
+    } }.mkString(""","queries_diag":{""", ",", "}")
     val stallSuspects = results.collect { case (k, v)
-      if v >= 2.0 && diagAcc.get(k).exists { case (w, c, _) => w > 0 && c / w < 1.0 } => k }
-    val stallField =
-      if (stallSuspects.isEmpty) ""
-      else s""","stall_suspect":${stallSuspects.take(8).map(Json.quote).mkString("[", ",", "]")}"""
-    val line = s"""{"metric":${Json.quote(metric)},"value":${fmt(total)},"unit":"sec","queries":$qs,"sf":${Json.quote(sfDir)}$repeatField$diagField}"""
+      if v >= 2.0 && runner.totals(k).exists(a => a.wall > 0 && a.coresBusy < 1.0) => k }
+    val line = s"""{"metric":${Json.quote(metric)},"value":${f"$total%.3f"},"unit":"sec",""" +
+      s""""queries":${Json.seconds(results)},"sf":${Json.quote(sfDir)}$repeatField$diagField}"""
     println(line)
-    // The driver ingests only the LAST ~2000 characters of stdout; the
-    // full line above is ~3× that, so its head is cut off and the driver
-    // records parsed=null (every BENCH_r1..r12 artifact). Emit a second,
-    // size-bounded line LAST — same metric/total/sf, queries trimmed to
-    // the most expensive keys until the line fits well inside the tail
-    // window (headroom for sbt's "[info] " prefix and trailing
-    // "[success] Total time" line) — so the driver always finds one
-    // complete parseable line. "elided" counts the dropped (cheap) keys;
-    // the untrimmed vector is bench_results.json.
-    val tailBudget = 1600
-    def compactLine(k: Int): String = {
-      // failed queries (sentinel -1.0) are never elided — a missing
-      // failure marker would read as "all green" from the parsed artifact
-      val (failed, ok) = results.partition(_._2 < 0)
-      val top = (failed ++ ok.sortBy { case (_, v) => -v }.take(math.max(k - failed.size, 0)))
-        .sortBy(_._1)
-      val tq = top.map { case (n, v) => Json.quote(n) + ":" + fmt(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":${Json.quote(metric)},"value":${fmt(total)},"unit":"sec","queries":$tq,""" +
-        s""""sf":${Json.quote(sfDir)},"compact":true,"n_queries":${results.size},""" +
-        s""""elided":${results.size - top.size},"full":"bench_results.json"${
-          if (repeat > 1) s""","repeat":$repeat""" else ""}$stallField}"""
-    }
-    var k = results.size
-    var compact = compactLine(k)
-    while (compact.length > tailBudget && k > 1) {
-      // shrink proportionally, then by 1 — terminates at k=1
-      k = math.min(k - 1, (k * tailBudget) / compact.length)
-      compact = compactLine(math.max(k, 1))
-    }
-    println(compact)
+    println(compactLine(results, total, metric, sfDir, repeat, stallSuspects))
     // Builder-side copy of the full bench line (repo root, next to
     // CORPUS_STATS_BENCH.json): the driver's stdout tail capture is
     // bounded and has truncated the head of the queries map before
@@ -264,5 +181,39 @@ object Bench {
       System.err.println(s"[bench] corpus stats failed (non-fatal): ${e.getMessage}")
     }
     spark.stop()
+  }
+
+  /** The size-bounded line printed LAST. A bounded stdout tail capture
+    * keeps only the last ~2000 characters; the full line is ~3× that, so
+    * its head is cut off and the reading parses as null (every
+    * BENCH_r1..r12 artifact). This line keeps the same metric/total/sf
+    * with the queries trimmed to the most expensive keys until it fits
+    * `tailBudget`, so the tail always holds one complete parseable line. Failed lines
+    * (sentinel -1.0) are never elided — a missing failure marker would
+    * read as "all green" from the parsed artifact. "elided" counts the
+    * dropped (cheap) keys; the untrimmed vector is bench_results.json. */
+  def compactLine(results: Seq[(String, Double)], total: Double, metric: String,
+      sfDir: String, repeat: Int, stallSuspects: Seq[String]): String = {
+    val (failed, ok) = results.partition(_._2 < 0)
+    val stallField =
+      if (stallSuspects.isEmpty) ""
+      else s""","stall_suspect":${stallSuspects.take(8).map(Json.quote).mkString("[", ",", "]")}"""
+    def fit(k: Int): String = {
+      val top = (failed ++ ok.sortBy { case (_, v) => -v }.take(math.max(k - failed.size, 0)))
+        .sortBy(_._1)
+      s"""{"metric":${Json.quote(metric)},"value":${f"$total%.3f"},"unit":"sec",""" +
+        s""""queries":${Json.seconds(top)},"sf":${Json.quote(sfDir)},"compact":true,""" +
+        s""""n_queries":${results.size},"elided":${results.size - top.size},""" +
+        s""""full":"bench_results.json"${
+          if (repeat > 1) s""","repeat":$repeat""" else ""}$stallField}"""
+    }
+    var k = results.size
+    var line = fit(k)
+    while (line.length > tailBudget && k > 1) {
+      // shrink proportionally, then by 1 — terminates at k=1
+      k = math.min(k - 1, (k * tailBudget) / line.length)
+      line = fit(math.max(k, 1))
+    }
+    line
   }
 }

@@ -1,10 +1,13 @@
 package graft
 
+import scala.collection.mutable
+import scala.language.implicitConversions
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Tables
-import graft.ops.{Analytics, Artifacts, PipelineOps, Relational, TextOps, VectorOps}
-import graft.util.BenchDiag
+import graft.ops.{Analytics, Artifacts, PipelineOps, Relational, Skew, Stages, TextOps, VectorOps}
+import graft.util.{BenchDiag, Json}
 
 /** Scaling audit for the join-heavy relational core (README "Scaling
   * audit"): replicate the fact tables 1×/2×/4× with DISJOINT key
@@ -51,59 +54,61 @@ object BenchScaling {
     // numbers, so per-user as-of/window lineages stay replica-local
     "events" -> Seq("event_id", "user_id"))
 
-  /** Lift a factor-blind query into the audit signature. */
-  private def fx(f: (SparkSession, String) => DataFrame): (SparkSession, String, Int) => DataFrame =
-    (s, d, _) => f(s, d)
+  private type Fn = (SparkSession, String, Int) => DataFrame
 
-  private val audited: Seq[(String, (SparkSession, String, Int) => DataFrame)] = Seq(
-    "q4_join_shuffle" -> fx(Relational.q4JoinShuffle _),
-    "q21_local_supplier" -> fx(Relational.q21LocalSupplier _),
-    "q22_market_share" -> fx(Relational.q22MarketShare _),
+  /** One audited leg: its line name and, for an audit-only body, how it
+    * builds its frame at a replication factor. In [[legs]] a bare name
+    * converts to a leg with no body, which times what the engine already
+    * defines under that name: `stage:<n>` builds the [[Stages.registry]]
+    * entry `n`, as Bench's stage lines do, and any other name runs the
+    * query SparkEntry registers under it. */
+  private[graft] final case class Leg(name: String, body: Option[Fn])
+  private[graft] object Leg {
+    implicit def bare(name: String): Leg = Leg(name, None)
+    implicit def explicit(leg: (String, Fn)): Leg = Leg(leg._1, Some(leg._2))
+  }
+
+  /** Every leg, in line order. */
+  private[graft] val legs: Seq[Leg] = Seq[Leg](
+    "q4_join_shuffle", "q21_local_supplier", "q22_market_share",
     // the salted skew aggregate: its whole claim is flat hot-key scaling
-    "q23_skew_agg" -> fx(graft.ops.Skew.q23SkewAgg _),
+    "q23_skew_agg",
     // join-side skew (q24): replicas CONCENTRATE the hot key — the key
     // offset is ≡0 (mod 4), so every replica's quarter re-points at order
     // 1 and the hot fan-in grows ×factor while cold fan-out stays flat.
     // All three twins pin the bulk join to shuffled merge (Skew scaladoc);
     // naive should bend with the factor, salted/split should track the
     // linear core
-    "q24_naive_join" -> fx(graft.ops.Skew.q24NaiveJoin _),
-    "q24_salted_join" -> fx(graft.ops.Skew.q24SaltedAudit _),
-    "q24_split_join" -> fx(graft.ops.Skew.q24SplitAudit _),
+    "q24_naive_join" -> ((s: SparkSession, d: String, _: Int) => Skew.q24NaiveJoin(s, d)),
+    "q24_salted_join" -> ((s: SparkSession, d: String, _: Int) => Skew.q24SaltedAudit(s, d)),
+    "q24_split_join" -> ((s: SparkSession, d: String, _: Int) => Skew.q24SplitAudit(s, d)),
     // the many-right-rows-per-hot-key shape (saltedEquiJoin's claimed
     // niche): both hot masses concentrate under the key offset (≡0 mod 4
     // and mod 10), so the emitted hot product grows ×factor² — run these
     // legs on a SMALL base (sf0.01) and modest factors
-    "q25_naive_join" -> fx(graft.ops.Skew.q25NaiveJoin _),
+    "q25_naive_join" -> ((s: SparkSession, d: String, _: Int) => Skew.q25NaiveJoin(s, d)),
     // q25_salted16_join: distinct from the REGISTERED q25_salted_join,
     // which runs the same operator at 1%/1% concentration
-    "q25_salted16_join" -> ((s: SparkSession, d: String, _: Int) =>
-      graft.ops.Skew.q25SaltedAudit(s, d)),
+    "q25_salted16_join" -> ((s: SparkSession, d: String, _: Int) => Skew.q25SaltedAudit(s, d)),
     // salted parallelism = buckets: the ∝-cores setting for this host
     "q25_salted32_join" -> ((s: SparkSession, d: String, _: Int) =>
-      graft.ops.Skew.q25SaltedAudit(s, d, buckets = 32)),
-    "q25_split_join" -> fx(graft.ops.Skew.q25SplitAudit _),
+      Skew.q25SaltedAudit(s, d, buckets = 32)),
+    "q25_split_join" -> ((s: SparkSession, d: String, _: Int) => Skew.q25SplitAudit(s, d)),
     // q26: the bloom semi-join reduction vs its unprobed twin — the
     // delta is the fact shuffle the probe prunes before it happens
     // (replicas keep their own urgent 20%, so selectivity is
     // factor-invariant while the shuffle saving grows with the corpus)
-    "q26_bloom_join" -> fx(Relational.q26BloomJoin _),
-    "q26_plain_join" -> fx(Relational.q26PlainAudit _),
+    "q26_bloom_join",
+    "q26_plain_join" -> ((s: SparkSession, d: String, _: Int) => Relational.q26PlainAudit(s, d)),
     // the custom operator vs its composed twin, same data, same factor
-    "q16_asof" -> fx(graft.ops.Windows.q16Asof _),
-    "q16b_asof_native" -> fx(graft.ops.Windows.q16bAsofNative _),
+    "q16_asof", "q16b_asof_native",
     // round-9 coverage: the previously unaudited families (windows,
     // scalars, analytics, the streaming batch analogues) — all replicate
     // through the keyed fact tables, so a replication leg is just a key
     // selection away; per-replica window partitions / group keys / join
     // matches are unchanged by construction (disjoint key namespaces)
-    "q7_window_rank" -> fx(graft.ops.Windows.q7WindowRank _),
-    "q8_window_frame" -> fx(graft.ops.Windows.q8WindowFrame _),
-    "q12_scalar_str_date" -> fx(graft.ops.Scalars.q12ScalarStrDate _),
-    "q13b_map_ops" -> fx(graft.ops.Scalars.q13bMapOps _),
-    "q17_quantiles" -> fx(graft.ops.Analytics.q17Quantiles _),
-    "q18_stats" -> fx(graft.ops.Analytics.q18Stats _),
-    "q19_pivot" -> fx(graft.ops.Analytics.q19Pivot _),
+    "q7_window_rank", "q8_window_frame", "q12_scalar_str_date", "q13b_map_ops",
+    "q17_quantiles", "q18_stats", "q19_pivot",
     // the heavy-hitter sketch, fixed knobs (threshold share shrinks the
     // qualifying set as the corpus replicates — measures the fixed-capacity
     // sketch + count cost) and the scaled form (threshold AND capacity
@@ -113,133 +118,121 @@ object BenchScaling {
     // 1e-4, i.e. ≤ 10k counters) — past that, the 100 TB form is a custom
     // MG Aggregator with deeper capacity; the q27FreqItemsAt require
     // fails loudly rather than silently voiding the guarantee margin
-    "q27_freq_items" -> fx(graft.ops.Analytics.q27FreqItems _),
+    "q27_freq_items",
     "q27_freq_items_scaledsupport" -> ((s: SparkSession, d: String, f: Int) =>
-      graft.ops.Analytics.q27FreqItemsAt(s, d, 15L, 10000L * f, 0.001 / f)),
+      Analytics.q27FreqItemsAt(s, d, 15L, 10000L * f, 0.001 / f)),
     // the native MG aggregate has no such floor: the scaled form (k ×f,
     // threshold ÷f — constant per-replica qualifying set, output ×f)
     // runs at every factor the builtin's variant cannot
-    "q27b_freq_deep" -> fx(graft.ops.Analytics.q27bFreqDeep _),
+    "q27b_freq_deep",
     "q27b_freq_deep_scaledk" -> ((s: SparkSession, d: String, f: Int) =>
-      graft.ops.Analytics.q27bFreqDeepAt(s, d, 5L, 100000L * f, 50000 * f)),
+      Analytics.q27bFreqDeepAt(s, d, 5L, 100000L * f, 50000 * f)),
     // the sketch-rollup pair: replicas add disjoint users on the SAME
     // weeks, so weekly cardinality grows ×f while sketch size (HLL
     // registers, CMS cells) stays fixed — the constant-state claim is
     // exactly what the ratio measures. The exact twins inside each
     // verdict query scale like the linear core, so the line stays
     // data-linear even as the sketch side stays flat
-    "q28_hll_rollup" -> fx(graft.ops.Analytics.q28HllRollup _),
-    "q28b_cms_counts" -> fx(graft.ops.Analytics.q28bCmsCounts _),
+    "q28_hll_rollup", "q28b_cms_counts",
     // the KLL quantile rollup: replicas add rows on the SAME weeks, so
     // weekly stream length grows ×f while sketch size stays fixed
     // (k=200, ~3 KB) — the quantile member of the constant-state claim;
     // the exact rank-check twin inside the verdict scales linearly
-    "q29_kll_rollup" -> fx(graft.ops.Analytics.q29KllRollup _),
+    "q29_kll_rollup",
     // theta: at 16× (24k users/week > 2^12 nominal) the sketches cross
     // into estimation mode — the timing stays flat either way; the
     // registered gate runs at SFs where exact mode holds
-    "q28c_theta_overlap" -> fx(graft.ops.Analytics.q28cThetaOverlap _),
+    "q28c_theta_overlap",
     // round-10 event-analytics rows: replicas add disjoint users on the
     // SAME weeks — q30's (cohort × offset) cell count stays #weeks²-
     // bounded while cell populations grow ×f; q31's grid rows grow ×f
     // with per-user span work unchanged. Both should track the linear core
-    "q30_retention" -> fx(graft.ops.Analytics.q30Retention _),
-    "q31_gapfill" -> fx(graft.ops.Windows.q31Gapfill _),
+    "q30_retention", "q31_gapfill",
     // anomaly flags: replicas add disjoint users on the SAME days, so
     // the daily rollup input grows ×f while the windowed frame stays
     // |types|×|days| — the line must track the one map-side-combinable
     // scan, nothing else
-    "q32_anomaly" -> fx(graft.ops.Windows.q32Anomaly _),
+    "q32_anomaly",
     // OHLC bars: replicas add disjoint events on the SAME bars, so bar
     // population grows ×f with the bar count fixed — the one-exchange
     // window+agg must track the scan
-    "q33_resample" -> fx(graft.ops.Windows.q33Resample _),
-    "s2_tumbling" -> fx(graft.ops.StreamingBatch.s2Tumbling _),
-    "s3_sliding" -> fx(graft.ops.StreamingBatch.s3Sliding _),
-    "s4_late_events" -> fx(graft.ops.StreamingBatch.s4LateEvents _),
-    "s5_dedup_replay" -> fx(graft.ops.StreamingBatch.s5DedupReplay _),
-    "s6_interval_join" -> fx(graft.ops.StreamingBatch.s6IntervalJoin _),
-    "s7_stream_enrich" -> fx(graft.ops.StreamingBatch.s7StreamEnrich _),
+    "q33_resample", "s2_tumbling", "s3_sliding", "s4_late_events", "s5_dedup_replay",
+    "s6_interval_join", "s7_stream_enrich",
     // the dedup/scoring stack (README "Scaling audit", first table) —
     // documents replicate with DISJOINT token namespaces, so per-replica
     // shingle-df distributions are unchanged and replicas never pair
-    "x1_dedup_exact" -> fx(graft.ops.TextOps.x1DedupExact _),
-    "x2_dedup_near" -> fx(graft.ops.TextOps.x2DedupNear _),
+    "x1_dedup_exact", "x2_dedup_near",
     // the df-cap knob APPLIED (tight cap = bounded per-shingle pair
     // contribution): the measured form of x2's output-linear growth note —
     // the registered query and its oracle stay at the default cap
     "x2_dedup_near_tightdf" -> ((s: SparkSession, d: String, _: Int) =>
-      graft.ops.TextOps.x2DedupNearDf(s, d, 10)),
-    "x13_minhash_lsh" -> fx(graft.ops.TextOps.x13MinhashLsh _),
+      TextOps.x2DedupNearDf(s, d, 10)),
+    "x13_minhash_lsh",
     // substring dedup: disjoint per-replica token namespaces mean the
     // shared-gram sets are replica-local — gram volume grows ×f, the
     // span work per doc is unchanged; the honest linear shape
-    "x43_substring_dedup" -> fx(graft.ops.TextOps.x43SubstringDedup _),
+    "x43_substring_dedup",
     // the rewrite half: same staged gram frame, ownership + covered-
     // position exchanges ∝ duplicated-span volume, per-row HOF rewrite
-    "x72_span_scrub" -> fx(graft.ops.TextOps.x72SpanScrub _),
-    "x23_simhash_neardup" -> fx(graft.ops.PipelineOps.x23SimhashNeardup _),
-    "x24_dedup_clusters" -> fx(graft.ops.PipelineOps.x24DedupClusters _),
+    "x72_span_scrub", "x23_simhash_neardup", "x24_dedup_clusters",
     // incremental label maintenance: the full line (history-seed fixpoint
     // + arrival contraction) and the MARGINAL line — the same query
     // ordered immediately after, so the seed and pair stages are warm
     // and the second reading times only the arrival-incident contraction
     // + the final label joins: the per-ingest serving cost the operator
-    // exists to bound (compare it to x24's full-fixpoint line)
-    "x75_inc_labels" -> fx(graft.ops.PipelineOps.x75IncLabels _),
-    "x75_marginal" -> fx(graft.ops.PipelineOps.x75IncLabels _),
+    // exists to bound (compare it to x24's full-fixpoint line). Both run
+    // the engine, not the registered key: that serves the staged
+    // `Stages.x75Labels`, so the marginal line would time a stage read
+    "x75_inc_labels" -> ((s: SparkSession, d: String, _: Int) => PipelineOps.x75IncLabels(s, d)),
+    "x75_marginal" -> ((s: SparkSession, d: String, _: Int) => PipelineOps.x75IncLabels(s, d)),
     // the serving/batch label reconciliation: both staged lattices + one
     // ≤2-cell rollup — the leg must track the lattices it reads, with
     // the agreement arithmetic free
-    "x76_label_agreement" -> fx(graft.ops.PipelineOps.x76LabelAgreement _),
-    "x25_boilerplate" -> fx(graft.ops.PipelineOps.x25Boilerplate _),
-    "x26_winnowing" -> fx(graft.ops.PipelineOps.x26Winnowing _),
-    "x28_surprisal" -> fx(graft.ops.PipelineOps.x28Surprisal _),
-    "x36_incremental_dedup" -> fx(graft.ops.PipelineOps.x36IncrementalDedup _),
+    "x76_label_agreement", "x25_boilerplate", "x26_winnowing", "x28_surprisal",
+    "x36_incremental_dedup",
     // grouped top-k: selection (bounded-heap aggregate, ≤k pairs per
     // group×task through the shuffle) vs the window-rank twin (every row
     // shuffles to its group's reducer and whole groups sort). Replicas
     // share the (lang, source) groups, so group size grows ×f with k
     // fixed — exactly the shape where selection beats sorting
-    "x42_grouped_topk" -> fx(graft.ops.PipelineOps.x42GroupedTopk _),
-    "x42_window_topk" -> fx(graft.ops.PipelineOps.x42WindowAudit _),
+    "x42_grouped_topk",
+    "x42_window_topk" -> ((s: SparkSession, d: String, _: Int) => PipelineOps.x42WindowAudit(s, d)),
     // r13 governance/tokenizer set. x63/x66 ride the x24 label fixpoint
     // (per-round join+agg, pair table LSH-bounded); x64's (source, term)
     // min-agg grows ×f in input with the decile grid fixed; x65's
     // two-level prefix sum: corpus-sized stages are one agg + one
     // partitioned window, offsets frame stays ≤ |levels|·buckets; x67 is
     // k replace passes on the scan after the staged k-round training
-    "x63_split_assign" -> fx(graft.ops.PipelineOps.x63SplitAssign _),
-    "x64_vocab_growth" -> fx(graft.ops.TextOps.x64VocabGrowth _),
-    "x65_budget_select" -> fx(graft.ops.PipelineOps.x65BudgetSelect _),
-    "x66_split_audit" -> fx(graft.ops.PipelineOps.x66SplitAudit _),
-    "x67_bpe_apply" -> fx(graft.ops.TextOps.x67BpeApply _),
+    "x63_split_assign", "x64_vocab_growth", "x65_budget_select", "x66_split_audit",
+    "x67_bpe_apply",
     // the frozen encode: the history word-type training (vocab-sized
     // rounds after one corpus pass) + k replaces over the full scan —
     // must track the corpus like x67 with the trainer near-flat (types
     // grow sublinearly under replication's disjoint namespaces)
-    "x67b_bpe_frozen" -> fx(graft.ops.TextOps.x67bBpeFrozen _),
+    "x67b_bpe_frozen",
     // tokenizer-training A/B: x62's cross-word trainer pays k corpus
     // passes with a growing replace chain (the documented O(k²) term);
     // x62b's word-type trainer pays ONE corpus pass (the weighted type
     // count — types grow sublinearly under replication's disjoint
     // namespaces) + k vocab-sized rounds. x62b's leg must stay near-flat
-    // where x62's tracks the corpus — the measured form of the refactor
-    "x62_bpe_train" -> ((s: SparkSession, d: String, _: Int) =>
-      graft.ops.TextOps.x62BpeTrain(s, d)),
-    "x62b_bpe_word" -> ((s: SparkSession, d: String, _: Int) =>
-      graft.ops.TextOps.x62bBpeWordTrain(s, d)),
+    // where x62's tracks the corpus — the measured form of the refactor.
+    // x62 runs its trainer: the registered key serves the staged
+    // `Stages.x62Merges`, whose materialization the line must not carry
+    "x62_bpe_train" -> ((s: SparkSession, d: String, _: Int) => TextOps.x62BpeTrain(s, d)),
+    "x62b_bpe_word",
     // sticky splits: two label fixpoints over the LSH-bounded pair table
     // + one cluster-keyed count-distinct agg + two equi-joins — every
-    // corpus-sized step keyed, nothing all-pairs
-    "x68_split_stable" -> fx(graft.ops.PipelineOps.x68SplitStable _),
+    // corpus-sized step keyed, nothing all-pairs. The engine, not the
+    // registered key, which serves the staged `Stages.x68Assign`
+    "x68_split_stable" -> ((s: SparkSession, d: String, _: Int) =>
+      PipelineOps.x68SplitStable(s, d)),
     // router-vs-closure reconciliation: x68's lattice + the staged band
     // index probed batch-side + one bounded (≤3×3) matrix rollup
-    "x69_route_agreement" -> fx(graft.ops.PipelineOps.x69RouteAgreement _),
+    "x69_route_agreement",
     // temperature mixing: tiny per-lang count + the two-level bucket
     // draw — replicas share languages, so group size grows ×f with the
     // draw targets scaling by isqrt
-    "x70_temp_mixture" -> fx(graft.ops.PipelineOps.x70TempMixture _),
+    "x70_temp_mixture",
     // the HEAD-SKEW form (the r14 verdict's scale-killer scenario): every
     // replica row (doc_id ≥ keyOffset) is remapped into ONE language, so
     // at factor f the head language owns (f−1)/f of the corpus — under
@@ -247,23 +240,23 @@ object BenchScaling {
     // reducer; the two-level bucket rank must keep this leg tracking the
     // uniform x70 line
     "x70_skew" -> ((s: SparkSession, d: String, _: Int) => {
-      val frame = graft.ops.PipelineOps.x70DrawFrame(s, d)
+      val frame = PipelineOps.x70DrawFrame(s, d)
         .withColumn("lang",
           when(col("doc_id") >= keyOffset, lit("skewhead")).otherwise(col("lang")))
-      graft.ops.PipelineOps.x70TempMixtureOn(frame)
+      PipelineOps.x70TempMixtureOn(frame)
     }),
     // log compaction: disjoint per-replica users ⇒ keys ×f with per-key
     // history fixed — the struct-max partials must stay map-side-bound
-    "c9_compact" -> fx(graft.ops.Changelog.c9Compact _),
+    "c9_compact",
     // bottom-k-by-hash sampling: replicas share (lang, source) cells, so
     // cell size grows ×f with k fixed — the same selection-beats-sorting
     // shape as x42, now with the hash-priority draw
-    "x44_group_sample" -> fx(graft.ops.PipelineOps.x44GroupSample _),
+    "x44_group_sample",
     // source-overlap: replicas repeat the same text under the same
     // sources, so the (source, gram) dedup input grows ×f while its
     // output (and the matrix) is invariant — the audit isolates the
     // dedup exchange, the one term that scales
-    "x45_source_overlap" -> fx(graft.ops.TextOps.x45SourceOverlap _),
+    "x45_source_overlap",
     // the video modality at scale: the corpus build (one real multi-frame
     // GIF per doc — executor-task writes, driver-local scratch) is its
     // own timed line so the decode leg is decode-only (the Bench
@@ -271,23 +264,20 @@ object BenchScaling {
     // |sampled|-not-|frames|: frames per clip are fixed (1–7 by doc_id
     // mod), docs grow ×f, so BOTH legs must track |docs| linearly and the
     // decode leg must stay ~3 sampled frames per clip regardless of f
-    "stage:gif_corpus" -> ((s: SparkSession, d: String, _: Int) => {
-      graft.ops.Stages.gifCorpus(s, d); s.range(1).toDF("ok")
-    }),
-    "x15d_video" -> fx(graft.ops.Multimodal.x15dVideoPipeline _),
+    "stage:gif_corpus", "x15d_video",
     // PassJoin: disjoint token namespaces keep segments replica-local, so
     // candidate volume and verified pairs grow ×f with per-pair work
     // unchanged — index/probe fanout is a per-row constant
-    "x46_edit_join" -> fx(graft.ops.TextOps.x46EditJoin _),
+    "x46_edit_join",
     // z-order: replicas widen the user-id span, not the row shape — the
     // per-row bit dilation and the 64-cell map-side rollup must track the
     // scan linearly
-    "x47_zorder" -> fx(graft.ops.Layout.x47Zorder _),
+    "x47_zorder",
     // exact set-similarity: disjoint per-replica token namespaces keep
     // gram dfs and prefix ranks replica-local — candidates, verify work
     // and output all grow ×f with per-pair work unchanged (the same
     // honest shape as x2, now without the df cap)
-    "x49_setsim_join" -> fx(graft.ops.TextOps.x49SetsimJoin _),
+    "x49_setsim_join",
     // x49 candidate A/B: candidates surviving the PPJoin positional
     // filter vs the plain AllPairs prefix filter — "count:" legs collect
     // their single count row into the JSON line's "counts" object, the
@@ -295,51 +285,49 @@ object BenchScaling {
     // read the same x49_grams stage as the consumer leg above, so the
     // A/B isolates candidate enumeration.
     "count:x49_cand_pos" -> ((s: SparkSession, d: String, _: Int) =>
-      graft.ops.TextOps.x49Candidates(graft.ops.Stages.x49Grams(s, d))
+      TextOps.x49Candidates(Stages.x49Grams(s, d))
         .agg(count(lit(1)).as("n"))),
     "count:x49_cand_all" -> ((s: SparkSession, d: String, _: Int) =>
-      graft.ops.TextOps.x49Candidates(graft.ops.Stages.x49Grams(s, d), positional = false)
+      TextOps.x49Candidates(Stages.x49Grams(s, d), positional = false)
         .agg(count(lit(1)).as("n"))),
     // quarantine routing: pure per-row bits + the doc_id window — the
     // line must track the documents scan linearly, nothing else
-    "x50_quarantine" -> fx(graft.ops.Audit.x50Quarantine _),
+    "x50_quarantine",
     // constraint audit: replicas grow every audited table ×f while the
     // verdict set stays fixed — the one-scan-per-table claim means the
     // line must track the scans, with the FK join the only exchange that
     // grows (distinct parent keys ×f)
-    "x48_constraint_audit" -> fx(graft.ops.Audit.x48ConstraintAudit _),
+    "x48_constraint_audit",
     // the composed end-to-end pipeline: stages + joins + packing together
-    "x38_pipeline_e2e" -> fx(graft.ops.PipelineOps.x38PipelineE2e _),
+    "x38_pipeline_e2e",
     // the held-out bigram LM: disjoint token namespaces grow the vocab and
     // bigram count tables ×f; per-doc scoring work is unchanged
-    "x40_bigram_lm" -> fx(graft.ops.PipelineOps.x40BigramLm _),
+    "x40_bigram_lm",
     // BM25 retrieval: replica-0 queries under disjoint token namespaces,
     // so the broadcast prune keeps postings replica-local — the leg must
     // track the one posting scan, with df/idf work constant
-    "x71_bm25" -> fx(graft.ops.TextOps.x71Bm25 _),
+    "x71_bm25",
     // BM25 decontamination: same broadcast-pruned posting shape as x71
     // over the training slice; the per-query max is a ≤5-row broadcast —
     // the leg must track x71's line, with the emitted-volume filter free
-    "x73_bm25_decontam" -> fx(graft.ops.TextOps.x73Bm25Decontam _),
+    "x73_bm25_decontam",
     // the snapshot diff: (doc_id, md5) pairs ×f through the full-outer join
-    "x41_dataset_diff" -> fx(graft.ops.PipelineOps.x41DatasetDiff _),
+    "x41_dataset_diff",
     // BPE pair stats: disjoint token namespaces grow BOTH count tables
     // ×f with per-replica pair distributions unchanged; the top-20 stays
     // TakeOrdered. The watched term is the broadcast vocab join — under
     // this replication model the vocab grows ×f (real corpora grow it
     // sublinearly, Heaps' law), so this leg is the measured form of the
     // scaladoc's vocab-bounded-broadcast claim
-    "x54_bpe_pairs" -> fx(graft.ops.TextOps.x54BpePairs _),
+    "x54_bpe_pairs",
     // the vector stack — embeddings replicate with vec_id offsets AND a
     // per-replica circular component shift, so replicas stay disjoint in
     // cosine space (identical copies would pair across replicas and fake
     // a quadratic blow-up the real "more corpus" case doesn't have)
-    "x14_cosine_neardup" -> fx(graft.ops.VectorOps.x14CosineNeardup _),
+    "x14_cosine_neardup",
     // ANN recall QA: exact truth over a FIXED query sample is the job's
     // deliberate price — cost must track |sample| × corpus linearly
-    "x51_ann_recall" -> fx(graft.ops.VectorOps.x51AnnRecall _),
-    "x16_ivf_ann" -> fx(graft.ops.VectorOps.x16IvfAnn _),
-    "x27_semantic_dedup" -> fx(graft.ops.VectorOps.x27SemanticDedup _),
+    "x51_ann_recall", "x16_ivf_ann", "x27_semantic_dedup",
     // the same two operators with the corpus-scale knob APPLIED: k grows
     // with the replication factor, keeping per-cell occupancy constant —
     // the measured form of the README's fixed-parameter note (the
@@ -350,63 +338,33 @@ object BenchScaling {
     // the k-means learning every higher factor pays. The +1 key makes
     // every scaled-k leg learn fresh, so ratios compare like with like.
     "x16_ivf_ann_scaledk" -> ((s: SparkSession, d: String, f: Int) =>
-      graft.ops.VectorOps.x16IvfAnnK(s, d, graft.ops.VectorOps.x16K * f + 1)),
+      VectorOps.x16IvfAnnK(s, d, VectorOps.x16K * f + 1)),
     "x27_semantic_dedup_scaledk" -> ((s: SparkSession, d: String, f: Int) =>
-      graft.ops.VectorOps.x27SemanticDedupK(s, d, graft.ops.VectorOps.x16K * f + 1)),
+      VectorOps.x27SemanticDedupK(s, d, VectorOps.x16K * f + 1)),
     // bits-per-band grows log2(factor): constant expected bucket occupancy
     "x14_cosine_neardup_scaledbits" -> ((s: SparkSession, d: String, f: Int) =>
-      graft.ops.VectorOps.x14CosineNeardupB(s, d,
+      VectorOps.x14CosineNeardupB(s, d,
         5 + (31 - Integer.numberOfLeadingZeros(math.max(f, 1))))),
     // series search: replicas add disjoint users on the SAME day span,
     // so the series count grows ×f at fixed dims — the one-scan claim
     // (per-row bound+verify against a broadcast query) must track |users|
-    "x59_series_search" -> fx(graft.ops.Windows.x59SeriesSearch _),
+    "x59_series_search",
     // DTW search: same series build, the native O(days·band) DP per row —
     // the codegen'd expression must keep the leg |users|-linear too
-    "x60_dtw_search" -> fx(graft.ops.Windows.x60DtwSearch _),
+    "x60_dtw_search",
     // SAX retrieval: the series trio's index path — the (seg, sym)
     // inverted-index join must keep candidacy sub-scan as users grow
-    "x61_sax_search" -> fx(graft.ops.Windows.x61SaxSearch _),
+    "x61_sax_search",
     // the PQ stack: encode is training (broadcast joins over the corpus)
     // + one codebook-broadcast scan with a per-vector window — must
     // track the corpus linearly; the ADC search reads the codes with
     // probe/LUT broadcasts, so its line must track the encode pass it
     // rides, never bend (real deployments amortize encode across many
     // queries — the leg measures the worst single-query case)
-    "x56_pq_codes" -> fx(graft.ops.VectorOps.x56PqCodes _),
-    "x57_ivf_pq" -> fx(graft.ops.VectorOps.x57IvfPqSearch _))
+    "x56_pq_codes",
+    "x57_ivf_pq")
 
-  /** Audit entries that read the embeddings table (whose replication is
-    * capped at dim=64 distinct circular shifts) and the documents table —
-    * a leg that selects neither skips the corresponding replication
-    * entirely, which both avoids wasted writes and lets relational-only
-    * legs run at factors past the embedding-shift cap. */
-  private val embeddingsUsers = Set("x14_cosine_neardup", "x16_ivf_ann",
-    "x27_semantic_dedup", "x16_ivf_ann_scaledk", "x27_semantic_dedup_scaledk",
-    "x14_cosine_neardup_scaledbits", "x51_ann_recall",
-    "x56_pq_codes", "x57_ivf_pq")
-  private val documentsUsers = Set("x1_dedup_exact", "x2_dedup_near",
-    "x2_dedup_near_tightdf",
-    "q27_freq_items", "q27_freq_items_scaledsupport",
-    "q27b_freq_deep", "q27b_freq_deep_scaledk",
-    "x13_minhash_lsh", "x23_simhash_neardup", "x24_dedup_clusters", "x43_substring_dedup",
-    "x75_inc_labels", "x75_marginal", "x76_label_agreement",
-    "x72_span_scrub",
-    "x25_boilerplate", "x26_winnowing", "x28_surprisal",
-    "x36_incremental_dedup", "x38_pipeline_e2e",
-    "x40_bigram_lm", "x41_dataset_diff",
-    "x42_grouped_topk", "x42_window_topk", "x71_bm25", "x73_bm25_decontam",
-    "x44_group_sample", "x45_source_overlap", "x46_edit_join",
-    "x48_constraint_audit", "x49_setsim_join", "x50_quarantine",
-    "x54_bpe_pairs",
-    "x63_split_assign", "x64_vocab_growth", "x65_budget_select",
-    "x66_split_audit", "x67_bpe_apply", "x67b_bpe_frozen",
-    "stage:gif_corpus", "x15d_video",
-    "x62_bpe_train", "x62b_bpe_word", "x68_split_stable", "x69_route_agreement",
-    "x70_temp_mixture", "x70_skew",
-    // the x49 candidate A/B count legs read the x49_grams stage, which
-    // derives from documents — selecting them alone must still replicate
-    "count:x49_cand_pos", "count:x49_cand_all")
+
 
   /** The q25 audit family is QUADRATIC under concentration by design
     * (product rows = hotLeft × hotRight — see the q25Right scaladoc and
@@ -416,27 +374,45 @@ object BenchScaling {
     * hot product, so the DEFAULT selection excludes the family — loudly,
     * per the no-silent-caps rule — and an explicit
     * SPARK_GRAFT_SCALE_QUERIES still runs them anywhere. */
-  private val quadraticLegs = Set(
+  private[graft] val quadraticLegs = Set(
     "q25_naive_join", "q25_salted16_join", "q25_salted32_join", "q25_split_join")
 
-  /** Audited subset; override with SPARK_GRAFT_SCALE_QUERIES=q4,...
-    * (comma-separated keys) — e.g. to run the linear core at high
-    * factors without the fixed-parameter vector trio. */
-  private def selected: Seq[(String, (SparkSession, String, Int) => DataFrame)] =
-    sys.env.get("SPARK_GRAFT_SCALE_QUERIES") match {
-      case Some(csv) =>
-        val want = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        // a typo'd key silently shrinking the audit would print a
-        // success-shaped JSON missing the very query under study
-        val unknown = want -- audited.map(_._1).toSet
-        require(unknown.isEmpty, s"unknown SPARK_GRAFT_SCALE_QUERIES keys: $unknown")
-        audited.filter { case (n, _) => want(n) }
+  /** The legs a run times: SPARK_GRAFT_SCALE_QUERIES=q4,... (comma-
+    * separated names) picks a subset — e.g. to run the linear core at high
+    * factors without the fixed-parameter vector trio; by default every
+    * leg but the quadratic family. */
+  private def selected(): Seq[Leg] = sys.env.get("SPARK_GRAFT_SCALE_QUERIES") match {
+    case None =>
+      System.err.println(s"[scaling] default selection excludes the quadratic " +
+        s"q25 audit family (${quadraticLegs.toSeq.sorted.mkString(", ")}) — " +
+        "request them explicitly via SPARK_GRAFT_SCALE_QUERIES on a small base")
+      legs.filterNot(l => quadraticLegs(l.name))
+    case csv =>
+      Driver.select(legs.map(l => l.name -> l), csv, "SPARK_GRAFT_SCALE_QUERIES").map(_._2)
+  }
+
+  /** What `leg` times at a factor over a factor dir: its frame
+    * noop-written (the Bench protocol), or for a `count:` leg its one-row
+    * count collected into `counts` (bounded by construction: the value
+    * itself is the artifact). A bare name the engine does not define
+    * fails here, before any replication. */
+  private[graft] def timedBody(leg: Leg, counts: mutable.Map[String, Long])
+      : (SparkSession, String, Int) => Unit = {
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    leg.body match {
+      case Some(fn) if leg.name.startsWith("count:") =>
+        (s, d, f) => counts(leg.name) = fn(s, d, f).collect()(0).getLong(0)
+      case Some(fn) => (s, d, f) => noop(fn(s, d, f))
+      case None if leg.name.startsWith("stage:") =>
+        val st = Stages.registry.find("stage:" + _.name == leg.name)
+          .getOrElse(throw new IllegalArgumentException(s"no Stages entry for leg ${leg.name}"))
+        (s, d, _) => st(s, d)
       case None =>
-        System.err.println(s"[scaling] default selection excludes the quadratic " +
-          s"q25 audit family (${quadraticLegs.toSeq.sorted.mkString(", ")}) — " +
-          "request them explicitly via SPARK_GRAFT_SCALE_QUERIES on a small base")
-        audited.filterNot { case (n, _) => quadraticLegs(n) }
+        val q = SparkEntry.queries.getOrElse(leg.name,
+          throw new IllegalArgumentException(s"no registered query for leg ${leg.name}"))
+        (s, d, _) => noop(q(s, d))
     }
+  }
 
   private def replicate(df: DataFrame, keys: Seq[String], k: Int): DataFrame =
     (0 until k).map { i =>
@@ -479,20 +455,10 @@ object BenchScaling {
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // default: partitions = cores (the fixed-config audit). Override
-      // with SPARK_GRAFT_SCALE_PARTITIONS to pin a flat partition count
-      // (r12's probe knob); without it the per-factor AQE scaling below
-      // applies — post-shuffle partitions should track data volume
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTITIONS", cpus))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Driver.cpus(32)
+    val spark = Driver.session(cpus)
+    val counts = mutable.LinkedHashMap.empty[String, Long]
+    val bodies = selected().map(l => l.name -> timedBody(l, counts))
     val outBase = s"/tmp/graft_scale_${System.getProperty("user.name", "u")}"
     // Stages default for the scaling audit is PARQUET mode (r13 decision,
     // README bench convention): the r12 256× A/B measured parquet-mode
@@ -504,23 +470,21 @@ object BenchScaling {
     // blocks pinned across factors shrink execution memory when the
     // biggest factor needs it. It is also the 100 TB form (stages as
     // durable parquet between phases, survive executor loss). Explicit
-    // SPARK_GRAFT_STAGE_DIR still wins; SPARK_GRAFT_STAGE_MODE=local
-    // restores the old in-memory default for A/B runs.
-    if (!sys.env.contains("SPARK_GRAFT_STAGE_DIR") &&
-        !sys.env.get("SPARK_GRAFT_STAGE_MODE").contains("local"))
+    // SPARK_GRAFT_STAGE_DIR still wins; an exported empty one restores
+    // the in-memory localCheckpoint stages for A/B runs.
+    if (!sys.env.contains("SPARK_GRAFT_STAGE_DIR"))
       spark.conf.set("spark.graft.stageDir", s"$outBase/stages")
     factors.foreach { k =>
-      // Post-shuffle partitions track the factor unless a flat count was
-      // pinned: raise AQE's initial partition count ×k (capped) and let
-      // advisory-size coalescing shrink the small shuffles back to ~cores
-      // — only the genuinely factor-sized aggregates (the x2 posting
+      // Post-shuffle partitions track the factor: raise AQE's initial
+      // partition count ×k (capped) and let advisory-size coalescing
+      // shrink the small shuffles back to ~cores — only the genuinely
+      // factor-sized aggregates (the x2 posting
       // index, x45's gram dedup) keep the finer split. This is the
       // cluster posture: partition count follows bytes, not a constant
       // pinned at 1× — at 1000 executors the same advisory-size knob
       // does the sizing, with no per-query tuning.
-      if (!sys.env.contains("SPARK_GRAFT_SCALE_PARTITIONS"))
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          math.min(cpus.toInt * math.max(k, 1), 2048))
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        math.min(cpus * math.max(k, 1), 2048))
       val dir = s"$outBase/x$k"
       keyedTables.foreach { case (t, keys) =>
         val reps = if (keys.isEmpty) 1 else k // fixed dims stay 1×
@@ -530,20 +494,26 @@ object BenchScaling {
         replicate(src, keys, reps)
           .write.mode("overwrite").parquet(s"$dir/$t.parquet")
       }
-      // the store leg persists document- and embeddings-axis artifacts,
-      // so SPARK_GRAFT_SCALE_STORES forces those tables even when no
-      // selected query reads them (embeddings only up to the circular-
-      // shift cap — the IVF persist is skipped loudly past it below)
-      val storesOn = sys.env.get("SPARK_GRAFT_SCALE_STORES").exists(_.nonEmpty)
+      // documents and embeddings replicate whatever the selection (about
+      // 1.4 MB at sf0.1, against lineitem's 11 MB), untimed. Embeddings
+      // only up to the circular-shift cap: past it the stale file of an
+      // earlier run goes too, so a vector leg fails as a marked -1.0
+      // line instead of reading another factor's vectors (the IVF persist
+      // is skipped loudly past the cap below as well)
+      replicateDocs(Tables.table(spark, base, "documents"), k)
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val embDim = Tables.table(spark, base, "embeddings")
         .select(size(col("embedding"))).first().getInt(0)
-      if (selected.exists(s => documentsUsers(s._1)) || storesOn)
-        replicateDocs(Tables.table(spark, base, "documents"), k)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      if (selected.exists(s => embeddingsUsers(s._1)) || (storesOn && k <= embDim))
+      if (k <= embDim)
         replicateEmbeddings(Tables.table(spark, base, "embeddings"), k)
           .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      graft.ops.Stages.clear() // per-factor dirs must not share dedup stages
+      else {
+        System.err.println(s"[scaling] embeddings NOT replicated at factor $k (> embedding " +
+          s"dim $embDim — circular shifts would repeat): vector legs report -1.0")
+        val stale = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
+        stale.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stale, true)
+      }
+      Stages.clear() // per-factor dirs must not share dedup stages
       // .cache()'d corpora (scaledEmb, stream feeds) are keyed by plan —
       // prior factors' entries would stay pinned through every later
       // leg, shrinking execution memory exactly when the biggest factor
@@ -576,7 +546,7 @@ object BenchScaling {
         sys.env.get("SPARK_GRAFT_SCALE_STORES").toSeq.flatMap { sb =>
           import Artifacts.{StoreManifest, Sticky}
           // (line name = store sub-dir, store, persister), production order
-          val legs: Seq[(String, Artifacts.Store, (SparkSession, String, String) => Unit)] =
+          val stores: Seq[(String, Artifacts.Store, (SparkSession, String, String) => Unit)] =
             Seq(("labels", Artifacts.Labels, PipelineOps.persistLabels _),
               ("sticky", Sticky, PipelineOps.persistStickySplits _),
               ("route_index", Artifacts.RouteIndex, PipelineOps.persistRouteIndex _),
@@ -601,7 +571,7 @@ object BenchScaling {
                 s"factor $k (> embedding dim $embDim — circular shifts would repeat)")
               Seq.empty
             })
-          val per = legs.map { case (name, store, persist) =>
+          val per = stores.map { case (name, store, persist) =>
             s"store:$name" -> BenchDiag.wall {
               persist(spark, dir, s"$sb/f$k/$name")
               spark.conf.set(store.conf, s"$sb/f$k/$name")
@@ -617,8 +587,8 @@ object BenchScaling {
             val thr = Artifacts
               .readStampFacts(spark, s"$sb/f$k/sticky", Sticky.key)._2(Sticky.prop).toLong
             Artifacts.writeManifest(spark, s"$sb/f$k/manifest",
-              legs.map { case (name, store, _) => store.key -> s"$sb/f$k/$name" }.toMap, thr)
-            legs.foreach { case (_, store, _) => spark.conf.unset(store.conf) }
+              stores.map { case (name, store, _) => store.key -> s"$sb/f$k/$name" }.toMap, thr)
+            stores.foreach { case (_, store, _) => spark.conf.unset(store.conf) }
             spark.conf.set(StoreManifest.conf, s"$sb/f$k/manifest")
           }
           // SPARK_GRAFT_SCALE_REFREEZE=1 (requires the store leg): the
@@ -648,9 +618,9 @@ object BenchScaling {
               val persistsA = "store:genA_persists" -> BenchDiag.wall {
                 spark.conf.unset(StoreManifest.conf)
                 try {
-                  graft.ops.PipelineOps.persistStickySplits(spark, s"$genA/corpus0", s"$genA/sticky")
-                  graft.ops.PipelineOps.persistRouteIndex(spark, s"$genA/corpus0", s"$genA/route_index")
-                  graft.ops.PipelineOps.persistLabelIndex(spark, s"$genA/corpus0", s"$genA/label_index")
+                  PipelineOps.persistStickySplits(spark, s"$genA/corpus0", s"$genA/sticky")
+                  PipelineOps.persistRouteIndex(spark, s"$genA/corpus0", s"$genA/route_index")
+                  PipelineOps.persistLabelIndex(spark, s"$genA/corpus0", s"$genA/label_index")
                 } finally spark.conf.set(StoreManifest.conf, s"$sb/f$k/manifest")
               }
               // roll forward to the CURRENT generation: the sticky fold
@@ -658,16 +628,16 @@ object BenchScaling {
               // already configured via the manifest), then each index
               // merge bands only the (thrA, thr] arrivals
               val stickyInc = "store:sticky_inc" -> BenchDiag.wall {
-                graft.ops.PipelineOps.persistStickySplitsIncremental(
+                PipelineOps.persistStickySplitsIncremental(
                   spark, dir, s"$genA/stickyB", s"$genA/sticky")
               }
               spark.conf.set(Sticky.conf, s"$genA/stickyB")
               val routeInc = "store:route_index_inc" -> BenchDiag.wall {
-                graft.ops.PipelineOps.persistRouteIndexIncremental(
+                PipelineOps.persistRouteIndexIncremental(
                   spark, dir, s"$genA/route_indexB", s"$genA/route_index")
               }
               val labelInc = "store:label_index_inc" -> BenchDiag.wall {
-                graft.ops.PipelineOps.persistLabelIndexIncremental(
+                PipelineOps.persistLabelIndexIncremental(
                   spark, dir, s"$genA/label_indexB", s"$genA/label_index")
               }
               // back to the manifest generation for the serving legs
@@ -677,28 +647,23 @@ object BenchScaling {
           per ++ Seq(manifestLine,
             "store:persist" -> (per.map(_._2).sum + manifestLine._2)) ++ refreeze
         }
-      val counts = scala.collection.mutable.LinkedHashMap.empty[String, Long]
       // SPARK_GRAFT_BENCH_DIAG=<path.jsonl>: per-leg GC/heap/scratch
       // diagnostics (the Bench hook, shared via graft.util.BenchDiag) —
       // tagged with the factor so one multi-factor session attributes an
-      // inflated leg to session aging vs scratch growth vs host band
-      val diagPath = sys.env.get("SPARK_GRAFT_BENCH_DIAG")
-      // a failed leg reports the Bench -1.0 sentinel instead of killing
+      // inflated leg to session aging vs scratch growth vs host band.
+      // A failed leg reports the Bench -1.0 sentinel instead of killing
       // the whole multi-factor session: some legs fail BY DESIGN at high
       // factors (q28c's theta exact-mode guard throws once weekly
       // cardinality crosses 2^12; q27's scaled-support variant refuses
       // supports below the builtin floor) — the loud guard is the point,
       // and the audit records it as a marked line. Those throws are all
       // requires / IllegalArgumentExceptions; a fatal error still ends
-      // the session (BenchDiag.attempt catches NonFatal only)
-      val times = selected.map { case (name, fn) =>
-        name -> BenchDiag.attempt(diagPath, name, Map("factor" -> k.toString)) {
-          val df = fn(spark, dir, k)
-          // "count:" legs are one-row diagnostics (bounded collect by
-          // construction): the value itself is the artifact
-          if (name.startsWith("count:")) counts(name) = df.collect()(0).getLong(0)
-          else df.write.format("noop").mode("overwrite").save()
-        }
+      // the session (the runner catches NonFatal only)
+      val runner = new BenchDiag.Runner(sys.env.get("SPARK_GRAFT_BENCH_DIAG"),
+        Map("factor" -> k.toString))
+      counts.clear()
+      val times = bodies.map { case (name, run) =>
+        name -> runner.attempt(name)(run(spark, dir, k))
       }
       if (storeLeg.nonEmpty) {
         // per-store knobs were already dropped at the manifest flip;
@@ -708,11 +673,11 @@ object BenchScaling {
         // against elsewhere
         Artifacts.stores.foreach(s => spark.conf.unset(s.conf))
       }
-      val withStores = storeLeg ++ times
-      val qs = withStores.map { case (n, s) => s""""$n":${f"$s%.3f"}""" }.mkString("{", ",", "}")
       val cs =
         if (counts.isEmpty) ""
-        else counts.map { case (n, v) => s""""$n":$v""" }.mkString(""","counts":{""", ",", "}")
+        else counts.map { case (n, v) => s"${Json.quote(n)}:$v" }
+          .mkString(""","counts":{""", ",", "}")
+      val qs = Json.seconds(storeLeg ++ times)
       println(s"""{"metric":"scaling","factor":$k,"queries":$qs$cs}""")
     }
     spark.stop()

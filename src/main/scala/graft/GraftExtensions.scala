@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{DistinctBigramCount, DistinctGrams, DotProduct, DtwDistance, FreqItemsMG, GramMd5Hexes, KllMergeAgg, KllSketchAgg, Md5Long, RollingHashFold, RollingHashWindows, SimhashBits, ThetaSketchAgg, TopKByAgg, TopTokenCount, WinnowFingerprints}
 
 /** SparkSessionExtensions hook exposing graft's custom Catalyst
-  * expressions to SQL users:
+  * expressions to SQL users: build the session with
+  * `spark.sql.extensions=graft.GraftExtensions` (as [[Driver.session]]
+  * does), then
   *
-  *   spark = SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions") ...
   *   spark.sql("SELECT dot_arr(a.embedding, b.embedding) ...")
   *
   * For sessions created without the config, [[GraftExtensions.register]]

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Diagnostics main: dump `.explain("formatted")` for a curated set of
   * query/stage plans to a directory — the before/after plan evidence the
@@ -19,16 +19,7 @@ object PlanDump {
     val suffix = args(1)
     java.nio.file.Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session(Driver.cpus(4))
     // stage BODIES under their own keys: registered queries read
     // materialized stages, so their plans hide the build's shape
     val stageBodies: Seq[(String, () => DataFrame)] = Seq(
@@ -43,15 +34,7 @@ object PlanDump {
       stageBodies ++ SparkEntry.queries.toSeq.sortBy(_._1).map { case (k, fn) =>
         k -> (() => fn(spark, sfDir))
       }
-    val want: Option[Set[String]] =
-      if (args.length >= 3) Some(args(2).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      else None
-    val selected = all.filter { case (k, _) => want.forall(_(k)) }
-    want.foreach { w =>
-      val unknown = w -- all.map(_._1).toSet
-      require(unknown.isEmpty, s"unknown PlanDump keys: $unknown")
-    }
-    selected.foreach { case (key, mk) =>
+    Driver.select(all, args.lift(2), "PlanDump").foreach { case (key, mk) =>
       try {
         val plan = mk().queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,7 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session(Driver.cpus(4))
     // Clean any previous dump first: Verify only overwrites per-query
     // dirs, so a query that fails on THIS run would otherwise leave a
     // stale green result from a prior run for check.py to compare.
@@ -61,25 +51,20 @@ object Verify {
     // Local-iteration filter: SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the
     // dump AND the oracle_sql.json to those keys so scripts/check.py can
     // gate a subset. The driver never sets it — full contract unchanged.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { keys =>
-      val unknown = keys -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_VERIFY_ONLY unknown keys: ${unknown.mkString(",")}")
-    }
-    def selected(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          failures += 1
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    val selected = Driver.select(SparkEntry.queries.toSeq,
+      sys.env.get("SPARK_GRAFT_VERIFY_ONLY"), "SPARK_GRAFT_VERIFY_ONLY")
+    selected.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        failures += 1
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
     }
     val q = graft.util.Json.quote _
+    val keys = selected.map(_._1).toSet
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
+      .filter { case (k, _) => keys(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // per-table corpus fingerprint, so this dump's numbers stay

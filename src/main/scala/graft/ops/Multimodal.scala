@@ -60,26 +60,6 @@ case class VideoFeatures(doc_id: Long, format: String, n_frames: Long,
 object Multimodal {
   import Tables._
 
-  /** Media table from a REAL file directory — the production ingest
-    * ([[graft.sources.Sources.binaryFiles]]): doc_id is a stable hash of
-    * the file path, format the lowercased extension, dims derived
-    * deterministically from the length (no codecs in this container; a
-    * real header parse plugs into the same decode batch). The payload
-    * column is the file's bytes, untouched. */
-  def mediaFromFiles(spark: SparkSession, path: String,
-      glob: String = "*"): Dataset[MediaRow] = {
-    import spark.implicits._
-    val ext = regexp_extract(col("path"), "\\.([^./\\\\]+)$", 1)
-    graft.sources.Sources.binaryFiles(spark, path, glob)
-      .select(
-        xxhash64(col("path")).as("doc_id"),
-        col("content").as("payload"),
-        lower(when(ext === "", lit("bin")).otherwise(ext)).as("format"),
-        (col("length") % 640).cast("int").as("width"),
-        (col("length") % 480).cast("int").as("height"))
-      .as[MediaRow]
-  }
-
   /** REAL image decode over any media table: `javax.imageio` readers on
     * the payload bytes, per-partition batches. Returns actual pixel
     * width/height and a deterministic raster checksum (sum of the 24-bit

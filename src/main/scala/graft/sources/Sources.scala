@@ -113,8 +113,8 @@ object Sources {
     * nested shard dirs; `spark.sql.files.maxPartitionBytes` governs how
     * many files land in one task. Column pruning is real here: a
     * metadata-only query (count, size histogram, partition planning)
-    * reads no payload bytes at all — asserted in SourcesSpec. Feeds
-    * [[graft.ops.Multimodal.mediaFromFiles]]. */
+    * reads no payload bytes at all — asserted in SourcesSpec. Feeds the
+    * x15 media decodes over their staged WAV, PNG and GIF corpora. */
   def binaryFiles(spark: SparkSession, path: String, glob: String = "*"): DataFrame =
     spark.read.format("binaryFile")
       .option("pathGlobFilter", glob)

@@ -248,7 +248,7 @@ class DeterminismSpec extends SparkTestBase {
       // the daily-series stage, via all three series consumers
       "x59_series_search", "x60_dtw_search", "x61_sax_search")
     val s = spark
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stages").toString
+    val tmp = tempDir("graft-stages").toString
     try {
       // empty conf value = explicit localCheckpoint override, so this leg
       // tests the default mode even on hosts exporting SPARK_GRAFT_STAGE_DIR

@@ -45,7 +45,7 @@ class AuditSpec extends SparkTestBase {
 
   test("x50: each violation sets exactly its bit; dup ids flag every copy") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_x50").toString
+    val dir = tempDir("graft_x50").toString
     val clean = (1 to 25).map(i => s"tok$i").mkString(" ")
     val big = "x" * 100001
     Seq(
@@ -106,7 +106,7 @@ class AuditSpec extends SparkTestBase {
   }
 
   test("x74: a fresh configured store audits fresh; a stale one is flagged with its frozen boundary") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x74_").toString
+    val tmp = tempDir("graft_x74_").toString
     // fresh store: persist on THIS corpus, configure, audit agrees
     PipelineOps.persistStickySplits(spark, sf0001, s"$tmp/sticky")
     val fresh = spark.newSession()
@@ -166,7 +166,7 @@ class AuditSpec extends SparkTestBase {
   }
 
   test("x77: stores from different installments flip the named constraint") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x77_").toString
+    val tmp = tempDir("graft_x77_").toString
     // the OLD installment: the corpus as of the current 9/10 boundary
     val full = graft.model.Tables.documents(spark, sf0001)
     val mx = full.agg(max(col("doc_id"))).collect()(0).getLong(0)

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -22,7 +20,7 @@ class BandIndexStoreSpec extends SparkTestBase {
     df.collect().map(_.toString).toSeq.sorted
 
   test("persisted route index: a fresh session serves the stored index to s18/x69 bit-identically") {
-    val tmp = Files.createTempDirectory("graft_bandidx_").toString
+    val tmp = tempDir("graft_bandidx_").toString
     val path = s"$tmp/route_index"
     PipelineOps.persistRouteIndex(spark, sf0001, path)
     // the stamp records the freeze boundary for x74's audit
@@ -43,7 +41,7 @@ class BandIndexStoreSpec extends SparkTestBase {
   }
 
   test("persisted label index: a fresh session serves the stored index to s21's batch twin") {
-    val tmp = Files.createTempDirectory("graft_bandidx_").toString
+    val tmp = tempDir("graft_bandidx_").toString
     val path = s"$tmp/label_index"
     PipelineOps.persistLabelIndex(spark, sf0001, path)
     assert(Artifacts.readProps(spark, path)("thr").toLong > 0L)
@@ -60,7 +58,7 @@ class BandIndexStoreSpec extends SparkTestBase {
   }
 
   test("the router CONSUMES the stored index: a doctored bucket routes arrivals, not a re-derive") {
-    val tmp = Files.createTempDirectory("graft_bandidx_").toString
+    val tmp = tempDir("graft_bandidx_").toString
     val path = s"$tmp/route_index"
     PipelineOps.persistRouteIndex(spark, sf0001, path)
     // doctor EVERY bucket to conflicting bits (3 = test|val): a consumed
@@ -84,7 +82,7 @@ class BandIndexStoreSpec extends SparkTestBase {
   }
 
   test("band-index stamp validation: wrong artifact and missing path fail loudly") {
-    val tmp = Files.createTempDirectory("graft_bandidx_").toString
+    val tmp = tempDir("graft_bandidx_").toString
     // the configured path holds a DIFFERENT stamped artifact (the other
     // band index — the nastiest confusion: same (band, h) key columns)
     PipelineOps.persistLabelIndex(spark, sf0001, s"$tmp/label_index")
@@ -105,7 +103,7 @@ class BandIndexStoreSpec extends SparkTestBase {
   }
 
   test("x74 audits the band indexes: fresh stores read fresh, a stale boundary is flagged with magnitude") {
-    val tmp = Files.createTempDirectory("graft_bandidx_").toString
+    val tmp = tempDir("graft_bandidx_").toString
     PipelineOps.persistRouteIndex(spark, sf0001, s"$tmp/route_index")
     PipelineOps.persistLabelIndex(spark, sf0001, s"$tmp/label_index")
     val fresh = spark.newSession()

@@ -127,7 +127,7 @@ class ClusterPropertySpec extends SparkTestBase {
   }
 
   test("x75 serves a stamped labels store as its seed; missing max_id prop fails loudly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x75_").toString
+    val tmp = tempDir("graft_x75_").toString
     val sf = sf0001
     // the store a deployment would have written when the corpus WAS the
     // history slice: the in-session seed, stamped with its boundary

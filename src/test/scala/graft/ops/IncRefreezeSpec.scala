@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
@@ -86,7 +84,7 @@ class IncRefreezeSpec extends SparkTestBase {
   }
 
   test("production cadence on a grown corpus: incremental persists equal full persists file-for-file") {
-    val tmp = Files.createTempDirectory("graft_increfreeze_").toString
+    val tmp = tempDir("graft_increfreeze_").toString
     val full = graft.model.Tables.documents(spark, sf0001)
     val mxFull = full.agg(max(col("doc_id"))).collect()(0).getLong(0)
     val cutoff = Math.floorDiv(9L * mxFull, 10L) // gen-B boundary on the full corpus
@@ -134,7 +132,7 @@ class IncRefreezeSpec extends SparkTestBase {
   }
 
   test("loud failure modes: in-place overwrite, backwards boundary, remap coverage") {
-    val tmp = Files.createTempDirectory("graft_increfreeze_").toString
+    val tmp = tempDir("graft_increfreeze_").toString
     PipelineOps.persistRouteIndex(spark, sf0001, s"$tmp/route")
     PipelineOps.persistLabelIndex(spark, sf0001, s"$tmp/label")
     // in-place: the read plan would consume files the write deletes

@@ -60,51 +60,49 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("x47: z-ordered files prune the 2-D box harder than a time-sorted layout") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zorder").toFile
-    try {
-      val e = Tables.events(spark, sf001)
-        .select(col("event_id"), col("user_id"), col("ts"), unix_millis(col("ts")).as("t"))
-      val r = e.agg(min("user_id"), max("user_id"), min("t"), max("t")).head()
-      val (ulo, uhi) = (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)
-      val (tlo, thi) = (r.getAs[Number](2).longValue, r.getAs[Number](3).longValue)
-      val (bu1, bu2) = (ulo, ulo + (uhi - ulo) / 4)
-      val (bt1, bt2) = (tlo + (thi - tlo) / 4, tlo + 3 * (thi - tlo) / 4)
+    val base = tempDir("graft-zorder").toFile
+    val e = Tables.events(spark, sf001)
+      .select(col("event_id"), col("user_id"), col("ts"), unix_millis(col("ts")).as("t"))
+    val r = e.agg(min("user_id"), max("user_id"), min("t"), max("t")).head()
+    val (ulo, uhi) = (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)
+    val (tlo, thi) = (r.getAs[Number](2).longValue, r.getAs[Number](3).longValue)
+    val (bu1, bu2) = (ulo, ulo + (uhi - ulo) / 4)
+    val (bt1, bt2) = (tlo + (thi - tlo) / 4, tlo + 3 * (thi - tlo) / 4)
 
-      val zPath = new java.io.File(base, "z").getAbsolutePath
-      val linPath = new java.io.File(base, "lin").getAbsolutePath
-      Layout.zorderWrite(e, "user_id", "t", 16, zPath)
-      e.repartitionByRange(16, col("t")).sortWithinPartitions("t")
-        .write.parquet(linPath)
+    val zPath = new java.io.File(base, "z").getAbsolutePath
+    val linPath = new java.io.File(base, "lin").getAbsolutePath
+    Layout.zorderWrite(e, "user_id", "t", 16, zPath)
+    e.repartitionByRange(16, col("t")).sortWithinPartitions("t")
+      .write.parquet(linPath)
 
-      def overlapping(path: String): Long =
-        spark.read.parquet(path)
-          .groupBy(col("_metadata.file_path"))
-          .agg(min("user_id").as("umin"), max("user_id").as("umax"),
-            min("t").as("tmin"), max("t").as("tmax"))
-          .filter(col("umin") <= bu2 && col("umax") >= bu1 &&
-            col("tmin") <= bt2 && col("tmax") >= bt1)
-          .count()
+    def overlapping(path: String): Long =
+      spark.read.parquet(path)
+        .groupBy(col("_metadata.file_path"))
+        .agg(min("user_id").as("umin"), max("user_id").as("umax"),
+          min("t").as("tmin"), max("t").as("tmax"))
+        .filter(col("umin") <= bu2 && col("umax") >= bu1 &&
+          col("tmin") <= bt2 && col("tmax") >= bt1)
+        .count()
 
-      val (zHit, linHit) = (overlapping(zPath), overlapping(linPath))
-      assert(zHit < linHit,
-        s"z-order should touch fewer files: z=$zHit linear=$linHit of 16")
-      assert(zHit <= 8, s"z-order should skip most files for a 12.5% box, hit $zHit/16")
+    val (zHit, linHit) = (overlapping(zPath), overlapping(linPath))
+    assert(zHit < linHit,
+      s"z-order should touch fewer files: z=$zHit linear=$linHit of 16")
+    assert(zHit <= 8, s"z-order should skip most files for a 12.5% box, hit $zHit/16")
 
-      // the layout never changes answers: box aggregate parity across
-      // layouts and against the unwritten frame
-      def boxAgg(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val row = df.filter(col("user_id").between(bu1, bu2) && col("t").between(bt1, bt2))
-          .agg(count(lit(1)), sum("event_id")).head()
-        (row.getLong(0), row.getLong(1))
-      }
-      assert(boxAgg(spark.read.parquet(zPath)) === boxAgg(e))
-      assert(boxAgg(spark.read.parquet(linPath)) === boxAgg(e))
+    // the layout never changes answers: box aggregate parity across
+    // layouts and against the unwritten frame
+    def boxAgg(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val row = df.filter(col("user_id").between(bu1, bu2) && col("t").between(bt1, bt2))
+        .agg(count(lit(1)), sum("event_id")).head()
+      (row.getLong(0), row.getLong(1))
+    }
+    assert(boxAgg(spark.read.parquet(zPath)) === boxAgg(e))
+    assert(boxAgg(spark.read.parquet(linPath)) === boxAgg(e))
 
-      // range predicates reach the parquet scan
-      val plan = spark.read.parquet(zPath)
-        .filter(col("user_id").between(bu1, bu2) && col("t").between(bt1, bt2))
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(user_id"), plan)
-    } finally SparkTestBase.deleteRecursively(base)
+    // range predicates reach the parquet scan
+    val plan = spark.read.parquet(zPath)
+      .filter(col("user_id").between(bu1, bu2) && col("t").between(bt1, bt2))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(user_id"), plan)
   }
 }

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -21,7 +19,7 @@ class ManifestSpec extends SparkTestBase {
   }
 
   test("one manifest conf flips every named store; absent artifacts derive in-session") {
-    val tmp = Files.createTempDirectory("graft_manifest_").toString
+    val tmp = tempDir("graft_manifest_").toString
     PipelineOps.persistStickySplits(spark, sf0001, s"$tmp/sticky")
     PipelineOps.persistRouteIndex(spark, sf0001, s"$tmp/route_index")
     TextOps.persistMerges(spark, sf0001, s"$tmp/merges")
@@ -57,7 +55,7 @@ class ManifestSpec extends SparkTestBase {
   }
 
   test("an explicit per-artifact knob overrides the manifest; an empty one forces re-derivation") {
-    val tmp = Files.createTempDirectory("graft_manifest_").toString
+    val tmp = tempDir("graft_manifest_").toString
     PipelineOps.persistStickySplits(spark, sf0001, s"$tmp/sticky")
     Artifacts.writeManifest(spark, s"$tmp/manifest",
       Map("x68_sticky" -> s"$tmp/sticky"), freezeBoundary(sf0001))
@@ -88,7 +86,7 @@ class ManifestSpec extends SparkTestBase {
   }
 
   test("manifest validation: unknown keys, self-reference, and wrong artifact fail loudly") {
-    val tmp = Files.createTempDirectory("graft_manifest_").toString
+    val tmp = tempDir("graft_manifest_").toString
     val thr = freezeBoundary(sf0001)
     val bad1 = intercept[IllegalArgumentException] {
       Artifacts.writeManifest(spark, s"$tmp/m1", Map("not_a_store" -> "/x"), thr)
@@ -112,7 +110,7 @@ class ManifestSpec extends SparkTestBase {
   }
 
   test("re-writing a manifest in-session is served fresh (cache evicted on overwrite)") {
-    val tmp = Files.createTempDirectory("graft_manifest_").toString
+    val tmp = tempDir("graft_manifest_").toString
     val thr = freezeBoundary(sf0001)
     PipelineOps.persistStickySplits(spark, sf0001, s"$tmp/stickyA")
     val s = spark

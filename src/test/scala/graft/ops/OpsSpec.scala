@@ -756,7 +756,7 @@ class OpsSpec extends SparkTestBase {
     // and an unrelated doc is untouched
     val s = spark
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x72_").toString
+    val tmp = tempDir("graft_x72_").toString
     val dup = "a b c d e f g h"
     Seq(
       (1L, dup, "en", "srcA", dup.length.toLong),
@@ -776,7 +776,6 @@ class OpsSpec extends SparkTestBase {
       assert(syn(7L) == ((8L, 8L, 0L)), s"unrelated doc touched: ${syn(7L)}")
     } finally {
       graft.ops.Stages.clear() // the synthetic dir's gram stage must not outlive it
-      graft.SparkTestBase.deleteRecursively(new java.io.File(tmp))
     }
     // a doc whose grams are all unique keeps everything, and its md5 is
     // the md5 of its own text (the rewrite is the identity there)
@@ -1403,7 +1402,7 @@ class OpsSpec extends SparkTestBase {
 
   test("edge corpus: text/pipeline ops survive 1-5-token documents with no nulls") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge").toString
+    val dir = tempDir("graft_edge").toString
     Seq(
       (0L, "one", "en", "src0", 3L),
       (1L, "two words", "en", "src0", 9L),
@@ -1600,7 +1599,7 @@ class OpsSpec extends SparkTestBase {
     val e = graft.model.Tables.events(spark, sf0001)
       .select(to_date(col("ts")).as("d"), col("user_id"))
     val cut = e.agg(max(col("d"))).collect()(0).getDate(0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sketch-store").toString
+    val dir = tempDir("graft-sketch-store").toString
     try {
       e.filter(col("d") < lit(cut)).groupBy(col("d"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"))
@@ -1701,7 +1700,7 @@ class OpsSpec extends SparkTestBase {
     val e = graft.model.Tables.events(spark, sf0001)
       .select(to_date(col("ts")).as("d"), graft.model.Tables.cents(col("value")).as("v"))
       .filter(col("v").isNotNull)
-    val dir = java.nio.file.Files.createTempDirectory("graft-kll-store").toString
+    val dir = tempDir("graft-kll-store").toString
     try {
       e.groupBy(col("d")).agg(KllSketchAgg.kllSketch(col("v")).as("sk"))
         .write.mode("overwrite").parquet(dir)
@@ -1789,7 +1788,7 @@ class OpsSpec extends SparkTestBase {
 
   test("q32: a 3-sigma spike over the prior-week baseline flags, constants never do") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_q32").toString
+    val dir = tempDir("graft_q32").toString
     def day(d: Int) = java.sql.Timestamp.valueOf(f"2024-01-$d%02d 12:00:00")
     val rows = scala.collection.mutable.ArrayBuffer[(Long, Long, java.sql.Timestamp, String, Double)]()
     var id = 0L
@@ -1836,7 +1835,7 @@ class OpsSpec extends SparkTestBase {
 
   test("q33: OHLC bars follow the (ts, event_id) total order and aggregate exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_q33").toString
+    val dir = tempDir("graft_q33").toString
     val t0 = 1704067200000L // 2024-01-01 00:00 UTC, exactly bar-aligned
     def ts(ms: Long) = new java.sql.Timestamp(ms)
     Seq(

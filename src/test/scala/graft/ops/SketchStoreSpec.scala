@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
@@ -19,7 +17,7 @@ class SketchStoreSpec extends SparkTestBase {
     df.collect().map(_.toString).toSeq.sorted
 
   test("persisted sketch warehouse: a fresh session serves q28/q29 from the store, gates green") {
-    val tmp = Files.createTempDirectory("graft_sketch_").toString
+    val tmp = tempDir("graft_sketch_").toString
     val path = s"$tmp/sketches"
     Analytics.persistSketchDaily(spark, sf0001, path)
     assert(Artifacts.readProps(spark, path)("max_day").toLong > 20000000L,
@@ -41,7 +39,7 @@ class SketchStoreSpec extends SparkTestBase {
   }
 
   test("q28/q29 CONSUME the store: a week dropped from the warehouse vanishes from the rollups") {
-    val tmp = Files.createTempDirectory("graft_sketch_").toString
+    val tmp = tempDir("graft_sketch_").toString
     val path = s"$tmp/sketches"
     Analytics.persistSketchDaily(spark, sf0001, path)
     val n28 = Analytics.q28HllRollup(spark, sf0001).count()
@@ -63,7 +61,7 @@ class SketchStoreSpec extends SparkTestBase {
   }
 
   test("sketch-store stamp validation: wrong artifact and missing path fail loudly") {
-    val tmp = Files.createTempDirectory("graft_sketch_").toString
+    val tmp = tempDir("graft_sketch_").toString
     PipelineOps.persistStickySplits(spark, sf0001, s"$tmp/sticky")
     val fresh = spark.newSession()
     fresh.conf.set("spark.graft.sketchPath", s"$tmp/sticky")
@@ -82,7 +80,7 @@ class SketchStoreSpec extends SparkTestBase {
   }
 
   test("x74/x77 audit the sketch warehouse: fresh reads fresh, a stale log head is flagged") {
-    val tmp = Files.createTempDirectory("graft_sketch_").toString
+    val tmp = tempDir("graft_sketch_").toString
     Analytics.persistSketchDaily(spark, sf0001, s"$tmp/sketches")
     val fresh = spark.newSession()
     fresh.conf.set("spark.graft.sketchPath", s"$tmp/sketches")

@@ -144,7 +144,7 @@ class SplitStableSpec extends SparkTestBase {
   }
 
   test("persisted sticky table: a fresh session reads it back with zero migrations") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sticky_").toString
+    val tmp = tempDir("graft_sticky_").toString
     val path = s"$tmp/sticky"
     PipelineOps.persistStickySplits(spark, sf0001, path)
     val baseline = PipelineOps.x68SplitStable(spark, sf0001).collect()
@@ -171,7 +171,7 @@ class SplitStableSpec extends SparkTestBase {
   }
 
   test("x68 CONSUMES the stored table: a doctored held split is served, not re-derived") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sticky_").toString
+    val tmp = tempDir("graft_sticky_").toString
     val path = s"$tmp/sticky"
     PipelineOps.persistStickySplits(spark, sf0001, path)
     val stored = spark.read.parquet(path).collect()
@@ -210,7 +210,7 @@ class SplitStableSpec extends SparkTestBase {
   }
 
   test("sticky stamp validation: wrong artifact, tampered rows, and unstamped tables all fail loudly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sticky_").toString
+    val tmp = tempDir("graft_sticky_").toString
     val s = spark
     import s.implicits._
     val fresh = spark.newSession()
@@ -255,7 +255,7 @@ class SplitStableSpec extends SparkTestBase {
   }
 
   test("persisted x24 labels: consumers serve the stored table; missing path fails loudly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_labels_").toString
+    val tmp = tempDir("graft_labels_").toString
     val path = s"$tmp/labels"
     PipelineOps.persistLabels(spark, sf0001, path)
     val baseline = PipelineOps.x24DedupClusters(spark, sf0001).collect()
@@ -318,7 +318,7 @@ class SplitStableSpec extends SparkTestBase {
     // ReusedExchange both corpus-sized doc_id shuffles. Before this,
     // labels AND sticky were each scanned and shuffled TWICE — the
     // dominant term of x68's 18.8 s 1024× store-served line.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_x68plan_").toString
+    val tmp = tempDir("graft_x68plan_").toString
     PipelineOps.persistLabels(spark, sf0001, s"$tmp/labels")
     PipelineOps.persistStickySplits(spark, sf0001, s"$tmp/sticky")
     val fresh = spark.newSession()

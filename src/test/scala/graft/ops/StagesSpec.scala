@@ -9,7 +9,7 @@ class StagesSpec extends SparkTestBase {
 
   test("stamped-store reads are memoized per session and evicted with it") {
     Stages.clear()
-    val path = s"${Files.createTempDirectory("graft_stamped_")}/sticky"
+    val path = s"${tempDir("graft_stamped_")}/sticky"
     PipelineOps.persistStickySplits(spark, sf0001, path)
     val fresh = spark.newSession()
     fresh.conf.set("spark.graft.stickyPath", path)
@@ -35,7 +35,7 @@ class StagesSpec extends SparkTestBase {
     // over DELETED files (or skip re-validating the new stamp) — the
     // writer must evict the path's entries
     Stages.clear()
-    val path = s"${Files.createTempDirectory("graft_stamped_")}/sticky"
+    val path = s"${tempDir("graft_stamped_")}/sticky"
     PipelineOps.persistStickySplits(spark, sf0001, path)
     val fresh = spark.newSession()
     fresh.conf.set("spark.graft.stickyPath", path)
@@ -66,7 +66,7 @@ class StagesSpec extends SparkTestBase {
     // knob spelled file:/... and a persist spelled /... missed each
     // other and the session kept serving the stale memo
     Stages.clear()
-    val path = s"${Files.createTempDirectory("graft_stamped_")}/sticky"
+    val path = s"${tempDir("graft_stamped_")}/sticky"
     PipelineOps.persistStickySplits(spark, sf0001, path)
     val fresh = spark.newSession()
     fresh.conf.set("spark.graft.stickyPath", s"file:$path") // URI spelling
@@ -99,7 +99,7 @@ class StagesSpec extends SparkTestBase {
       val mem = Stages.x9Scores(spark, sf0001)
       assert(mem.queryExecution.analyzed.toString.contains("LogicalRDD"),
         "empty stageDir must build a localCheckpoint stage")
-      val root = Files.createTempDirectory("graft-stages-mode").toString
+      val root = tempDir("graft-stages-mode").toString
       spark.conf.set(modeKey, root)
       // no Stages.clear() here — the resolved root is part of the cache key
       val pq = Stages.x9Scores(spark, sf0001)
@@ -117,7 +117,7 @@ class StagesSpec extends SparkTestBase {
   }
 
   test("persisted IVFADC index: fresh session serves the stored table bit-identically") {
-    val tmp = Files.createTempDirectory("graft_ivf_").toString
+    val tmp = tempDir("graft_ivf_").toString
     val path = s"$tmp/ivf"
     VectorOps.persistPqIndex(spark, sf0001, path)
     val baseline = VectorOps.x57IvfPqSearch(spark, sf0001)
@@ -136,7 +136,7 @@ class StagesSpec extends SparkTestBase {
   }
 
   test("x57Index CONSUMES the stored index; a missing path fails loudly") {
-    val tmp = Files.createTempDirectory("graft_ivf_").toString
+    val tmp = tempDir("graft_ivf_").toString
     val path = s"$tmp/ivf"
     VectorOps.persistPqIndex(spark, sf0001, path)
     // doctor one row's list routing and store THAT — the served index
@@ -215,7 +215,7 @@ class StagesSpec extends SparkTestBase {
     Stages.clear()
     val modeKey = "spark.graft.stageDir"
     val prev = spark.conf.getOption(modeKey)
-    val root = Files.createTempDirectory("graft-stages-shared").toString
+    val root = tempDir("graft-stages-shared").toString
     try {
       spark.conf.set(modeKey, root)
       val other = spark.newSession()
@@ -238,7 +238,6 @@ class StagesSpec extends SparkTestBase {
         case None    => spark.conf.unset(modeKey)
       }
       Stages.clear()
-      graft.SparkTestBase.deleteRecursively(new java.io.File(root))
     }
   }
 

@@ -16,7 +16,7 @@ import graft.SparkTestBase
 class StoreLifecycleSpec extends SparkTestBase {
 
   test("labels + label index: freeze on an old installment, serve stale, re-freeze fresh") {
-    val tmp = Files.createTempDirectory("graft_lifecycle_").toString
+    val tmp = tempDir("graft_lifecycle_").toString
     val labelsPath = s"$tmp/labels"
     val idxPath = s"$tmp/label_index"
     val full = graft.model.Tables.documents(spark, sf0001)
@@ -100,7 +100,7 @@ class StoreLifecycleSpec extends SparkTestBase {
     // arriving AFTER the manifest repoints keep routing on A; only a
     // restarted query re-resolves and serves B. x77 is the page that
     // gates the flip itself (AuditSpec's mixed-generation test).
-    val tmp = Files.createTempDirectory("graft_flip_").toString
+    val tmp = tempDir("graft_flip_").toString
     val thr = {
       val mx = graft.model.Tables.documents(spark, sf0001)
         .agg(max(col("doc_id"))).collect()(0).getLong(0)
@@ -190,7 +190,7 @@ class StoreLifecycleSpec extends SparkTestBase {
     // store, and an in-session re-persist of that store evicted only the
     // memoized READ — the derived stage kept serving the pre-persist
     // generation. Pinned here via an observably different generation 2.
-    val tmp = Files.createTempDirectory("graft_stage_evict_").toString
+    val tmp = tempDir("graft_stage_evict_").toString
     val labelsPath = s"$tmp/labels"
     PipelineOps.persistLabels(spark, sf0001, labelsPath)
     val serving = spark.newSession()
@@ -223,7 +223,7 @@ class StoreLifecycleSpec extends SparkTestBase {
     // configured (consultation, not a successful read, is what counts),
     // then each of the nine artifacts is re-persisted in turn.
     Stages.clear()
-    val tmp = Files.createTempDirectory("graft_derived_evict_").toString
+    val tmp = tempDir("graft_derived_evict_").toString
     val stages: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "x13_bands" -> (() => Stages.x13BandsAll(spark, sf0001)),
       "x13_pairs" -> (() => Stages.x13Pairs(spark, sf0001)),

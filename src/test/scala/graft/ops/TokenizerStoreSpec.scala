@@ -17,7 +17,7 @@ class TokenizerStoreSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
 
   test("persisted tokenizer: a fresh session serves the stored model to s17Merges and x67b") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_merges_").toString
+    val tmp = tempDir("graft_merges_").toString
     val path = s"$tmp/merges"
     TextOps.persistMerges(spark, sf0001, path)
     // the stamp records the freeze parameters for auditors
@@ -57,7 +57,7 @@ class TokenizerStoreSpec extends SparkTestBase {
   }
 
   test("x67b CONSUMES the stored model: a doctored merge table is replayed, not re-derived") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_merges_").toString
+    val tmp = tempDir("graft_merges_").toString
     val s = spark
     import s.implicits._
     val derived = mergeRows(TextOps.frozenWordTypeMerges(spark, sf0001)._2)
@@ -87,7 +87,7 @@ class TokenizerStoreSpec extends SparkTestBase {
   }
 
   test("merges stamp validation: wrong artifact and missing path fail loudly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_merges_").toString
+    val tmp = tempDir("graft_merges_").toString
     // the configured path holds a DIFFERENT stamped artifact
     PipelineOps.persistStickySplits(spark, sf0001, s"$tmp/sticky")
     val fresh = spark.newSession()

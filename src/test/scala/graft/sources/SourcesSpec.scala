@@ -11,7 +11,7 @@ class SourcesSpec extends SparkTestBase {
   test("csv/json round-trip preserves the WAL schema") {
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-src").toString
+    val tmp = tempDir("graft-src").toString
     val recs = Seq(
       WalRecord(0, 1, "ADD", "p1"), WalRecord(1, 2, "ADD", "p2"),
       WalRecord(2, 1, "DELETE", null))
@@ -26,7 +26,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("jsonlDocuments enforces schema and quarantines malformed lines") {
-    val dir = Files.createTempDirectory("graft-jsonl")
+    val dir = tempDir("graft-jsonl")
     Files.writeString(dir.resolve("part0.jsonl"),
       """{"doc_id": 1, "text": "alpha beta", "lang": "en", "source": "web", "label": 0}
         |{"doc_id": 2, "text": "gamma"}
@@ -52,7 +52,7 @@ class SourcesSpec extends SparkTestBase {
     // establish the (shard_id, doc_id) layout, not a lucky upstream order
     val packed = graft.ops.PipelineOps.x31Packing(spark, sf0001)
       .orderBy(col("doc_id").desc).repartition(5)
-    val out = Files.createTempDirectory("graft-shards").toString
+    val out = tempDir("graft-shards").toString
     TestSinks.writePackedShards(packed, out)
     val writerDirs = new java.io.File(out).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("writer=")).map(_.getName).sorted
@@ -69,7 +69,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("documentsFileStream drives the S8 novelty screen off dropped files") {
-    val dir = Files.createTempDirectory("graft-docstream")
+    val dir = tempDir("graft-docstream")
     val index = graft.model.Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text"))
     // one arrival echoing an indexed doc, one fresh — the screen must
@@ -96,7 +96,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("binaryFile ingress: glob prunes at listing, metadata reads skip payload, decode e2e") {
     val s = spark
-    val dir = Files.createTempDirectory("graft-media")
+    val dir = tempDir("graft-media")
     Files.createDirectories(dir.resolve("shard0"))
     Files.write(dir.resolve("shard0/a.png"), Array[Byte](1, 2, 3, 4))
     Files.write(dir.resolve("shard0/b.wav"), Array[Byte](10, 20))
@@ -115,23 +115,23 @@ class SourcesSpec extends SparkTestBase {
       s"metadata query must prune the payload column:\n$metaPlan")
     // ingest → typed media rows → the same decode batch x15 uses
     val feats = graft.ops.Oracles.decodeFeatures(
-        graft.ops.Multimodal.mediaFromFiles(s, dir.toString, "*.png"))
+        TestSinks.mediaFromFiles(s, dir.toString, "*.png"))
       .collect().sortBy(_.n_bytes)
     assert(feats.length == 2)
     assert(feats.map(_.format).toSet == Set("png"))
     assert(feats.map(f => (f.n_bytes, f.byte_sum)).toSeq == Seq((1L, 7L), (4L, 10L)),
       feats.mkString(", "))
     // doc_id is a stable path hash: re-reading yields identical ids
-    val ids1 = graft.ops.Multimodal.mediaFromFiles(s, dir.toString, "*.png")
+    val ids1 = TestSinks.mediaFromFiles(s, dir.toString, "*.png")
       .collect().map(_.doc_id).sorted.toSeq
-    val ids2 = graft.ops.Multimodal.mediaFromFiles(s, dir.toString, "*.png")
+    val ids2 = TestSinks.mediaFromFiles(s, dir.toString, "*.png")
       .collect().map(_.doc_id).sorted.toSeq
     assert(ids1 == ids2 && ids1.distinct.size == 2)
   }
 
   test("real image decode: generated PNGs yield actual dims + raster checksum; corrupt bytes degrade") {
     val s = spark
-    val dir = Files.createTempDirectory("graft-imgs")
+    val dir = tempDir("graft-imgs")
     // two real PNGs with known rasters, written by the SAME JDK codec
     // stack the decode uses — plus one corrupt "png" (truncated garbage)
     def writePng(name: String, w: Int, h: Int, rgbOf: (Int, Int) => Int): Long = {
@@ -149,7 +149,7 @@ class SourcesSpec extends SparkTestBase {
     val sumB = writePng("b.png", 7, 5, (x, y) => (x * 31 + y * 17) * 2500)
     Files.write(dir.resolve("corrupt.png"), Array[Byte](1, 2, 3, 4))
     val feats = graft.ops.Multimodal.decodeImages(
-        graft.ops.Multimodal.mediaFromFiles(s, dir.toString, "*.png"))
+        TestSinks.mediaFromFiles(s, dir.toString, "*.png"))
       .collect().sortBy(f => (f.img_w, f.img_h))
     assert(feats.length == 3, feats.mkString(", "))
     // corrupt file: decode verdict false, sentinel dims, no task failure
@@ -164,7 +164,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("real video decode: multi-frame GIFs yield frame counts + sampled-frame checksums; corrupt bytes degrade") {
     val s = spark
-    val dir = Files.createTempDirectory("graft-gifs")
+    val dir = tempDir("graft-gifs")
     // a real multi-frame GIF written by the SAME JDK sequence writer the
     // corpus generator uses: 5 frames, 17x18, explicit 256-gray palette
     // (dims >= 16: the JDK GIF writer corrupts tiny rasters — the floor
@@ -188,7 +188,7 @@ class SourcesSpec extends SparkTestBase {
     } finally { writer.dispose(); ios.close() }
     Files.write(dir.resolve("corrupt.gif"), Array[Byte](71, 73, 70, 56)) // "GIF8" then EOF
     val feats = graft.ops.Multimodal.decodeVideo(
-        graft.ops.Multimodal.mediaFromFiles(s, dir.toString, "*.gif"))
+        TestSinks.mediaFromFiles(s, dir.toString, "*.gif"))
       .collect().sortBy(_.n_frames)
     assert(feats.length == 2, feats.mkString(", "))
     // corrupt clip: verdict false, zero counts, no task failure
@@ -204,7 +204,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("real audio decode: generated WAVs yield actual rate/channels/frames + PCM checksum") {
     val s = spark
-    val dir = Files.createTempDirectory("graft-wavs")
+    val dir = tempDir("graft-wavs")
     // real RIFF/WAVE files written by the SAME JDK stack the decode uses
     def writeWav(name: String, rate: Float, channels: Int, frames: Int): Long = {
       val fmt = new javax.sound.sampled.AudioFormat(rate, 16, channels, true, false)
@@ -224,7 +224,7 @@ class SourcesSpec extends SparkTestBase {
     val sumB = writeWav("b.wav", 44100f, 2, 300)
     Files.write(dir.resolve("corrupt.wav"), Array[Byte](82, 73, 70, 70)) // "RIFF" then EOF
     val feats = graft.ops.Multimodal.decodeAudio(
-        graft.ops.Multimodal.mediaFromFiles(s, dir.toString, "*.wav"))
+        TestSinks.mediaFromFiles(s, dir.toString, "*.wav"))
       .collect().sortBy(_.n_frames)
     assert(feats.length == 3, feats.mkString(", "))
     assert(feats.head == graft.ops.AudioFeatures(
@@ -240,7 +240,7 @@ class SourcesSpec extends SparkTestBase {
   test("orc round-trips the WAL tables with pushdown intact; feeds the WAL stream") {
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-orc")
+    val tmp = tempDir("graft-orc")
     val ev = graft.model.Tables.events(s, sf0001)
     TestSinks.writeOrc(ev, s"$tmp/events_orc")
     val back = Sources.orc(s, s"$tmp/events_orc")
@@ -255,7 +255,7 @@ class SourcesSpec extends SparkTestBase {
     assert(plan.contains("ReadSchema: struct<event_id:bigint,user_id:bigint>"),
       s"expected 2-column pruned ORC read:\n$plan")
     // streaming ingress: the WAL file stream reads ORC drops like parquet
-    val walDir = Files.createTempDirectory("graft-orc-wal")
+    val walDir = tempDir("graft-orc-wal")
     ev.limit(10)
       .select(col("event_id").as("id"), col("user_id").as("entityId"),
         col("event_type").as("operation"), col("props").as("payload"))
@@ -274,9 +274,9 @@ class SourcesSpec extends SparkTestBase {
   test("walFileStream drives the S9 temporal as-of e2e; restart replays without rewind") {
     val s = spark
     import s.implicits._
-    val watch = Files.createTempDirectory("graft-s9drop")
-    val ckpt = Files.createTempDirectory("graft-s9ckpt").toString
-    val sink = Files.createTempDirectory("graft-s9sink").toString
+    val watch = tempDir("graft-s9drop")
+    val ckpt = tempDir("graft-s9ckpt").toString
+    val sink = tempDir("graft-s9sink").toString
     // the event log in WAL shape (walSchema), halved by log-sequence range
     val log = graft.model.Tables.events(s, sf0001)
       .select(col("event_id").as("id"), col("user_id").as("entityId"),
@@ -329,7 +329,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("writePartitioned produces partition-pruned scans") {
-    val tmp = Files.createTempDirectory("graft-part").toString
+    val tmp = tempDir("graft-part").toString
     val ev = graft.model.Tables.events(spark, sf0001)
     Sources.writePartitioned(ev, s"$tmp/events_by_type", Seq("event_type"), Seq("event_id"))
     val back = Sources.parquet(spark, s"$tmp/events_by_type")
@@ -342,7 +342,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("compact merges small files and preserves data") {
     val s = spark
-    val tmp = Files.createTempDirectory("graft-compact").toString
+    val tmp = tempDir("graft-compact").toString
     val ev = graft.model.Tables.events(s, sf0001)
     ev.repartition(20).write.parquet(s"$tmp/ev") // 20 small files
     val before = new java.io.File(s"$tmp/ev").listFiles()
@@ -361,7 +361,7 @@ class SourcesSpec extends SparkTestBase {
     // default filled in (WalEntity.java:44-46), not nulls
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-wal-legacy").toString
+    val tmp = tempDir("graft-wal-legacy").toString
     val walDir = s"$tmp/wal"
     Files.createDirectories(java.nio.file.Paths.get(walDir))
     Seq(WalRecord(0, 1, "ADD", "p1"), WalRecord(1, 2, "ADD", "p2"))
@@ -385,7 +385,7 @@ class SourcesSpec extends SparkTestBase {
   test("walFileStream + WalPipeline: lifecycle, metrics, exactly-once effect") {
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-wal").toString
+    val tmp = tempDir("graft-wal").toString
     val walDir = s"$tmp/wal"
     Files.createDirectories(java.nio.file.Paths.get(walDir))
     // batch 1 lands in the WAL directory before the consumer starts

@@ -1,12 +1,35 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, lower, regexp_extract, when, xxhash64}
+
+import graft.ops.MediaRow
 
 /** Source and sink shapes only specs use: the ORC writer, the JSONL
-  * document file stream, and the packed-shard and bucketed-table sinks
-  * over the [[Sources]] readers and writers. */
+  * document file stream, the media table over real files, and the
+  * packed-shard and bucketed-table sinks over the [[Sources]] readers
+  * and writers. */
 object TestSinks {
+  /** Media table from a REAL file directory over
+    * [[Sources.binaryFiles]]: doc_id is a stable hash of
+    * the file path, format the lowercased extension, dims derived
+    * deterministically from the length (no codecs in this container; a
+    * real header parse plugs into the same decode batch). The payload
+    * column is the file's bytes, untouched. */
+  def mediaFromFiles(spark: SparkSession, path: String,
+      glob: String = "*"): Dataset[MediaRow] = {
+    import spark.implicits._
+    val ext = regexp_extract(col("path"), "\\.([^./\\\\]+)$", 1)
+    Sources.binaryFiles(spark, path, glob)
+      .select(
+        xxhash64(col("path")).as("doc_id"),
+        col("content").as("payload"),
+        lower(when(ext === "", lit("bin")).otherwise(ext)).as("format"),
+        (col("length") % 640).cast("int").as("width"),
+        (col("length") % 480).cast("int").as("height"))
+      .as[MediaRow]
+  }
+
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.Path
 import java.sql.{Connection, DriverManager}
 
 /** Test-side JDBC helpers for the WAL sink specs: a fresh embedded Derby
@@ -10,10 +10,16 @@ object JdbcTestKit {
   /** One target row: (last_id, deleted, payload). */
   type TargetRow = (Long, Int, String)
 
-  /** A fresh scratch dir (derby.log lands there) and a Derby URL in it. */
-  def freshDerby(prefix: String): (String, String) = {
-    val tmp = Files.createTempDirectory(prefix).toString
-    System.setProperty("derby.system.home", tmp)
+  // Derby boots once per JVM and keeps the system home it booted with,
+  // re-creating that dir whenever a later database is created — so the
+  // home (where derby.log lands) is one dir under the build output, never
+  // a spec's scratch dir, which is deleted when its suite ends
+  System.setProperty("derby.system.home", new java.io.File("target/derby").getAbsolutePath)
+
+  /** A fresh Derby database in the scratch dir `dir`: the dir as a string
+    * and the database URL. */
+  def freshDerby(dir: Path): (String, String) = {
+    val tmp = dir.toString
     (tmp, s"jdbc:derby:$tmp/derby;create=true")
   }
 

@@ -5,7 +5,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.scalacheck.Gen
-import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
 /** The set-at-a-time apply (`JdbcWalSink.syncAll`) against the per-record
@@ -14,10 +13,10 @@ import graft.SparkTestBase
   * sorted partitions with hot keys, DELETEs (also as a key's last op),
   * duplicate ids, and stored watermarks below, tied with and inside a
   * replayed run. Plus the partition-level routing of [[MultiplexWalSink]]. */
-class JdbcWalSinkSpec extends AnyFunSuite {
+class JdbcWalSinkSpec extends SparkTestBase {
   import JdbcTestKit._
 
-  private val (_, url) = freshDerby("graft-jdbc-sink")
+  private val (_, url) = freshDerby(tempDir("graft-jdbc-sink"))
   private val (setTable, oracleTable) = ("SET_APPLY", "ORACLE_APPLY")
   Seq(setTable, oracleTable).foreach(JdbcWalSink.ensureTable(url, _))
 

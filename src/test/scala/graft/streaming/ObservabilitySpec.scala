@@ -44,7 +44,7 @@ class ObservabilitySpec extends SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     TestSink.reset()
     val ms = MemoryStream[WalRecord]
-    val tmp = java.nio.file.Files.createTempDirectory("graft-meter").toString
+    val tmp = tempDir("graft-meter").toString
     // reporter emissions (the JmxReporter-analog path) captured per
     // absorbed batch
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Long]]()
@@ -106,7 +106,7 @@ class ObservabilitySpec extends SparkTestBase {
     import scala.jdk.CollectionConverters._
     TestSink.reset()
     val ms = MemoryStream[WalRecord]
-    val tmp = java.nio.file.Files.createTempDirectory("graft-idle-state").toString
+    val tmp = tempDir("graft-idle-state").toString
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Long]]()
     val p = new WalPipeline(ms.toDS(), new TestSink, s"$tmp/ckpt",
       pollMillis = 50L, retrySleepMs = 1L, reporterEmit = g => emitted.add(g))
@@ -152,7 +152,7 @@ class ObservabilitySpec extends SparkTestBase {
     // is applied — including new records of keys the replay straddles.
     val s = spark
     import s.implicits._
-    val (tmp, url) = JdbcTestKit.freshDerby("graft-jdbc-replay")
+    val (tmp, url) = JdbcTestKit.freshDerby(tempDir("graft-jdbc-replay"))
     val walDir = s"$tmp/wal"
     JdbcWalSink.ensureTable(url, "replay_target")
     val rnd = new scala.util.Random(11)

@@ -34,7 +34,7 @@ class RecoverySpec extends SparkTestBase {
   test("pipeline restart from checkpoint: no duplicate effects, no lost records") {
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-recover").toString
+    val tmp = tempDir("graft-recover").toString
     val walDir = s"$tmp/wal"
     Files.createDirectories(java.nio.file.Paths.get(walDir))
     TestSink.reset()
@@ -80,7 +80,7 @@ class RecoverySpec extends SparkTestBase {
     // wins). Either way the sink must see exactly one effect per record.
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-ha").toString
+    val tmp = tempDir("graft-ha").toString
     val walDir = s"$tmp/wal"
     Files.createDirectories(java.nio.file.Paths.get(walDir))
     TestSink.reset()
@@ -153,11 +153,9 @@ class RecoverySpec extends SparkTestBase {
     // catches the dead target up to convergence without double-applies.
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-fanout").toString
+    val (tmp, url) = JdbcTestKit.freshDerby(tempDir("graft-fanout"))
     val walDir = s"$tmp/wal"
     Files.createDirectories(java.nio.file.Paths.get(walDir))
-    System.setProperty("derby.system.home", tmp) // derby.log stays in scratch
-    val url = s"jdbc:derby:$tmp/derby;create=true"
     JdbcWalSink.ensureTable(url, "wal_target")
 
     def snapA: Map[Long, String] =
@@ -227,11 +225,9 @@ class RecoverySpec extends SparkTestBase {
     // type must land the identical state.
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-mux").toString
+    val (tmp, url) = JdbcTestKit.freshDerby(tempDir("graft-mux"))
     val walDir = s"$tmp/wal"
     Files.createDirectories(java.nio.file.Paths.get(walDir))
-    System.setProperty("derby.system.home", tmp)
-    val url = s"jdbc:derby:$tmp/derby;create=true"
     Seq("users_target", "orders_target", "mux_users", "mux_orders")
       .foreach(JdbcWalSink.ensureTable(url, _))
 
@@ -309,9 +305,7 @@ class RecoverySpec extends SparkTestBase {
     // everything exactly once when the target appears.
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-jdbc-outage").toString
-    System.setProperty("derby.system.home", tmp)
-    val url = s"jdbc:derby:$tmp/derby2;create=true"
+    val (tmp, url) = JdbcTestKit.freshDerby(tempDir("graft-jdbc-outage"))
     val walDir = s"$tmp/wal"
     Files.createDirectories(java.nio.file.Paths.get(walDir))
     Seq(WalRecord(0, 1, "ADD", "a0"), WalRecord(1, 2, "ADD", "b0"))
@@ -351,7 +345,7 @@ class RecoverySpec extends SparkTestBase {
     // applied and the already-done meter stays 0.
     val s = spark
     import s.implicits._
-    val (tmp, url) = JdbcTestKit.freshDerby("graft-jdbc-fault")
+    val (tmp, url) = JdbcTestKit.freshDerby(tempDir("graft-jdbc-fault"))
     val walDir = s"$tmp/wal"
     JdbcWalSink.ensureTable(url, "fault_target")
     JdbcTestKit.exec(url,
@@ -419,7 +413,7 @@ class RecoverySpec extends SparkTestBase {
     // attempt.
     val s = spark
     import s.implicits._
-    val (tmp, url) = JdbcTestKit.freshDerby("graft-jdbc-multipart")
+    val (tmp, url) = JdbcTestKit.freshDerby(tempDir("graft-jdbc-multipart"))
     val walDir = s"$tmp/wal"
     JdbcWalSink.ensureTable(url, "multipart_target")
     JdbcTestKit.exec(url,
@@ -508,7 +502,7 @@ class RecoverySpec extends SparkTestBase {
       .foreachBatch { (_: org.apache.spark.sql.Dataset[WalRecord], _: Long) =>
         throw new java.io.IOException("target unreachable and not retried here")
       }
-      .option("checkpointLocation", Files.createTempDirectory("graft-fail").toString)
+      .option("checkpointLocation", tempDir("graft-fail").toString)
       .start()
     metrics.queryId = q.id
     try {

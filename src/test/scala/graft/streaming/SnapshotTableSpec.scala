@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkTestBase
 
@@ -11,7 +9,7 @@ class SnapshotTableSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val tmp = Files.createTempDirectory("graft-snap").toString
+    val tmp = tempDir("graft-snap").toString
     val ms = MemoryStream[WalRecord]
     val q = SnapshotTable.materialize(ms.toDS(), s"$tmp/table", s"$tmp/ckpt", nParts = 1)
     def state(): Map[Long, String] =
@@ -39,7 +37,7 @@ class SnapshotTableSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx = s.sqlContext
-    val tmp = Files.createTempDirectory("graft-psnap").toString
+    val tmp = tempDir("graft-psnap").toString
     val base = s"$tmp/table"
     val nParts = 4
     val ms = MemoryStream[WalRecord]
@@ -82,7 +80,7 @@ class SnapshotTableSpec extends SparkTestBase {
   test("orphaned version from a crashed batch never displaces the manifest-referenced one") {
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-orphan").toString
+    val tmp = tempDir("graft-orphan").toString
     val base = s"$tmp/table"
     val nParts = 2
     val sink = SnapshotTable.partitionedSink(base, nParts)

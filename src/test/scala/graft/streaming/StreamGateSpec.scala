@@ -73,7 +73,7 @@ class StreamGateSpec extends SparkTestBase {
 
   test("s20 serves PERSISTED retrieval stats: round trip, doctored consumption, loud missing path") {
     import org.apache.spark.sql.functions._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_s20_").toString
+    val tmp = tempDir("graft_s20_").toString
     val path = s"$tmp/stats"
     graft.streaming.StreamGate.persistRetrievalStats(spark, sf0001, path)
     val baseline = graft.streaming.StreamGate.s20RetrievalStream(spark, sf0001).collect()
@@ -274,9 +274,9 @@ class StreamGateSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
-    val watch = Files.createTempDirectory("graft-s12drop")
-    val ckpt = Files.createTempDirectory("graft-s12ckpt").toString
-    val sink = Files.createTempDirectory("graft-s12sink").toString
+    val watch = tempDir("graft-s12drop")
+    val ckpt = tempDir("graft-s12ckpt").toString
+    val sink = tempDir("graft-s12sink").toString
     val log = graft.model.Tables.events(s, sf0001)
       .select(col("event_id").as("eventId"), unix_millis(col("ts")).as("tsMs"),
         col("user_id").as("userId"), col("event_type").as("op"), col("value"))
@@ -337,9 +337,9 @@ class StreamGateSpec extends SparkTestBase {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     val s = spark
-    val watch = Files.createTempDirectory("graft-s10drop")
-    val ckpt = Files.createTempDirectory("graft-s10ckpt").toString
-    val sink = Files.createTempDirectory("graft-s10sink").toString
+    val watch = tempDir("graft-s10drop")
+    val ckpt = tempDir("graft-s10ckpt").toString
+    val sink = tempDir("graft-s10sink").toString
     val docs = graft.model.Tables.documents(s, sf0001)
       .select(col("doc_id"), col("lang"), col("text"))
     val mid = docs.agg(max(col("doc_id"))).collect()(0).getLong(0) / 2
@@ -391,9 +391,9 @@ class StreamGateSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
-    val watch = Files.createTempDirectory("graft-s19drop")
-    val ckpt = Files.createTempDirectory("graft-s19ckpt").toString
-    val sink = Files.createTempDirectory("graft-s19sink").toString
+    val watch = tempDir("graft-s19drop")
+    val ckpt = tempDir("graft-s19ckpt").toString
+    val sink = tempDir("graft-s19sink").toString
     val docs = graft.model.Tables.documents(s, sf0001).select(col("doc_id"), col("text"))
     val budget = docs.agg(graft.model.Tables.fdiv(
         sum(size(split(col("text"), " ")).cast("long")), lit(2L)))
@@ -469,8 +469,8 @@ class StreamGateSpec extends SparkTestBase {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     val s = spark
-    val watch = Files.createTempDirectory("graft-s11drop")
-    val ckpt = Files.createTempDirectory("graft-s11ckpt").toString
+    val watch = tempDir("graft-s11drop")
+    val ckpt = tempDir("graft-s11ckpt").toString
     val e = graft.model.Tables.events(s, sf0001)
       .select(col("event_id"), col("ts"), col("user_id"))
     val mid = e.agg(max(col("event_id"))).collect()(0).getLong(0) / 2
@@ -529,8 +529,8 @@ class StreamGateSpec extends SparkTestBase {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     val s = spark
-    val watch = Files.createTempDirectory("graft-s13drop")
-    val ckpt = Files.createTempDirectory("graft-s13ckpt").toString
+    val watch = tempDir("graft-s13drop")
+    val ckpt = tempDir("graft-s13ckpt").toString
     val e = graft.model.Tables.events(s, sf0001)
       .select(col("event_id"), col("ts"), col("value"))
     val mid = e.agg(max(col("event_id"))).collect()(0).getLong(0) / 2
@@ -586,8 +586,8 @@ class StreamGateSpec extends SparkTestBase {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     val s = spark
-    val watch = Files.createTempDirectory("graft-s14drop")
-    val ckpt = Files.createTempDirectory("graft-s14ckpt").toString
+    val watch = tempDir("graft-s14drop")
+    val ckpt = tempDir("graft-s14ckpt").toString
     val e = graft.model.Tables.events(s, sf0001)
       .select(col("event_id"), col("ts"), col("value"))
     val mid = e.agg(max(col("event_id"))).collect()(0).getLong(0) / 2
@@ -651,8 +651,8 @@ class StreamGateSpec extends SparkTestBase {
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     val s = spark
-    val watch = Files.createTempDirectory("graft-s15drop")
-    val ckpt = Files.createTempDirectory("graft-s15ckpt").toString
+    val watch = tempDir("graft-s15drop")
+    val ckpt = tempDir("graft-s15ckpt").toString
     val e = graft.model.Tables.events(s, sf0001)
       .select(col("event_id"), col("ts"), col("event_type"))
     val mid = e.agg(max(col("event_id"))).collect()(0).getLong(0) / 2

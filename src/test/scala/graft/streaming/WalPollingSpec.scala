@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
@@ -35,7 +34,7 @@ class WalPollingSpec extends SparkTestBase {
   test("back-to-back batches: a backlog of one-file triggers drains in under one pollMillis") {
     val s = spark
     import s.implicits._
-    val tmp = Files.createTempDirectory("graft-poll").toString
+    val tmp = tempDir("graft-poll").toString
     val walDir = s"$tmp/wal"
     for (f <- 0 until 4)
       Seq(WalRecord(f, f + 1, "ADD", s"v$f")).toDF().write.mode("append").parquet(walDir)
@@ -62,7 +61,7 @@ class WalPollingSpec extends SparkTestBase {
 
   test("an idle WAL is polled about once per pollMillis, whatever the session's own delay") {
     val polls = new AtomicInteger(0)
-    val tmp = Files.createTempDirectory("graft-idle").toString
+    val tmp = tempDir("graft-idle").toString
     val pollMillis = 500L
     val windowMs = 3000L
     val prior = pollingDelaySetting
@@ -85,7 +84,7 @@ class WalPollingSpec extends SparkTestBase {
   }
 
   test("start() leaves spark.sql.streaming.pollingDelay as it found it, unset or set") {
-    val tmp = Files.createTempDirectory("graft-delay").toString
+    val tmp = tempDir("graft-delay").toString
     val prior = pollingDelaySetting
     def startAndClose(ckpt: String): Unit = {
       val p = new WalPipeline(countingWal(new AtomicInteger).toDS(), new TestSink,

@@ -103,10 +103,10 @@ object Bench {
       } else sorted
     }
     // SPARK_GRAFT_BENCH_REPEAT=N (default 1) reports each query's MEDIAN
-    // over N back-to-back runs. CAVEAT: attempts 2..N reuse caches and
-    // materialized stages built by attempt 1 (scaledEmb, Stages frames),
-    // so REPEAT>=2 medians are a WARM regime — compare them only to
-    // other REPEAT runs, never to single-run totals
+    // over N back-to-back runs. CAVEAT: attempts 2..N reuse the Stages
+    // entries (frames, driver-held values, stamped reads) built by
+    // attempt 1, so REPEAT>=2 medians are a WARM regime — compare them
+    // only to other REPEAT runs, never to single-run totals
     val repeat = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "1").toInt, 1)
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted

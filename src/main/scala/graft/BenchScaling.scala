@@ -514,11 +514,6 @@ object BenchScaling {
         stale.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stale, true)
       }
       Stages.clear() // per-factor dirs must not share dedup stages
-      // .cache()'d corpora (scaledEmb, stream feeds) are keyed by plan —
-      // prior factors' entries would stay pinned through every later
-      // leg, shrinking execution memory exactly when the biggest factor
-      // needs it; evict them with the stages
-      spark.catalog.clearCache()
       // warmup: push the join+agg noop-write path through codegen once
       Relational.q3JoinBcast(spark, dir).write.format("noop").mode("overwrite").save()
       // SPARK_GRAFT_SCALE_STORES=<dir>: the STORE-SERVED governance leg

@@ -186,16 +186,6 @@ object Artifacts {
     }
   }
 
-  // the manifest's (artifact → path) rows, collected once per
-  // (session, path): configuredPath runs on every query construction,
-  // and a 7-row parquet collect per call would be a driver job per
-  // query — memoized here, evicted when writeStamped overwrites the
-  // path; stopped-context entries are purged on the build path. Keys
-  // are NORMALIZED paths ([[normPath]]) so insertion and eviction agree
-  // across spellings.
-  private val manifestCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Map[String, String]]
-
   /** One canonical spelling for store-path cache keys: qualified against
     * the path's filesystem (file:/ URI vs bare path, relative vs
     * absolute all collapse to one form), trailing slash stripped —
@@ -212,21 +202,13 @@ object Artifacts {
         .makeQualified(p).toString.stripSuffix("/")
     } catch { case scala.util.control.NonFatal(_) => path.stripSuffix("/") }
 
-  private def manifestEntries(spark: SparkSession, mpath: String): Map[String, String] = {
-    val key = (spark, normPath(spark, mpath))
-    manifestCache.getOrElse(key, {
-      manifestCache.keys.filter(_._1.sparkContext.isStopped).foreach(manifestCache.remove)
-      manifestCache.getOrElseUpdate(key,
-        readStamped(spark, mpath, StoreManifest.key).collect()
-          .map(r => (r.getString(0), r.getString(1))).toMap)
-    })
-  }
-
-  /** Drop every memoized manifest map (all sessions) — [[Stages.clear]]
-    * calls this so the global reset covers ALL read memos symmetrically
-    * (a per-factor scaling reset that cleared stages but kept manifest
-    * maps would serve a previous factor's store set). */
-  private[graft] def clearManifestCache(): Unit = manifestCache.clear()
+  // the manifest's (artifact → path) rows, collected once per (session,
+  // path) — configuredPath runs on every query construction, and a
+  // parquet collect per call would be a driver job per query
+  private def manifestEntries(spark: SparkSession, mpath: String): Map[String, String] =
+    Stages.atPath(spark, mpath, s"manifest:${StoreManifest.key}")(
+      readStamped(spark, mpath, StoreManifest.key).collect()
+        .map(r => (r.getString(0), r.getString(1))).toMap)
 
   /** Persist a store-set manifest — the atomic-flip form of the eight
     * path knobs: one stamped table of (artifact, path) rows naming a
@@ -272,9 +254,7 @@ object Artifacts {
     // overwritten files) or skip re-validating the new stamp — evict
     // the path's validated-read entries alongside the overwrite, under
     // the same normalized key the readers insert with
-    val norm = normPath(spark, path)
-    Stages.invalidateStamped(norm)
-    manifestCache.keys.filter(_._2 == norm).foreach(manifestCache.remove)
+    Stages.invalidatePath(normPath(spark, path))
     // ...and the STAGES whose build consulted this artifact: they were
     // derived from the pre-overwrite store generation (or from none) —
     // without this, an in-session re-persist left them serving stale

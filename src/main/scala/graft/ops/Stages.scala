@@ -44,17 +44,23 @@ import graft.streaming.StreamGate
   *  - [[ReplayFeed]]: a stream gate's staged replay files; release is
   *    [[StreamGate.deleteFeed]].
   *  - [[Corpus]]: a generated media corpus directory; release deletes it.
+  *  - Path entries ([[atPath]]), keyed by a store's normalized path
+  *    instead of an sfDir: a validated stamped-store read ([[readStamped]])
+  *    and a store-set manifest's (artifact → path) map
+  *    ([[Artifacts.configuredPath]]). Both are lazy plans or driver-held
+  *    maps; release is nothing. [[Artifacts.writeStamped]] drops the
+  *    overwritten path's entries ([[invalidatePath]]).
   *
   * Eviction runs the release action of every entry it drops:
   * [[evictSession]] drops one session's entries, [[evict]] one context's
   * (wired to `onApplicationEnd`, the one listener every entry kind
   * shares), [[purgeStopped]] those of stopped contexts (the build slow
   * path's backstop), and [[clear]] every entry. The first three also
-  * drop the owners' stamped-read memos and parquet run scratch; [[clear]]
-  * drops every stamped-read and manifest memo. The exception is
+  * drop the owners' parquet run scratch. The exception is
   * [[invalidateStoreDerived]]: a store overwrite drops the entries built
   * from that store WITHOUT releasing them (frames built before the
-  * overwrite keep serving their generation).
+  * overwrite keep serving their generation); path entries consult no
+  * store, so it never drops them.
   *
   * The cached frames are the BOUNDED artifacts of the pipeline — pair
   * lists capped upstream by df caps/banding and the label table (one row
@@ -80,6 +86,8 @@ object Stages {
     * serve) it for a (session, sfDir). Constructing one registers it, and
     * only this object constructs them, so the registry is complete. */
   sealed abstract class Stage[T](val name: String) {
+    // ':' marks the path entries' namespace ([[atPath]])
+    require(!name.contains(':'), s"stage name '$name' must not contain ':'")
     declared += this
     def apply(spark: SparkSession, dir: String): T
   }
@@ -87,7 +95,8 @@ object Stages {
   // key: (session, sfDir, entry name, resolved stage root) — the root is
   // part of a frame's key so toggling spark.graft.stageDir mid-session
   // builds the new mode's stage instead of silently serving the old
-  // mode's; the other kinds key with None
+  // mode's; the other kinds key with None. Path entries ([[atPath]])
+  // put the normalized store path where the sfDir goes
   private type Key = (SparkSession, String, String, Option[String])
   // the built value, the store keys its build consulted (see [[cached]])
   // and the action that frees what it holds
@@ -95,23 +104,12 @@ object Stages {
   private val entries = TrieMap.empty[Key, Entry]
   private val noRelease: () => Unit = () => ()
 
-  // validated stamped-store reads, memoized per (session, path, artifact):
-  // Artifacts.readStamped runs the meta collect plus a full count()
-  // validation job per call, and the label/sticky/index stores each have
-  // several consumers per session — validate once, serve the validated
-  // frame (plus the stamp's row count and freeze props, so a consumer
-  // needing both never re-validates) after that. Entries are lazy
-  // parquet plans (no pinned blocks); eviction is bare map removal, and
-  // [[Artifacts.writeStamped]] evicts its path's entries on overwrite
-  // (a persist-then-read flow reusing one path must re-validate the new
-  // stamp, never serve a plan over deleted files).
-  private val stampedCache =
-    TrieMap.empty[(SparkSession, String, String), (DataFrame, Long, Map[String, String])]
-
   /** [[Artifacts.readStamped]] with the validation memoized per
     * (session, path, artifact) — the accessor every configured-path
-    * branch goes through. Same build discipline as [[cached]]: fast-path
-    * get, validate under the one monitor. */
+    * branch goes through. Artifacts.readStamped runs the meta collect
+    * plus a full count() validation job per call, and the label, sticky
+    * and index stores each have several consumers per session: validate
+    * once, serve the validated frame after that. */
   private[graft] def readStamped(spark: SparkSession, path: String,
       artifact: String): DataFrame =
     readStampedEntry(spark, path, artifact)._1
@@ -132,29 +130,32 @@ object Stages {
       store: Artifacts.Store): Option[(DataFrame, Long)] =
     Artifacts.configuredPath(spark, store.key).map(generationAt(spark, _, store))
 
+  // the validated frame plus the stamp's row count and freeze props, so
+  // a consumer needing both never re-validates
   private def readStampedEntry(spark: SparkSession, path: String,
-      artifact: String): (DataFrame, Long, Map[String, String]) = {
-    // normalized key ([[Artifacts.normPath]]): equivalent spellings
-    // (file:/ URI vs bare, relative vs absolute) share one memo, so
-    // writeStamped's eviction cannot miss a read inserted under another
-    // spelling of the same location
-    val key = (spark, Artifacts.normPath(spark, path), artifact)
-    stampedCache.get(key).getOrElse(synchronized {
-      purgeStopped()
-      hookEviction(spark)
-      stampedCache.getOrElseUpdate(key,
-        Artifacts.readStampedWithFacts(spark, path, artifact))
-    })
-  }
+      artifact: String): (DataFrame, Long, Map[String, String]) =
+    atPath(spark, path, s"stamped:$artifact")(
+      Artifacts.readStampedWithFacts(spark, path, artifact))
 
-  /** Drop every memoized read of the NORMALIZED path `norm` (all
-    * sessions, all artifact keys) — called by [[Artifacts.writeStamped]]
-    * when the path is overwritten, so a re-persist within a session is
-    * served fresh and re-validated instead of from a plan over the
-    * deleted files. Callers pass [[Artifacts.normPath]] output; entries
-    * are inserted under the same normalization. */
-  private[graft] def invalidateStamped(norm: String): Unit =
-    stampedCache.keys.filter(_._2 == norm).foreach(stampedCache.remove)
+  /** A value read from the store at `path`, memoized per (session,
+    * normalized path, `kind`) — a path entry. The key's name is `kind`,
+    * which holds a ':' no stage name has, so the two namespaces cannot
+    * collide. The normalized path ([[Artifacts.normPath]]) lets
+    * equivalent spellings (file:/ URI vs bare, relative vs absolute)
+    * share one entry, so [[invalidatePath]] cannot miss one inserted
+    * under another spelling of the same location. */
+  private[graft] def atPath[T](spark: SparkSession, path: String, kind: String)(
+      read: => T): T =
+    cached((spark, Artifacts.normPath(spark, path), kind, None))((read, noRelease))
+
+  /** Drop every path entry ([[atPath]]) at the NORMALIZED path `norm` (all
+    * sessions, all kinds) — called by [[Artifacts.writeStamped]] when
+    * the path is overwritten, so a re-persist within a session is served
+    * fresh and re-validated instead of from a plan over the deleted
+    * files. */
+  private[graft] def invalidatePath(norm: String): Unit = synchronized {
+    entries.keys.filter(k => k._2 == norm && k._3.contains(':')).foreach(entries.remove)
+  }
 
   // the store-key sets of the builds running on this thread, innermost
   // first (builds nest: a stage's build asks for other stages)
@@ -173,7 +174,7 @@ object Stages {
 
   /** Drop every entry whose build consulted `artifact` — called by
     * [[Artifacts.writeStamped]] after the overwrite, alongside
-    * [[invalidateStamped]]. Complete by construction: the dependency
+    * [[invalidatePath]]. Complete by construction: the dependency
     * sets are recorded, never hand-kept, so a new stage that reads a
     * store is evicted without being listed anywhere. Conservative across
     * sessions and sfDirs: eviction is cheap (consumers rebuild on next
@@ -194,12 +195,12 @@ object Stages {
   private[graft] def dependentStages(artifact: String): Set[String] =
     dependents(artifact).map(_._3).toSet
 
-  private[graft] def cachedEntryCount: Int = entries.size + stampedCache.size
+  private[graft] def cachedEntryCount: Int = entries.size
 
-  /** How many entries (stages, feeds, corpora, stamped reads) `spark`
+  /** How many entries (stages, feeds, corpora, path entries) `spark`
     * owns. */
   private[graft] def sessionEntryCount(spark: SparkSession): Int =
-    entries.keys.count(_._1 eq spark) + stampedCache.keys.count(_._1 eq spark)
+    entries.keys.count(_._1 eq spark)
 
   /** Drop every entry whose session `owned` selects, running its release
     * action. The per-key `remove` is atomic, so a release runs once even
@@ -212,10 +213,9 @@ object Stages {
       }
     }
 
-  /** [[release]] plus the owners' stamped reads and run scratch dirs. */
+  /** [[release]] plus the owners' run scratch dirs. */
   private def drop(owned: SparkSession => Boolean): Unit = {
     release(owned)
-    stampedCache.keys.filter(k => owned(k._1)).foreach(stampedCache.remove)
     runIds.keys.filter(owned).foreach(dropRunScratch)
   }
 
@@ -239,8 +239,9 @@ object Stages {
     * sessions over ONE live context (a notebook server): Spark has no
     * session-end listener event, so a session owner that is done should
     * call this to free everything the session pinned — checkpoint
-    * blocks, replay feeds, media corpora, stamped-read memos and its
-    * parquet run scratch — rather than leaving it until application end.
+    * blocks, replay feeds, media corpora, stamped reads, manifest maps
+    * and its parquet run scratch — rather than leaving it until
+    * application end.
     * Synchronized with the build monitor so an in-flight build can't
     * slip an entry past the eviction's key snapshot. NOTE: released
     * stages cannot recompute (localCheckpoint truncates lineage) — call
@@ -725,18 +726,11 @@ object Stages {
     PipelineOps.serveLabelIndex(s21IndexFull(spark, dir))
 
   /** Drop every entry of every session, releasing each (checkpoint
-    * blocks, feed and corpus dirs), plus every stamped-read and manifest
-    * memo (sessions keep their parquet run scratch). Tests that re-run
-    * one query under varied configs — e.g. DeterminismSpec's
+    * blocks, feed and corpus dirs); stamped reads and manifest maps go
+    * with them (sessions keep their parquet run scratch). Tests that
+    * re-run one query under varied configs — e.g. DeterminismSpec's
     * shuffle-partition sweep — must clear between runs or the cache
     * would mask the property under test; BenchScaling clears per
-    * factor. */
-  def clear(): Unit = synchronized {
-    release(_ => true)
-    stampedCache.clear()
-    // the manifest (artifact → path) maps are read memos the same way —
-    // the global reset must cover them or a per-factor scaling run
-    // serves a previous factor's store set (r18 ADVICE)
-    Artifacts.clearManifestCache()
-  }
+    * factor, and that is its whole per-factor reset. */
+  def clear(): Unit = synchronized(release(_ => true))
 }

@@ -393,15 +393,16 @@ object VectorOps {
   }
 
   /** Corpus frame for the k-means family: (vec_id, v, nrm, sv) with sv
-    * the 1e6-scaled long components. Cached — traversed by every
-    * k-means round plus assignment/probe/x27 scoring; a few MB at bench
-    * SF, sample-sized at real scale (Spark's cache manager dedups
-    * repeated calls by plan, so this is one cache entry per sfDir). */
+    * the 1e6-scaled long components. A plain plan, never cached: a
+    * consumer plan scans it at most twice and each k-means job once, a
+    * parquet scan of a small corpus (2,000 × 64 floats at sf0.1). What is
+    * worth keeping — centroids, codebooks, the IVFADC index — is a
+    * [[Stages]] entry, so [[Stages.clear]] releases everything the vector
+    * family pins. */
   private def scaledEmb(spark: SparkSession, dir: String): DataFrame =
     withNorm(embeddings(spark, dir))
       .withColumn("sv", transform(col("v"),
         x => floor(x.cast("double") * lit(x16Scale.toDouble))))
-      .cache()
 
   /** Seeded Lloyd's k-means over the embedding corpus — init = the k
     * lowest vec_ids, x16Iters refinement rounds, exact scaled-integer

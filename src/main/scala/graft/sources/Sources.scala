@@ -9,15 +9,17 @@ import graft.streaming.WalRecord
   * Hibernate points at and writes to arbitrary external targets through the
   * sink callback (`/root/reference/src/test/resources/hibernate.cfg.xml:7-12`,
   * `WalEntityConsumerCallback.java:10-17`). The Spark re-expression keeps
-  * both ends pluggable:
+  * both ends pluggable. Plain reads (parquet, ORC, csv, json, jdbc — the
+  * last the direct analog of the reference's RDBMS WAL table) are
+  * `spark.read` itself; this object holds only what adds a policy to one:
   *
-  *  - batch sources: parquet / csv / json / jdbc (jdbc = the direct
-  *    analog of the reference's RDBMS WAL table);
-  *  - streaming sources: file-arrival streams over the same formats with
-  *    a fixed schema (required by Structured Streaming), plus rate for
-  *    testing;
-  *  - sinks: partitioned parquet writers, and the streaming foreachBatch
-  *    sink in graft.streaming.Streams.
+  *  - batch sources: the JSONL corpus reader with its quarantine split,
+  *    and binary-file ingress for the media decodes;
+  *  - streaming sources: the file-arrival WAL stream with a fixed schema
+  *    (required by Structured Streaming);
+  *  - sinks: the sort-prefixed partitioned parquet writer and the
+  *    crash-safe compaction swap; the streaming foreachBatch sink is in
+  *    graft.streaming.Streams.
   *
   * Scale notes: every reader exposes options for partition sizing
   * (`maxFilesPerTrigger` on streams); writers default to partitioning by a
@@ -41,30 +43,6 @@ object Sources {
     StructField("entityType", StringType, nullable = true)))
 
   // ---- batch sources ----
-
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** ORC — the other columnar format Spark supports natively (no extra
-    * jar; the avro CONNECTOR is absent from this build, so avro is
-    * deliberately not offered). Same pushdown/pruning contract as
-    * parquet: predicates and projections reach the scan
-    * (`PushedFilters`/`ReadSchema` — asserted in SourcesSpec), so a
-    * warehouse already on ORC plugs in without a rewrite. Also valid as
-    * `walFileStream(format = "orc")` for the streaming ingress. */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def csv(spark: SparkSession, path: String, schema: StructType = null,
-      header: Boolean = true): DataFrame = {
-    val r = spark.read.option("header", header.toString)
-    (if (schema != null) r.schema(schema) else r.option("inferSchema", "true")).csv(path)
-  }
-
-  def json(spark: SparkSession, path: String, schema: StructType = null): DataFrame = {
-    val r = spark.read
-    (if (schema != null) r.schema(schema) else r).json(path)
-  }
 
   /** The JSONL document-corpus schema ([[jsonlDocuments]]); `lang`,
     * `source`, `label` are optional in the wire format (absent → null). */
@@ -120,14 +98,6 @@ object Sources {
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", "true")
       .load(path)
-
-  /** JDBC WAL table — the direct analog of the reference's source. Pass
-    * predicates/partitioning options for parallel reads (numPartitions +
-    * partitionColumn=id bounds the per-task slice of the log). */
-  def jdbc(spark: SparkSession, url: String, table: String,
-      options: Map[String, String] = Map.empty): DataFrame =
-    spark.read.format("jdbc").option("url", url).option("dbtable", table)
-      .options(options).load()
 
   // ---- streaming sources ----
 

@@ -20,7 +20,7 @@ import scala.util.Using
   * = 1) rather than removing it: the idempotency watermark must survive
   * the delete, or a replayed earlier record would resurrect the entity.
   * Readers filter `deleted = 0` (see the RecoverySpec fan-out e2e, which
-  * reads back through [[graft.sources.Sources.jdbc]]).
+  * reads back through Spark's jdbc source).
   *
   * Apply path: set-at-a-time, one partition per [[syncAll]] call. The
   * partition must be sorted by `(entityId, id)` — [[Streams.foreachBatchSync]]'s

@@ -9,8 +9,12 @@ class StagesSpec extends SparkTestBase {
 
   test("stamped-store reads are memoized per session and evicted with it") {
     Stages.clear()
-    val path = s"${tempDir("graft_stamped_")}/sticky"
+    val tmp = tempDir("graft_stamped_")
+    val path = s"$tmp/sticky"
+    val manifest = s"$tmp/manifest"
     PipelineOps.persistStickySplits(spark, sf0001, path)
+    Artifacts.writeManifest(spark, manifest, Map("x68_sticky" -> path),
+      Artifacts.readProps(spark, path)("thr").toLong)
     val fresh = spark.newSession()
     fresh.conf.set("spark.graft.stickyPath", path)
     try {
@@ -23,10 +27,21 @@ class StagesSpec extends SparkTestBase {
       assert(Stages.x68Sticky(fresh, sf0001) eq first,
         "second read must serve the memoized validated frame")
       assert(Stages.cachedEntryCount == n0 + 1)
+      // the same store served through the manifest: its (artifact → path)
+      // map lands as one entry, and the stamped read of the path is a hit
+      fresh.conf.unset("spark.graft.stickyPath")
+      fresh.conf.set("spark.graft.storeManifest", manifest)
+      assert(Stages.x68Sticky(fresh, sf0001) eq first,
+        "the manifest must resolve to the memoized read of the same path")
+      assert(Stages.cachedEntryCount == n0 + 2,
+        "a manifest-served read must land one manifest entry")
       Stages.evictSession(fresh)
       assert(Stages.cachedEntryCount == n0,
-        "evictSession must drop the session's stamped-cache entries")
-    } finally fresh.conf.unset("spark.graft.stickyPath")
+        "evictSession must drop the session's stamped reads and manifest map")
+    } finally {
+      fresh.conf.unset("spark.graft.stickyPath")
+      fresh.conf.unset("spark.graft.storeManifest")
+    }
   }
 
   test("re-persisting a path in-session evicts the memoized stamped read") {
@@ -202,6 +217,34 @@ class StagesSpec extends SparkTestBase {
         "evicting one session must not release the other session's blocks")
       assert(Stages.cachedEntryCount == 1)
       assert(Stages.x9Scores(spark, sf0001).count() > 0)
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(modeKey, v)
+        case None    => spark.conf.unset(modeKey)
+      }
+      Stages.clear()
+    }
+  }
+
+  test("Stages.clear() releases everything the vector family pinned") {
+    // scoped to the vector family on purpose: connectedComponents leaves
+    // its final checkpoint to the ContextCleaner
+    Stages.clear()
+    // other suites' cached frames share this context: start from none
+    spark.catalog.clearCache()
+    val modeKey = "spark.graft.stageDir"
+    val prev = spark.conf.getOption(modeKey)
+    try {
+      spark.conf.set(modeKey, "") // localCheckpoint mode: stages pin blocks
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      Seq(Stages.x16Centroids, Stages.pqBooks, Stages.x57Index).foreach(_(spark, sf0001))
+      Seq("x16_ivf_ann", "x27_semantic_dedup", "x57_ivf_pq", "x58_pq_recall")
+        .foreach(k => assert(VectorOps.queries(k)(spark, sf0001).collect().nonEmpty, k))
+      Stages.clear()
+      val left = spark.sparkContext.getPersistentRDDs.keySet
+      assert(left == before, s"RDDs still persisted after Stages.clear(): ${left -- before}")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "the vector family must leave nothing in the cache manager")
     } finally {
       prev match {
         case Some(v) => spark.conf.set(modeKey, v)

@@ -185,7 +185,7 @@ class StoreLifecycleSpec extends SparkTestBase {
 
   test("store-derived stages are evicted on re-persist: Stages.x75Labels serves the new labels generation") {
     // the r19 shared-stage memoization opened a staleness hole the
-    // stampedCache eviction alone did not cover: Stages.x75Labels
+    // stamped-read eviction alone did not cover: Stages.x75Labels
     // (x75 + x76's shared frame) was built from a read of the labels
     // store, and an in-session re-persist of that store evicted only the
     // memoized READ — the derived stage kept serving the pre-persist

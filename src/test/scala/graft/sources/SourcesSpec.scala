@@ -18,8 +18,8 @@ class SourcesSpec extends SparkTestBase {
     val df = recs.toDF()
     df.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
     df.write.mode("overwrite").json(s"$tmp/json")
-    val backCsv = Sources.csv(spark, s"$tmp/csv", Sources.walSchema)
-    val backJson = Sources.json(spark, s"$tmp/json", Sources.walSchema)
+    val backCsv = spark.read.option("header", "true").schema(Sources.walSchema).csv(s"$tmp/csv")
+    val backJson = spark.read.schema(Sources.walSchema).json(s"$tmp/json")
     assert(backCsv.count() == 3 && backJson.count() == 3)
     assert(backCsv.schema.fieldNames.toSeq ==
       Seq("id", "entityId", "operation", "payload", "entityType"))
@@ -243,7 +243,7 @@ class SourcesSpec extends SparkTestBase {
     val tmp = tempDir("graft-orc")
     val ev = graft.model.Tables.events(s, sf0001)
     TestSinks.writeOrc(ev, s"$tmp/events_orc")
-    val back = Sources.orc(s, s"$tmp/events_orc")
+    val back = s.read.orc(s"$tmp/events_orc")
     assert(back.count() == ev.count())
     assert(back.schema == ev.schema)
     // the columnar contract: filter and projection must reach the ORC scan
@@ -332,7 +332,7 @@ class SourcesSpec extends SparkTestBase {
     val tmp = tempDir("graft-part").toString
     val ev = graft.model.Tables.events(spark, sf0001)
     Sources.writePartitioned(ev, s"$tmp/events_by_type", Seq("event_type"), Seq("event_id"))
-    val back = Sources.parquet(spark, s"$tmp/events_by_type")
+    val back = spark.read.parquet(s"$tmp/events_by_type")
     assert(back.count() == ev.count())
     val plan = back.filter(col("event_type") === "purchase")
       .queryExecution.executedPlan.toString

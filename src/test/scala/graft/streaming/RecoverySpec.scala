@@ -161,9 +161,9 @@ class RecoverySpec extends SparkTestBase {
     def snapA: Map[Long, String] =
       SnapshotTable.read(s, s"$tmp/snapA").select("entityId", "payload")
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    // read back through the PUBLIC jdbc source — the fan-out loop closed
+    // read back through Spark's jdbc source — the fan-out loop closed
     def jdbcB: Map[Long, String] =
-      Sources.jdbc(s, url, "wal_target").filter(col("DELETED") === 0)
+      s.read.jdbc(url, "wal_target", new java.util.Properties()).filter(col("DELETED") === 0)
         .select(col("ENTITY_ID"), col("PAYLOAD"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
@@ -204,7 +204,7 @@ class RecoverySpec extends SparkTestBase {
         // exactly-once effect: every entity's watermark is its LAST wal id
         // (a double-apply or a replayed early record would perturb these),
         // and the delete survives as a tombstone with its watermark
-        val marks = Sources.jdbc(s, url, "wal_target")
+        val marks = s.read.jdbc(url, "wal_target", new java.util.Properties())
           .select(col("ENTITY_ID"), col("LAST_ID"), col("DELETED"))
           .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2)))).toMap
         assert(marks == Map(1L -> ((2L, 0)), 2L -> ((4L, 1)), 3L -> ((3L, 0))),
@@ -232,7 +232,7 @@ class RecoverySpec extends SparkTestBase {
       .foreach(JdbcWalSink.ensureTable(url, _))
 
     def stateOf(table: String): Map[Long, String] =
-      Sources.jdbc(s, url, table).filter(col("DELETED") === 0)
+      s.read.jdbc(url, table, new java.util.Properties()).filter(col("DELETED") === 0)
         .select(col("ENTITY_ID"), col("PAYLOAD"))
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
 
@@ -267,7 +267,7 @@ class RecoverySpec extends SparkTestBase {
       assert(pu.metrics.numSynchronized.get() == 4L, pu.metrics.gauges)
       assert(po.metrics.numSynchronized.get() == 3L, po.metrics.gauges)
       // user delete left a tombstone with its watermark; order id 1 untouched
-      val userMarks = Sources.jdbc(s, url, "users_target")
+      val userMarks = s.read.jdbc(url, "users_target", new java.util.Properties())
         .select(col("ENTITY_ID"), col("LAST_ID"), col("DELETED"))
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2)))).toMap
       assert(userMarks == Map(1L -> ((4L, 0)), 2L -> ((6L, 1))), userMarks)
@@ -324,7 +324,7 @@ class RecoverySpec extends SparkTestBase {
       // the target comes back mid-retry; the parked batch must drain
       JdbcWalSink.ensureTable(url, "outage_target")
       p.processAllAvailable()
-      val got = Sources.jdbc(s, url, "outage_target")
+      val got = s.read.jdbc(url, "outage_target", new java.util.Properties())
         .select(col("ENTITY_ID"), col("PAYLOAD"), col("LAST_ID"))
         .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
       assert(got == Map(1L -> (("a0", 0L)), 2L -> (("b0", 1L))), s"got $got")
